@@ -6,16 +6,18 @@ materialize their independent branches concurrently instead of letting
 one branch's eager action (a candidate checkpoint, a centroid collect)
 serialize the rest.
 
-Threads MUST be ``pyspark.InheritableThread``: under py4j's pinned
-thread mode (the default) every Python thread that touches the JVM gets
-its own JVM-side connection THREAD, and a plain
-``concurrent.futures.ThreadPoolExecutor`` leaks it when the worker
-exits — measured ~50 leaked JVM threads per scoreboard invocation,
-degrading every query that ran later in the same session (the r09
-bench regression: untouched TPC-H tail +19% while the early ambient
-probe got faster). ``InheritableThread`` both inherits the parent's
-thread-local properties (job group/description) and deletes its py4j
-connection when the target returns.
+The package starts threads in exactly two places: ``run_branches``
+here, and ``operators.refresh.refresh_many``, which runs one worker per
+refresh target behind its concurrency window. In both, threads MUST
+be ``pyspark.InheritableThread``: under py4j's pinned thread mode (the
+default) every Python thread that touches the JVM gets its own
+JVM-side connection THREAD, and a plain ``ThreadPoolExecutor``
+worker leaks it when it exits — measured ~50 leaked JVM threads per
+scoreboard invocation, degrading every query that ran later in the
+same session (the r09 bench regression: untouched TPC-H tail +19%
+while the early ambient probe got faster). ``InheritableThread`` both
+inherits the parent's thread-local properties (job group/description)
+and deletes its py4j connection when the target returns.
 """
 
 from __future__ import annotations

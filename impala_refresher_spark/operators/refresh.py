@@ -1,6 +1,6 @@
 """Reference-faithful surface: catalog refresh orchestration (R1-R3).
 
-The reference (``/root/reference/impala-refresher.go``) fans out
+The reference (``impala-refresher.go``) fans out
 ``impala-shell -i <host> -q "refresh <table>"`` to N Impala daemons
 concurrently, with a per-target timeout, an optional bounded
 concurrency window, per-target success/duration reporting, and
@@ -10,27 +10,33 @@ overall success = AND of all targets (``impala-refresher.go:46-88,
 Spark has one centralized catalog per session, so the faithful
 re-expression collapses "N nodes x 1 table" into "1 catalog call" and
 generalizes to "N tables x 1 catalog": concurrent multi-table refresh
-with the same timeout / concurrency-window / fail-any semantics.
+with the same timeout / concurrency-window / fail-any semantics. The
+fan-out is one ``pyspark.InheritableThread`` per target (the package's
+only thread primitive, see ``concurrency.py``) behind a semaphore.
 
 Deliberate divergence (SURVEY.md §2A quirks): the reference leaks a
 goroutine on timeout (its inner send on an unbuffered channel blocks
 forever after the timeout branch wins, ``impala-refresher.go:62`` vs
-``:81-86``); here timed-out futures are cancelled/abandoned safely —
-a ThreadPoolExecutor worker never blocks on result delivery.
+``:81-86``); here each worker writes its outcome into its own slot and
+never blocks on delivery, so a timed-out worker has its Spark jobs
+cancelled and is abandoned as a daemon thread that ends on its own.
 """
 
 from __future__ import annotations
 
+import contextlib
+import threading
 import time
 from collections.abc import Callable, Sequence
-from concurrent.futures import ThreadPoolExecutor, TimeoutError as FutureTimeout
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from impala_refresher_spark.registry import query
+from impala_refresher_spark.sources.tables import register_views
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -78,7 +84,7 @@ def refresh_many(
     concurrency: int = 0,
     refresh_fn: Callable[[SparkSession, str], RefreshResult] | None = None,
 ) -> list[RefreshResult]:
-    """R2: concurrent multi-target refresh with bounded window.
+    """R2: concurrent multi-target refresh with a bounded window.
 
     Faithful semantics (``impala-refresher.go:108-135, 148-181``):
 
@@ -87,90 +93,68 @@ def refresh_many(
     - ``timeout`` is per-target, not global (``impala-refresher.go:81``).
     - A timed-out or failed target is reported, never raised; overall
       success is the AND over targets (``impala-refresher.go:97``).
+    - Results come back in input order, one per position: a target
+      named twice is refreshed twice and reported twice.
 
     ``refresh_fn`` is an injection point for tests (slow/failing
     targets) — defaults to the real catalog call.
 
-    Timeout fidelity (two upgrades over the round-1 shape):
-
-    - The clock starts at each target's ACTUAL start (recorded by the
-      worker), not at reap time — a target can never be flagged before
-      it has had ``timeout`` seconds of its own, and a still-queued
-      target (bounded window) is never reported timed out unrun.
-    - A timed-out target is really CANCELLED: each worker runs inside
-      its own Spark job group (thread-local in pinned-thread mode) and
-      the reaper calls ``cancelJobGroup``, interrupting any running
-      Spark jobs — matching the reference's process kill
-      (``impala-refresher.go:81-86``) without its goroutine leak.
+    Each target runs on its own daemon ``InheritableThread``; a
+    semaphore is the window. A target's timeout clock starts when its
+    worker enters the window (the caller waits for that, then joins
+    for the rest of the budget), so a target queued behind the window
+    is never flagged unrun. A timed-out target is really CANCELLED:
+    its worker runs inside Spark job group ``refresh-{i}-{target}``
+    and the caller calls ``cancelJobGroup``, interrupting its running
+    Spark jobs — the reference's process kill
+    (``impala-refresher.go:81-86``) without its goroutine leak.
     """
     fn = refresh_fn or refresh_table
     sc = spark.sparkContext
-    max_workers = concurrency if concurrency > 0 else max(len(tables), 1)
-    starts: dict[str, float] = {}
-    groups = {t: f"refresh-{i}-{t}" for i, t in enumerate(tables)}
+    window = threading.Semaphore(concurrency if concurrency > 0 else len(tables))
+    started = [threading.Event() for _ in tables]
+    started_at = [0.0] * len(tables)
+    outcomes: list[RefreshResult | None] = [None] * len(tables)
+    groups = [f"refresh-{i}-{t}" for i, t in enumerate(tables)]
 
-    def run_target(target: str) -> RefreshResult:
-        starts[target] = time.monotonic()
-        try:
-            sc.setJobGroup(groups[target], f"refresh {target}", interruptOnCancel=True)
-        except Exception:
-            pass  # job-group bookkeeping must never fail the refresh
-        try:
-            return fn(spark, target)
-        finally:
+    def run_target(i: int, target: str) -> None:
+        with window:
+            started_at[i] = time.monotonic()
+            started[i].set()
             try:
-                sc.setJobGroup("", "")
-            except Exception:
-                pass
+                sc.setJobGroup(groups[i], f"refresh {target}", interruptOnCancel=True)
+                outcomes[i] = fn(spark, target)
+            except Exception as exc:  # reported per target, never raised
+                outcomes[i] = RefreshResult(
+                    target, False, f"{target}'s catalog did not refresh: {exc}", 0
+                )
+
+    workers = [
+        InheritableThread(target=run_target, args=(i, t), daemon=True)
+        for i, t in enumerate(tables)
+    ]
+    for w in workers:
+        w.start()
 
     results: list[RefreshResult] = []
-    pool = ThreadPoolExecutor(max_workers=max_workers)
-    try:
-        futures = {pool.submit(run_target, t): t for t in tables}
-        for fut, target in futures.items():
-            while True:
-                started_at = starts.get(target)
-                if started_at is None:
-                    # queued behind the concurrency window: its clock
-                    # has not started — poll until a worker picks it up
-                    try:
-                        results.append(fut.result(timeout=0.05))
-                        break
-                    except FutureTimeout:
-                        continue
-                remaining = timeout - (time.monotonic() - started_at)
-                if remaining <= 0:
-                    fut.cancel()
-                    try:  # stop the target's running Spark jobs for real
-                        sc.cancelJobGroup(groups[target])
-                    except Exception:
-                        pass
-                    results.append(
-                        RefreshResult(
-                            target,
-                            False,
-                            f"{target}'s catalog did not refresh (timeout after {timeout}s)",
-                            int(timeout * 1000),
-                        )
-                    )
-                    break
-                try:
-                    results.append(fut.result(timeout=remaining))
-                    break
-                except FutureTimeout:
-                    continue  # re-check: another target may have started meanwhile
-                except Exception as exc:
-                    results.append(
-                        RefreshResult(
-                            target, False, f"{target}'s catalog did not refresh: {exc}", 0
-                        )
-                    )
-                    break
-    finally:
-        # Do NOT wait for abandoned (timed-out) workers — the reference
-        # leaks a blocked goroutine here; we just let the worker finish
-        # in the background and reap the thread at process exit.
-        pool.shutdown(wait=False, cancel_futures=True)
+    for i, (target, worker) in enumerate(zip(tables, workers)):
+        started[i].wait()
+        worker.join(max(0.0, timeout - (time.monotonic() - started_at[i])))
+        if not worker.is_alive():
+            results.append(outcomes[i])
+            continue
+        # Stop the target's Spark jobs for real, then abandon the worker
+        # (a daemon, so it never holds the process open).
+        with contextlib.suppress(Exception):
+            sc.cancelJobGroup(groups[i])
+        results.append(
+            RefreshResult(
+                target,
+                False,
+                f"{target}'s catalog did not refresh (timeout after {timeout}s)",
+                int(timeout * 1000),
+            )
+        )
     return results
 
 
@@ -201,29 +185,6 @@ def recover_partitions(spark: SparkSession, name: str) -> int:
 # the one nondeterministic column).
 # ---------------------------------------------------------------------------
 
-_FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def _register_fixture_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = _FIXTURE_TABLES
-) -> None:
-    from impala_refresher_spark.sources.tables import load_table
-
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 @query(
     "refresh_table_status",
     """
@@ -232,7 +193,7 @@ def _register_fixture_views(
 )
 def refresh_table_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1 as a declared query: refresh the lineitem view, report status."""
-    _register_fixture_views(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, ("lineitem",))
     r = refresh_table(spark, "lineitem")
     return results_df(spark, [r]).select("target", "refreshed", "error")
 
@@ -247,7 +208,7 @@ def refresh_table_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 def refresh_many_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2 as a declared query: bounded-window concurrent refresh of five
     tables (window=2, the reference's --concurrency semantics)."""
-    _register_fixture_views(spark, sf_dir, ("customer", "lineitem", "nation", "orders", "region"))
+    register_views(spark, sf_dir, ("customer", "lineitem", "nation", "orders", "region"))
     results = refresh_many(
         spark,
         ["customer", "lineitem", "nation", "orders", "region"],
@@ -270,7 +231,7 @@ def catalog_list_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     project the deterministic columns. ``spark.catalog.listTables``
     is the programmatic twin of ``SHOW TABLES``."""
     wanted = ("lineitem", "nation", "orders", "region")
-    _register_fixture_views(spark, sf_dir, wanted)
+    register_views(spark, sf_dir, wanted)
     rows = [
         (t.name, t.isTemporary)
         for t in spark.catalog.listTables()
@@ -300,7 +261,7 @@ def catalog_describe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DESCRIBE <table> via the catalog API: column names + Spark SQL
     type strings for the orders view — schema introspection as a
     result set, matching Impala's DESCRIBE workflow."""
-    _register_fixture_views(spark, sf_dir, ("orders",))
+    register_views(spark, sf_dir, ("orders",))
     cols = [(c.name, c.dataType) for c in spark.catalog.listColumns("orders")]
     return spark.createDataFrame(
         cols,

@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(app_name: str = "impala_refresher_spark") -> SparkSession:
     """Return (or create) the tuned SparkSession.
@@ -22,16 +20,14 @@ def get_spark(app_name: str = "impala_refresher_spark") -> SparkSession:
     On a real cluster the master/memory settings come from
     spark-submit; everything else here is deployment-independent.
     """
+    # One width for both cores and shuffle partitions. The test session
+    # narrows it by setting SPARK_GRAFT_CPUS itself (tests/conftest.py).
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_AQE are test/experiment hooks
-    # (defaults unchanged): the pytest session narrows shuffle width for
-    # its KB-sized inputs; bench/driver runs never set them.
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", str(DEFAULT_SHUFFLE_PARTITIONS))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.adaptive.enabled", os.environ.get("SPARK_GRAFT_AQE", "true"))
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

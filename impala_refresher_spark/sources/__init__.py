@@ -1,8 +1,7 @@
 from impala_refresher_spark.sources.tables import (
     TABLES,
     load_table,
-    load_tables,
     register_views,
 )
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table", "register_views"]

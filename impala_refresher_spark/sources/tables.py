@@ -161,16 +161,8 @@ def scratch_path(base: str, prefix: str, sf_dir: str, *names: str) -> str:
     import os
     import shutil
 
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    hexes = []
-    for n in names:
-        try:
-            st = os.stat(f"{sf_dir}/{n}.parquet")
-            hexes.append(f"{st.st_mtime_ns:x}{st.st_size:x}")
-        except OSError:
-            hexes.append("na")
-    group = f"{prefix}_{sf}"
-    want = f"{group}_{'_'.join(hexes)}"
+    group = f"{prefix}_{scratch_tag(sf_dir)}"
+    want = f"{prefix}_{scratch_tag(sf_dir, *names)}"
     try:
         for entry in os.listdir(base):
             if entry.startswith(f"{group}_") and entry != want:
@@ -178,10 +170,6 @@ def scratch_path(base: str, prefix: str, sf_dir: str, *names: str) -> str:
     except OSError:
         pass
     return os.path.join(base, want)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(

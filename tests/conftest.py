@@ -7,8 +7,8 @@ import os
 # local[32]/32-shuffle-partition session pays 32-wide task launches per
 # action for rows of data — measured 21% slower than local[4] on the
 # slow property-test subset with identical results (full suite: 32:24
-# → 17:31). Set BEFORE the session module is imported (it reads the
-# env at import time). This deliberately OVERRIDES an inherited
+# → 17:31). Set BEFORE get_spark() runs (it reads the env for both
+# master and shuffle width). This deliberately OVERRIDES an inherited
 # SPARK_GRAFT_CPUS: that variable is the bench/driver contract for
 # bench.py, not for the test harness, and an environment that exports
 # it globally (the driver does, for its bench passes) would silently

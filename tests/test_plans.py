@@ -1399,7 +1399,8 @@ def test_int8_quantize_filter_stays_cheap(spark):
     conditions = re.findall(r"Condition : (.*)", plan)
     assert conditions, plan
     for cond in conditions:
-        assert "127" not in cond, cond
+        # attribute IDs (embedding#1127) grow over the session: strip them
+        assert "127" not in re.sub(r"#\d+L?", "", cond), cond
     assert plan.count("aggregate(") <= 2, plan
 
 

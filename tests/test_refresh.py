@@ -5,8 +5,10 @@ bounded concurrency window (:122-131), fail-any status fold (:97,
 
 from __future__ import annotations
 
+import sys
 import threading
 import time
+from collections import Counter
 
 import pytest
 
@@ -157,6 +159,64 @@ def test_refresh_timeout_cancels_running_spark_job(spark):
     )
     assert not all_refreshed(results)
     assert interrupted.wait(timeout=10), "Spark job was not cancelled on timeout"
+    # ... and the target's job group has no active jobs left.
+    st = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 10
+    while True:
+        group_jobs = set(st.getJobIdsForGroup("refresh-0-longjob"))
+        if group_jobs and not group_jobs & set(st.getActiveJobsIds()):
+            break
+        assert time.monotonic() < deadline, f"refresh-0-longjob jobs still active: {group_jobs}"
+        time.sleep(0.1)
+
+
+def test_refresh_many_repeated_target_runs_every_position(spark):
+    """Per-target state is kept by position, not by name: a target named
+    twice runs twice, and the second "a" — queued behind a slow target in
+    a 1-wide window — is neither skipped nor flagged timed out unrun."""
+    ran = []
+
+    def fn(s, name):
+        ran.append(name)
+        if name == "x":
+            time.sleep(1)
+        return _ok(s, name)
+
+    results = refresh_many(spark, ["a", "x", "a"], timeout=0.6, concurrency=1, refresh_fn=fn)
+    assert [r.target for r in results] == ["a", "x", "a"]
+    assert results[0].refreshed and results[2].refreshed, results
+    assert ran.count("a") == 2, ran
+
+
+def test_refresh_many_stress_window_and_positions(spark):
+    """More workers than cores, names repeated, a fast thread switch:
+    every position runs exactly once, in-flight never exceeds the
+    window, and results keep input order."""
+    lock = threading.Lock()
+    state = {"now": 0, "max": 0}
+    ran = Counter()
+
+    def tracked(s, name):
+        with lock:
+            state["now"] += 1
+            state["max"] = max(state["max"], state["now"])
+            ran[name] += 1
+        time.sleep(0.002)
+        with lock:
+            state["now"] -= 1
+        return _ok(s, name)
+
+    names = [f"t{i % 10}" for i in range(40)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        results = refresh_many(spark, names, timeout=30, concurrency=4, refresh_fn=tracked)
+    finally:
+        sys.setswitchinterval(old)
+    assert [r.target for r in results] == names
+    assert all_refreshed(results)
+    assert ran == Counter(names)
+    assert state["max"] <= 4
 
 
 def test_recover_partitions_discovers_all(spark, sf_dir, tmp_path_factory):
