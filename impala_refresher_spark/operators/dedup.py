@@ -1551,7 +1551,8 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     this measures and prices the span-level excision a pretraining
     cleanup actually performs.
 
-    Measured scale-up (scripts/measure_new_ops.py, local[32],
+    Measured scale-up (scripts/measure_new_ops.py as of commit
+    41f55d4, local[32],
     synthetic 40-token docs with EVERY doc fully duplicated — the
     worst-case union mass): 20k docs 7.1 s → 200k docs 10.7 s (10x
     data, 1.5x time — fixed-overhead bound; 8M covered positions

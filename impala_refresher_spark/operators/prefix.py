@@ -26,7 +26,8 @@ No reference analog (the reference is refresh orchestration only);
 this is the scale backbone for the cumulative/front-of-corpus
 operators (`select_corpus_token_budget`, `revenue_concentration_gini`).
 
-Measured overhead/crossover (scripts/measure_prefix.py, local[32],
+Measured overhead/crossover (scripts/measure_prefix.py as of commit
+41f55d4, local[32],
 best of reps, running token sum over (key desc, doc_id asc); values
 proven identical to the naive global window at every size — the r06
 verdict asked the "slower at toy SF, mandatory at scale" claim to

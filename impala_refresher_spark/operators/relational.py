@@ -105,7 +105,7 @@ def sql_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst compiles both forms to the same optimized plan."""
     from impala_refresher_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem", "orders", "customer", "nation", "region"))
     return spark.sql(
         """
         SELECT r_name AS region_name,
@@ -1136,7 +1136,7 @@ def sql_pipe_syntax_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses."""
     from impala_refresher_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(
         """
         FROM lineitem
@@ -1230,7 +1230,7 @@ def sql_parameterized_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan."""
     from impala_refresher_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql(
         """
         SELECT o_orderkey, o_orderstatus, ROUND(o_totalprice, 2) AS total

@@ -1251,7 +1251,8 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle, no Python, rows × 16 out. 1/sqrt(16) = 0.25 is exact
     binary, so the only rounding is the final display ROUND 6.
 
-    Measured scale-up (scripts/measure_new_ops.py, local[32],
+    Measured scale-up (scripts/measure_new_ops.py as of commit
+    41f55d4, local[32],
     synthetic 64-d vectors generated in-plan): 100k vectors 2.75 s →
     1M vectors 7.55 s (10x data, 2.7x time; 16M output rows) — the
     projection itself stays inside whole-stage codegen.

@@ -34,7 +34,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips every fixture type exactly (incl. timestamps)."""
     out = f"{SCRATCH}/orders_high_value.parquet"
     (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 150000)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
         .write.mode("overwrite")
@@ -64,7 +64,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     newline-bearing text in parquet/ORC (S1) instead of CSV."""
     out = f"{SCRATCH}/customer_pos.csv"
     df = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") >= 0)
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
     )
@@ -115,7 +115,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hive-era lakes; parquet stays the default."""
     out = f"{SCRATCH}/part_premium.orc"
     df = (
-        spark.read.parquet(f"{sf_dir}/part.parquet")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_retailprice") > 950)
         .select("p_partkey", "p_name", "p_brand", "p_retailprice")
     )

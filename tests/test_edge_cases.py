@@ -3,6 +3,7 @@ corner semantics a fixture-scale DuckDB diff can miss by luck."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -82,6 +83,108 @@ def test_events_reads_under_vanilla_session_conf(spark, sf_dir):
         assert df.limit(1).count() == 1
     finally:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def _with_job_ids(spark, fn):
+    """``(fn(), IDs of the Spark jobs it launched)``. The status store is
+    fed asynchronously but in event order, so once a marker job run
+    after ``fn`` is visible, every job ``fn`` launched is visible too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group, marker = f"probe-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(marker, marker)
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 10
+    while not st.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reached the status store"
+        time.sleep(0.05)
+    return out, list(st.getJobIdsForGroup(group))
+
+
+def test_warm_load_table_launches_no_job(spark, sf_dir, tmp_path):
+    """load_table infers a file's schema (a Spark job) once; a later
+    call on the unchanged file reads with the cached schema and
+    launches no job. A fresh copy keeps the first call cold whatever
+    ran before."""
+    import shutil
+
+    from impala_refresher_spark.sources.tables import load_table
+
+    shutil.copy(f"{sf_dir}/region.parquet", tmp_path / "region.parquet")
+    d = str(tmp_path)
+    _, cold = _with_job_ids(spark, lambda: load_table(spark, d, "region"))
+    warm, jobs = _with_job_ids(spark, lambda: load_table(spark, d, "region"))
+    assert cold and jobs == []
+    assert warm.count() == 5  # the data is still read
+
+
+def test_load_table_sees_rewritten_file_without_refresh(spark, sf_dir, tmp_path):
+    """The cached schema is keyed on the file's (inode, mtime, size):
+    an os.replace with appended rows and an extra column is seen by the
+    next load_table, with no refresh call in between."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from impala_refresher_spark.sources.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    shutil.copy(f"{sf_dir}/region.parquet", path)
+    d = str(tmp_path)
+    for _ in range(2):  # cold, then warm
+        before = load_table(spark, d, "region")
+        assert before.count() == 5 and "extra" not in before.columns
+    t = pq.read_table(path)
+    t = pa.concat_tables([t, t.slice(0, 3)])
+    t = t.append_column("extra", pa.array(range(t.num_rows), pa.int64()))
+    pq.write_table(t, tmp_path / "next.parquet")
+    os.replace(tmp_path / "next.parquet", path)
+    after = load_table(spark, d, "region")
+    assert after.count() == 8
+    assert sorted(r.extra for r in after.select("extra").collect()) == list(range(8))
+
+
+def test_load_table_nanos_file_cold_then_warm_under_vanilla_conf(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column's inferred type depends on nanosAsLong,
+    so the conf is part of the cached schema's key, read after the
+    PARQUET_TYPE_ILLEGAL retry: unsetting the conf re-resolves the
+    schema (and the retry sets it again), and the next call with the
+    conf left alone hits the cache. Every load gives a micro-precision
+    ``timestamp`` with the nanos truncated."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from impala_refresher_spark.sources.tables import load_table
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = [1_704_067_200_123_456_789, 1_704_153_600_000_000_999, 1_704_240_000_999_999_001]
+    table = pa.table(
+        {"event_id": pa.array([1, 2, 3], pa.int64()), "ts": pa.array(ns, pa.timestamp("ns"))}
+    )
+    pq.write_table(table, tmp_path / "events.parquet", version="2.6")
+    d = str(tmp_path)
+    prev = spark.conf.get(conf)
+    try:
+        for step, resolves in (("cold", True), ("conf unset", True), ("warm", False)):
+            if step == "conf unset":
+                spark.conf.unset(conf)
+            df, jobs = _with_job_ids(spark, lambda: load_table(spark, d, "events"))
+            assert bool(jobs) == resolves, step
+            assert dict(df.dtypes)["ts"] == "timestamp", step
+            got = sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+            assert got == [n // 1000 for n in ns], step
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_topk_tiebreak_is_deterministic(spark):

@@ -410,7 +410,8 @@ def test_minhash_banding_recall_matches_collision_theory(spark, tmp_path):
     xxhash64 corpus + fixed minhash coefficients, so the tolerance
     encodes theory-match, not flake absorption.
 
-    Corpus = scripts/measure_new_ops.py's shape at small N: 40-token
+    Corpus = scripts/measure_new_ops.py's shape (as of commit 41f55d4)
+    at small N: 40-token
     docs over per-doc-family vocab; every 5th doc repeats its
     predecessor's seed with 2 edited tokens (positions 3 and 17), so
     planted pairs lose 6 of ~38 shingles -> j ~= 32/44 ~= 0.727."""

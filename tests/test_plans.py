@@ -1417,6 +1417,16 @@ def test_pipeline_v2_span_branch_fans_out_and_hashes(spark):
     )
 
     plan = plan_of(pipeline_training_corpus_v2(spark, SF_SMOKE))
+    # (a) the Generate that emits `gram` reads straight off a
+    # round-robin Exchange (fan_out), not off the scan's split
+    gen = re.search(r"^\((\d+)\) Generate\n.*\nArguments: .*\[gram#\d+\]$", plan, re.M)
+    assert gen, plan
+    child = re.search(rf"Generate \({gen[1]}\)\n[ :|]*\+- Exchange \((\d+)\)", plan)
+    assert child, plan
+    assert re.search(
+        rf"^\({child[1]}\) Exchange\n.*\nArguments: RoundRobinPartitioning", plan, re.M
+    ), plan
+    # (b) the span key is the hashed gram
     assert re.search(r"xxhash64\(gram", plan), plan
     # the span window partitions by the hashed key
     assert re.search(r"windowspecdefinition\(gh#\d+L", plan), plan
