@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import load_table
+from impala_refresher_spark.sources.tables import load_table, materialize
 
 
 @query(
@@ -242,9 +242,8 @@ def zorder_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def inverted_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7: term lookup served from a MATERIALIZED inverted index. The
     (token, doc_id, tf) posting table is built once per fixture
-    version (freshness-keyed scratch, like the compaction query) and
-    PARTITIONED BY a token hash bucket — so a term lookup reads one
-    directory partition, not the corpus. The oracle computes the same
+    version and PARTITIONED BY a token hash bucket — so a term lookup
+    reads one directory partition, not the corpus. The oracle computes the same
     answer from the raw table, proving index-serving is lossless.
 
     At 100 TB this is the search-index pattern: corpus-sized build
@@ -253,24 +252,19 @@ def inverted_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PartitionFilters on tok_bucket — the directory layout IS the
     index). KWIC/BM25-style queries compose on top of the same
     postings."""
-    import os
-
-    from impala_refresher_spark.sources.tables import scratch_path
-
-    _SCRATCH_BASE = "/root/repo/_scratch"
     d = load_table(spark, sf_dir, "documents")
-    idx = scratch_path(_SCRATCH_BASE, "inv_index", sf_dir, "documents")
-    if not os.path.exists(f"{idx}/_SUCCESS"):
-        (
-            d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-            .groupBy("token", "doc_id")
-            .agg(F.count("*").alias("tf"))
-            .withColumn("tok_bucket", F.pmod(F.xxhash64("token"), F.lit(64)))
-            .repartition("tok_bucket")
-            .write.mode("overwrite")
-            .partitionBy("tok_bucket")
-            .parquet(idx)
-        )
+    idx = materialize(
+        "inv_index",
+        sf_dir,
+        ("documents",),
+        lambda p: d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+        .groupBy("token", "doc_id")
+        .agg(F.count("*").alias("tf"))
+        .withColumn("tok_bucket", F.pmod(F.xxhash64("token"), F.lit(64)))
+        .repartition("tok_bucket")
+        .write.partitionBy("tok_bucket")
+        .parquet(p),
+    )
     postings = spark.read.parquet(idx)
     term = "customer"
     # The bucket predicate compares the PARTITION column to a foldable
@@ -331,47 +325,25 @@ def inverted_index_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (impala-refresher.go:46-181) re-points consumers at such
     incrementally-maintained external tables; this is the producer
     side of that contract."""
-    import os
-
-    from impala_refresher_spark.sources.tables import scratch_path
-
-    _SCRATCH_BASE = "/root/repo/_scratch"
     n_buckets = 64
     d = load_table(spark, sf_dir, "documents")
     is_delta = F.col("doc_id") % 13 == 4
 
-    def _postings(docs: DataFrame) -> DataFrame:
-        return (
-            docs.select(
-                "doc_id", F.explode(F.split("text", " ")).alias("token")
-            )
+    def _segment(docs: DataFrame):
+        return lambda p: (
+            docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
             .groupBy("token", "doc_id")
             .agg(F.count("*").alias("tf"))
-            .withColumn(
-                "tok_bucket", F.pmod(F.xxhash64("token"), F.lit(n_buckets))
-            )
+            .withColumn("tok_bucket", F.pmod(F.xxhash64("token"), F.lit(n_buckets)))
+            .repartition("tok_bucket")
+            .write.partitionBy("tok_bucket")
+            .parquet(p)
         )
 
-    base_idx = scratch_path(_SCRATCH_BASE, "inv_base", sf_dir, "documents")
-    delta_idx = scratch_path(_SCRATCH_BASE, "inv_delta", sf_dir, "documents")
-    if not os.path.exists(f"{base_idx}/_SUCCESS"):
-        (
-            _postings(d.filter(~is_delta))
-            .repartition("tok_bucket")
-            .write.mode("overwrite")
-            .partitionBy("tok_bucket")
-            .parquet(base_idx)
-        )
-    if not os.path.exists(f"{delta_idx}/_SUCCESS"):
-        # The maintenance step: reads ONLY the new batch — the base
-        # segment is never opened, let alone rewritten.
-        (
-            _postings(d.filter(is_delta))
-            .repartition("tok_bucket")
-            .write.mode("overwrite")
-            .partitionBy("tok_bucket")
-            .parquet(delta_idx)
-        )
+    base_idx = materialize("inv_base", sf_dir, ("documents",), _segment(d.filter(~is_delta)))
+    # The maintenance step: reads ONLY the new batch — the base
+    # segment is never opened, let alone rewritten.
+    delta_idx = materialize("inv_delta", sf_dir, ("documents",), _segment(d.filter(is_delta)))
     # Explicit segment schema: an empty segment (first-ever batch, or
     # a batch whose docs all landed one side of the split) has no data
     # files to infer from — and at index scale, inference would list

@@ -25,6 +25,7 @@ cancelled and is abandoned as a daemon thread that ends on its own.
 from __future__ import annotations
 
 import contextlib
+import os
 import threading
 import time
 from collections.abc import Callable, Sequence
@@ -36,7 +37,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import register_views
+from impala_refresher_spark.sources.tables import (
+    SCRATCH_ROOT,
+    load_table,
+    materialize,
+    register_views,
+)
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -118,6 +124,11 @@ def refresh_many(
     groups = [f"refresh-{i}-{t}" for i, t in enumerate(tables)]
 
     def run_target(i: int, target: str) -> None:
+        # Enter the window in input order: the caller checks deadlines in
+        # that order, so a later target that started first could overrun
+        # its timeout while the caller still waits for an earlier start.
+        if i:
+            started[i - 1].wait()
         with window:
             started_at[i] = time.monotonic()
             started[i].set()
@@ -292,9 +303,7 @@ def recover_partitions_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``.../event_type=X/`` from an external writer and recoverPartitions
     makes them queryable without rewriting data.
     """
-    from impala_refresher_spark.sources.tables import load_table
-
-    path = "/root/repo/_scratch/events_partitioned"
+    path = os.path.join(SCRATCH_ROOT, "events_partitioned")
     events = load_table(spark, sf_dir, "events")
     # Shuffle on the partition column before a partitionBy write: each
     # task then writes whole partitions (one file per partition instead
@@ -369,27 +378,25 @@ def dpp_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both sides are parquet scans on purpose: a literal local dim gets
     constant-folded by ``ConvertToLocalRelation``, which strips the
-    Filter node DPP keys on. Writes are freshness-keyed scratch
-    materializations (skipped when current).
+    Filter node DPP keys on.
     """
-    import os
-
-    from impala_refresher_spark.sources.tables import load_table, scratch_path
-
-    fact_path = scratch_path("/root/repo/_scratch", "events_dpp", sf_dir, "events")
-    if not os.path.exists(os.path.join(fact_path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .repartition("event_type")
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(fact_path)
-        )
-    dim_path = scratch_path("/root/repo/_scratch", "events_dpp_dim", sf_dir, "events")
-    if not os.path.exists(os.path.join(dim_path, "_SUCCESS")):
-        spark.createDataFrame(
-            _EVENT_CATEGORIES, "event_type string, category string"
-        ).coalesce(1).write.mode("overwrite").parquet(dim_path)
+    fact_path = materialize(
+        "events_dpp",
+        sf_dir,
+        ("events",),
+        lambda p: load_table(spark, sf_dir, "events")
+        .repartition("event_type")
+        .write.partitionBy("event_type")
+        .parquet(p),
+    )
+    dim_path = materialize(
+        "events_dpp_dim",
+        sf_dir,
+        ("events",),
+        lambda p: spark.createDataFrame(_EVENT_CATEGORIES, "event_type string, category string")
+        .coalesce(1)
+        .write.parquet(p),
+    )
 
     fact = spark.read.parquet(fact_path)
     dim = spark.read.parquet(dim_path).filter(F.col("category") == "conversion")

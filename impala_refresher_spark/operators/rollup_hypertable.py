@@ -19,15 +19,11 @@ is tiny regardless of raw volume.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import load_table, scratch_path
-
-_SCRATCH = "/root/repo/_scratch"
+from impala_refresher_spark.sources.tables import load_table, materialize
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
@@ -66,16 +62,15 @@ def hypertable_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-precision sums could straddle a rounding boundary). The oracle aggregates raw
     events — if the two-level path dropped or double-counted anything,
     every value column would diverge."""
-    path = scratch_path(_SCRATCH, "events_hourly_rollup", sf_dir, "events")
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        events = load_table(spark, sf_dir, "events")
-        (
-            hourly_rollup(events)
-            .repartition("bucket_date")
-            .write.mode("overwrite")
-            .partitionBy("bucket_date")
-            .parquet(path)
-        )
+    path = materialize(
+        "events_hourly_rollup",
+        sf_dir,
+        ("events",),
+        lambda p: hourly_rollup(load_table(spark, sf_dir, "events"))
+        .repartition("bucket_date")
+        .write.partitionBy("bucket_date")
+        .parquet(p),
+    )
     rollup = spark.read.parquet(path)
     return _serve_daily(rollup)
 
@@ -142,16 +137,16 @@ def hypertable_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     double-merged anything, the last day's rows diverge.
     """
     events = load_table(spark, sf_dir, "events")
-    path = scratch_path(_SCRATCH, "events_rollup_incr", sf_dir, "events")
     last_day = events.agg(F.max(F.to_date("ts")).alias("d")).collect()[0].d
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        (
-            hourly_rollup(events.filter(F.to_date("ts") < F.lit(str(last_day))))
-            .repartition("bucket_date")
-            .write.mode("overwrite")
-            .partitionBy("bucket_date")
-            .parquet(path)
-        )
+    path = materialize(
+        "events_rollup_incr",
+        sf_dir,
+        ("events",),
+        lambda p: hourly_rollup(events.filter(F.to_date("ts") < F.lit(str(last_day))))
+        .repartition("bucket_date")
+        .write.partitionBy("bucket_date")
+        .parquet(p),
+    )
     # the maintenance step under test: bring the last day in incrementally
     # (idempotent: re-runs replace exactly that day's partition)
     refresh_rollup_incremental(spark, events, path, [last_day])

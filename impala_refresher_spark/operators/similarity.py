@@ -1084,6 +1084,28 @@ def kmeans_refine_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding storage quantization — per-vector int8 with scale factor
 # ---------------------------------------------------------------------------
 
+def _absmax(col: str):
+    """max|x| over an array column, folded in codegen."""
+    return F.aggregate(
+        F.transform(col, lambda x: F.abs(x.cast("double"))),
+        F.lit(0.0),
+        lambda acc, v: F.when(v > acc, v).otherwise(acc),
+    )
+
+
+def _q8(x, max_abs):
+    """int8 code of one element: round(x / max_abs * 127)."""
+    # try_divide, not /: the declared (posexplode) form makes
+    # InferFiltersFromGenerate synthesize `size(q) > 0` / `isnotnull(q)`
+    # predicates that land in the SAME Filter as `max_abs > 0`, and
+    # common-subexpression elimination evaluates the q transform there
+    # BEFORE the guard conjunct can short-circuit — an ANSI plain
+    # divide then errors on the all-zero vector the guard exists to
+    # drop. For every surviving row max_abs > 0, so try_divide is
+    # bit-identical to /.
+    return F.round(F.try_divide(x.cast("double"), max_abs) * 127).cast("int")
+
+
 def int8_quantize_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 quantization per vector, ARRAY form: q[i] =
     round(x[i] / max|x| * 127) plus the one scale factor — 4× smaller
@@ -1098,27 +1120,9 @@ def int8_quantize_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     array-form contract in tests/test_properties.py /
     tests/test_edge_cases.py)."""
     e = fan_out(load_table(spark, sf_dir, "embeddings"))
-    absmax = F.aggregate(
-        F.transform("embedding", lambda x: F.abs(x.cast("double"))),
-        F.lit(0.0),
-        lambda acc, v: F.when(v > acc, v).otherwise(acc),
-    )
-    # try_divide, not /: the declared (posexplode) form makes
-    # InferFiltersFromGenerate synthesize `size(q) > 0` / `isnotnull(q)`
-    # predicates that land in the SAME Filter as `max_abs > 0`, and
-    # common-subexpression elimination evaluates the q transform there
-    # BEFORE the guard conjunct can short-circuit — an ANSI plain
-    # divide then errors on the all-zero vector the guard exists to
-    # drop. For every surviving row max_abs > 0, so try_divide is
-    # bit-identical to /.
-    q = F.transform(
-        "embedding",
-        lambda x: F.round(
-            F.try_divide(x.cast("double"), F.col("max_abs")) * 127
-        ).cast("int"),
-    )
+    q = F.transform("embedding", lambda x: _q8(x, F.col("max_abs")))
     return (
-        e.withColumn("max_abs", absmax)
+        e.withColumn("max_abs", _absmax("embedding"))
         .filter(F.col("max_abs") > 0)
         .select(
             "vec_id",
@@ -1172,22 +1176,15 @@ def embed_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical per element: round(try_divide(x, max_abs) * 127) — runs
     exactly once, above the ``max_abs > 0`` guard."""
     e = fan_out(load_table(spark, sf_dir, "embeddings"))
-    absmax = F.aggregate(
-        F.transform("embedding", lambda x: F.abs(x.cast("double"))),
-        F.lit(0.0),
-        lambda acc, v: F.when(v > acc, v).otherwise(acc),
-    )
     return (
-        e.withColumn("max_abs", absmax)
+        e.withColumn("max_abs", _absmax("embedding"))
         .filter(F.col("max_abs") > 0)
         .select("vec_id", "max_abs", F.posexplode("embedding").alias("pos", "x"))
         .select(
             "vec_id",
             F.round("max_abs", 6).alias("scale_factor"),
             "pos",
-            F.round(F.try_divide(F.col("x").cast("double"), F.col("max_abs")) * 127)
-            .cast("int")
-            .alias("q_val"),
+            _q8(F.col("x"), F.col("max_abs")).alias("q_val"),
         )
     )
 

@@ -12,13 +12,13 @@ poorly — never the at-scale format.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import load_table
-
-SCRATCH = "/root/repo/_scratch"
+from impala_refresher_spark.sources.tables import SCRATCH_ROOT, load_table, materialize
 
 
 @query(
@@ -32,7 +32,7 @@ SCRATCH = "/root/repo/_scratch"
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 parquet: write a filtered projection, read it back. Parquet
     round-trips every fixture type exactly (incl. timestamps)."""
-    out = f"{SCRATCH}/orders_high_value.parquet"
+    out = os.path.join(SCRATCH_ROOT, "orders_high_value.parquet")
     (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 150000)
@@ -62,7 +62,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine). The cost is that multiLine CSV files are not split across
     tasks — acceptable for an interchange sink; at 100 TB keep
     newline-bearing text in parquet/ORC (S1) instead of CSV."""
-    out = f"{SCRATCH}/customer_pos.csv"
+    out = os.path.join(SCRATCH_ROOT, "customer_pos.csv")
     df = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") >= 0)
@@ -90,7 +90,7 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (schema inference on JSON is a full extra pass — never at scale).
     The nested ``props`` JSON string survives as-is: the writer quotes
     it as a string field, the reader restores it byte-identically."""
-    out = f"{SCRATCH}/events_purchases.json"
+    out = os.path.join(SCRATCH_ROOT, "events_purchases.json")
     df = (
         load_table(spark, sf_dir, "events")  # nanos-safe under any session
         .filter(F.col("event_type").isin("purchase", "signup"))
@@ -113,7 +113,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics and predicate pushdown, like parquet row groups) —
     write a filtered projection, read it back. Interop surface for
     Hive-era lakes; parquet stays the default."""
-    out = f"{SCRATCH}/part_premium.orc"
+    out = os.path.join(SCRATCH_ROOT, "part_premium.orc")
     df = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_retailprice") > 950)
@@ -143,19 +143,15 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a constant), and time-clustering gives every file a
     tight ts min/max so row-group pruning works for time-range scans —
     compaction is exactly where that ordering is cheapest to buy."""
-    import os
-
-    from impala_refresher_spark.sources.tables import scratch_path
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    frag = scratch_path(SCRATCH, "frag_events", sf_dir, "events")
-    if not os.path.exists(f"{frag}/_SUCCESS"):
-        events.repartition(64).write.mode("overwrite").parquet(frag)
+    frag = materialize(
+        "frag_events", sf_dir, ("events",), lambda p: events.repartition(64).write.parquet(p)
+    )
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    out = f"{SCRATCH}/compacted_events_{sf}.parquet"
+    out = os.path.join(SCRATCH_ROOT, f"compacted_events_{sf}.parquet")
     (
         spark.read.parquet(frag)
         .repartitionByRange(4, "ts")
@@ -188,19 +184,14 @@ def multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parquet prunes columns/rows, CSV/JSON read whole rows, which is
     exactly why the pipeline's next step is rewriting them to
     parquet/ORC via the compaction op above)."""
-    import os
-
-    from impala_refresher_spark.sources.tables import load_table, scratch_path
-
     base = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    land = scratch_path(SCRATCH, "landing", sf_dir, "events")
-    if not os.path.exists(f"{land}/_done"):
-        base.filter(F.col("event_id") % 3 == 0).write.mode("overwrite").parquet(f"{land}/pq")
-        base.filter(F.col("event_id") % 3 == 1).write.mode("overwrite").option(
-            "header", True
-        ).csv(f"{land}/csv")
-        base.filter(F.col("event_id") % 3 == 2).write.mode("overwrite").json(f"{land}/js")
-        open(f"{land}/_done", "w").close()
+
+    def land_formats(p: str) -> None:
+        base.filter(F.col("event_id") % 3 == 0).write.parquet(f"{p}/pq")
+        base.filter(F.col("event_id") % 3 == 1).write.option("header", True).csv(f"{p}/csv")
+        base.filter(F.col("event_id") % 3 == 2).write.json(f"{p}/js")
+
+    land = materialize("landing", sf_dir, ("events",), land_formats)
     schema = base.schema
     pq = spark.read.schema(schema).parquet(f"{land}/pq")
     cs = spark.read.schema(schema).option("header", True).csv(f"{land}/csv")
@@ -231,7 +222,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     in serving paths and reserve mergeSchema for discovery/backfill,
     because a million footer reads is itself a job. Overwrite-then-
     append keeps the fixture write idempotent per run."""
-    out = f"{SCRATCH}/events_evolving.parquet"
+    out = os.path.join(SCRATCH_ROOT, "events_evolving.parquet")
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     old = e.filter(F.col("event_id") % 2 == 0).select("event_id", "user_id")
     new = e.filter(F.col("event_id") % 2 == 1).select("event_id", "user_id", "value")
@@ -274,22 +265,18 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     loads each file as ONE row (content ≤ 2 GiB); shard accordingly
     at ingest — the per-lang partitioning here is that sharding; the
     hash/length projection is map-only (content never shuffles)."""
-    import os
-
-    from impala_refresher_spark.sources.tables import scratch_path
-
     docs = load_table(spark, sf_dir, "documents")
-    path = scratch_path("/root/repo/_scratch", "binfiles", sf_dir, "documents")
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        (
-            docs.select("lang", "doc_id", "text")
-            .repartition(1)
-            .sortWithinPartitions("lang", "doc_id")
-            .select("lang", "text")
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .text(path)
-        )
+    path = materialize(
+        "binfiles",
+        sf_dir,
+        ("documents",),
+        lambda p: docs.select("lang", "doc_id", "text")
+        .repartition(1)
+        .sortWithinPartitions("lang", "doc_id")
+        .select("lang", "text")
+        .write.partitionBy("lang")
+        .text(p),
+    )
     files = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "false")

@@ -24,12 +24,29 @@ of a TIMESTAMP(NANOS) column); there is one entry per
 the file is the only invalidation. Only regular files are cached: a
 directory (the 100 TB layout) infers on every call, because its mtime
 does not see nested files.
+
+Scratch policy (derived data written from fixtures, in one place):
+every materialization lives under ``SCRATCH_ROOT``, the checkout's
+``_scratch`` directory, in ``{prefix}_{sf}_{content-hex}``. The name is
+the freshness key: the sf-dir basename plus each source file's
+``(st_mtime_ns, st_size)`` (``scratch_tag``), so an in-place fixture
+update makes a new name and the stale copy is never read. A directory
+is complete iff it holds ``_SUCCESS``. ``materialize`` builds a missing
+one once: it writes into a unique directory under
+``SCRATCH_ROOT/.inflight`` and renames it onto the final name, so a
+reader never sees a half-written copy and two sessions building the
+same name at once both end with one complete directory. Resolving a
+name deletes the stale siblings of its ``(prefix, sf)`` group (earlier
+fixture versions); other scale factors' copies are untouched.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import stat
+import uuid
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,12 +204,15 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "_scratch"
+)
+_DONE = "_SUCCESS"
+
+
 def scratch_tag(sf_dir: str, *names: str) -> str:
-    """Cache key for scratch materializations derived from fixture
-    tables: sf-dir basename + each source's mtime/size. An in-place
-    fixture update changes the tag, so a stale materialization is
-    simply never reused (the oracle always reads the raw files —
-    without this, cached scratch data silently diverges from it)."""
+    """Freshness key of data derived from fixture tables: sf-dir
+    basename + each source's mtime/size (see the module docstring)."""
     parts = [os.path.basename(sf_dir.rstrip("/")).replace(".", "_")]
     for n in names:
         try:
@@ -203,24 +223,51 @@ def scratch_tag(sf_dir: str, *names: str) -> str:
     return "_".join(parts)
 
 
-def scratch_path(base: str, prefix: str, sf_dir: str, *names: str) -> str:
-    """Freshness-keyed scratch dir ``{base}/{prefix}_{sf}_{content-hex}``.
-
-    Deletes stale siblings of the SAME (prefix, sf) group — earlier
-    fixture versions' dead copies — while other scale factors' caches
-    (different sf component) are untouched, so multi-SF runs (warm at
-    sf0.001, timed at sf0.1) never churn each other's materializations."""
-    import shutil
-
+def scratch_path(prefix: str, sf_dir: str, *names: str) -> str:
+    """Scratch dir ``{SCRATCH_ROOT}/{prefix}_{sf}_{content-hex}``; deletes
+    the stale siblings of the same ``(prefix, sf)`` group."""
     group = f"{prefix}_{scratch_tag(sf_dir)}"
     want = f"{prefix}_{scratch_tag(sf_dir, *names)}"
     try:
-        for entry in os.listdir(base):
+        for entry in os.listdir(SCRATCH_ROOT):
             if entry.startswith(f"{group}_") and entry != want:
-                shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
+                shutil.rmtree(os.path.join(SCRATCH_ROOT, entry), ignore_errors=True)
     except OSError:
         pass
-    return os.path.join(base, want)
+    return os.path.join(SCRATCH_ROOT, want)
+
+
+def materialize(
+    prefix: str, sf_dir: str, names: Sequence[str], write: Callable[[str], None]
+) -> str:
+    """Return the complete scratch dir for ``(prefix, sf_dir, names)``,
+    calling ``write`` to build it only when it is missing.
+
+    ``write`` gets a fresh private directory path, which is published by
+    one rename; the marker is added if the writer did not leave one. A
+    directory without the marker is a broken build and is replaced. If
+    a concurrent builder publishes first, its copy is kept and this
+    one discarded. A writer that raises publishes nothing."""
+    path = scratch_path(prefix, sf_dir, *names)
+    done = os.path.join(path, _DONE)
+    if os.path.exists(done):
+        return path
+    inflight = os.path.join(SCRATCH_ROOT, ".inflight")
+    os.makedirs(inflight, exist_ok=True)
+    tmp = os.path.join(inflight, f"{os.path.basename(path)}-{uuid.uuid4().hex}")
+    try:
+        write(tmp)
+        open(os.path.join(tmp, _DONE), "a").close()
+        if not os.path.exists(done):  # an unmarked dir is a broken build
+            shutil.rmtree(path, ignore_errors=True)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.exists(done):  # not lost to a concurrent publisher
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 def register_views(

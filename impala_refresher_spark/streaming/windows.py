@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import load_table
+from impala_refresher_spark.sources.tables import load_table, materialize
 
 
 # ---------------------------------------------------------------------------
@@ -509,14 +509,9 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution inside the correctness gate, not a batch stand-in.
     (The fixture arrives in one micro-batch, so update-mode output is
     exactly one final row per user.)"""
-    import os
-
-    from impala_refresher_spark.sources.tables import scratch_path
-
     events = load_table(spark, sf_dir, "events")
-    path = scratch_path("/root/repo/_scratch", "stateful_src", sf_dir, "events")
-    if not os.path.exists(f"{path}/_SUCCESS"):  # micros; raw fixture is nanos
-        events.write.mode("overwrite").parquet(path)
+    # micros; the raw fixture is nanos
+    path = materialize("stateful_src", sf_dir, ("events",), lambda p: events.write.parquet(p))
     return run_stream_to_memory(
         spark,
         stateful_user_totals,
@@ -701,14 +696,9 @@ def stream_stateful_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch ordered-fold oracle — the fixture arrives in one
     micro-batch, so update mode emits one final row per user and the
     fold order matches the oracle's exactly."""
-    import os
-
-    from impala_refresher_spark.sources.tables import scratch_path
-
     events = load_table(spark, sf_dir, "events")
-    path = scratch_path("/root/repo/_scratch", "stateful_src", sf_dir, "events")
-    if not os.path.exists(f"{path}/_SUCCESS"):  # micros; raw fixture is nanos
-        events.write.mode("overwrite").parquet(path)
+    # micros; the raw fixture is nanos
+    path = materialize("stateful_src", sf_dir, ("events",), lambda p: events.write.parquet(p))
     out = run_stream_to_memory(
         spark,
         stateful_user_ewma,
@@ -833,12 +823,10 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window as W
 
-    from impala_refresher_spark.sources.tables import scratch_path
-
     events = load_table(spark, sf_dir, "events")
-    src = scratch_path("/root/repo/_scratch", "cdc_src", sf_dir, "events")
-    if not os.path.exists(f"{src}/_SUCCESS"):
-        events.repartition(4).write.mode("overwrite").parquet(src)
+    src = materialize(
+        "cdc_src", sf_dir, ("events",), lambda p: events.repartition(4).write.parquet(p)
+    )
     work = tempfile.mkdtemp(prefix="cdc_merge_")
     state_root = os.path.join(work, "state")
     os.makedirs(state_root, exist_ok=True)

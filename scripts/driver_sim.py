@@ -3,10 +3,12 @@
 The r01 driver ran queries under its own plain ``SparkSession.builder
 .getOrCreate()`` (none of our session.py confs), so anything that relies
 on a session-build-time conf fails there even if our tests are green.
-This script reproduces that environment: default confs, first N registry
-entries, DuckDB oracle comparison at sf0.01.
+With ``--vanilla`` this script reproduces that environment (default
+confs); without it, it runs the package session (``get_spark``) at 8
+cores. Either way: first N registry entries, DuckDB oracle comparison
+at sf0.01.
 
-Usage: python scripts/driver_sim.py [N] [sf_dir]
+Usage: python scripts/driver_sim.py [N|name,name] [sf_dir] [--vanilla]
 """
 
 from __future__ import annotations
@@ -26,23 +28,22 @@ def main() -> None:
     # or a comma-separated name list for fast re-runs of known failures;
     # arg 2: fixture dir. `--vanilla` anywhere uses a fully-default
     # session (local[*], 200 shuffle partitions — the DRIVER's
-    # accumulation-order regime) instead of the local[8]/8 sim.
+    # accumulation-order regime) instead of the package session at 8
+    # cores.
     args = [a for a in sys.argv[1:] if a != "--vanilla"]
     vanilla = "--vanilla" in sys.argv[1:]
     spec = args[0] if args else "55"
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
 
-    from pyspark.sql import SparkSession
-
     if vanilla:
+        from pyspark.sql import SparkSession
+
         spark = SparkSession.builder.getOrCreate()
     else:
-        spark = (
-            SparkSession.builder.master("local[8]")
-            .appName("driver-sim")
-            .config("spark.sql.shuffle.partitions", "8")
-            .getOrCreate()
-        )
+        from impala_refresher_spark.session import get_spark
+
+        os.environ["SPARK_GRAFT_CPUS"] = "8"
+        spark = get_spark("driver-sim")
 
     from impala_refresher_spark.queries import ORACLES, QUERIES
 

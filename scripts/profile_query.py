@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import sys
 import time
 
@@ -32,30 +33,18 @@ def main() -> None:
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
 
     os.makedirs(EVDIR, exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    # The event log is a launch-time setting: pass it to the JVM, and
+    # keep the session configuration the package's own.
+    event_log = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file://{EVDIR}",
+        "spark.eventLog.compress": "false",
+    }
+    submit = [a for k, v in event_log.items() for a in ("--conf", f"{k}={v}")]
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(submit + ["pyspark-shell"])
+    from impala_refresher_spark.session import get_spark
 
-    # mirror session.py but with the event log on
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("profile")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{EVDIR}")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.openCostInBytes", "1048576")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("profile")
     app_id = spark.sparkContext.applicationId
 
     from impala_refresher_spark.queries import QUERIES
@@ -99,29 +88,28 @@ def main() -> None:
 
     jobs = {}       # jobId -> (desc, t_start, t_end)
     stages = {}     # stageId -> dict
-    if True:
-        for line in _lines():
-            ev = json.loads(line)
-            t = ev.get("Event")
-            if t == "SparkListenerJobStart":
-                props = ev.get("Properties") or {}
-                jobs[ev["Job ID"]] = {
-                    "desc": props.get("spark.job.description", ""),
-                    "start": ev["Submission Time"],
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                }
-            elif t == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-            elif t == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                dur = (si.get("Completion Time", 0) - si.get("Submission Time", 0))
-                stages[sid] = {
-                    "name": si.get("Stage Name", "")[:80],
-                    "ms": dur,
-                    "tasks": si.get("Number of Tasks", 0),
-                }
+    for line in _lines():
+        ev = json.loads(line)
+        t = ev.get("Event")
+        if t == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs[ev["Job ID"]] = {
+                "desc": props.get("spark.job.description", ""),
+                "start": ev["Submission Time"],
+                "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
+            }
+        elif t == "SparkListenerJobEnd":
+            if ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+        elif t == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            dur = (si.get("Completion Time", 0) - si.get("Submission Time", 0))
+            stages[sid] = {
+                "name": si.get("Stage Name", "")[:80],
+                "ms": dur,
+                "tasks": si.get("Number of Tasks", 0),
+            }
 
     for name, runs in windows.items():
         print(f"\n=== {name} ===")

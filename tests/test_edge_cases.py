@@ -187,6 +187,125 @@ def test_load_table_nanos_file_cold_then_warm_under_vanilla_conf(spark, tmp_path
         spark.conf.set(conf, prev)
 
 
+def _scratch_env(tmp_path, monkeypatch):
+    """``tables`` with its scratch root moved under ``tmp_path``, and a
+    one-table fixture dir whose ``events.parquet`` only needs a stat."""
+    from impala_refresher_spark.sources import tables
+
+    root = tmp_path / "scratch"
+    monkeypatch.setattr(tables, "SCRATCH_ROOT", str(root))
+    sf = tmp_path / "sf0.001"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"v1")
+    return tables, root, str(sf)
+
+
+def _file_writer(calls):
+    def write(p):
+        calls.append(p)
+        os.makedirs(p)
+        with open(os.path.join(p, "part-0"), "w") as f:
+            f.write("rows")
+
+    return write
+
+
+def test_materialize_warm_call_does_not_rewrite(tmp_path, monkeypatch):
+    """The first call replaces an unmarked (broken) directory and adds
+    the marker; the warm call runs no writer and leaves the marker as
+    it was."""
+    tables, _, sf = _scratch_env(tmp_path, monkeypatch)
+    path = tables.scratch_path("m", sf, "events")
+    os.makedirs(path)
+    open(os.path.join(path, "stale"), "w").close()
+    calls = []
+    assert tables.materialize("m", sf, ("events",), _file_writer(calls)) == path
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-0"]
+    before = os.stat(os.path.join(path, "_SUCCESS"))
+    assert tables.materialize("m", sf, ("events",), _file_writer(calls)) == path
+    after = os.stat(os.path.join(path, "_SUCCESS"))
+    assert len(calls) == 1
+    assert (before.st_ino, before.st_mtime_ns) == (after.st_ino, after.st_mtime_ns)
+
+
+def test_materialize_rebuilds_on_fixture_change_and_drops_old_copy(tmp_path, monkeypatch):
+    tables, _, sf = _scratch_env(tmp_path, monkeypatch)
+    calls = []
+    old = tables.materialize("m", sf, ("events",), _file_writer(calls))
+    with open(os.path.join(sf, "events.parquet"), "wb") as f:
+        f.write(b"v2, one row more")
+    new = tables.materialize("m", sf, ("events",), _file_writer(calls))
+    assert new != old and len(calls) == 2
+    assert not os.path.exists(old)
+    assert os.path.exists(os.path.join(new, "_SUCCESS"))
+
+
+def test_materialize_concurrent_builders_publish_one_complete_dir(tmp_path, monkeypatch):
+    """Both builds are in flight before either publishes (the barrier
+    sits inside the writer): one rename wins, the loser discards its
+    copy, and both callers get the same complete directory."""
+    import threading
+
+    tables, root, sf = _scratch_env(tmp_path, monkeypatch)
+    barrier = threading.Barrier(2, timeout=30)
+    calls, results = [], []
+
+    def write(p):
+        _file_writer(calls)(p)
+        barrier.wait()
+
+    threads = [
+        threading.Thread(
+            target=lambda: results.append(tables.materialize("m", sf, ("events",), write))
+        )
+        for _ in range(2)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    path = tables.scratch_path("m", sf, "events")
+    assert results == [path, path] and len(calls) == 2
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-0"]
+    assert os.listdir(root / ".inflight") == []
+
+
+def test_materialize_failed_writer_publishes_nothing(tmp_path, monkeypatch):
+    import pytest
+
+    tables, root, sf = _scratch_env(tmp_path, monkeypatch)
+
+    def write(p):
+        _file_writer([])(p)
+        raise RuntimeError("writer failed")
+
+    with pytest.raises(RuntimeError, match="writer failed"):
+        tables.materialize("m", sf, ("events",), write)
+    assert not os.path.exists(tables.scratch_path("m", sf, "events"))
+    assert os.listdir(root / ".inflight") == []
+
+
+def test_scratch_root_and_marker_live_only_in_tables():
+    """No package module but ``sources/tables.py`` names the scratch
+    directory or the completion marker, and none holds the checkout's
+    absolute path."""
+    from pathlib import Path
+
+    import impala_refresher_spark
+
+    pkg = Path(impala_refresher_spark.__file__).parent
+    checkout = str(pkg.parent)
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel, src = f.relative_to(pkg).as_posix(), f.read_text()
+        if checkout in src or (
+            rel != "sources/tables.py" and ("_scratch" in src or "_SUCCESS" in src)
+        ):
+            offenders.append(rel)
+    assert offenders == []
+
+
 def test_topk_tiebreak_is_deterministic(spark):
     """row_number top-k with a tie on the ranking key must break ties
     by the declared secondary key, not partition luck."""

@@ -480,7 +480,7 @@ def test_pair_salts_derived_from_block_width(spark):
     assert n_pairs == 50 * 49 // 2
 
 
-def test_runtime_bloom_filter_prunes_fact_scan(spark):
+def test_runtime_bloom_filter_prunes_fact_scan(spark, tmp_path):
     """Third 100 TB pruning lever (after DPP and AQE skew): when a
     selective dim-side filter feeds a shuffle join, Catalyst must
     inject a runtime bloom filter — `bloom_filter_agg` built from the
@@ -488,8 +488,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
     rows that cannot join are dropped BEFORE the shuffle. Thresholds
     are lowered to fixture scale (the 10 GB application-side default
     exists precisely because this pays off on huge scans)."""
-    import os
-
     from pyspark.sql import functions as F
 
     conf = spark.conf
@@ -500,7 +498,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
             "spark.sql.autoBroadcastJoinThreshold",
         )
     }
-    base = "/root/repo/_scratch/bloom_plan_test"
+    base = str(tmp_path)
     try:
         conf.set(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",

@@ -222,7 +222,7 @@ def test_refresh_many_stress_window_and_positions(spark):
 def test_recover_partitions_discovers_all(spark, sf_dir, tmp_path_factory):
     from impala_refresher_spark.sources.tables import load_table
 
-    path = "/root/repo/_scratch/test_events_part"
+    path = str(tmp_path_factory.mktemp("test_events_part"))
     events = load_table(spark, sf_dir, "events")
     events.write.mode("overwrite").partitionBy("event_type").parquet(path)
     spark.sql("DROP TABLE IF EXISTS test_events_part")

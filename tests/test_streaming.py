@@ -35,14 +35,16 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-SCRATCH = "/root/repo/_scratch/streaming"
+@pytest.fixture(scope="module")
+def scratch(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("streaming"))
 
 
 @pytest.fixture(scope="module")
-def events_stream_dir(spark, sf_dir):
+def events_stream_dir(spark, sf_dir, scratch):
     """Fixture events re-written as micro-precision parquet so the
     file streaming source can read them (the raw fixture is nanos)."""
-    path = f"{SCRATCH}/events_src"
+    path = f"{scratch}/events_src"
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(path)
     yield path
     shutil.rmtree(path, ignore_errors=True)
@@ -82,13 +84,13 @@ def _write_batch(spark, rows, path, mode):
     df.coalesce(1).write.mode(mode).parquet(path)
 
 
-def test_t4_watermark_drops_late_data(spark):
+def test_t4_watermark_drops_late_data(spark, scratch):
     """Two micro-batches: batch 1 advances the watermark far past the
     first window; batch 2 delivers a straggler inside that window.
     The straggler must be DROPPED (its window's count stays as
     finalized), and a fresh on-time event must still count."""
-    path = f"{SCRATCH}/late_src"
-    ckpt = f"{SCRATCH}/late_ckpt"
+    path = f"{scratch}/late_src"
+    ckpt = f"{scratch}/late_ckpt"
     # Pre-clean BOTH dirs: a stale checkpoint from an interrupted prior
     # run makes start() fail with "does not support recovering from
     # checkpoint location" (r06 verdict: the suite's only red was this
@@ -155,14 +157,14 @@ def test_t6_stream_stream_join_equals_batch(spark, sf_dir, events_stream_dir):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_stateful_totals_accumulate_across_batches(spark):
+def test_stateful_totals_accumulate_across_batches(spark, scratch):
     """applyInPandasWithState must carry per-key state between
     micro-batches: the same user appearing in two batches yields a
     second emission with the RUNNING total, not a fresh count."""
     from impala_refresher_spark.streaming import stateful_user_totals
 
-    path = f"{SCRATCH}/stateful_src"
-    ckpt = f"{SCRATCH}/stateful_ckpt"
+    path = f"{scratch}/stateful_src"
+    ckpt = f"{scratch}/stateful_ckpt"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
@@ -191,15 +193,15 @@ def test_stateful_totals_accumulate_across_batches(spark):
     assert all(r.value_cents == 100 * r.n_events for r in rows)  # value=1.0 each
 
 
-def test_stateful_totals_state_is_evicted_after_ttl(spark):
+def test_stateful_totals_state_is_evicted_after_ttl(spark, scratch):
     """State must be BOUNDED: once the event-time watermark passes a
     user's TTL, their state is evicted — a later event for that user
     restarts the total from zero instead of resuming. (With
     GroupStateTimeout.NoTimeout the third emission would be 3.)"""
     from impala_refresher_spark.streaming import stateful_user_totals
 
-    path = f"{SCRATCH}/evict_src"
-    ckpt = f"{SCRATCH}/evict_ckpt"
+    path = f"{scratch}/evict_src"
+    ckpt = f"{scratch}/evict_ckpt"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -238,7 +240,7 @@ def test_stateful_totals_state_is_evicted_after_ttl(spark):
     assert user1 == [1, 2]  # batch-1 total 2; post-eviction restart at 1
 
 
-def test_foreach_batch_parquet_sink_lands_finalized_windows(spark):
+def test_foreach_batch_parquet_sink_lands_finalized_windows(spark, scratch):
     """foreachBatch → parquet must land exactly the watermark-finalized
     windows (append mode): late-closed windows appear once the
     watermark passes them; open windows never reach the sink."""
@@ -246,9 +248,9 @@ def test_foreach_batch_parquet_sink_lands_finalized_windows(spark):
         run_stream_foreach_batch_parquet,
     )
 
-    src = f"{SCRATCH}/fb_src"
-    out = f"{SCRATCH}/fb_out"
-    ckpt = f"{SCRATCH}/fb_ckpt"
+    src = f"{scratch}/fb_src"
+    out = f"{scratch}/fb_out"
+    ckpt = f"{scratch}/fb_ckpt"
     for p in (src, out, ckpt):
         shutil.rmtree(p, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
@@ -267,8 +269,8 @@ def test_foreach_batch_parquet_sink_lands_finalized_windows(spark):
     assert got == {datetime(2024, 1, 1, 0, 0): 3}  # closed window only
 
 
-def test_t5_stateful_dedup_drops_duplicate_ids(spark):
-    path = f"{SCRATCH}/dedup_src"
+def test_t5_stateful_dedup_drops_duplicate_ids(spark, scratch):
+    path = f"{scratch}/dedup_src"
     shutil.rmtree(path, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
     _write_batch(spark, [(1, t(0)), (2, t(1)), (1, t(2))], path, "overwrite")
@@ -296,13 +298,13 @@ def test_t7_stream_static_enrich_equals_batch(spark, sf_dir, events_stream_dir):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_t5b_dedup_within_watermark_drops_cross_batch_duplicate(spark):
+def test_t5b_dedup_within_watermark_drops_cross_batch_duplicate(spark, scratch):
     """dropDuplicatesWithinWatermark must dedup a redelivery arriving
     in a LATER micro-batch (within the delay), and state must not need
     the key forever — the at-least-once source contract."""
     from impala_refresher_spark.streaming.windows import stream_dedup_within_watermark
 
-    path = f"{SCRATCH}/dedup_wm_src"
+    path = f"{scratch}/dedup_wm_src"
     shutil.rmtree(path, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
     _write_batch(spark, [(1, t(0)), (2, t(1))], path, "overwrite")
@@ -327,14 +329,14 @@ def test_t5b_dedup_within_watermark_drops_cross_batch_duplicate(spark):
     assert ids == [1, 2, 3]  # the cross-batch duplicate emitted once
 
 
-def test_stateful_ewma_decays_across_batches(spark):
+def test_stateful_ewma_decays_across_batches(spark, scratch):
     """The streaming EWMA must fold batch-2 values onto the DECAYED
     state from batch 1 (α=0.5): v=[1,1] then [1] for one user gives
     0.75 then 0.875 — fresh-state re-computation would give 0.5."""
     from impala_refresher_spark.streaming.windows import stateful_user_ewma
 
-    path = f"{SCRATCH}/ewma_src"
-    ckpt = f"{SCRATCH}/ewma_ckpt"
+    path = f"{scratch}/ewma_src"
+    ckpt = f"{scratch}/ewma_ckpt"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
@@ -362,15 +364,15 @@ def test_stateful_ewma_decays_across_batches(spark):
     assert got == [0.75, 0.875]  # decayed continuation, not a reset
 
 
-def test_t13_left_outer_join_emits_nulls_after_watermark(spark):
+def test_t13_left_outer_join_emits_nulls_after_watermark(spark, scratch):
     """LEFT OUTER stream-stream join: an unmatched view must be
     emitted with NULL purchase columns — but only AFTER the watermark
     passes its match window (state eviction is the emission trigger),
     never speculatively while a match could still arrive."""
     from impala_refresher_spark.streaming import view_purchase_join
 
-    path = f"{SCRATCH}/outer_src"
-    ckpt = f"{SCRATCH}/outer_ckpt"
+    path = f"{scratch}/outer_src"
+    ckpt = f"{scratch}/outer_ckpt"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
@@ -444,15 +446,15 @@ def test_t13_left_outer_join_emits_nulls_after_watermark(spark):
     assert 4 not in by_view
 
 
-def test_available_now_drains_then_stops_with_observed_dq(spark):
+def test_available_now_drains_then_stops_with_observed_dq(spark, scratch):
     """Two operational surfaces in one run: Trigger.AvailableNow must
     process ALL pending input then self-terminate (the batch-catchup
     mode for scheduled backfills — no manual stop, exactly-once via
     the checkpoint), and df.observe() must surface in-flight data
     quality counters (row count, null count) from the micro-batch
     progress — DQ metrics without a second pass over the data."""
-    path = f"{SCRATCH}/availnow_src"
-    ckpt = f"{SCRATCH}/availnow_ckpt"
+    path = f"{scratch}/availnow_src"
+    ckpt = f"{scratch}/availnow_ckpt"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
@@ -499,7 +501,7 @@ def test_available_now_drains_then_stops_with_observed_dq(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_checkpoint_restart_resumes_exactly_once(spark):
+def test_checkpoint_restart_resumes_exactly_once(spark, scratch):
     """Kill-and-restart recovery: a NEW query object started on the
     SAME checkpoint must resume from the recorded offsets — the
     already-processed batch is neither reprocessed (no double counts)
@@ -507,8 +509,8 @@ def test_checkpoint_restart_resumes_exactly_once(spark):
     contract that makes streaming jobs restartable at all."""
     from impala_refresher_spark.streaming import tumbling_window_counts
 
-    path = f"{SCRATCH}/restart_src"
-    ckpt = f"{SCRATCH}/restart_ckpt"
+    path = f"{scratch}/restart_src"
+    ckpt = f"{scratch}/restart_ckpt"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
@@ -549,14 +551,14 @@ def test_checkpoint_restart_resumes_exactly_once(spark):
     assert got[datetime(2024, 1, 1, 1, 10)] == 2
 
 
-def test_t18_full_outer_join_emits_both_sides_nulls(spark):
+def test_t18_full_outer_join_emits_both_sides_nulls(spark, scratch):
     """FULL OUTER stream-stream join: an unmatched view AND an
     unmatched purchase must each surface with NULLs on the other side
     — and only after the watermark closes their match windows."""
     from impala_refresher_spark.streaming import view_purchase_join
 
-    path = f"{SCRATCH}/fo_src"
-    ckpt = f"{SCRATCH}/fo_ckpt"
+    path = f"{scratch}/fo_src"
+    ckpt = f"{scratch}/fo_ckpt"
     shutil.rmtree(path, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
