@@ -477,17 +477,20 @@ def pipeline_training_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back — measured ~1.7x slower at sf0.1. Window state per gram is
     # one running min, so a hot gram degrades to sort-spill, never a
     # pair blowup.)
-    # Shuffle-byte discipline (r10, guide §2.3): the exchange/sort key
-    # is xxhash64(gram) — 8 bytes instead of the ~50-byte 8-word span
+    # Shuffle-byte discipline (r10, guide §2.3): the exchange is keyed
+    # on xxhash64(gram) — 8 bytes instead of the ~50-byte 8-word span
     # text, the same hashed-key rule the bigram branch and
-    # dup_span_ngrams' docstring already commit to. A cross-gram
-    # 64-bit collision (~|grams|²/2^65, ≈1e-9 here) could only merge
-    # two posting lists; min-doc semantics keep every genuine dup.
+    # dup_span_ngrams' docstring already commit to. The window still
+    # partitions by (gh, gram), so a 64-bit collision cannot merge two
+    # posting lists: HashPartitioning(gh) already satisfies the
+    # window's clustering on (gh, gram), so no second exchange is
+    # planned and only the in-partition sort sees the gram text.
     from pyspark.sql import Window
 
-    gw = Window.partitionBy("gh")
+    gw = Window.partitionBy("gh", "gram")
     span_drop = (
-        g.select("doc_id", F.xxhash64("gram").alias("gh"))
+        g.select("doc_id", "gram", F.xxhash64("gram").alias("gh"))
+        .repartition("gh")
         .withColumn("keeper", F.min("doc_id").over(gw))
         .filter(F.col("doc_id") > F.col("keeper"))
         .select("doc_id")

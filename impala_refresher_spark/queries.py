@@ -2,14 +2,31 @@
 
 Importing this module imports every operator module, which registers
 its queries/oracles via the ``@query`` decorator into
-``impala_refresher_spark.registry``.
+``impala_refresher_spark.registry``, then orders the registry.
+
+The registry order is the driver's next correctness window (it checks
+the first 50 entries each round), and the driver evidence is its only
+source: oracled queries come first, oldest last-green round first
+(never-green and net-new names lead, name breaks ties), and the two
+rows-only native-sketch queries sit at the tail. The window rotates by
+itself whenever a ``CORRECTNESS_r*.json`` file lands. Nothing is
+re-queued by hand: a query whose transitive source changed is
+re-verified by a clean full-registry ``scripts/driver_sim.py --vanilla``
+sweep plus ``scripts/gen_ledger.py --rebaseline``, which the sweep
+certificate gates.
 """
 
 from __future__ import annotations
 
+import glob
 import importlib
+import json
+import os
+import re
 
 from impala_refresher_spark.registry import ORACLES, QUERIES
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _OPERATOR_MODULES = [
     "impala_refresher_spark.operators.relational",
@@ -41,313 +58,31 @@ def _load() -> None:
         importlib.import_module(mod)
 
 
-# The driver's correctness pass walks the registry in order and checks
-# the FIRST 50 entries per round. Since r06, ALL SQL-oracled
-# queries are hash-green in some round (100% cumulative coverage); the
-# binding constraint is EVIDENCE FRESHNESS. Steady-state policy
-# (SURVEY §7): order the whole oracled surface by last-green round
-# ascending (oldest evidence first, name as tie-break), with each
-# round's code-changed / hash-requeued queries pinned to the front.
-#
-# r09 window (slots 1-50), cut from `gen_ledger.py --next-window`'s
-# output (the r07 verdict's rule: the mechanical ledger, not prose
-# counts, is the authority): the one r09 net-new
-# (inverted_index_delta_merge — no other r09 code edit touches an
-# oracled query's transitive source), then the 14 names whose newest
-# green row is still r03 (tpch_q17..q8 + zorder_cluster_stats), then
-# the 35 alphabetically-first r04 names. The 7 remaining r04 names
-# (stream_cdc_merge..trending_decayed_counts) head the r10 window;
-# after r09 lands, oldest evidence is r04 (7 names). Re-queues are
-# enforced mechanically by the TRANSITIVE source-hash gate in
-# scripts/gen_ledger.py (covers same-package helpers reachable from
-# each query, so the r06 _shingles blind spot is closed; STALE GREEN
-# exits nonzero, and list/dict/set module constants are folded into
-# the hash as of r08 — including sets nested inside other constants
-# as of r09).
-#
-# The 2 rows-only queries (`agg_approx_percentiles`,
-# `agg_approx_distinct`) sit at the LITERAL tail (every registry name
-# is listed here explicitly, so _reorder's append branch is empty and
-# the tail invariant holds by construction). Permanent evidence
-# story, restated each round per the r05 verdict: both exist to
-# demonstrate Spark's NATIVE sketch APIs (GK percentile_approx and
-# HLL++ approx_count_distinct), whose sketch internals are
-# engine-specific by definition, so a DuckDB value oracle cannot
-# apply; their accuracy contracts (ε bounds vs exact) live in pytest
-# (tests/test_llm_ops.py), and their PORTABLE twins are fully oracled
-# (histogram_equidepth, linear_counting_distinct, hll_sketch_rollup).
-# They never burn a driver window slot as `err: no_oracle`.
-_R09_PRIORITY = [
-    # -- slot 1: r09 net-new (1 of the <=5 allowance; the slot the
-    #    r08 verdict nominated): incremental inverted-index
-    #    maintenance — a new batch's postings merged into M7's
-    #    bucketed layout as a second segment, no base rewrite --
-    "inverted_index_delta_merge",
-    # -- slots 2-15: the 14 r03-evidence names (oldest green in the
-    #    rotation; order cut from gen_ledger --next-window) --
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume_customers",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_excess_stock_parts",
-    "tpch_q21_suppliers_who_kept_waiting",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "zorder_cluster_stats",
-    # -- slots 16-50: the 35 alphabetically-first r04 names; the 7
-    #    remaining r04 names head the r10 window --
-    "anova_segment_acctbal",
-    "benford_first_digit",
-    "bfs_event_transitions",
-    "chisq_segment_status",
-    "clamped_running_balance",
-    "cms_frequency_estimate",
-    "corpus_mixture_temperature",
-    "cumulative_distinct_users",
-    "entity_resolution_clusters",
-    "fk_orphans_audit",
-    "fn_structs",
-    "fuzzy_join_part_names",
-    "gap_islands_active_days",
-    "hhi_supplier_concentration",
-    "langid_confusion_kappa",
-    "langid_precision_recall",
-    "linear_counting_distinct",
-    "mad_outlier_accounts",
-    "market_basket_pairs",
-    "markov_event_transitions",
-    "mutual_information_lang_source",
-    "pandas_api_summary",
-    "partition_checksums",
-    "pipeline_training_corpus_v2",
-    "profile_table_stats",
-    "revenue_mom_change",
-    "rolling_corr_qty_price",
-    "schema_evolution_merge",
-    "seasonal_dow_anomaly",
-    "semdedup_embeddings",
-    "snapshot_diff_orders",
-    "source_binaryfile_ingest",
-    "sql_parameterized_filter",
-    "sql_pipe_syntax_summary",
-    "sql_recursive_reachability",
-    # -- r04-green tail (rotates r10) --
-    "stream_cdc_merge",
-    "stream_stream_full_outer",
-    "survival_user_retention",
-    "time_weighted_avg_value",
-    "timeseries_decompose_daily",
-    "top_event_paths",
-    "trending_decayed_counts",
-    # -- r05-green (rotates in later rounds) --
-    "agg_ewma_per_user",
-    "agg_stats_moments",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "ann_pq_topk",
-    "aqp_revenue_estimate",
-    "cogroup_reconcile",
-    "cohort_retention",
-    "corpus_shuffle_interleave",
-    "corpus_source_quota",
-    "cusum_daily_revenue",
-    "daily_events_zero_filled",
-    "dedup_cluster_components",
-    "dedup_cluster_survivors",
-    "dedup_incremental_batch",
-    "dedup_simhash",
-    "dq_rule_violations",
-    "fn_try_safe",
-    "funnel_conversion",
-    "histogram_equidepth",
-    "hll_sketch_rollup",
-    "inverted_index_serve",
-    "join_cardinality_estimate",
-    "join_key_skew_profile",
-    "multimodal_features",
-    "nations_covering_all_segments",
-    "nearest_event_join",
-    "ols_per_nation",
-    "outlier_orders_zscore",
-    "pack_sequences_greedy",
-    "quality_char_entropy",
-    "quality_lm_trigram",
-    "revenue_share_by_nation",
-    "rolling_7day_revenue",
-    "sample_stratified_by_source",
-    "sql_exists_subquery",
-    "subsample_ci_revenue",
-    "text_keyword_in_context",
-    "text_redact_pii",
-    "text_top_tokens",
-    "tpch_q9_product_type_profit",
-    "train_val_test_split",
-    "window_dedup_keep_first",
-    # -- r06-green (rotates in later rounds) --
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_percentiles",
-    "agg_pivot",
-    "agg_pricing_summary",
-    "agg_rollup",
-    "customer_rfm_segments",
-    "embed_int8_quantize",
-    "except_all_keys",
-    "explode_tokens",
-    "filter_compound",
-    "fn_json",
-    "fn_maps",
-    "fn_variant_shred",
-    "intersect_all_keys",
-    "intersect_keys",
-    "join_anti",
-    "join_broadcast_dim",
-    "join_bucketed",
-    "join_full_outer",
-    "join_inner",
-    "join_left_outer",
-    "join_range",
-    "join_right_outer",
-    "join_semi",
-    "join_skew_salted",
-    "ks_statistic_status",
-    "merge_overlapping_intervals",
-    "order_global_sort",
-    "order_topn",
-    "pareto_frontier_parts",
-    "posexplode_tokens",
-    "project_computed",
-    "refresh_many_status",
-    "refresh_table_status",
-    "retrieval_rrf_fusion",
-    "revenue_concentration_gini",
-    "sample_hash_deterministic",
-    "scan_parquet",
-    "score_auc_quality",
-    "score_gain_deciles",
-    "select_corpus_token_budget",
-    "star_join_revenue",
-    "text_bm25_score",
-    "text_chunk_sliding",
-    # -- r07-green (rotates in later rounds) --
-    "above_avg_orders",
-    "ann_recall_at_k",
-    "asof_click_attribution",
-    "cosine_similarity_join",
-    "cosine_topk",
-    "decontaminate_train_set",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_exact_hash",
-    "dedup_minhash_incremental",
-    "dedup_minhash_lsh",
-    "dedup_span_removal",
-    "doc_fingerprint",
-    "embed_random_projection",
-    "fingerprint_winnowing",
-    "first_touch_attribution",
-    "fn_array_vector",
-    "fn_arrays",
-    "fn_conditional",
-    "fn_dates",
-    "fn_math",
-    "fn_strings",
-    "frame_sample",
-    "histogram_totalprice",
-    "hypertable_rollup_daily",
-    "lang_id_heuristic",
-    "lang_source_histogram",
-    "multimodal_join",
-    "multimodal_resize",
-    "pipeline_training_corpus",
-    "quality_filter",
-    "quality_repetition_ratio",
-    "quality_score",
-    "quote_containment_join",
-    "recover_partitions_status",
-    "text_bigrams",
-    "text_tokenize",
-    "topk_per_group",
-    "udaf_median_chars",
-    "udf_pandas_token_count",
-    "udtf_tokenize",
-    "union_all",
-    "union_distinct",
-    "unpivot_metrics",
-    "window_analytic",
-    "window_distribution",
-    "window_range_frame",
-    "window_ranking",
-    "window_sliding",
-    # -- r08-green (rotates in later rounds) --
-    "catalog_describe_table",
-    "catalog_list_tables",
-    "compact_small_files",
-    "dedup_ngram_jaccard",
-    "dedup_quality_scoreboard",
-    "dpp_partitioned_events",
-    "dup_span_ngrams",
-    "hypertable_rollup_incremental",
-    "kmeans_refine_assignments",
-    "knn_join_topk",
-    "label_centroids",
-    "merge_upsert_orders",
-    "multi_format_union",
-    "pagerank_bipartite",
-    "pca_power_iteration",
-    "pit_feature_join",
-    "quality_gopher_rules",
-    "range_join_count_orderstat",
-    "sample_weighted_reservoir",
-    "scd2_user_value_history",
-    "sessionize_user_activity",
-    "sink_csv_roundtrip",
-    "sink_json_roundtrip",
-    "sink_orc_roundtrip",
-    "sink_parquet_roundtrip",
-    "sql_star_revenue",
-    "stream_dedup_counts",
-    "stream_dedup_within_wm_counts",
-    "stream_session_windows",
-    "stream_sliding_counts",
-    "stream_stateful_ewma",
-    "stream_stateful_totals",
-    "stream_static_enrich",
-    "stream_stream_join",
-    "stream_stream_left_outer",
-    "stream_tumbling_counts",
-    "stream_watermarked_counts",
-    "stream_windowed_topk",
-    "text_lexicon_score",
-    "text_tfidf",
-    "timeseries_interpolate_linear",
-    "token_count_regex",
-    "top_account_by_nation",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_shipping",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_parts_supplier_counts",
-    # -- permanent literal tail: the 2 rows-only native-sketch
-    #    demos (policy block above) --
-    "agg_approx_percentiles",
-    "agg_approx_distinct",
-]
+def last_green_rounds(root: str = _ROOT) -> dict[str, int]:
+    """``{name: newest round whose CORRECTNESS_r<N>.json row has
+    hash_match}`` over the correctness files in ``root``; a file with
+    any other suffix (``CORRECTNESS_r10_c8.json``) is not evidence."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                if row.get("hash_match"):
+                    last[name] = max(last.get(name, 0), rnd)
+    return last
+
+
+def registry_order(names, oracled, last_green: dict[str, int]) -> list[str]:
+    """Oracled names first, oldest last-green round first (never-green
+    counts as round 0), name as tie-break; rows-only names last."""
+    return sorted(names, key=lambda n: (n not in oracled, last_green.get(n, 0), n))
 
 
 def _reorder() -> None:
-    known = set(_R09_PRIORITY)
-    ordered = [n for n in _R09_PRIORITY if n in QUERIES]
-    ordered += [n for n in QUERIES if n not in known]
+    ordered = registry_order(QUERIES, ORACLES, last_green_rounds())
     for reg in (QUERIES, ORACLES):
         snap = {n: reg[n] for n in ordered if n in reg}
         reg.clear()

@@ -24,7 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    # arg 1: a count (first-N registry entries, the driver-window shape)
+    # arg 1: a count (first-N registry entries; the registry order is
+    # the next driver window, oldest correctness evidence first)
     # or a comma-separated name list for fast re-runs of known failures;
     # arg 2: fixture dir. `--vanilla` anywhere uses a fully-default
     # session (local[*], 200 shuffle partitions — the DRIVER's

@@ -1,10 +1,13 @@
 """Regenerate the driver-verification ledger section of COVERAGE.md.
 
-Reads every CORRECTNESS_r0N.json in the repo root, computes each
-registered query's last driver-green round, and rewrites the
-"## Driver verification ledger" section (everything from that heading
-to the end of COVERAGE.md). Run after each round's CORRECTNESS file
-lands so the steady-state policy (SURVEY §7) stays auditable:
+Reads every CORRECTNESS_r0N.json in the repo root, takes each
+registered query's last driver-green round from
+``queries.last_green_rounds`` (the same evidence that orders the
+registry, so the registry order is the upcoming driver window), and
+rewrites the "## Driver verification ledger" section (everything from
+that heading to the end of COVERAGE.md). Run after each round's
+CORRECTNESS file lands so the steady-state policy (SURVEY §7) stays
+auditable:
 
     python scripts/gen_ledger.py
 
@@ -16,8 +19,9 @@ Status legend:
                             registry window (first check or re-verify).
 - "STALE GREEN"           — has a green row but the query's source or
                             oracle changed since, and it is NOT in the
-                            current window (must be empty — a forgotten
-                            re-queue; exits nonzero).
+                            current window (must be empty — re-verify
+                            with a full sweep and --rebaseline; exits
+                            nonzero).
 - "BACKLOG"               — oracled but never hash-checked and NOT in
                             the current window (must be empty).
 - "rows-only by design"   — no SQL oracle on purpose; pytest contract.
@@ -28,7 +32,8 @@ was manual. Now LEDGER_HASHES.json records, per query, a sha256 of the
 query's TRANSITIVE source + the oracle SQL as of the last time that
 query's green round advanced; on regeneration, a query whose current
 hash differs from the recorded one is downgraded out of
-"green, unchanged" and must sit in the current window.
+"green, unchanged" and must sit in the current window or be
+re-verified by a full sweep plus ``--rebaseline``.
 
 Transitivity (r06 verdict item 2): hashing only
 ``inspect.getsource(fn)`` missed edits to shared same-package helpers
@@ -251,55 +256,19 @@ def compute_statuses(
     return rows, backlog, stale
 
 
-def next_window_order(
-    names: list[str],
-    oracled: set[str],
-    last_green: dict[str, int],
-) -> list[tuple[str, int]]:
-    """The steady-state rotation order for the NEXT round's priority
-    list: every oracled query sorted by (last-green round asc, name),
-    never-green names first — i.e. oldest evidence first. The round's
-    net-new and source-change re-queues still get pinned by hand ahead
-    of this list; everything else is mechanical (the r07 verdict's
-    rule: cut the window from the ledger, not from prose counts)."""
-    rot = [n for n in names if n in oracled]
-    rot.sort(key=lambda n: (last_green.get(n, 0), n))
-    return [(n, last_green.get(n, 0)) for n in rot]
-
-
 def main() -> None:
-    from impala_refresher_spark.queries import ORACLES, QUERIES
+    from impala_refresher_spark.queries import ORACLES, QUERIES, last_green_rounds
 
-    corr_files = sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")))
-    last_green: dict[str, int] = {}
-    for path in corr_files:
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match"):
-                last_green[name] = max(last_green.get(name, 0), rnd)
+    corr_files = glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
+    last_green = last_green_rounds(ROOT)
     cur = max(
         (int(re.search(r"_r(\d+)\.json$", p).group(1)) for p in corr_files),
         default=0,
     ) + 1
 
+    # The registry order is the next driver window (queries.py).
     names = list(QUERIES)
     window = set(names[:50])
-
-    # --next-window: print the evidence-age-ordered rotation list for
-    # the NEXT round's _R{N}_PRIORITY head, then exit (no file writes).
-    if "--next-window" in sys.argv[1:]:
-        try:
-            # ``cur`` is already max(CORRECTNESS rounds)+1 — i.e. the
-            # round being seeded when this runs at round start (r08
-            # judge: the old ``cur + 1`` label was off by one).
-            print(f"# rotation order for r{cur:02d} (pin net-new and"
-                  " re-queues ahead by hand):")
-            for n, lg in next_window_order(names, set(ORACLES), last_green):
-                print(f'    "{n}",  # r{lg:02d}' if lg
-                      else f'    "{n}",  # never')
-        except BrokenPipeError:
-            pass  # piped through head: fine
-        return
 
     stored: dict[str, dict] = {}
     if os.path.exists(HASHES_PATH):
@@ -342,12 +311,14 @@ def main() -> None:
         f"Generated from {len(corr_files)} CORRECTNESS files by "
         "`scripts/gen_ledger.py`; regenerate after each round. "
         f"`r{cur:02d}` rows are scheduled in the current round's driver "
-        "window (registry slots 1-50). Policy (SURVEY §7): any code or "
-        "oracle change to a driver-green query re-queues it for the next "
-        "window — now ENFORCED by source hashes (LEDGER_HASHES.json): "
-        "\"green, unchanged\" additionally asserts the query's source + "
-        "oracle hash matches the one recorded at its last green. The "
-        "BACKLOG and STALE GREEN statuses must never appear.",
+        "window (registry slots 1-50; the registry is ordered oldest "
+        "driver evidence first, see `queries.py`). Policy: any code or "
+        "oracle change to a driver-green query must be re-verified by a "
+        "full-registry `driver_sim.py --vanilla` sweep plus "
+        "`gen_ledger.py --rebaseline` — ENFORCED by source hashes "
+        "(LEDGER_HASHES.json): \"green, unchanged\" additionally asserts "
+        "the query's source + oracle hash matches the one recorded at its "
+        "last green. The BACKLOG and STALE GREEN statuses must never appear.",
         "",
         "| Query | Last driver-green | Status |",
         "|---|---|---|",

@@ -289,71 +289,106 @@ def test_bench_compare_probe_normalization():
     assert compare(old, wobble, threshold=1.25)["flagged"] == []
 
 
-def test_next_window_order_is_oldest_evidence_first():
-    """Rotation order: never-green first, then ascending last-green
-    round, name as tie-break; rows-only names excluded."""
-    from scripts.gen_ledger import next_window_order
+def test_last_green_rounds_rotates_latest_evidence_to_the_back(tmp_path):
+    """The registry order is derived from the CORRECTNESS files alone: a
+    ``hash_match: false`` row or a suffixed file is no evidence, the
+    newest green round wins, and names checked green in the latest
+    round sort behind every other oracled name (rows-only names stay
+    at the tail)."""
+    import json
 
-    names = ["q_new", "q_r3b", "q_r2", "q_r3a", "q_rows_only"]
-    oracled = {"q_new", "q_r2", "q_r3a", "q_r3b"}
-    last_green = {"q_r2": 2, "q_r3a": 3, "q_r3b": 3}
-    assert next_window_order(names, oracled, last_green) == [
-        ("q_new", 0),
-        ("q_r2", 2),
-        ("q_r3a", 3),
-        ("q_r3b", 3),
-    ]
+    from impala_refresher_spark.queries import last_green_rounds, registry_order
 
-
-def test_next_window_header_labels_the_round_being_seeded():
-    """r08 judge: run at round-N start (after CORRECTNESS_r{N-1}
-    lands), --next-window seeds _R{N}_PRIORITY, so the header must say
-    r{N} = max(recorded rounds)+1, not r{N+1}."""
-    import glob
-    import re as _re
-    import subprocess
-    import sys as _sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(_re.search(r"_r(\d+)\.json$", p).group(1))
-        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    ]
-    assert rounds, "driver correctness files expected at repo root"
-    out = subprocess.run(
-        [_sys.executable, os.path.join(root, "scripts", "gen_ledger.py"),
-         "--next-window"],
-        capture_output=True, text=True, cwd=root, timeout=120,
+    rounds = {
+        3: {"q_a": {"hash_match": True}, "q_b": {"hash_match": True},
+            "q_c": {"hash_match": True}, "q_d": {"hash_match": True}},
+        4: {"q_b": {"hash_match": True}, "q_c": {"hash_match": False}},
+        5: {"q_a": {"hash_match": True}, "q_e": {"hash_match": False}},
+    }
+    for rnd, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_r07_c8.json").write_text(
+        json.dumps({"q_d": {"hash_match": True}})
     )
-    assert out.returncode == 0, out.stderr[-500:]
-    header = out.stdout.splitlines()[0]
-    assert f"r{max(rounds) + 1:02d}" in header, header
 
+    last = last_green_rounds(str(tmp_path))
+    assert last == {"q_a": 5, "q_b": 4, "q_c": 3, "q_d": 3}
+    assert last_green_rounds(str(tmp_path / "empty")) == {}
 
-def test_registry_priority_list_is_exact_and_tail_invariant_holds():
-    """Rotation guard: the priority list must name every registered
-    query exactly once (a dropped name would be silently appended by
-    _reorder's fallback branch and could evict the rows-only tail from
-    its documented position), and the 2 rows-only queries must sit at
-    the literal tail so they never burn a driver window slot."""
-    import impala_refresher_spark.queries as qmod
-    from impala_refresher_spark.queries import ORACLES, QUERIES
-
-    prio = [v for k, v in vars(qmod).items() if k.endswith("_PRIORITY")]
-    assert len(prio) == 1, "exactly one _R{N}_PRIORITY list"
-    prio = prio[0]
-    assert len(prio) == len(set(prio)), "duplicate name in priority list"
-    assert set(prio) == set(QUERIES), (
-        set(prio) ^ set(QUERIES) or "ok"
+    names = ["q_rows", "q_a", "q_b", "q_c", "q_d", "q_e", "q_new"]
+    oracled = set(names) - {"q_rows"}
+    order = registry_order(names, oracled, last)
+    assert order == ["q_e", "q_new", "q_c", "q_d", "q_b", "q_a", "q_rows"]
+    # a new round lands: its names move behind every other oracled name
+    (tmp_path / "CORRECTNESS_r06.json").write_text(
+        json.dumps({"q_c": {"hash_match": True}, "q_new": {"hash_match": True}})
     )
+    order = registry_order(names, oracled, last_green_rounds(str(tmp_path)))
+    assert order[-3:] == ["q_c", "q_new", "q_rows"]
+    assert order[:2] == ["q_e", "q_d"]
+
+
+def test_registry_order_is_the_evidence_order_and_tail_invariant_holds():
+    """The live registry order is exactly the evidence sort: the driver
+    window (the first 50 names) holds only oracled queries, and the 2
+    rows-only queries sit at the tail so they never burn a window
+    slot."""
+    from impala_refresher_spark.queries import (
+        ORACLES,
+        QUERIES,
+        last_green_rounds,
+        registry_order,
+    )
+
     names = list(QUERIES)
-    rows_only = [n for n in names if n not in ORACLES]
-    assert names[-2:] == sorted(
-        rows_only, reverse=True
-    ) or set(names[-2:]) == set(rows_only), "rows-only tail invariant"
+    assert names == registry_order(names, ORACLES, last_green_rounds())
+    assert list(ORACLES) == [n for n in names if n in ORACLES]
     assert all(n in ORACLES for n in names[:50]), (
         "window slot holds a rows-only query"
     )
+    assert names[-2:] == ["agg_approx_distinct", "agg_approx_percentiles"]
+    assert not set(names[-2:]) & set(ORACLES)
+
+
+def test_live_ledger_has_no_backlog_or_stale_green():
+    """The ledger gate on the tree as committed: every oracled query's
+    source hash matches the one recorded at its last green, or it sits
+    in the current driver window. A code change that reaches an
+    oracled query must land with a full sweep and ``gen_ledger.py
+    --rebaseline``. Hashed in a fresh interpreter, as gen_ledger.py
+    runs: the transitive hash folds the repr of module-level dicts, and
+    a run-time cache such as ``tables._SCHEMAS`` fills once queries
+    have run in this process."""
+    import json
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent(
+        """
+        import json
+        from impala_refresher_spark.queries import ORACLES, QUERIES, last_green_rounds
+        from scripts.gen_ledger import HASHES_PATH, _source_hash, compute_statuses
+
+        names = list(QUERIES)
+        with open(HASHES_PATH) as f:
+            stored = json.load(f)
+        current = {n: _source_hash(QUERIES[n], ORACLES.get(n)) for n in names}
+        last_green = last_green_rounds()
+        _, backlog, stale = compute_statuses(
+            names, set(ORACLES), last_green, stored, current,
+            window=set(names[:50]), cur=max(last_green.values()) + 1,
+        )
+        print(json.dumps({"backlog": backlog, "stale": stale}))
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    res = json.loads(out.stdout.splitlines()[-1])
+    assert res["backlog"] == []
+    assert res["stale"] == []
 
 
 def test_bench_compare_best_of_runs_erases_wobble_keeps_regressions():

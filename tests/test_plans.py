@@ -1406,8 +1406,10 @@ def test_pipeline_v2_span_branch_fans_out_and_hashes(spark):
     """pipeline_training_corpus_v2's span-drop branch must (a) fan the
     8-gram explode out to the full core count — without the round-robin
     repartition the whole corpus exploded on the scan's single split
-    (profiled: 1.8 s on one task at sf0.1) — and (b) shuffle/sort the
-    8-byte xxhash64 of the gram, never the 8-word span text."""
+    (profiled: 1.8 s on one task at sf0.1) — and (b) shuffle on the
+    8-byte xxhash64 of the gram, never the 8-word span text, while the
+    window still partitions by (gh, gram) so a 64-bit hash collision
+    cannot merge two posting lists."""
     import re
 
     from impala_refresher_spark.operators.pipeline import (
@@ -1426,7 +1428,9 @@ def test_pipeline_v2_span_branch_fans_out_and_hashes(spark):
     ), plan
     # (b) the span key is the hashed gram
     assert re.search(r"xxhash64\(gram", plan), plan
-    # the span window partitions by the hashed key
-    assert re.search(r"windowspecdefinition\(gh#\d+L", plan), plan
-    # no exchange hash-partitions on the raw gram string
-    assert not re.search(r"hashpartitioning\(gram#\d+[,)]", plan), plan
+    # the span window partitions by (hashed key, gram), so it is exact
+    assert re.search(r"windowspecdefinition\(gh#\d+L, gram#\d+, ", plan), plan
+    # the hashed key alone feeds the span exchange; no exchange
+    # hash-partitions on the raw gram string
+    assert re.search(r"hashpartitioning\(gh#\d+L, \d+\)", plan), plan
+    assert not re.search(r"hashpartitioning\([^)]*\bgram#", plan), plan
