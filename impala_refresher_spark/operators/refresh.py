@@ -28,6 +28,7 @@ import contextlib
 import os
 import threading
 import time
+import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
@@ -110,10 +111,18 @@ def refresh_many(
     worker enters the window (the caller waits for that, then joins
     for the rest of the budget), so a target queued behind the window
     is never flagged unrun. A timed-out target is really CANCELLED:
-    its worker runs inside Spark job group ``refresh-{i}-{target}``
-    and the caller calls ``cancelJobGroup``, interrupting its running
-    Spark jobs — the reference's process kill
-    (``impala-refresher.go:81-86``) without its goroutine leak.
+    its worker runs inside its own Spark job group
+    ``refresh-{call}-{i}-{target}`` (``call`` is unique per
+    ``refresh_many`` call) and the caller cancels that group and its
+    future jobs. That interrupts the jobs already running, and a job
+    the worker submits only after its timeout (a cold session's first
+    job) fails at submission instead of running to completion. The
+    group is never reused, so blocking its future jobs is harmless.
+    Spark 4.1 checks the cancelled group only when a result job is
+    submitted: a late adaptive query still runs the shuffle map stages
+    it submits on its own, and then has its result job refused.
+    This is the reference's process kill (``impala-refresher.go:81-86``)
+    without its goroutine leak.
     """
     fn = refresh_fn or refresh_table
     sc = spark.sparkContext
@@ -121,7 +130,8 @@ def refresh_many(
     started = [threading.Event() for _ in tables]
     started_at = [0.0] * len(tables)
     outcomes: list[RefreshResult | None] = [None] * len(tables)
-    groups = [f"refresh-{i}-{t}" for i, t in enumerate(tables)]
+    call = uuid.uuid4().hex[:8]
+    groups = [f"refresh-{call}-{i}-{t}" for i, t in enumerate(tables)]
 
     def run_target(i: int, target: str) -> None:
         # Enter the window in input order: the caller checks deadlines in
@@ -154,10 +164,11 @@ def refresh_many(
         if not worker.is_alive():
             results.append(outcomes[i])
             continue
-        # Stop the target's Spark jobs for real, then abandon the worker
-        # (a daemon, so it never holds the process open).
+        # Stop the target's Spark jobs for real, including any it has yet
+        # to submit, then abandon the worker (a daemon, so it never holds
+        # the process open).
         with contextlib.suppress(Exception):
-            sc.cancelJobGroup(groups[i])
+            sc._jsc.sc().cancelJobGroupAndFutureJobs(groups[i])
         results.append(
             RefreshResult(
                 target,

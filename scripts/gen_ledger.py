@@ -55,10 +55,17 @@ one-flag bypass — it refuses unless SWEEP_CERT.json (written only by
 a clean FULL-registry ``driver_sim --vanilla`` run) covers every
 currently-oracled query at the exact package sources on disk
 (``rebaseline_allowed``).
+
+A list/dict/set constant folds by the source text of its module-level
+definition (plus whatever that definition reads), not by its run-time
+repr, so the hash does not depend on process state: a cache such as
+``tables._SCHEMAS`` filling up no longer changes every consumer's hash.
+Immutable constants keep the repr fold.
 """
 
 from __future__ import annotations
 
+import ast
 import glob
 import hashlib
 import inspect
@@ -120,11 +127,43 @@ def _const_repr(obj) -> str:
 # _BS (MinHash coefficients), _LEXICON, _DQ_RULES and every other
 # list-valued module constant now mechanically stales its consumers.
 _CONST_TYPES = (str, bytes, int, float, bool, tuple, frozenset, list, dict, set)
+# Folded by their definition, not their run-time repr (module docstring).
+_MUTABLE_TYPES = (list, dict, set)
+
+
+def _definition(path: str | None, name: str) -> tuple[str, set[str]] | None:
+    """Source text of the module-level statements in ``path`` that bind
+    ``name`` (assignment, annotated or augmented), and the names their
+    values read; None when the module does not bind it at top level."""
+    if not path or not path.endswith(".py"):
+        return None
+    with open(path) as f:
+        src = f.read()
+    stmts = [
+        node
+        for node in ast.parse(src).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign))
+        and any(
+            isinstance(t, ast.Name) and t.id == name
+            for target in (node.targets if isinstance(node, ast.Assign) else [node.target])
+            for t in ast.walk(target)
+        )
+    ]
+    if not stmts:
+        return None
+    reads = {
+        n.id
+        for node in stmts
+        if node.value is not None
+        for n in ast.walk(node.value)
+        if isinstance(n, ast.Name)
+    }
+    return "\n".join(ast.get_source_segment(src, node) for node in stmts), reads
 
 
 def _collect_sources(fn, package: str, seen: set[int], out: list[str]) -> None:
     """Append ``fn``'s source plus, recursively, the source of every
-    same-package function and the repr of every simple module-level
+    same-package function and the fold of every simple module-level
     constant it references. Deterministic: contributions are gathered
     in sorted-name order at each level."""
     if id(fn) in seen:
@@ -134,8 +173,18 @@ def _collect_sources(fn, package: str, seen: set[int], out: list[str]) -> None:
         out.append(inspect.getsource(fn))
     except (OSError, TypeError):
         out.append(repr(fn))
-    g = getattr(fn, "__globals__", {})
-    for nm in sorted(_referenced_names(fn)):
+    _fold_globals(_referenced_names(fn), getattr(fn, "__globals__", {}), package, seen, out)
+
+
+def _fold_globals(
+    names: set[str], g: dict, package: str, seen: set[int], out: list[str]
+) -> None:
+    """Fold each of ``names`` as looked up in the module globals ``g``:
+    a same-package function by its transitive source, a mutable
+    container by the source of its definition plus, recursively, the
+    names that definition reads (``_AS`` reads ``_MINHASH_K``), and any
+    other constant by its repr. Each function and container folds once."""
+    for nm in sorted(names):
         obj = g.get(nm)
         if obj is None:
             continue
@@ -143,6 +192,14 @@ def _collect_sources(fn, package: str, seen: set[int], out: list[str]) -> None:
             obj, "__module__", ""
         ).startswith(package):
             _collect_sources(obj, package, seen, out)
+        elif isinstance(obj, _MUTABLE_TYPES) and (
+            found := _definition(g.get("__file__"), nm)
+        ):
+            if id(obj) in seen:
+                continue
+            seen.add(id(obj))
+            out.append(found[0])
+            _fold_globals(found[1], g, package, seen, out)
         elif isinstance(obj, _CONST_TYPES):
             out.append(f"{nm}={_const_repr(obj)}")
 

@@ -68,6 +68,30 @@ def test_whole_stage_codegen_active(spark):
     assert "*(1) Project" in plan
 
 
+def test_repeated_queries_compile_no_new_code(spark):
+    """A repeated query reuses its generated classes. These 11 queries
+    (perfbench's interactive pool) need ~155 cache entries; at Spark's
+    default of 100 the second pass re-ran Janino 100+ times, cycling
+    the JVM-wide LRU. With the session's 4096-entry cache it compiles
+    nothing."""
+    from impala_refresher_spark.queries import QUERIES
+
+    names = [
+        "agg_count_distinct", "agg_rollup", "fn_json", "intersect_all_keys",
+        "join_range", "range_join_count_orderstat", "star_join_revenue",
+        "tpch_q15_top_supplier", "tpch_q22_global_sales_opportunity",
+        "tpch_q8_market_share", "window_range_frame",
+    ]
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for n in names:
+        QUERIES[n](spark, SF_SMOKE).toPandas()
+    before = compiles.getCount()
+    for n in names:
+        QUERIES[n](spark, SF_SMOKE).toPandas()
+    assert compiles.getCount() - before == 0
+
+
 def test_bucketed_join_has_no_exchange(spark):
     """Both sides pre-bucketed on the join key => the SMJ and the
     following same-key aggregate must run with ZERO shuffles."""

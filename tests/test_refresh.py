@@ -141,11 +141,13 @@ def test_refresh_timeout_only_flags_the_slow_target(spark):
 
 def test_refresh_timeout_cancels_running_spark_job(spark):
     """A timed-out target's underlying Spark job must actually STOP
-    (cancelJobGroup), matching the reference's process kill
+    (its job group is cancelled), matching the reference's process kill
     (impala-refresher.go:81-86) — not keep burning executors."""
     interrupted = threading.Event()
+    groups = []
 
     def runs_long_spark_job(s, name):
+        groups.append(s.sparkContext.getLocalProperty("spark.jobGroup.id"))
         try:
             # single-partition job that would run ~30 s uncancelled
             s.range(300, numPartitions=1).foreach(lambda _: time.sleep(0.1))
@@ -160,14 +162,72 @@ def test_refresh_timeout_cancels_running_spark_job(spark):
     assert not all_refreshed(results)
     assert interrupted.wait(timeout=10), "Spark job was not cancelled on timeout"
     # ... and the target's job group has no active jobs left.
+    [group] = groups
+    assert group.startswith("refresh-") and group.endswith("-0-longjob"), group
     st = spark.sparkContext.statusTracker()
     deadline = time.monotonic() + 10
     while True:
-        group_jobs = set(st.getJobIdsForGroup("refresh-0-longjob"))
+        group_jobs = set(st.getJobIdsForGroup(group))
         if group_jobs and not group_jobs & set(st.getActiveJobsIds()):
             break
-        assert time.monotonic() < deadline, f"refresh-0-longjob jobs still active: {group_jobs}"
+        assert time.monotonic() < deadline, f"{group} jobs still active: {group_jobs}"
         time.sleep(0.1)
+
+
+_COLD_CANCEL = """
+import json, threading, time
+from impala_refresher_spark.operators.refresh import RefreshResult, refresh_many
+from impala_refresher_spark.session import get_spark
+
+spark = get_spark("cold-cancel")
+seen = {}
+done = threading.Event()
+
+def late_job(s, name):
+    seen["group"] = s.sparkContext.getLocalProperty("spark.jobGroup.id")
+    time.sleep(1.5)  # past the 0.5 s timeout: the first job comes late
+    try:
+        s.range(10).collect()  # one result job, no shuffle map stage
+        seen["job"] = "succeeded"
+    except Exception as exc:
+        seen["job"] = type(exc).__name__
+    finally:
+        done.set()
+    return RefreshResult(name, True, None, 0)
+
+[r] = refresh_many(spark, ["late"], timeout=0.5, refresh_fn=late_job)
+done.wait(60)
+st = spark.sparkContext.statusTracker()
+seen["statuses"] = [
+    st.getJobInfo(j).status for j in st.getJobIdsForGroup(seen["group"])
+]
+seen["error"] = r.error
+print(json.dumps(seen))
+spark.stop()
+"""
+
+
+def test_refresh_timeout_blocks_job_submitted_after_it():
+    """Cold session: a worker that submits its first Spark job only after
+    its timeout has fired must not get that job run. The group is
+    cancelled together with its future jobs, so the late job fails at
+    submission. Runs in a fresh interpreter with its own JVM, so the
+    worker's first job really is the late one."""
+    import json
+    import os
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", _COLD_CANCEL], cwd=root, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    seen = json.loads(out.stdout.splitlines()[-1])
+    assert "timeout" in seen["error"], seen
+    assert seen["job"] != "succeeded", seen
+    assert "SUCCEEDED" not in seen["statuses"], seen
 
 
 def test_refresh_many_repeated_target_runs_every_position(spark):
