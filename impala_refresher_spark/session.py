@@ -18,6 +18,30 @@ It caches compiled plan code only, never data. The conf is static and
 JVM-wide: it takes effect only when ``get_spark`` launches the JVM,
 and a session built elsewhere (a plain ``SparkSession.builder``, as in
 ``scripts/driver_sim.py --vanilla``) keeps the default of 100.
+
+The driver JVM reserves C2, HotSpot's optimizing JIT tier, for code
+that runs hotter than usual: its tier-4 thresholds are 3x the JDK 17
+defaults (invocations 15000/1800, compile 45000, back-edges 120000,
+from 5000/600/15000/40000). In a short interactive session most of the
+driver's CPU is the JVM compiling Spark itself, and three quarters of
+that is C2 time spread over thousands of Catalyst, scheduler,
+serializer, Scala and JDK methods that cross the default thresholds
+but run for only a few more queries. C1 still compiles all of them at
+the usual point; only the C2 pass waits until a method has run 3x as
+often. In local mode the tasks run in this JVM too, so their per-row
+Spark code waits longer for C2 as well. That bounds the multiplier:
+at 10x the median mid-size sf0.1 query of ``bench.py`` (0.3-0.6 s)
+ran 9% and 24% slower in two runs at 4 cores, while at 3x its sf0.1
+run held and the interactive CPU saving was about the same. Whole-stage generated loops still
+reach C2 within a multi-million-row action (``tests/test_plans.py``
+checks one 30M-row aggregate). The flags go in
+``spark.driver.defaultJavaOptions``, which spark-submit prepends to
+``spark.driver.extraJavaOptions``; a caller's own ``extraJavaOptions``
+(given in ``PYSPARK_SUBMIT_ARGS``, which wins over builder confs)
+therefore keeps them instead of replacing them. Like the codegen cache
+they apply only to a JVM that ``get_spark`` launches: an existing
+session, the vanilla correctness session and cluster executors keep
+the JVM defaults.
 """
 
 from __future__ import annotations
@@ -62,6 +86,12 @@ def get_spark(app_name: str = "impala_refresher_spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Reuse compiled classes across repeated queries (module docstring).
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Reserve C2 for hot code: 3x tier-4 thresholds (module docstring).
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+            "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -35,9 +35,12 @@ is complete iff it holds ``_SUCCESS``. ``materialize`` builds a missing
 one once: it writes into a unique directory under
 ``SCRATCH_ROOT/.inflight`` and renames it onto the final name, so a
 reader never sees a half-written copy and two sessions building the
-same name at once both end with one complete directory. Resolving a
-name deletes the stale siblings of its ``(prefix, sf)`` group (earlier
-fixture versions); other scale factors' copies are untouched.
+same name at once both end with one complete directory. The private
+directory carries its builder's pid, and each build first deletes the
+``.inflight`` entries of pids that are no longer running (a killed
+build). Resolving a name deletes the stale siblings of its
+``(prefix, sf)`` group (earlier fixture versions); other scale
+factors' copies are untouched.
 """
 
 from __future__ import annotations
@@ -237,6 +240,24 @@ def scratch_path(prefix: str, sf_dir: str, *names: str) -> str:
     return os.path.join(SCRATCH_ROOT, want)
 
 
+def _sweep_abandoned(inflight: str) -> None:
+    """Delete the ``.inflight`` builds of processes that no longer run:
+    a build dir is named ``{name}-{pid}-{uuid}``, and a builder killed
+    mid-write never reaches its cleanup. A live pid keeps its dir, so a
+    concurrent build is never touched; a recycled pid only delays the
+    sweep."""
+    for entry in os.listdir(inflight):
+        parts = entry.rsplit("-", 2)
+        if len(parts) != 3 or not parts[1].isdigit():
+            continue
+        try:
+            os.kill(int(parts[1]), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(inflight, entry), ignore_errors=True)
+        except OSError:  # exists, but another user's
+            pass
+
+
 def materialize(
     prefix: str, sf_dir: str, names: Sequence[str], write: Callable[[str], None]
 ) -> str:
@@ -254,7 +275,10 @@ def materialize(
         return path
     inflight = os.path.join(SCRATCH_ROOT, ".inflight")
     os.makedirs(inflight, exist_ok=True)
-    tmp = os.path.join(inflight, f"{os.path.basename(path)}-{uuid.uuid4().hex}")
+    _sweep_abandoned(inflight)
+    tmp = os.path.join(
+        inflight, f"{os.path.basename(path)}-{os.getpid()}-{uuid.uuid4().hex}"
+    )
     try:
         write(tmp)
         open(os.path.join(tmp, _DONE), "a").close()

@@ -18,6 +18,10 @@ completeness against state footprint.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import threading
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -781,6 +785,24 @@ def run_stream_to_memory(
 # T16 — streaming CDC apply: foreachBatch MERGE into versioned snapshots
 # ---------------------------------------------------------------------------
 
+
+# Work dir of the last finished stream_cdc_merge call, whose returned
+# DataFrame reads the snapshot there. The next call deletes it, and one
+# exit handler deletes whatever is left.
+_cdc_work: list[str] = []
+_cdc_lock = threading.Lock()
+
+
+def _keep_cdc_work(work: str | None) -> None:
+    with _cdc_lock:
+        old, _cdc_work[:] = list(_cdc_work), [work] if work else []
+    for d in old:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+atexit.register(_keep_cdc_work, None)
+
+
 @query(
     "stream_cdc_merge",
     """
@@ -817,7 +839,14 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream length), and the accumulated n_updates counter shows state
     carrying derived columns forward instead of re-scanning history.
     Snapshot-per-epoch + checkpoint give exactly-once: a replayed
-    epoch overwrites its own version directory idempotently."""
+    epoch overwrites its own version directory idempotently.
+
+    Disk is bounded per process, not only per call: once the stream
+    stops, the checkpoint and every superseded snapshot are deleted,
+    leaving only the latest one, which the returned DataFrame reads.
+    That work dir lives until the next call finishes (which deletes it,
+    as the next call of a fixed-path sink overwrites the last output)
+    or the interpreter exits."""
     import os
     import tempfile
 
@@ -828,8 +857,6 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cdc_src", sf_dir, ("events",), lambda p: events.repartition(4).write.parquet(p)
     )
     work = tempfile.mkdtemp(prefix="cdc_merge_")
-    state_root = os.path.join(work, "state")
-    os.makedirs(state_root, exist_ok=True)
     versions: list[str] = []
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -851,7 +878,7 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("tot").alias("n_updates"),
             )
         )
-        out = os.path.join(state_root, f"v{epoch_id}")
+        out = os.path.join(work, f"v{epoch_id}")
         snap.write.mode("overwrite").parquet(out)
         versions.append(out)
 
@@ -869,6 +896,10 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
+    shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
+    for v in set(versions) - {versions[-1]}:
+        shutil.rmtree(v, ignore_errors=True)
+    _keep_cdc_work(work)
     final = spark.read.parquet(versions[-1])
     return final.select(
         "user_id",

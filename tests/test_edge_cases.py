@@ -286,6 +286,27 @@ def test_materialize_failed_writer_publishes_nothing(tmp_path, monkeypatch):
     assert os.listdir(root / ".inflight") == []
 
 
+def test_materialize_sweeps_builds_of_dead_processes(tmp_path, monkeypatch):
+    """A build left in ``.inflight`` by a process that no longer runs is
+    deleted before the next build; one whose builder is alive (here,
+    this process) stays."""
+    import subprocess
+    import sys
+
+    tables, root, sf = _scratch_env(tmp_path, monkeypatch)
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()
+    dead = root / ".inflight" / f"m_x-{child.pid}-{'0' * 32}"
+    live = root / ".inflight" / f"m_x-{os.getpid()}-{'1' * 32}"
+    for d in (dead, live):
+        d.mkdir(parents=True)
+        (d / "part-0").write_text("half")
+    tables.materialize("m", sf, ("events",), _file_writer([]))
+    assert not dead.exists()
+    assert (live / "part-0").read_text() == "half"
+    assert os.listdir(root / ".inflight") == [live.name]
+
+
 def test_scratch_root_and_marker_live_only_in_tables():
     """No package module but ``sources/tables.py`` names the scratch
     directory or the completion marker, and none holds the checkout's

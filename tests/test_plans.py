@@ -9,6 +9,8 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
+
 from impala_refresher_spark.operators.relational import (
     filter_compound,
     join_broadcast_dim,
@@ -90,6 +92,72 @@ def test_repeated_queries_compile_no_new_code(spark):
     for n in names:
         QUERIES[n](spark, SF_SMOKE).toPandas()
     assert compiles.getCount() - before == 0
+
+
+_JIT_TIERS = """
+import json, os, shutil, subprocess
+from impala_refresher_spark.session import get_spark
+
+spark = get_spark("jit-tiers")
+mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+args = list(mx.getInputArguments())
+spark.range(30_000_000).selectExpr("sum((id*7)%13)").collect()
+jcmd = os.path.join(os.environ.get("JAVA_HOME", ""), "bin", "jcmd")
+jcmd = jcmd if os.path.exists(jcmd) else shutil.which("jcmd")
+levels = None
+if jcmd:
+    out = subprocess.run(
+        [jcmd, str(mx.getPid()), "Compiler.codelist"],
+        capture_output=True, text=True, timeout=120, check=True,
+    )
+    # "<compile id> <level> <state> <method> [...]"
+    levels = [
+        int(line.split()[1]) for line in out.stdout.splitlines()
+        if "GeneratedIteratorForCodegenStage" in line
+    ]
+print(json.dumps({"args": args, "levels": levels}))
+spark.stop()
+"""
+
+
+def test_driver_jvm_reserves_c2_for_hot_code():
+    """``get_spark``'s driver JVM raises the tier-4 (C2) JIT thresholds
+    3x, and a caller's own ``extraJavaOptions`` does not displace them
+    (they ride in ``defaultJavaOptions``). Generated operator loops still
+    reach C2: after a 30M-row aggregate, a whole-stage-codegen iterator
+    method is compiled at level 4. Runs in a fresh interpreter, because
+    the flags apply only to a JVM that ``get_spark`` launches."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+        "PYSPARK_SUBMIT_ARGS": (
+            "--conf spark.driver.extraJavaOptions=-XX:-UsePerfData pyspark-shell"
+        ),
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _JIT_TIERS], cwd=root, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    seen = json.loads(out.stdout.splitlines()[-1])
+    for flag in (
+        "-XX:Tier4InvocationThreshold=15000",
+        "-XX:Tier4MinInvocationThreshold=1800",
+        "-XX:Tier4CompileThreshold=45000",
+        "-XX:Tier4BackEdgeThreshold=120000",
+        "-XX:-UsePerfData",  # the caller's extraJavaOptions survive too
+    ):
+        assert flag in seen["args"], (flag, seen["args"])
+    if seen["levels"] is None:
+        pytest.skip("no jcmd next to the JVM or on PATH")
+    assert 4 in seen["levels"], seen["levels"]
 
 
 def test_bucketed_join_has_no_exchange(spark):

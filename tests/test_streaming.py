@@ -617,3 +617,25 @@ def test_t18_full_outer_join_emits_both_sides_nulls(spark, scratch):
     purchase_only = [r for r in rows if r.purchase_id == 4]
     assert purchase_only and purchase_only[0].view_id is None
     assert purchase_only[0].user_id == 3
+
+
+def test_cdc_merge_keeps_only_the_snapshot_it_returns(spark, sf_dir, tmp_path, monkeypatch):
+    """A ``stream_cdc_merge`` call leaves one snapshot version in its
+    work dir and no checkpoint, and the result reads that version. The
+    next call deletes the previous call's work dir, so a session keeps
+    one at a time. (The oracle match is ``test_oracle_diff``'s.)"""
+    import os
+    import tempfile
+
+    from impala_refresher_spark.queries import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    works = []
+    for _ in range(2):
+        df = QUERIES["stream_cdc_merge"](spark, sf_dir)
+        [work] = [p for p in os.listdir(tmp_path) if p.startswith("cdc_merge_")]
+        left = os.listdir(tmp_path / work)
+        assert len(left) == 1 and left[0].startswith("v"), left
+        assert df.count() > 0
+        works.append(work)
+    assert works[0] != works[1]
