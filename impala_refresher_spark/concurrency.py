@@ -1,10 +1,10 @@
 """Overlap independent sub-pipelines of one query (guide §2.6).
 
 Spark's scheduler happily runs several jobs at once inside one
-application; composite queries (the dedup/ANN scoreboards) use this to
-materialize their independent branches concurrently instead of letting
-one branch's eager action (a candidate checkpoint, a centroid collect)
-serialize the rest.
+application; the one composite query that uses this,
+``dedup_quality_scoreboard``, materializes its independent branches
+concurrently instead of letting one branch's eager action (a candidate
+checkpoint) serialize the rest.
 
 The package starts threads in exactly two places: ``run_branches``
 here, and ``operators.refresh.refresh_many``, which runs one worker per

@@ -414,9 +414,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     typically partitionBy(split) on the way out); the summary
     aggregate here makes the differential check cover every row's
     assignment without hashing 100 TB of text."""
-    from impala_refresher_spark.sources.tables import load_table as _lt
-
-    d = _lt(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     prefix = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     split = (
         F.when(prefix < "0d", "test").when(prefix < "1a", "val").otherwise("train")

@@ -265,7 +265,11 @@ def inverted_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.partitionBy("tok_bucket")
         .parquet(p),
     )
-    postings = spark.read.parquet(idx)
+    # Explicit schema, as in inverted_index_delta_merge: an empty corpus
+    # writes no data files to infer one from.
+    postings = spark.read.schema(
+        "token STRING, doc_id BIGINT, tf BIGINT, tok_bucket BIGINT"
+    ).parquet(idx)
     term = "customer"
     # The bucket predicate compares the PARTITION column to a foldable
     # expression (xxhash64 of a literal): Catalyst constant-folds it,

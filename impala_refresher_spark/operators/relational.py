@@ -30,10 +30,6 @@ from impala_refresher_spark.registry import query
 from impala_refresher_spark.sources.tables import fan_out, load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Flagship star query (J6 + G1 + F2 + O1 in one plan)
 # ---------------------------------------------------------------------------
@@ -50,13 +46,13 @@ def revenue_by_region_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline would run at the fact scan's parallelism — fan_out
     # guarantees that's the core count when the input arrives in few
     # splits (no-op at scale, where splits >> cores).
-    lineitem = fan_out(_t(spark, sf_dir, "lineitem"))
-    orders = _t(spark, sf_dir, "orders").filter(
+    lineitem = fan_out(load_table(spark, sf_dir, "lineitem"))
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1999-01-01")
     )
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
 
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
@@ -138,7 +134,7 @@ def sql_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: bare columnar scan. .explain shows ReadSchema pruned to the
     selected columns — the same scan node that reads 100 TB."""
-    return _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    return load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +160,7 @@ def project_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise-equal across engines, whereas ROUND at an exact .xx5
     boundary (common for cent-quantized inputs) is not.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -194,7 +190,7 @@ def project_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2: every predicate here is pushdown-eligible — at scale the
     parquet scan itself skips row groups via min/max stats."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.filter(
         F.col("o_totalprice").between(1000, 150000)
         & F.col("o_orderstatus").isin("O", "F")
@@ -217,8 +213,8 @@ def filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    c = load_table(spark, sf_dir, "customer")
     return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
         "o_orderkey", "o_totalprice", "c_name", "c_mktsegment"
     )
@@ -243,8 +239,8 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: part is a dimension — broadcast it so the fact table never
     shuffles for this join. At 100 TB this saves the single largest
     shuffle in the plan (lineitem is ~80% of total bytes)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 20)
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_size") <= 20)
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand")
@@ -268,8 +264,8 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 left: customers with zero orders survive with n_orders=0."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey", "c_name")
@@ -290,8 +286,8 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 full: nations without suppliers and (hypothetical) orphan
     suppliers both appear with NULLs on the missing side."""
-    n = _t(spark, sf_dir, "nation")
-    s = _t(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    s = load_table(spark, sf_dir, "supplier")
     return n.join(s, n.n_nationkey == s.s_nationkey, "full").select(
         "n_nationkey", "n_name", "s_suppkey", "s_name"
     )
@@ -311,8 +307,8 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no orders survive with n_orders=0. Catalyst plans right outer
     as a mirrored left outer, so the same broadcast/shuffle choices
     apply."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         o.join(c, o.o_custkey == c.c_custkey, "right")
         .groupBy("c_custkey", "c_name")
@@ -336,8 +332,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 semi: EXISTS — output carries only left columns, the right
     side is consumed as a filter (no row multiplication, no wide rows
     through the shuffle)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
@@ -350,8 +346,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 anti: NOT EXISTS — customers who never ordered."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
@@ -375,9 +371,9 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate is a post-join residual. Without the equi component this
     would be a cartesian product — at scale, always pair a range
     predicate with at least one equi key (or bucketize the range)."""
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     return (
         s.join(c, (s.s_nationkey == c.c_nationkey) & (c.c_acctbal > s.s_acctbal))
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -413,14 +409,14 @@ def range_join_count_orderstat(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers sort before equal-balance customers (side 0 first), so
     `>` stays strict. Use whenever the range join feeds ONLY an
     aggregate; keep the real join when pair payloads are consumed."""
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nk"),
         F.col("s_acctbal").alias("bal"),
         F.lit(0).alias("side"),
         F.lit(0).cast("long").alias("is_cust"),
         F.col("s_suppkey").alias("id"),
     )
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nk"),
         F.col("c_acctbal").alias("bal"),
         F.lit(1).alias("side"),
@@ -432,7 +428,7 @@ def range_join_count_orderstat(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("bal").desc(), F.col("side").asc(), F.col("id").asc())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     return (
         s.unionByName(c)
         .select("nk", "side", F.sum("is_cust").over(w).alias("n_above"))
@@ -475,7 +471,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             # the managed location on disk without the table — clear it
             shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
             (
-                _t(spark, sf_dir, src)
+                load_table(spark, sf_dir, src)
                 .write.bucketBy(8, key)
                 .sortBy(key)
                 .mode("overwrite")
@@ -546,10 +542,10 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     session.py), which rewrites only the oversized partitions. The
     oracle is the PLAIN join: salting must not change a single row.
     """
-    li = _t(spark, sf_dir, "lineitem").withColumn(
+    li = load_table(spark, sf_dir, "lineitem").withColumn(
         "salt", F.pmod(F.col("l_linenumber"), F.lit(_SALT_BUCKETS))
     )
-    o = _t(spark, sf_dir, "orders").withColumn(
+    o = load_table(spark, sf_dir, "orders").withColumn(
         "salt", F.explode(F.array(*[F.lit(i) for i in range(_SALT_BUCKETS)]))
     )
     return (
@@ -587,7 +583,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1: classic hash aggregate. Partial (map-side) aggregation means
     the shuffle carries #distinct(returnflag,linestatus) rows per task
     — a few dozen bytes regardless of input scale."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
@@ -618,7 +614,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2 exact: count distinct expands to a two-phase aggregate.
     At scale prefer approx_count_distinct (below) when ±2% is fine —
     HLL sketches merge map-side and never shuffle raw keys."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count("*").alias("n_orders"),
@@ -629,7 +625,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2 approx: HyperLogLog++. No SQL oracle — sketch estimates are
     implementation-specific; the unit test asserts relative error."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
         F.approx_count_distinct("o_custkey", 0.02).alias("approx_customers")
     )
@@ -652,7 +648,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G3: rollup = grouping sets {(a,b),(a),()} in one pass
     (Catalyst expands; still a single shuffle)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
         F.count("*").alias("n"),
@@ -670,7 +666,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.round(F.sum("o_totalprice"), 2).alias("total"),
         F.count("*").alias("n"),
@@ -692,7 +688,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     — {(l_returnflag), (l_linestatus)}, no (a,b) and no grand total.
     Catalyst expands to a single Expand + hash aggregate: one shuffle,
     rows duplicated only #sets times on the map side."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupingSets(
         [["l_returnflag"], ["l_linestatus"]], "l_returnflag", "l_linestatus"
     ).agg(
@@ -732,7 +728,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical doubles, plus scale-0 rounding being tie-safe in
     the integer-cents domain — the guard is the pinned regression in
     tests/test_edge_cases.py, not exactness."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     return li.groupBy("l_returnflag").agg(
         (F.round(F.percentile(cents, F.lit(0.5))) / 100).alias("p50"),
@@ -751,7 +747,7 @@ def agg_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the input, but the sketch is Spark-specific, so the driver check
     is rows-only; ε-closeness to the exact percentile is asserted in
     ``tests/test_llm_ops.py``."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(
             F.percentile_approx("l_extendedprice", F.lit(0.5), F.lit(10000)), 2
@@ -778,7 +774,7 @@ def agg_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
         .agg(
@@ -808,7 +804,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (same cost as the plain groupBy) — always list the
     values at scale; value discovery otherwise costs an extra job.
     Oracle: the equivalent FILTERed conditional aggregation."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wide = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -842,7 +838,7 @@ def unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands to one output row per value column, map-side. The metric
     name column becomes the grouping key for downstream per-metric
     aggregation."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey", "c_acctbal", F.col("c_nationkey").cast("double").alias("c_nationkey")
     ).unpivot(
@@ -870,7 +866,7 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the reproducible-sampling idiom for pipeline debugging and
     train/holdout splits: stable under reruns, partitioning, AND
     engine changes — and it pushes down as an ordinary filter."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.filter(
         F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 2) <= "14"
     ).select("o_orderkey", "o_totalprice")
@@ -892,7 +888,7 @@ def fn_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
     map internals are engine-opaque). At scale maps trade schema
     evolution freedom for column pruning: extract hot keys to real
     columns before heavy reuse."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     m = F.create_map(
         F.lit("brand"), F.col("p_brand"),
         F.lit("size"), F.col("p_size").cast("string"),
@@ -922,7 +918,7 @@ def order_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/O2: sort + limit compiles to TakeOrderedAndProject — each
     partition keeps its local top-100, the driver merges. No global
     sort materializes even at 100 TB."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_orderstatus", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc_nulls_last(), F.col("o_orderkey").asc())
@@ -945,7 +941,7 @@ def order_global_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     cousin of TakeOrdered; only for full ordered output (exports,
     merge-ready files). Null placement pinned on both engines —
     Spark and DuckDB default opposite ends."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select("c_mktsegment", "c_custkey", "c_acctbal").orderBy(
         F.col("c_mktsegment").asc_nulls_first(),
         F.col("c_acctbal").desc_nulls_last(),
@@ -972,7 +968,7 @@ def order_global_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2: row_number ≤ k — one shuffle on the group key; ties broken
     deterministically by custkey so the result is oracle-stable."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = W.partitionBy("c_mktsegment").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey").asc())
     return (
         c.withColumn("rk", F.row_number().over(w).cast("int"))
@@ -995,7 +991,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: UNION ALL is a zero-shuffle concatenation of partitions."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "O").select(
         F.col("o_orderkey").alias("okey"), F.col("o_totalprice").alias("price")
     )
@@ -1016,8 +1012,8 @@ def union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: UNION DISTINCT = concat + hash-distinct (one shuffle on all
     columns; partial distinct runs map-side first)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
     return c.union(s).distinct()
 
 
@@ -1034,8 +1030,8 @@ def union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
     return c.intersect(s)
 
 
@@ -1051,7 +1047,7 @@ def intersect_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2: INTERSECT ALL keeps min-multiplicity bag semantics —
     Catalyst plans it as a counted semi-join shape, one shuffle per
     side on the compared columns (same scale behavior as a groupBy)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("ck"))
     b = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("ck"))
     return a.intersectAll(b)
@@ -1068,7 +1064,7 @@ def intersect_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 def except_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2: EXCEPT ALL keeps multiplicity (bag semantics) — implemented
     by Catalyst as a counted anti-join, one shuffle."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("ck"))
     b = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("ck"))
     return a.exceptAll(b)
@@ -1182,7 +1178,7 @@ def fn_structs(spark: SparkSession, sf_dir: str) -> DataFrame:
     story as flat columns — at 100 TB a wide struct costs only the
     fields you touch). The nested filter constant-folds into a plain
     column predicate and pushes to the scan."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     built = o.select(
         "o_orderkey",
         F.struct(

@@ -24,10 +24,6 @@ from impala_refresher_spark.registry import query
 from impala_refresher_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "tpch_q3_shipping_priority",
     """
@@ -49,9 +45,9 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3: unshipped high-value BUILDING orders. The mktsegment filter
     prunes customer before the join; top-10 is TakeOrdered with a full
     deterministic tie-break (orderdate, orderkey)."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-03-15")
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-03-15")
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-03-15")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-03-15")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(l, o.o_orderkey == l.l_orderkey)
@@ -83,10 +79,10 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     by priority. The EXISTS is a left-semi join on orderkey with the
     lateness residual — no per-row subquery, no row multiplication
     from multi-lineitem orders."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1997-04-01")
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     late = (F.col("l_orderkey") == F.col("o_orderkey")) & (
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     )
@@ -114,7 +110,7 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scan; the plan is one map-side partial sum + a 1-row final
     merge. The 100 TB shape: scan-bandwidth-bound, zero shuffle of data
     rows."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= "1997-01-01")
@@ -148,12 +144,12 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10: top-20 customers by returned-item revenue in a quarter.
     nation broadcasts (bounded dim); the quarter filter prunes orders
     at the scan; returnflag prunes lineitem at the scan."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1997-04-01")
     )
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(l, o.o_orderkey == l.l_orderkey)
@@ -185,10 +181,10 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents BEFORE the division so accumulation-order noise cannot move
     the 4-decimal quotient across engines. part joins the filtered
     month of lineitem — AQE broadcasts it when small enough."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-09-01") & (F.col("l_shipdate") < "1997-10-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.join(p, l.l_partkey == p.p_partkey)
@@ -237,14 +233,14 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     join-order stress test). Date + region filters push down; nation/
     region broadcast; the fact-side joins shuffle on their keys and
     AQE reorders/locally-optimizes the rest."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -287,9 +283,9 @@ def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFra
     The aggregate collapses lineitem to (orderkey, qty) BEFORE any
     join (map-side combine), so the join input is orders-of-magnitude
     smaller than the fact table; top-20 is TakeOrdered."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").cast("double").alias("total_qty"))
@@ -334,16 +330,16 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation-pair disjunction applies AFTER the joins on the already-
     pruned pair of nations, so the fact shuffle carries only rows whose
     supplier OR customer sits in one of the two nations."""
-    s = _t(spark, sf_dir, "supplier")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").select(
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
     pair = (
@@ -400,20 +396,20 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rounded to cents BEFORE the division (Q14 convention) so
     accumulation order can't move the 4-decimal share. The p_type
     filter prunes part before its join; region/nation broadcast."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders").filter(
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
-    c = _t(spark, sf_dir, "customer")
-    n1 = _t(spark, sf_dir, "nation").select(
+    c = load_table(spark, sf_dir, "customer")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey").alias("n1_region")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         p.join(l, F.col("p_partkey") == F.col("l_partkey"))
@@ -490,11 +486,11 @@ def tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     round it half-away, whereas scale-2 rounding of the same double
     diverges (Spark rounds the shortest-decimal repr, DuckDB the
     exact binary value)."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     amount = F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
         100 - F.round(F.col("l_discount") * 100).cast("bigint")
     ) - 60 * F.round(F.col("p_retailprice") * 100).cast("bigint") * F.round(
@@ -540,9 +536,9 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lineitem net price. The global total is a 1-row aggregate
     cross-joined (broadcast) into the HAVING filter — no second scan
     shuffle; the grouped aggregate combines map-side."""
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_2")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_2")
     supplied = (
         l.join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -591,8 +587,8 @@ def tpch_q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no shipmode, so returnflag plays the grouping role. The year
     filter pushes into the lineitem scan; the lateness predicate is a
     join residual (needs both sides)."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1998-01-01") & (F.col("l_shipdate") < "1999-01-01")
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -630,8 +626,8 @@ def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     preserving zero-order customers). Two-level aggregate: the first
     groups by the join key (combines map-side post-join), the second
     is a tiny shuffle of one row per distinct count."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(~F.col("o_orderpriority").like("%URGENT%"))
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(~F.col("o_orderpriority").like("%URGENT%"))
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -665,10 +661,10 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare identical values. The max is a 1-row aggregate broadcast
     into the filter (classic scalar-subquery-as-broadcast-join); the
     quarter filter pushes into the scan."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     revenue = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
             "total_revenue"
@@ -714,12 +710,12 @@ def tpch_q16_parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFram
     sf0.1, dominated by the full lineitem scan — no lineitem-side
     predicate exists to push. The r03 delta was shared-box noise, not
     a plan change."""
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#13")
         & ~F.col("p_type").like("PROMO%")
         & F.col("p_size").isin(1, 5, 9, 14, 20, 27, 33, 40)
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         p.join(l, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
@@ -751,8 +747,8 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     flip a row across the strict inequality. The brand filter prunes
     part before the join; the per-part aggregate collapses lineitem to
     one row per partkey before joining."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     thresholds = l.groupBy(F.col("l_partkey").alias("t_partkey")).agg(
         F.round(0.5 * F.avg("l_quantity"), 4).alias("qty_threshold")
     )
@@ -784,8 +780,8 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity ranges BEFORE the join (derived pushdown), with the full
     disjunction re-checked as the join residual — the textbook test
     that disjunctive pushdown actually happens."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     cond = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -850,10 +846,10 @@ def tpch_q21_suppliers_who_kept_waiting(spark: SparkSession, sf_dir: str) -> Dat
     l1's, since l1 itself is late). One fact-fact join + one
     aggregate — strictly less shuffle than the 3-way self-join the
     literal SQL implies, same rows."""
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    l = _t(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    l = load_table(spark, sf_dir, "lineitem")
     lo = (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .withColumn(
@@ -918,12 +914,12 @@ def tpch_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataF
     on both sides so the strict inequality can't flip on a last-ulp
     difference. The anti join's build side is just o_custkey — column
     pruning reaches the orders scan."""
-    c = _t(spark, sf_dir, "customer").filter(
+    c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_nationkey").isin(1, 5, 9, 13, 17, 21, 24)
     )
-    all_c = _t(spark, sf_dir, "customer")
+    all_c = load_table(spark, sf_dir, "customer")
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
@@ -992,14 +988,14 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~2 orders of magnitude at 100 TB) while leaving the result
     identical — ``costs`` rows for other parts were dropped by the
     final inner join anyway."""
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    p = _t(spark, sf_dir, "part").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") == 15) & (F.col("p_type") == "STANDARD")
     )
     l = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") > 0)
         .join(
             F.broadcast(p.select("p_partkey")),
@@ -1092,11 +1088,11 @@ def tpch_q20_excess_stock_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded on both engines per the float discipline.
     """
     red = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("red%"))
         .select("p_partkey")
     )
-    l = _t(spark, sf_dir, "lineitem").join(
+    l = load_table(spark, sf_dir, "lineitem").join(
         F.broadcast(red), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     )
     in_1998 = (F.col("l_shipdate") >= "1998-01-01") & (
@@ -1112,8 +1108,8 @@ def tpch_q20_excess_stock_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round("qty_outside", 2) > F.round(0.5 * F.col("qty_1998"), 2))
         & (F.col("qty_1998") > 0)
     ).select("l_suppkey")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")
     )
     return (

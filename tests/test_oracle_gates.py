@@ -127,3 +127,29 @@ def test_registry_has_oracle_or_documented_rows_only():
         "agg_approx_distinct",
         "agg_approx_percentiles",
     ], rows_only
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    """A second top-level def, class or assignment of a name silently
+    replaces the first, so a shadowed test never runs and a shadowed
+    helper is dead code. Every module of the package, the tests and the
+    scripts binds each top-level name once."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    dups = []
+    for pkg in ("impala_refresher_spark", "tests", "scripts"):
+        for path in sorted((root / pkg).rglob("*.py")):
+            seen: set = set()
+            for node in ast.parse(path.read_text()).body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    names = [node.name]
+                elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                    names = [t.id for t in targets if isinstance(t, ast.Name)]
+                else:
+                    continue
+                dups += [f"{path.relative_to(root)}:{node.lineno} {n}" for n in names if n in seen]
+                seen.update(names)
+    assert not dups, dups

@@ -2,28 +2,129 @@
 with brute-force reference implementations on arbitrary small inputs —
 catching semantics the fixture-scale differential can miss by luck.
 
-Example counts are kept small (each example runs Spark jobs); settings
-disable the deadline since JVM scheduling jitter is not a failure.
+Each example runs Spark jobs, so example counts are small (props_util).
+A per-key operator's property runs batched (``@batched``): each example
+is at least 8 distinct cases whose rows carry disjoint keys, all checked
+by one Spark run, and one more run checks empty tables. A global operator's property runs one case per example
+(SETTINGS), with a comment saying why it cannot be batched.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+import hashlib
+import math
+import re
+from collections import Counter, deque
+from datetime import date, datetime, timedelta
+from fractions import Fraction
+from statistics import covariance, median, stdev, variance
 
-from hypothesis import HealthCheck, given, settings, strategies as st
-
+import numpy as np
+from hypothesis import given, settings, strategies as st
+from props_util import DOCS, EVENTS, SETTINGS, batched, by_case, cases, half_up, offset, run_on
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.operators.asof import asof_join
-from impala_refresher_spark.operators.dedup import _shingles
-
-_SETTINGS = dict(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
+from impala_refresher_spark.operators.dedup import _AS, _BS, _MERSENNE, _shingles
 
 _BASE = datetime(2024, 1, 1)
+
+
+# ---------------------------------------------------------------------------
+# Brute-force pieces shared by several references
+# ---------------------------------------------------------------------------
+
+
+def _shingles3(toks) -> set:
+    """Distinct word 3-gram shingles of a token list."""
+    return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+
+def _md5_60(s: str) -> int:
+    """First 60 bits of md5 — the engine-portable bit source (first 15
+    hex chars), mirroring `conv(substring(md5(x), 1, 15), 16, 10)`."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _minhash(shingles) -> list:
+    """The 32-slot signature: min over shingles of (a*h + b) mod M with
+    h = md5-60(shingle) mod M."""
+    hs = [_md5_60(x) % _MERSENNE for x in shingles]
+    return [min((a * h + b) % _MERSENNE for h in hs) for a, b in zip(_AS, _BS)]
+
+
+def _components(edges, nodes=()) -> list:
+    """Union-find over ``edges`` (plus isolated ``nodes``): the member
+    lists of the connected components."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for n in nodes:
+        find(n)
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comps: dict = {}
+    for n in parent:
+        comps.setdefault(find(n), []).append(n)
+    return list(comps.values())
+
+
+def _tag(text: str, case_id: int) -> str:
+    """A text with the case id appended to every token."""
+    return " ".join(f"{w}{case_id}" for w in text.split(" "))
+
+
+def _tag_texts(batch) -> list:
+    """Text cases as one corpus, each token tagged with its case id: every
+    n-gram, the key of corpus-wide gram counts and pair joins, is then its
+    own case's."""
+    return [_tag(t, i) for i, texts in enumerate(batch) for t in texts]
+
+
+def _tag_words(batch) -> list:
+    """Token-list cases as one corpus, tagged like ``_tag_texts``."""
+    return [[f"{w}{i}" for w in ws] for i, docs in enumerate(batch) for ws in docs]
+
+
+def _f32(v) -> list:
+    """A vector as an array<float> column stores it, widened back."""
+    return [float(np.float32(x)) for x in v]
+
+
+def _fold_dot(a, b) -> float:
+    """Dot product as a strict left-to-right fold, like the operators'."""
+    s = 0.0
+    for x, y in zip(a, b):
+        s = s + x * y
+    return s
+
+
+def _unit(v):
+    n = math.sqrt(_fold_dot(v, v))
+    return None if n == 0.0 else [c / n for c in v]
+
+
+def _top10(q, cands, emb) -> list:
+    """Exact-cosine rerank of q's candidates (6dp, NULL cosines last,
+    vec_id tiebreak): the top 10 as (q_id, vec_id, cos_sim, rk)."""
+
+    def cos(a, b):
+        na, nb = math.sqrt(_fold_dot(a, a)), math.sqrt(_fold_dot(b, b))
+        return None if na * nb == 0.0 else half_up(_fold_dot(a, b) / (na * nb), 6)
+
+    ranked = sorted(
+        ((cos(emb[q], emb[v]), v) for v in cands),
+        key=lambda t: ((0, -t[0]) if t[0] is not None else (1, 0), t[1]),
+    )
+    return [(q, v, cs, rk) for rk, (cs, v) in enumerate(ranked[:10], start=1)]
 
 
 @st.composite
@@ -40,10 +141,11 @@ def asof_case(draw):
     return left, right
 
 
-@given(asof_case())
-@settings(**_SETTINGS)
-def test_asof_join_matches_bruteforce(spark, case):
-    left_rows, right_rows = case
+@given(cases(asof_case()))
+@batched
+def test_asof_join_matches_bruteforce(spark, batch):
+    left_rows = offset([left for left, _ in batch], (0,))
+    right_rows = offset([right for _, right in batch], (0,))
     left = spark.createDataFrame(left_rows, "k long, ts timestamp")
     right = spark.createDataFrame(right_rows, "k long, ts timestamp, v int")
     got = {
@@ -59,43 +161,38 @@ def test_asof_join_matches_bruteforce(spark, case):
 
 
 @given(
-    st.lists(
-        st.lists(st.sampled_from("abcde"), min_size=0, max_size=8).map(" ".join),
-        min_size=1,
-        max_size=6,
+    cases(
+        st.lists(
+            st.lists(st.sampled_from("abcde"), min_size=0, max_size=8).map(" ".join),
+            min_size=1,
+            max_size=6,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_shingles_match_python_reference(spark, texts):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+@batched
+def test_shingles_match_python_reference(spark, batch):
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
     got = {
         r.doc_id: sorted(r.sh)
         for r in df.select("doc_id", _shingles(F.col("text")).alias("sh")).collect()
     }
-
-    def ref(t: str):
-        toks = t.split(" ")
-        return sorted({" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)})
-
-    assert got == {i: ref(t) for i, t in enumerate(texts)}
+    assert got == {i: sorted(_shingles3(t.split(" "))) for i, t in docs}
 
 
-@given(
-    st.lists(st.integers(-5, 5), min_size=0, max_size=8),
-    st.lists(st.integers(-5, 5), min_size=0, max_size=8),
-)
-@settings(**_SETTINGS)
-def test_exceptall_intersectall_bag_semantics(spark, xs, ys):
-    """U2 bag semantics vs collections.Counter ground truth."""
-    from collections import Counter
-
-    left = spark.createDataFrame([(x,) for x in xs], "x int") if xs else spark.range(0).toDF("x")
-    right = spark.createDataFrame([(y,) for y in ys], "x int") if ys else spark.range(0).toDF("x")
-    cx, cy = Counter(xs), Counter(ys)
-    want_except = sorted((cx - cy).elements())
-    want_intersect = sorted((cx & cy).elements())
-    assert sorted(r.x for r in left.exceptAll(right).collect()) == want_except
-    assert sorted(r.x for r in left.intersectAll(right).collect()) == want_intersect
+@given(cases(st.tuples(st.lists(st.integers(-5, 5), max_size=8), st.lists(st.integers(-5, 5), max_size=8))))
+@batched
+def test_exceptall_intersectall_bag_semantics(spark, batch):
+    """U2 bag semantics vs collections.Counter ground truth; the case id
+    is a column, so each case is its own bag."""
+    left = spark.createDataFrame([(i, x) for i, c in enumerate(batch) for x in c[0]], "case_id int, x int")
+    right = spark.createDataFrame([(i, y) for i, c in enumerate(batch) for y in c[1]], "case_id int, x int")
+    got_except = by_case(left.exceptAll(right).collect(), lambda r: r.case_id)
+    got_intersect = by_case(left.intersectAll(right).collect(), lambda r: r.case_id)
+    for i, (xs, ys) in enumerate(batch):
+        cx, cy = Counter(xs), Counter(ys)
+        assert sorted(r.x for r in got_except[i]) == sorted((cx - cy).elements())
+        assert sorted(r.x for r in got_intersect[i]) == sorted((cx & cy).elements())
 
 
 @st.composite
@@ -106,13 +203,15 @@ def pair_block_case(draw):
     return list(zip(ids, labels))
 
 
-@given(pair_block_case())
-@settings(**_SETTINGS)
-def test_blocked_pair_join_matches_bruteforce(spark, case):
+@given(cases(pair_block_case()))
+@batched
+def test_blocked_pair_join_matches_bruteforce(spark, batch):
     """Triangle partitioning must emit exactly the within-block ordered
-    pairs, for arbitrary block compositions and salt collisions."""
+    pairs, for arbitrary block compositions and salt collisions; the case
+    id is folded into the block label."""
     from impala_refresher_spark.operators.similarity import blocked_pair_join
 
+    case = [(v + i * 1000, f"{i}{label}") for i, rows in enumerate(batch) for v, label in rows]
     u = spark.createDataFrame(case, "vec_id long, label string")
     got = sorted(
         (r.x, r.y)
@@ -146,17 +245,13 @@ def event_sequences(draw):
     return rows
 
 
-@given(event_sequences())
-@settings(**_SETTINGS)
-def test_ewma_fold_matches_python_reference(spark, rows):
+@given(cases(event_sequences()))
+@batched
+def test_ewma_fold_matches_python_reference(spark, batch):
     """The distributed sorted-array fold must equal a sequential
     Python EWMA over each user's time-ordered values."""
-    from impala_refresher_spark.operators.analytics import agg_ewma_per_user
-
-    df = spark.createDataFrame(
-        [(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
+    rows = offset(batch, (0, 2))
+    df = spark.createDataFrame([(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows], EVENTS)
     df.createOrReplaceTempView("prop_events")
     # reuse the operator's internals by aliasing the fixture loader:
     # simplest faithful route — rebuild the same expression inline
@@ -177,24 +272,15 @@ def test_ewma_fold_matches_python_reference(spark, rows):
         assert abs(got[u] - want[u]) < 1e-12, u
 
 
-@given(event_sequences())
-@settings(**_SETTINGS)
-def test_funnel_stage_matches_python_state_machine(spark, rows):
+@given(cases(event_sequences()))
+@batched
+def test_funnel_stage_matches_python_state_machine(spark, batch):
     from impala_refresher_spark.operators.analytics import funnel_conversion
 
-    df = spark.createDataFrame(
-        [(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
+    rows = offset(batch, (0, 2))
+    df = spark.createDataFrame([(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows], EVENTS)
 
-    import impala_refresher_spark.operators.analytics as an
-
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.user_id: (r.stage, r.converted) for r in funnel_conversion(spark, "x").collect()}
-    finally:
-        an.load_table = orig
+    got = {r.user_id: (r.stage, r.converted) for r in run_on(spark, funnel_conversion, df)}
 
     want = {}
     for e, ts, u, t, v in sorted(rows, key=lambda r: (r[1], r[0])):
@@ -213,7 +299,6 @@ def test_pit_join_excludes_same_timestamp_feature(spark):
     has no same-instant collisions, so the oracle can't cover this
     branch; crafted rows do."""
     from impala_refresher_spark.operators.asof import pit_feature_join
-    import impala_refresher_spark.operators.asof as asof_mod
 
     t = lambda m: datetime(2024, 1, 1) + timedelta(minutes=m)
     rows = [
@@ -224,15 +309,8 @@ def test_pit_join_excludes_same_timestamp_feature(spark):
         (4, t(9), 7, "purchase", 0.0, "{}"),  # later label sees both views
         (5, t(1), 8, "purchase", 0.0, "{}"),  # label with NO prior views
     ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    orig = asof_mod.load_table
-    asof_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.label_id: r for r in pit_feature_join(spark, "x").collect()}
-    finally:
-        asof_mod.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {r.label_id: r for r in run_on(spark, pit_feature_join, df)}
     assert got[3].n_prior_views == 1  # only the t(0) view; t(5) view excluded
     assert got[3].prior_view_value == 10.0
     assert got[4].n_prior_views == 2  # later label sees both
@@ -248,7 +326,6 @@ def test_range_orderstat_equals_naive_join_with_ties(spark):
         join_range,
         range_join_count_orderstat,
     )
-    import impala_refresher_spark.operators.relational as rel_mod
 
     sup = [(i, f"s{i}", 0 if i < 4 else 1, [5.0, 5.0, 2.0, 9.0, 5.0][i]) for i in range(5)]
     cus = [
@@ -264,13 +341,8 @@ def test_range_orderstat_equals_naive_join_with_ties(spark):
     nat_df = spark.createDataFrame(nat, "n_nationkey long, n_name string, n_regionkey long")
     tables = {"supplier": sup_df, "customer": cus_df, "nation": nat_df}
 
-    orig = rel_mod.load_table
-    rel_mod.load_table = lambda spark, sf, name: tables[name]
-    try:
-        naive = {r.n_name: r.n_pairs for r in join_range(spark, "x").collect()}
-        fast = {r.n_name: r.n_pairs for r in range_join_count_orderstat(spark, "x").collect()}
-    finally:
-        rel_mod.load_table = orig
+    naive = {r.n_name: r.n_pairs for r in run_on(spark, join_range, tables)}
+    fast = {r.n_name: r.n_pairs for r in run_on(spark, range_join_count_orderstat, tables)}
     assert fast == naive
     # hand-check: ALPHA suppliers bal (5,5,2,9) vs customers (5,7,2):
     #   5→{7}, 5→{7}, 2→{5,7}, 9→{} = 4 pairs; BETA supplier 5 vs (5,4.9) = 0 → absent
@@ -283,7 +355,6 @@ def test_nearest_event_join_tie_prefers_earlier_click(spark):
     collide, so the tie branch needs crafted rows; also checks the
     no-prev and no-next edges."""
     from impala_refresher_spark.operators.asof import nearest_event_join
-    import impala_refresher_spark.operators.asof as asof_mod
 
     t = lambda s: datetime(2024, 1, 1) + timedelta(seconds=s)
     rows = [
@@ -301,15 +372,8 @@ def test_nearest_event_join_tie_prefers_earlier_click(spark):
         # user 4: purchase with no clicks at all -> dropped
         (9, t(0), 4, "purchase", 1.0, "{}"),
     ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    orig = asof_mod.load_table
-    asof_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.purchase_id: (r.click_id, r.abs_us) for r in nearest_event_join(spark, "x").collect()}
-    finally:
-        asof_mod.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {r.purchase_id: (r.click_id, r.abs_us) for r in run_on(spark, nearest_event_join, df)}
     assert got[2] == (1, 10_000_000)  # tie -> earlier click
     assert got[4] == (5, 7_000_000)  # forward-only
     assert got[7] == (8, 3_000_000)  # nearer forward beats farther backward
@@ -362,30 +426,22 @@ def nearest_event_case(draw):
     return rows
 
 
-@given(nearest_event_case())
-@settings(**_SETTINGS)
-def test_nearest_event_join_matches_bruteforce(spark, rows):
+@given(cases(nearest_event_case()))
+@batched
+def test_nearest_event_join_matches_bruteforce(spark, batch):
     """The two-window rewrite must equal the quadratic rank: per
     purchase, the click minimizing (|dt|, click_ts, click_id) — the
     oracle's ORDER BY ad, cts, cid — including every tie class:
     shared-ts clicks, click at the purchase instant, equidistant
     before/after."""
     from impala_refresher_spark.operators.asof import nearest_event_join
-    import impala_refresher_spark.operators.asof as asof_mod
 
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = asof_mod.load_table
-    asof_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.purchase_id: (r.click_id, r.abs_us)
-            for r in nearest_event_join(spark, "x").collect()
-        }
-    finally:
-        asof_mod.load_table = orig
+    rows = offset(batch, (0, 2))
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        r.purchase_id: (r.click_id, r.abs_us)
+        for r in run_on(spark, nearest_event_join, df)
+    }
 
     clicks = [(e, ts, u) for (e, ts, u, t, _, _) in rows if t == "click"]
     want = {}
@@ -403,43 +459,6 @@ def test_nearest_event_join_matches_bruteforce(spark, rows):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 9), st.integers(0, 9)),
-        min_size=0,
-        max_size=12,
-    )
-)
-@settings(**_SETTINGS)
-def test_connected_components_match_union_find(spark, raw_edges):
-    """The iterative min-label loop must produce exactly the classic
-    union-find components (label = min node id per component) on random
-    small graphs — self-loops, parallel edges, and multi-chain merges
-    included."""
-    from impala_refresher_spark.operators.dedup import connected_components
-
-    edges = [(a, b) for a, b in raw_edges]
-    if not edges:
-        return
-    df = spark.createDataFrame(edges, "a long, b long")
-    got = {r.node: r.label for r in connected_components(df, "a", "b").collect()}
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
-
-
 @st.composite
 def interval_case(draw):
     rows, eid = [], 0
@@ -450,28 +469,20 @@ def interval_case(draw):
     return rows
 
 
-@given(interval_case())
-@settings(**_SETTINGS)
-def test_interval_merge_matches_sweep(spark, rows):
+@given(cases(interval_case()))
+@batched
+def test_interval_merge_matches_sweep(spark, batch):
     """The two-window islands plan must equal the sequential sweep:
     5-minute spans per user, a new island iff start > running max(end)
     (touching spans MERGE, duplicates both counted)."""
     from impala_refresher_spark.operators.analytics import merge_overlapping_intervals
-    import impala_refresher_spark.operators.analytics as an_mod
 
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+    rows = offset(batch, (0, 2))
+    df = spark.createDataFrame(rows, EVENTS)
+    got = sorted(
+        (r.user_id, r.span_start, r.span_end, r.n_events)
+        for r in run_on(spark, merge_overlapping_intervals, df)
     )
-    orig = an_mod.load_table
-    an_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.user_id, r.span_start, r.span_end, r.n_events)
-            for r in merge_overlapping_intervals(spark, "x").collect()
-        )
-    finally:
-        an_mod.load_table = orig
 
     spans: dict[int, list] = {}
     for _, ts, u, _, _, _ in rows:
@@ -507,28 +518,20 @@ def balance_case(draw):
     return rows
 
 
-@given(balance_case())
-@settings(**_SETTINGS)
-def test_clamped_balance_matches_python_fold(spark, rows):
+@given(cases(balance_case()))
+@batched
+def test_clamped_balance_matches_python_fold(spark, batch):
     """max(0, acc+d) is non-associative — the distributed ordered-fold
     must equal the sequential python fold over (ts, event_id)-sorted
     deltas, including duplicate timestamps and zero-delta rows."""
     from impala_refresher_spark.operators.analytics import clamped_running_balance
-    import impala_refresher_spark.operators.analytics as an_mod
 
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an_mod.load_table
-    an_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.user_id: (r.n_txns, r.balance_cents)
-            for r in clamped_running_balance(spark, "x").collect()
-        }
-    finally:
-        an_mod.load_table = orig
+    rows = offset(batch, (0, 2))
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        r.user_id: (r.n_txns, r.balance_cents)
+        for r in run_on(spark, clamped_running_balance, df)
+    }
 
     want: dict[int, tuple] = {}
     by_user: dict[int, list] = {}
@@ -544,39 +547,25 @@ def test_clamped_balance_matches_python_fold(spark, rows):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(1, 2), st.integers(0, 200)),
-        min_size=1,
-        max_size=14,
-    )
-)
-@settings(**_SETTINGS)
-def test_sessionize_matches_python_sweep(spark, pts):
+@given(cases(st.lists(st.tuples(st.integers(1, 2), st.integers(0, 200)), min_size=1, max_size=14)))
+@batched
+def test_sessionize_matches_python_sweep(spark, batch):
     """Gaps-and-islands sessionization (30-min gap, >= boundary) must
     equal the sequential sweep — duplicate timestamps and exact-gap
     boundaries included (a gap of EXACTLY 1800 s starts a new
     session)."""
     from impala_refresher_spark.operators.analytics import sessionize_user_activity
-    import impala_refresher_spark.operators.analytics as an_mod
 
+    pts = offset(batch, (0,))
     rows = [
         (i + 1, _BASE + timedelta(minutes=m), u, "view", 0.0, "{}")
         for i, (u, m) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an_mod.load_table
-    an_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.user_id: (r.n_sessions, r.max_session_events, r.longest_span_s)
-            for r in sessionize_user_activity(spark, "x").collect()
-        }
-    finally:
-        an_mod.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        r.user_id: (r.n_sessions, r.max_session_events, r.longest_span_s)
+        for r in run_on(spark, sessionize_user_activity, df)
+    }
 
     by_user: dict[int, list] = {}
     for u, m in pts:
@@ -600,39 +589,26 @@ def test_sessionize_matches_python_sweep(spark, pts):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(1, 6), st.integers(1, 5)),  # (orderkey, partkey)
-        min_size=0,
-        max_size=20,
-    )
-)
-@settings(**_SETTINGS)
-def test_market_basket_pairs_match_bruteforce(spark, rows):
+@given(cases(st.lists(st.tuples(st.integers(1, 6), st.integers(1, 5)), max_size=20)))  # (orderkey, partkey)
+@batched
+def test_market_basket_pairs_match_bruteforce(spark, batch):
     """The posting-list pair expansion (apriori prune + in-array pair
     emit) must produce exactly the naive basket self-join's pair
     support counts — duplicate lineitem rows collapse first, support
     floor 2 applies to pairs AND the pruned parts."""
     from impala_refresher_spark.operators.analytics import market_basket_pairs
-    import impala_refresher_spark.operators.analytics as an_mod
 
-    if not rows:
-        return
+    rows = offset(batch, (0, 1), k=100)  # orders and parts disjoint per case
     df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    orig = an_mod.load_table
-    an_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.part_a, r.part_b): r.n_orders
-            for r in market_basket_pairs(spark, "x").collect()
-        }
-    finally:
-        an_mod.load_table = orig
+
+    got = {
+        (r.part_a, r.part_b): r.n_orders
+        for r in run_on(spark, market_basket_pairs, df)
+    }
 
     baskets: dict[int, set] = {}
     for o, p in set(rows):
         baskets.setdefault(o, set()).add(p)
-    from collections import Counter
 
     support = Counter(p for parts in baskets.values() for p in parts)
     counts: Counter = Counter()
@@ -647,34 +623,27 @@ def test_market_basket_pairs_match_bruteforce(spark, rows):
 
 @given(
     st.lists(
-        st.tuples(st.integers(1, 5), st.integers(0, 6)),  # (user, day offset)
-        min_size=1,
-        max_size=16,
+        st.tuples(
+            st.integers(1, 5),
+            st.integers(0, 6),
+        ),
+        min_size=1, max_size=16,  # (user, day offset)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the running count spans every user
 def test_cumulative_distinct_matches_set_sweep(spark, pts):
     """The first-occurrence rewrite (row_number flag -> per-day sum ->
     running cumsum) must equal the growing-set sweep — users active on
     many days count once, at their FIRST day; days whose actives are
     all returning users still appear with an unchanged total."""
     from impala_refresher_spark.operators.profiling import cumulative_distinct_users
-    import impala_refresher_spark.operators.profiling as prof_mod
 
     rows = [
         (i + 1, _BASE + timedelta(days=d, minutes=i), u, "view", 0.0, "{}")
         for i, (u, d) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = prof_mod.load_table
-    prof_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = [(r.day, r.cum_users) for r in cumulative_distinct_users(spark, "x").collect()]
-    finally:
-        prof_mod.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = [(r.day, r.cum_users) for r in run_on(spark, cumulative_distinct_users, df)]
 
     days = sorted({d for _, d in pts})
     seen: set = set()
@@ -696,48 +665,28 @@ def test_cumulative_distinct_matches_set_sweep(spark, pts):
 # ---------------------------------------------------------------------------
 
 
-def _md5_60(s: str) -> int:
-    """First 60 bits of md5 — the engine-portable bit source (first 15
-    hex chars), mirroring `conv(substring(md5(x), 1, 15), 16, 10)`."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
 @given(
-    st.lists(
-        st.lists(st.sampled_from("abcdef"), min_size=0, max_size=10).map(" ".join),
-        min_size=1,
-        max_size=5,
+    cases(
+        st.lists(
+            st.lists(st.sampled_from("abcdef"), min_size=0, max_size=10).map(" ".join),
+            min_size=1,
+            max_size=5,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_minhash_signatures_match_python(spark, texts):
+@batched
+def test_minhash_signatures_match_python(spark, batch):
     """Each of the 32 minhash slots must equal min over shingles of
     (a*h + b) mod M with h = md5-60(shingle) mod M — computed here
     from the spec, not from either engine. Docs with < 3 tokens have
     no shingles and must be ABSENT (not null-signed)."""
-    from impala_refresher_spark.operators.dedup import (
-        _AS,
-        _BS,
-        _MERSENNE,
-        minhash_signatures,
-    )
+    from impala_refresher_spark.operators.dedup import minhash_signatures
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
     got = {r.doc_id: list(r.sig) for r in minhash_signatures(df).collect()}
-
-    want = {}
-    for i, t in enumerate(texts):
-        toks = t.split(" ")
-        shingles = {" ".join(toks[j : j + 3]) for j in range(len(toks) - 2)}
-        if not shingles:
-            continue
-        hs = [_md5_60(s) % _MERSENNE for s in shingles]
-        want[i] = [min((a * h + b) % _MERSENNE for h in hs) for a, b in zip(_AS, _BS)]
-    assert got == want
+    shingles = {i: _shingles3(t.split(" ")) for i, t in docs}
+    assert got == {i: _minhash(s) for i, s in shingles.items() if s}
 
 
 @st.composite
@@ -758,28 +707,21 @@ def simhash_corpus(draw):
     return docs
 
 
-@given(simhash_corpus())
-@settings(**_SETTINGS)
-def test_simhash_pipeline_matches_python(spark, texts):
+@given(cases(simhash_corpus()))
+@batched
+def test_simhash_pipeline_matches_python(spark, batch):
     """End-to-end SimHash differential vs a from-spec python model:
     60-bit majority fingerprint from md5 token bits, 4x15-bit chunk
     buckets (pigeonhole for hamming<=3), bucket pair expansion,
     popcount verify. Ties in the bit-majority (sum == 0) must go to 0
     on both sides."""
     from impala_refresher_spark.operators.dedup import _MAX_DF, dedup_simhash
-    import impala_refresher_spark.operators.dedup as dd
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    texts = _tag_texts(batch)
+    df = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = sorted(
+        (r.doc_a, r.doc_b, r.hamming) for r in run_on(spark, dedup_simhash, df)
     )
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.doc_a, r.doc_b, r.hamming) for r in dedup_simhash(spark, "x").collect()
-        )
-    finally:
-        dd.load_table = orig
 
     def fingerprint(t: str) -> int:
         hs = [_md5_60(tok) for tok in set(t.split(" "))]
@@ -808,50 +750,42 @@ def test_simhash_pipeline_matches_python(spark, texts):
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 3),  # day offset
-            st.one_of(st.none(), st.integers(1, 60)),  # user_id (None filtered)
-            st.sampled_from(["view", "click", "purchase"]),
-        ),
-        min_size=1,
-        max_size=25,
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(0, 3),  # day offset
+                st.one_of(st.none(), st.integers(1, 60)),  # user_id (None filtered)
+                st.sampled_from(["view", "click", "purchase"]),
+            ),
+            min_size=1, max_size=25,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_hll_rollup_matches_python(spark, pts):
+@batched
+def test_hll_rollup_matches_python(spark, batch):
     """The portable-register HLL (md5 bucket+rank, daily MAX-merge,
     scaled-integer harmonic sum, linear-counting cutover) must equal a
     from-spec python HyperLogLog on arbitrary small inputs — including
     null user_ids (filtered) and event types whose users are ALL null
     (type absent from the output)."""
-    import math
-
     from impala_refresher_spark.operators.rollup_hypertable import (
         _HLL_ALPHA_M2,
         _HLL_M,
         _HLL_RHO_MAX,
         hll_sketch_rollup,
     )
-    import impala_refresher_spark.operators.rollup_hypertable as rh
 
+    # the case id is folded into the event type, the sketch's group key
+    pts = [(d, u, f"{i}:{t}") for i, c in enumerate(batch) for d, u, t in c]
     rows = [
         (i + 1, _BASE + timedelta(days=d, minutes=i), u, t, 0.0, "{}")
         for i, (d, u, t) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = rh.load_table
-    rh.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.event_type: (r.n_days, r.approx_users)
-            for r in hll_sketch_rollup(spark, "x").collect()
-        }
-    finally:
-        rh.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        r.event_type: (r.n_days, r.approx_users)
+        for r in run_on(spark, hll_sketch_rollup, df)
+    }
 
     regs: dict[tuple, int] = {}  # (etype, bucket) -> max rho (post day-merge)
     days: dict[str, set] = {}
@@ -901,28 +835,19 @@ def survival_case(draw):
 
 
 @given(survival_case())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the risk sets and corpus end are global
 def test_km_survival_matches_python(spark, rows):
     """Kaplan-Meier via the exp-sum-log window must equal the
     sequential product fold, and the d == n zero-factor cutover must
     pin survival to EXACTLY 0.0 from that duration on (the guarded
     F.log(0) path)."""
     from impala_refresher_spark.operators.evaluation import survival_user_retention
-    import impala_refresher_spark.operators.evaluation as ev
 
-    df = spark.createDataFrame(
-        [(e, ts, u, "view", 0.0, "{}") for e, ts, u in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.t, r.d, r.n, r.survival)
-            for r in survival_user_retention(spark, "x").collect()
-        ]
-    finally:
-        ev.load_table = orig
+    df = spark.createDataFrame([(e, ts, u, "view", 0.0, "{}") for e, ts, u in rows], EVENTS)
+    got = [
+        (r.t, r.d, r.n, r.survival)
+        for r in run_on(spark, survival_user_retention, df)
+    ]
 
     spans = {}
     for _, ts, u in rows:
@@ -959,30 +884,18 @@ def test_km_survival_matches_python(spark, rows):
             assert abs(gs - ws) <= 1.1e-4
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["F", "O", "P"]), st.integers(1, 40)),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.sampled_from(["F", "O", "P"]), st.integers(1, 40)), min_size=1, max_size=20))
+@settings(**SETTINGS)  # one case per example: one global statistic
 def test_ks_statistic_matches_python_sweep(spark, rows):
     """The one-pass windowed KS must equal the naive per-value CDF
     sweep — ties across samples, 'P' rows filtered, and a single-class
     input yielding NULL D (the try_divide guard) included."""
     from impala_refresher_spark.operators.evaluation import ks_statistic_status
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(
         [(s, float(v)) for s, v in rows], "o_orderstatus string, o_totalprice double"
     )
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        r = ks_statistic_status(spark, "x").collect()[0]
-    finally:
-        ev.load_table = orig
+    r = run_on(spark, ks_statistic_status, df)[0]
 
     fs = sorted(v * 100 for s, v in rows if s == "F")
     os_ = sorted(v * 100 for s, v in rows if s == "O")
@@ -1006,29 +919,17 @@ def test_ks_statistic_matches_python_sweep(spark, rows):
     assert abs(r.ks_d - d) <= 1.1e-4
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["en", "de", "fr"]), st.integers(1, 12)),
-        min_size=1,
-        max_size=18,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.sampled_from(["en", "de", "fr"]), st.integers(1, 12)), min_size=1, max_size=18))
+@settings(**SETTINGS)  # one case per example: one global statistic
 def test_auc_rank_sum_matches_naive_pair_count(spark, rows):
     """The tie-averaged rank-sum AUC must equal the naive
     P(pos > neg) + P(pos == neg)/2 pair count — a genuinely different
     algorithm — including all-one-class inputs (NULL AUC via
     try_divide)."""
     from impala_refresher_spark.operators.evaluation import score_auc_quality
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(rows, "lang string, n_chars int")
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        r = score_auc_quality(spark, "x").collect()[0]
-    finally:
-        ev.load_table = orig
+    r = run_on(spark, score_auc_quality, df)[0]
 
     pos = [n for lang, n in rows if lang == "en"]
     neg = [n for lang, n in rows if lang != "en"]
@@ -1059,17 +960,17 @@ def lineitem_days(draw):
     return rows
 
 
-@given(lineitem_days())
-@settings(**_SETTINGS)
-def test_rolling_corr_sufficient_stats_match_naive_pearson(spark, rows):
+@given(cases(lineitem_days()))
+@batched
+def test_rolling_corr_sufficient_stats_match_naive_pearson(spark, batch):
     """The daily-sufficient-statistics rewrite must equal naive Pearson
     over each 30-day value-range frame — zero-variance frames (NULL),
     single-row frames (NULL), and negative-zero normalization
     included."""
     from impala_refresher_spark.operators.profiling import rolling_corr_qty_price
-    import impala_refresher_spark.operators.profiling as pf
-    from datetime import date
 
+    # the case id is folded into the return flag, the window's partition key
+    rows = [(f"{i}{f}", d, q, p) for i, c in enumerate(batch) for f, d, q, p in c]
     df = spark.createDataFrame(
         [
             (f, date(2024, 1, 1) + timedelta(days=d), float(q), c / 100.0)
@@ -1077,17 +978,10 @@ def test_rolling_corr_sufficient_stats_match_naive_pearson(spark, rows):
         ],
         "l_returnflag string, l_shipdate date, l_quantity double, l_extendedprice double",
     )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.l_returnflag, r.day): r.corr_30d
-            for r in rolling_corr_qty_price(spark, "x").collect()
-        }
-    finally:
-        pf.load_table = orig
-
-    import math
+    got = {
+        (r.l_returnflag, r.day): r.corr_30d
+        for r in run_on(spark, rolling_corr_qty_price, df)
+    }
 
     want = {}
     for f, d, _, _ in rows:
@@ -1112,42 +1006,35 @@ def test_rolling_corr_sufficient_stats_match_naive_pearson(spark, rows):
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(1, 3),  # user
-            st.integers(0, 5),  # second offset (collisions allowed)
-            st.integers(0, 40),  # value quarters
-        ),
-        min_size=1,
-        max_size=12,
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 3),  # user
+                st.integers(0, 5),  # second offset (collisions allowed)
+                st.integers(0, 40),  # value quarters
+            ),
+            min_size=1, max_size=12,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_time_weighted_avg_matches_python_fold(spark, pts):
+@batched
+def test_time_weighted_avg_matches_python_fold(spark, batch):
     """The lead-window TWA must equal the sequential hold-until-next
     fold — duplicate timestamps (zero-width intervals), single-event
     users (absent), and ALL-same-timestamp users (zero total span)
     included."""
     from impala_refresher_spark.operators.profiling import time_weighted_avg_value
-    import impala_refresher_spark.operators.profiling as pf
 
+    pts = offset(batch, (0,))
     rows = [
         (i + 1, _BASE + timedelta(seconds=s), u, "view", v / 4.0, "{}")
         for i, (u, s, v) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.user_id: (r.n_intervals, r.span_sec, r.twa_value)
-            for r in time_weighted_avg_value(spark, "x").collect()
-        }
-    finally:
-        pf.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        r.user_id: (r.n_intervals, r.span_sec, r.twa_value)
+        for r in run_on(spark, time_weighted_avg_value, df)
+    }
 
     by_user: dict[int, list] = {}
     for eid, ts, u, _, v, _ in rows:
@@ -1180,18 +1067,18 @@ def test_time_weighted_avg_matches_python_fold(spark, pts):
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 6), st.integers(1, 40)),  # (day, price quarters)
-        min_size=1,
-        max_size=14,
+        st.tuples(
+            st.integers(0, 6),
+            st.integers(1, 40),
+        ),
+        min_size=1, max_size=14,  # (day, price quarters)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the mean and cumsum span all days
 def test_cusum_matches_python_fold(spark, rows):
     """The windowed CUSUM must equal the sequential centered cumsum
     (quarter-exact inputs keep the float sums order-independent)."""
     from impala_refresher_spark.operators.profiling import cusum_daily_revenue
-    import impala_refresher_spark.operators.profiling as pf
-    from datetime import date
 
     df = spark.createDataFrame(
         [
@@ -1200,69 +1087,42 @@ def test_cusum_matches_python_fold(spark, rows):
         ],
         "o_orderkey long, o_orderdate date, o_totalprice double",
     )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.day, r.rev, r.cusum) for r in cusum_daily_revenue(spark, "x").collect()
-        ]
-    finally:
-        pf.load_table = orig
-
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r2(x: float) -> float:
-        # F.round / DuckDB ROUND are HALF_UP (away from zero) over the
-        # double's shortest decimal repr; python's round() is banker's
-        # and WOULD diverge (e.g. mean 0.625 -> 0.63 vs 0.62)
-        return float(Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
+    got = [
+        (r.day, r.rev, r.cusum) for r in run_on(spark, cusum_daily_revenue, df)
+    ]
 
     daily: dict[int, float] = {}
     for d, q in rows:
         daily[d] = daily.get(d, 0.0) + q / 4.0
-    mean = r2(sum(daily[d] for d in sorted(daily)) / len(daily))
+    mean = half_up(sum(daily[d] for d in sorted(daily)) / len(daily), 2)
     acc, want = 0.0, []
     for d in sorted(daily):
-        rev = r2(daily[d])
+        rev = half_up(daily[d], 2)
         acc += rev - mean
-        want.append((date(2024, 1, 1) + timedelta(days=d), rev, r2(acc)))
+        want.append((date(2024, 1, 1) + timedelta(days=d), rev, half_up(acc, 2)))
     assert [(d, r) for d, r, _ in got] == [(d, r) for d, r, _ in want]
     for (_, _, gc), (_, _, wc) in zip(got, want):
         assert abs(gc - wc) <= 1e-9
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(1, 3), st.integers(0, 10)),  # (user, day)
-        min_size=1,
-        max_size=16,
-    )
-)
-@settings(**_SETTINGS)
-def test_gap_islands_match_python_sweep(spark, pts):
+@given(cases(st.lists(st.tuples(st.integers(1, 3), st.integers(0, 10)), min_size=1, max_size=16)))
+@batched  # cases of (user, day) points
+def test_gap_islands_match_python_sweep(spark, batch):
     """day - row_number() anchoring must produce exactly the
     consecutive-day islands of the sequential sweep (duplicate
     same-day events collapse first)."""
     from impala_refresher_spark.operators.profiling import gap_islands_active_days
-    import impala_refresher_spark.operators.profiling as pf
 
+    pts = offset(batch, (0,))
     rows = [
         (i + 1, _BASE + timedelta(days=d, minutes=i), u, "view", 0.0, "{}")
         for i, (u, d) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.user_id, r.island_start, r.island_end, r.n_days)
-            for r in gap_islands_active_days(spark, "x").collect()
-        ]
-    finally:
-        pf.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = [
+        (r.user_id, r.island_start, r.island_end, r.n_days)
+        for r in run_on(spark, gap_islands_active_days, df)
+    ]
 
     want = []
     by_user: dict[int, set] = {}
@@ -1287,50 +1147,31 @@ def test_gap_islands_match_python_sweep(spark, pts):
     assert got == want
 
 
-def _r4(x: float) -> float:
-    """HALF_UP 4dp — what F.round / DuckDB ROUND do to a double."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP))
-
-
 @given(
     st.lists(
         st.tuples(
             st.sampled_from(["view", "click", "purchase"]),
             st.integers(0, 100),  # day offset before the corpus max
         ),
-        min_size=1,
-        max_size=16,
+        min_size=1, max_size=16,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: ages count back from the global max day
 def test_trending_decay_matches_exact_fractions(spark, pts):
     """The pow-free 1/2^week weighting must equal EXACT Fraction
     arithmetic (the ADVICE rewrite's whole point: dyadic weights over
     integer age-week counts, no libm pow anywhere)."""
-    from fractions import Fraction
-
     from impala_refresher_spark.operators.analytics import trending_decayed_counts
-    import impala_refresher_spark.operators.analytics as an
 
     rows = [
         (i + 1, _BASE + timedelta(days=d, minutes=i), 1, t, 0.0, "{}")
         for i, (t, d) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.event_type, r.n_raw, r.decayed_score)
-            for r in trending_decayed_counts(spark, "x").collect()
-        ]
-    finally:
-        an.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = [
+        (r.event_type, r.n_raw, r.decayed_score)
+        for r in run_on(spark, trending_decayed_counts, df)
+    ]
 
     max_day = max(d for _, d in pts)
     counts: dict[tuple, int] = {}
@@ -1346,7 +1187,7 @@ def test_trending_decay_matches_exact_fractions(spark, pts):
         want[t] = (n_raw, float(score))
     assert {t: n for t, n, _ in got} == {t: n for t, (n, _) in want.items()}
     for t, _, gs in got:
-        assert abs(gs - _r4(want[t][1])) <= 1.1e-4, t
+        assert abs(gs - half_up(want[t][1], 4)) <= 1.1e-4, t
     # leaderboard order: rounded score DESC, type ASC
     assert [t for t, _, _ in got] == [
         t for t, _, s in sorted(got, key=lambda r: (-r[2], r[0]))
@@ -1368,32 +1209,29 @@ def _ntile(n_rows: int, n_buckets: int) -> list:
 
 @given(
     st.lists(
-        st.tuples(st.integers(1, 30), st.integers(1, 400)),  # (custkey, quarters)
-        min_size=1,
-        max_size=24,
+        st.tuples(
+            st.integers(1, 30),
+            st.integers(1, 400),
+        ),
+        min_size=1, max_size=24,  # (custkey, quarters)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global Lorenz curve
 def test_gini_lorenz_match_exact_integer_reference(spark, rows):
+
     """Gini G = 2·Σi·x_i/(n·Σx) − (n+1)/n and the decile Lorenz curve
     must equal exact integer-cents arithmetic, with NTILE bucket-size
     semantics reproduced from the SQL spec (n < 10 customers -> one
     per decile 1..n)."""
     from impala_refresher_spark.operators.analytics import revenue_concentration_gini
-    import impala_refresher_spark.operators.analytics as an
 
     df = spark.createDataFrame(
         [(c, q / 4.0) for c, q in rows], "o_custkey long, o_totalprice double"
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.decile, r.n_customers, r.lorenz_cum_share, r.gini)
-            for r in revenue_concentration_gini(spark, "x").collect()
-        ]
-    finally:
-        an.load_table = orig
+    got = [
+        (r.decile, r.n_customers, r.lorenz_cum_share, r.gini)
+        for r in run_on(spark, revenue_concentration_gini, df)
+    ]
 
     rev: dict[int, int] = {}
     for c, q in rows:
@@ -1402,7 +1240,7 @@ def test_gini_lorenz_match_exact_integer_reference(spark, rows):
     n = len(ranked)
     total = sum(v for v, _ in ranked)
     wsum = sum(2 * (i + 1) * v for i, (v, _) in enumerate(ranked))
-    gini = _r4(wsum / (n * total) - (n + 1) / n)
+    gini = half_up(wsum / (n * total) - (n + 1) / n, 4)
     deciles = _ntile(n, 10)
     per_dec: dict[int, list] = {}
     for (v, _), b in zip(ranked, deciles):
@@ -1410,7 +1248,7 @@ def test_gini_lorenz_match_exact_integer_reference(spark, rows):
     cum, want = 0, []
     for b in sorted(per_dec):
         cum += sum(per_dec[b])
-        want.append((b, len(per_dec[b]), _r4(cum / total), gini))
+        want.append((b, len(per_dec[b]), half_up(cum / total, 4), gini))
     assert [(b, nc) for b, nc, _, _ in got] == [(b, nc) for b, nc, _, _ in want]
     for (_, _, gl, gg), (_, _, wl, wg) in zip(got, want):
         assert abs(gl - wl) <= 1.1e-4 and abs(gg - wg) <= 1.1e-4
@@ -1434,38 +1272,27 @@ def ols_case(draw):
     return customer, orders
 
 
-@given(ols_case())
-@settings(**_SETTINGS)
-def test_ols_closed_form_matches_numpy(spark, case):
+@given(cases(ols_case()))
+@batched
+def test_ols_closed_form_matches_numpy(spark, batch):
     """The sufficient-statistics OLS must equal numpy's least-squares
     fit per group; zero-x-variance groups (single customer, or equal
     spends) must yield NULL slope AND intercept via try_divide."""
-    import numpy as np
-
     from impala_refresher_spark.operators.analytics import ols_per_nation
-    import impala_refresher_spark.operators.analytics as an
 
-    customer, orders = case
+    # customers and nations take disjoint id ranges per case
+    customer = offset([c for c, _ in batch], (0, 1), k=100)
+    orders = offset([o for _, o in batch], (0,), k=100)
+    nations = [(i * 100 + k, f"NATION_{i * 100 + k}") for i in range(len(batch)) for k in range(3)]
     tables = {
-        "orders": spark.createDataFrame(
-            orders or [(999, 1.0)], "o_custkey long, o_totalprice double"
-        ),
-        "customer": spark.createDataFrame(
-            customer, "c_custkey long, c_nationkey long, c_acctbal double"
-        ),
-        "nation": spark.createDataFrame(
-            [(k, f"NATION_{k}") for k in range(3)], "n_nationkey long, n_name string"
-        ),
+        "orders": spark.createDataFrame(orders, "o_custkey long, o_totalprice double"),
+        "customer": spark.createDataFrame(customer, "c_custkey long, c_nationkey long, c_acctbal double"),
+        "nation": spark.createDataFrame(nations, "n_nationkey long, n_name string"),
     }
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.n_name: (r.n_customers, r.slope, r.intercept)
-            for r in ols_per_nation(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.n_name: (r.n_customers, r.slope, r.intercept)
+        for r in run_on(spark, ols_per_nation, tables)
+    }
 
     spend: dict[int, float] = {}
     for c, p in orders:
@@ -1489,28 +1316,30 @@ def test_ols_closed_form_matches_numpy(spark, case):
             assert abs(gi - intercept) <= 1e-8 * max(1.0, abs(intercept)), nk
 
 
-@given(event_sequences())
-@settings(**_SETTINGS)
-def test_markov_transitions_match_python_counts(spark, rows):
+def _typed_by_case(batch):
+    """event_sequences cases with disjoint event/user ids and the case id
+    folded into the event type, the key of type-level aggregates."""
+    return [
+        (e + i * 1000, ts, u + i * 1000, f"{i}{t}", v)
+        for i, c in enumerate(batch)
+        for e, ts, u, t, v in c
+    ]
+
+
+@given(cases(event_sequences()))
+@batched
+def test_markov_transitions_match_python_counts(spark, batch):
     """The lead-window transition matrix must equal sequential bigram
     counting over each user's (ts, event_id)-ordered stream, with
     row-normalized probabilities."""
     from impala_refresher_spark.operators.analytics import markov_event_transitions
-    import impala_refresher_spark.operators.analytics as an
 
-    df = spark.createDataFrame(
-        [(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.src, r.dst): (r.n, r.p)
-            for r in markov_event_transitions(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    rows = _typed_by_case(batch)
+    df = spark.createDataFrame([(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows], EVENTS)
+    got = {
+        (r.src, r.dst): (r.n, r.p)
+        for r in run_on(spark, markov_event_transitions, df)
+    }
 
     by_user: dict[int, list] = {}
     for e, ts, u, t, _ in rows:
@@ -1528,24 +1357,16 @@ def test_markov_transitions_match_python_counts(spark, rows):
         assert abs(p - n / row_tot[a]) <= 1.1e-6
 
 
-@given(event_sequences())
-@settings(**_SETTINGS)
-def test_top_event_paths_match_python(spark, rows):
+@given(cases(event_sequences()))
+@batched
+def test_top_event_paths_match_python(spark, batch):
     """The order-free conditional-MIN path fold must equal taking each
     user's literal first three events; <3-event users are excluded."""
     from impala_refresher_spark.operators.analytics import top_event_paths
-    import impala_refresher_spark.operators.analytics as an
 
-    df = spark.createDataFrame(
-        [(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = [(r.path, r.n_users) for r in top_event_paths(spark, "x").collect()]
-    finally:
-        an.load_table = orig
+    rows = _typed_by_case(batch)
+    df = spark.createDataFrame([(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows], EVENTS)
+    got = [(r.path, r.n_users) for r in run_on(spark, top_event_paths, df)]
 
     by_user: dict[int, list] = {}
     for e, ts, u, t, _ in rows:
@@ -1563,29 +1384,21 @@ def test_top_event_paths_match_python(spark, rows):
 @given(
     st.lists(st.integers(1, 4000), min_size=1, max_size=20)  # price quarters
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global digit distribution
 def test_benford_digit_extraction_matches_python(spark, quarters):
     """The string-based first-digit extraction must equal python's
     str(floor(x))[0] — including sub-1 prices (filtered) and exact
     powers of ten (where a floor(log10) approach could flip)."""
-    import math
-
     from impala_refresher_spark.operators.profiling import benford_first_digit
-    import impala_refresher_spark.operators.profiling as pf
 
     df = spark.createDataFrame(
         [(i + 1, q / 4.0) for i, q in enumerate(quarters)],
         "o_orderkey long, o_totalprice double",
     )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.digit, r.n, r.obs_freq, r.benford_freq, r.abs_dev)
-            for r in benford_first_digit(spark, "x").collect()
-        ]
-    finally:
-        pf.load_table = orig
+    got = [
+        (r.digit, r.n, r.obs_freq, r.benford_freq, r.abs_dev)
+        for r in run_on(spark, benford_first_digit, df)
+    ]
 
     counts: dict[int, int] = {}
     for q in quarters:
@@ -1602,37 +1415,24 @@ def test_benford_digit_extraction_matches_python(spark, quarters):
         assert abs(dev - abs(n / total - want_ben)) <= 2.1e-4
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 1), st.integers(-500, 500)),  # (nation, cents)
-        min_size=1,
-        max_size=16,
-    )
-)
-@settings(**_SETTINGS)
-def test_mad_outliers_match_python_medians(spark, pts):
+@given(cases(st.lists(st.tuples(st.integers(0, 1), st.integers(-500, 500)), min_size=1, max_size=16)))
+@batched  # cases of (nation, cents) points
+def test_mad_outliers_match_python_medians(spark, batch):
     """The two-level grouped-median MAD screen must equal python's
     statistics.median in integer cents — even-count interpolation,
     zero-MAD nations dropped, and the strict 3*1.4826*MAD threshold
     compared on identical doubles."""
-    from statistics import median
-
     from impala_refresher_spark.operators.profiling import mad_outlier_accounts
-    import impala_refresher_spark.operators.profiling as pf
 
+    pts = offset(batch, (0,))
     rows = [(i + 1, nk, cents / 100.0) for i, (nk, cents) in enumerate(pts)]
     df = spark.createDataFrame(
         rows, "c_custkey long, c_nationkey long, c_acctbal double"
     )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.c_custkey, r.nationkey, r.acctbal, r.robust_z)
-            for r in mad_outlier_accounts(spark, "x").collect()
-        ]
-    finally:
-        pf.load_table = orig
+    got = [
+        (r.c_custkey, r.nationkey, r.acctbal, r.robust_z)
+        for r in run_on(spark, mad_outlier_accounts, df)
+    ]
 
     by_nation: dict[int, list] = {}
     for ck, nk, bal in rows:
@@ -1658,16 +1458,14 @@ def test_mad_outliers_match_python_medians(spark, pts):
 @given(
     st.lists(
         st.tuples(st.sampled_from(["A", "B"]), st.sampled_from(["F", "O", "P"])),
-        min_size=1,
-        max_size=16,
+        min_size=1, max_size=16,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: expected counts use global margins
 def test_chisq_cells_match_python(spark, pairs):
     """Each contingency cell's expected count (row*col/total) and chi2
     term must equal the textbook computation from the joint counts."""
     from impala_refresher_spark.operators.evaluation import chisq_segment_status
-    import impala_refresher_spark.operators.evaluation as ev
 
     orders = spark.createDataFrame(
         [(i + 1, i + 1, s) for i, (_, s) in enumerate(pairs)],
@@ -1678,15 +1476,10 @@ def test_chisq_cells_match_python(spark, pairs):
         "c_custkey long, c_mktsegment string",
     )
     tables = {"orders": orders, "customer": customer}
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            (r.seg, r.status): (r.n, r.expected, r.chi2_term)
-            for r in chisq_segment_status(spark, "x").collect()
-        }
-    finally:
-        ev.load_table = orig
+    got = {
+        (r.seg, r.status): (r.n, r.expected, r.chi2_term)
+        for r in run_on(spark, chisq_segment_status, tables)
+    }
 
     joint: dict[tuple, int] = {}
     for seg, s in pairs:
@@ -1702,34 +1495,22 @@ def test_chisq_cells_match_python(spark, pairs):
         assert abs(term - (n - want_exp) ** 2 / want_exp) <= 1.1e-3
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["en", "de"]), st.integers(1, 30)),
-        min_size=1,
-        max_size=15,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.sampled_from(["en", "de"]), st.integers(1, 30)), min_size=1, max_size=15))
+@settings(**SETTINGS)  # one case per example: one global NTILE ranking
 def test_gain_deciles_match_python(spark, docs):
     """NTILE gain/lift per decile must equal the python rank-and-cut —
     zero-positive corpora yield NULL capture and lift via
     try_divide."""
     from impala_refresher_spark.operators.evaluation import score_gain_deciles
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(
         [(i + 1, n, lang) for i, (lang, n) in enumerate(docs)],
         "doc_id long, n_chars int, lang string",
     )
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.decile, r.n, r.n_pos, r.cum_capture, r.lift)
-            for r in score_gain_deciles(spark, "x").collect()
-        ]
-    finally:
-        ev.load_table = orig
+    got = [
+        (r.decile, r.n, r.n_pos, r.cum_capture, r.lift)
+        for r in run_on(spark, score_gain_deciles, df)
+    ]
 
     ranked = sorted(
         ((-n, i + 1, 1 if lang == "en" else 0) for i, (lang, n) in enumerate(docs))
@@ -1763,29 +1544,20 @@ def test_gain_deciles_match_python(spark, docs):
 @given(
     st.lists(
         st.tuples(st.sampled_from(["en", "de", "fr"]), st.sampled_from(["web", "book"])),
-        min_size=1,
-        max_size=16,
+        min_size=1, max_size=16,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global statistic
 def test_mutual_information_matches_python(spark, docs):
     """I(lang; source) and H(lang) must equal the textbook p*log2
     sums over the joint distribution (observed cells only — no log(0)
     path exists by construction)."""
-    import math
-
     from impala_refresher_spark.operators.evaluation import (
         mutual_information_lang_source,
     )
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(docs, "lang string, source string")
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        r = mutual_information_lang_source(spark, "x").collect()[0]
-    finally:
-        ev.load_table = orig
+    r = run_on(spark, mutual_information_lang_source, df)[0]
 
     joint: dict[tuple, int] = {}
     for lang, src in docs:
@@ -1817,29 +1589,18 @@ def bipartite_case(draw):
 
 
 @given(bipartite_case())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the teleport term uses the global node count
 def test_pagerank_matches_python_power_iteration(spark, case):
     """Two unrolled PageRank iterations (with the per-round 6dp rank
     stabilization) must equal a python power iteration replicating the
     same rounding on arbitrary bipartite graphs."""
     from impala_refresher_spark.operators.graph import pagerank_bipartite
-    import impala_refresher_spark.operators.graph as gr
-    from decimal import ROUND_HALF_UP, Decimal
-
     orders, lineitem = case
     tables = {
         "orders": spark.createDataFrame(orders, "o_orderkey long, o_custkey long"),
         "lineitem": spark.createDataFrame(lineitem, "l_orderkey long, l_suppkey long"),
     }
-    orig = gr.load_table
-    gr.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {r.node: r.pr for r in pagerank_bipartite(spark, "x").collect()}
-    finally:
-        gr.load_table = orig
-
-    def r6(x: float) -> float:
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+    got = {r.node: r.pr for r in run_on(spark, pagerank_bipartite, tables)}
 
     cust_of = dict(orders)
     und = {(f"c{cust_of[ok]}", f"s{sk}") for ok, sk in lineitem if ok in cust_of}
@@ -1852,7 +1613,7 @@ def test_pagerank_matches_python_power_iteration(spark, case):
         nxt = {}
         for s, d in edges:
             nxt[d] = nxt.get(d, 0.0) + pr[s] / outdeg[s]
-        pr = {d: r6(0.15 / n + 0.85 * v) for d, v in nxt.items()}
+        pr = {d: half_up(0.15 / n + 0.85 * v, 6) for d, v in nxt.items()}
     assert set(got) == set(pr)
     for node, p in pr.items():
         assert abs(got[node] - p) <= 1.1e-6, node
@@ -1865,34 +1626,22 @@ def test_pagerank_matches_python_power_iteration(spark, case):
             st.integers(0, 12),
             st.sampled_from(["signup", "view", "click", "purchase"]),
         ),
-        min_size=1,
-        max_size=14,
+        min_size=1, max_size=14,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one graph searched from the literal 'signup'
 def test_bfs_matches_python(spark, pts):
     """Hop distances from 'signup' over the consecutive-event
     transition graph must equal python BFS (depth cap 8, self-loops
     excluded, 'signup' itself always present at distance 0)."""
-    from collections import deque
-
     from impala_refresher_spark.operators.graph import bfs_event_transitions
-    import impala_refresher_spark.operators.graph as gr
 
     rows = [
         (i + 1, _BASE + timedelta(minutes=m), u, t, 0.0, "{}")
         for i, (u, m, t) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = gr.load_table
-    gr.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.node: r.dist for r in bfs_event_transitions(spark, "x").collect()}
-    finally:
-        gr.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {r.node: r.dist for r in run_on(spark, bfs_event_transitions, df)}
 
     by_user: dict[int, list] = {}
     for eid, ts, u, t, _, _ in rows:
@@ -1916,35 +1665,23 @@ def test_bfs_matches_python(spark, pts):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["A", "B", "C"]), st.integers(-30, 30)),
-        min_size=1,
-        max_size=14,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.sampled_from(["A", "B", "C"]), st.integers(-30, 30)), min_size=1, max_size=14))
+@settings(**SETTINGS)  # one case per example: the mean squares pool all segments
 def test_anova_matches_python_sums_of_squares(spark, pts):
     """One-way ANOVA from per-group sufficient statistics must equal
     the textbook sums-of-squares — single-segment (k-1=0), all-
     singleton (n-k=0), and zero-within-variance inputs all yielding
     the guarded NULLs."""
     from impala_refresher_spark.operators.evaluation import anova_segment_acctbal
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(
         [(i + 1, seg, float(b)) for i, (seg, b) in enumerate(pts)],
         "c_custkey long, c_mktsegment string, c_acctbal double",
     )
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.seg: (r.n, r.group_mean, r.ms_between, r.ms_within, r.f_stat)
-            for r in anova_segment_acctbal(spark, "x").collect()
-        }
-    finally:
-        ev.load_table = orig
+    got = {
+        r.seg: (r.n, r.group_mean, r.ms_between, r.ms_within, r.f_stat)
+        for r in run_on(spark, anova_segment_acctbal, df)
+    }
 
     groups: dict[str, list] = {}
     for seg, b in pts:
@@ -1974,19 +1711,19 @@ def test_anova_matches_python_sums_of_squares(spark, pts):
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 4), st.integers(1, 400)),  # (month, quarters)
-        min_size=1,
-        max_size=14,
+        st.tuples(
+            st.integers(0, 4),
+            st.integers(1, 400),
+        ),
+        min_size=1, max_size=14,  # (month, quarters)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global monthly series
 def test_revenue_mom_matches_python(spark, rows):
     """Month-over-month deltas and percents must equal the sequential
     lag computation on cents-rounded monthly revenue; the first month
     has NULL delta and pct."""
     from impala_refresher_spark.operators.profiling import revenue_mom_change
-    import impala_refresher_spark.operators.profiling as pf
-    from datetime import date
 
     df = spark.createDataFrame(
         [
@@ -1995,15 +1732,10 @@ def test_revenue_mom_matches_python(spark, rows):
         ],
         "o_orderkey long, o_orderdate date, o_totalprice double",
     )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.month, r.rev, r.mom_delta, r.mom_pct)
-            for r in revenue_mom_change(spark, "x").collect()
-        ]
-    finally:
-        pf.load_table = orig
+    got = [
+        (r.month, r.rev, r.mom_delta, r.mom_pct)
+        for r in run_on(spark, revenue_mom_change, df)
+    ]
 
     monthly: dict[int, float] = {}
     for m, q in rows:
@@ -2024,26 +1756,18 @@ def test_revenue_mom_matches_python(spark, rows):
 
 
 @given(st.lists(st.integers(1, 2000), min_size=1, max_size=15))
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global set of percentiles
 def test_equidepth_edges_match_numpy_percentiles(spark, quarters):
     """The 9 interior decile edges must equal numpy's linear-
     interpolation percentiles (the same definition Spark's exact
     `percentile` and DuckDB's QUANTILE_CONT use)."""
-    import numpy as np
-
     from impala_refresher_spark.operators.analytics import histogram_equidepth
-    import impala_refresher_spark.operators.analytics as an
 
     df = spark.createDataFrame(
         [(i + 1, q / 4.0) for i, q in enumerate(quarters)],
         "o_orderkey long, o_totalprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.decile: r.edge for r in histogram_equidepth(spark, "x").collect()}
-    finally:
-        an.load_table = orig
+    got = {r.decile: r.edge for r in run_on(spark, histogram_equidepth, df)}
 
     xs = np.array([q / 4.0 for q in quarters])
     for i in range(1, 10):
@@ -2060,28 +1784,20 @@ def packing_corpus(draw):
 
 
 @given(packing_corpus())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: shards come from a hash over all docs
 def test_pack_sequences_matches_python_fold(spark, sizes):
     """Greedy shard-local packing (md5 order, cum_before // 2048) must
     equal the sequential python fold per shard."""
-    import hashlib
-
     from impala_refresher_spark.operators.pipeline import pack_sequences_greedy
-    import impala_refresher_spark.operators.pipeline as pl
 
     df = spark.createDataFrame(
         [(i + 1, " ".join(["t"] * n)) for i, n in enumerate(sizes)],
-        "doc_id long, text string",
+        DOCS,
     )
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (r.shard, r.bin_id)
-            for r in pack_sequences_greedy(spark, "x").collect()
-        }
-    finally:
-        pl.load_table = orig
+    got = {
+        r.doc_id: (r.shard, r.bin_id)
+        for r in run_on(spark, pack_sequences_greedy, df)
+    }
 
     docs = []
     for i, n in enumerate(sizes):
@@ -2097,29 +1813,23 @@ def test_pack_sequences_matches_python_fold(spark, sizes):
 
 
 @given(st.lists(st.lists(st.sampled_from("abcd"), min_size=1, max_size=6), min_size=1, max_size=8))
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global token budget
 def test_token_budget_selection_matches_python(spark, token_lists):
     """Budget-capped selection (quality-ordered cum_before < budget)
     must equal the sequential python sweep — including the boundary
     doc that STARTS under budget and overruns it (kept)."""
     from impala_refresher_spark.operators.pipeline import select_corpus_token_budget
-    import impala_refresher_spark.operators.pipeline as pl
 
     # scale docs up so the 10k budget is reachable: each token repeats
     # 512x, so a 6-token doc is 3072 tokens
     texts = [" ".join(t for t in toks for _ in range(512)) for toks in token_lists]
     df = spark.createDataFrame(
-        [(i + 1, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        [(i + 1, t) for i, t in enumerate(texts)], DOCS
     )
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (r.n_tok, r.quality)
-            for r in select_corpus_token_budget(spark, "x").collect()
-        }
-    finally:
-        pl.load_table = orig
+    got = {
+        r.doc_id: (r.n_tok, r.quality)
+        for r in run_on(spark, select_corpus_token_budget, df)
+    }
 
     scored = []
     for i, toks in enumerate(token_lists):
@@ -2137,38 +1847,26 @@ def test_token_budget_selection_matches_python(spark, token_lists):
         assert gn == n_tok and abs(gq - q) <= 1.1e-6, doc_id
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(1, 4), st.integers(0, 28)),  # (user, day)
-        min_size=1,
-        max_size=16,
-    )
-)
-@settings(**_SETTINGS)
-def test_cohort_retention_matches_python(spark, pts):
+@given(cases(st.lists(st.tuples(st.integers(1, 4), st.integers(0, 28)), min_size=1, max_size=16)))
+@batched  # cases of (user, day) points
+def test_cohort_retention_matches_python(spark, batch):
     """The cohort x week-offset distinct matrix must equal the python
     sweep over Monday-anchored weeks (date_trunc('week') semantics on
     both engines)."""
     from impala_refresher_spark.operators.analytics import cohort_retention
-    import impala_refresher_spark.operators.analytics as an
 
+    # users and days take disjoint ranges per case; 70 days keep weekdays
+    # and put each case's cohort weeks after the previous case's
+    pts = offset(batch, (0, 1), k=70)
     rows = [
         (i + 1, _BASE + timedelta(days=d, minutes=i), u, "view", 0.0, "{}")
         for i, (u, d) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.cohort_week, r.week_offset): r.n_active
-            for r in cohort_retention(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        (r.cohort_week, r.week_offset): r.n_active
+        for r in run_on(spark, cohort_retention, df)
+    }
 
     def week_of(d: int):
         day = (_BASE + timedelta(days=d)).date()
@@ -2188,18 +1886,16 @@ def test_cohort_retention_matches_python(spark, pts):
 @given(
     st.lists(
         st.tuples(st.integers(1, 10), st.integers(0, 40), st.integers(1, 200)),
-        min_size=1,
-        max_size=16,
+        min_size=1, max_size=16,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: NTILE ranks all customers
 def test_rfm_ntile_scores_match_python(spark, orders):
+
     """R/F/M quartile scores must equal python NTILE(4) over each
     (metric DESC, custkey) total order — ties broken by key, never by
     engine hash order."""
     from impala_refresher_spark.operators.analytics import customer_rfm_segments
-    import impala_refresher_spark.operators.analytics as an
-    from datetime import date
 
     df = spark.createDataFrame(
         [
@@ -2208,15 +1904,10 @@ def test_rfm_ntile_scores_match_python(spark, orders):
         ],
         "o_orderkey long, o_custkey long, o_orderdate date, o_totalprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.o_custkey: (r.r_score, r.f_score, r.m_score)
-            for r in customer_rfm_segments(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.o_custkey: (r.r_score, r.f_score, r.m_score)
+        for r in run_on(spark, customer_rfm_segments, df)
+    }
 
     per: dict[int, list] = {}
     for c, d, q in orders:
@@ -2237,37 +1928,27 @@ def test_rfm_ntile_scores_match_python(spark, orders):
     assert got == {c: (r_s[c], f_s[c], m_s[c]) for c in custs}
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(1, 9), st.integers(1, 3)),  # (orderkey, linenumber)
-        min_size=1,
-        max_size=16,
-        unique=True,
-    )
-)
-@settings(**_SETTINGS)
-def test_aqp_sample_matches_python_md5(spark, keys):
+@given(cases(st.lists(st.tuples(st.integers(1, 9), st.integers(1, 3)), min_size=1, max_size=16, unique=True)))
+@batched  # cases of (orderkey, linenumber) keys
+def test_aqp_sample_matches_python_md5(spark, batch):
     """The deterministic 1/16 md5-prefix sample and its x16 scale-up
     must equal python hashlib over the same key construction."""
-    import hashlib
-
     from impala_refresher_spark.operators.analytics import aqp_revenue_estimate
-    import impala_refresher_spark.operators.analytics as an
 
-    rows = [(ok, ln, "A" if ok % 2 else "R", float(ok * 4 + ln)) for ok, ln in keys]
+    # the case id is folded into the return flag, the estimate's group key
+    rows = [
+        (ok, ln, f"{i}{'A' if ok % 2 else 'R'}", float(ok * 4 + ln))
+        for i, keys in enumerate(batch)
+        for ok, ln in keys
+    ]
     df = spark.createDataFrame(
         rows,
         "l_orderkey long, l_linenumber long, l_returnflag string, l_extendedprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.l_returnflag: (r.n_sampled, r.est_rows, r.est_revenue)
-            for r in aqp_revenue_estimate(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.l_returnflag: (r.n_sampled, r.est_rows, r.est_revenue)
+        for r in run_on(spark, aqp_revenue_estimate, df)
+    }
 
     want: dict[str, list] = {}
     for ok, ln, flag, price in rows:
@@ -2283,23 +1964,21 @@ def test_aqp_sample_matches_python_md5(spark, keys):
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 20), st.integers(1, 2000)),  # (day, quarters)
-        min_size=2,
-        max_size=18,
+        st.tuples(
+            st.integers(0, 20),
+            st.integers(1, 2000),
+        ),
+        min_size=2, max_size=18,  # (day, quarters)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: each weekday pools every week's days
 def test_seasonal_dow_anomaly_matches_python(spark, rows):
     """The per-day-of-week z-score screen must match the python
     per-dow mean/stddev computation; rows near the |z| = 2 boundary
     are excluded from the strict compare (sub-ulp stddev divergence
     between accumulation algorithms can legitimately flip the rounded
     boundary)."""
-    from statistics import stdev
-
     from impala_refresher_spark.operators.analytics import seasonal_dow_anomaly
-    import impala_refresher_spark.operators.analytics as an
-    from datetime import date
 
     df = spark.createDataFrame(
         [
@@ -2308,12 +1987,7 @@ def test_seasonal_dow_anomaly_matches_python(spark, rows):
         ],
         "o_orderkey long, o_orderdate date, o_totalprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.day: r.dow_z for r in seasonal_dow_anomaly(spark, "x").collect()}
-    finally:
-        an.load_table = orig
+    got = {r.day: r.dow_z for r in run_on(spark, seasonal_dow_anomaly, df)}
 
     daily: dict[int, float] = {}
     for d, q in rows:
@@ -2349,28 +2023,17 @@ def test_seasonal_dow_anomaly_matches_python(spark, rows):
         max_size=6,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: idf counts documents corpus-wide
 def test_tfidf_matches_python_counter(spark, texts):
     """TF-IDF must equal the Counter-based python computation: per-doc
     term frequency x ln(n_docs / df) with df = distinct-doc count."""
-    import math
-    from collections import Counter
-
     from impala_refresher_spark.operators.text import text_tfidf
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.doc_id, r.token): (r.tf, r.tfidf)
-            for r in text_tfidf(spark, "x").collect()
-        }
-    finally:
-        tx.load_table = orig
+    df = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = {
+        (r.doc_id, r.token): (r.tf, r.tfidf)
+        for r in run_on(spark, text_tfidf, df)
+    }
 
     tfs = {i: Counter(t.split(" ")) for i, t in enumerate(texts)}
     dfs: Counter = Counter()
@@ -2389,31 +2052,16 @@ def test_tfidf_matches_python_counter(spark, texts):
         assert abs(gw - want[k][1]) <= 1.1e-4, k
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("ab"), min_size=1, max_size=6).map(" ".join),
-        min_size=1,
-        max_size=8,
-    )
-)
-@settings(**_SETTINGS)
-def test_bigrams_match_python(spark, texts):
+@given(cases(st.lists(st.lists(st.sampled_from("ab"), min_size=1, max_size=6).map(" ".join), min_size=1, max_size=8)))
+@batched
+def test_bigrams_match_python(spark, batch):
     """The zip_with shifted-slice bigram extraction must equal python
     zip(toks, toks[1:]) counting, with the >=5 support floor."""
-    from collections import Counter
-
     from impala_refresher_spark.operators.text import text_bigrams
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.bigram: r.n for r in text_bigrams(spark, "x").collect()}
-    finally:
-        tx.load_table = orig
+    texts = _tag_texts(batch)
+    df = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = {r.bigram: r.n for r in run_on(spark, text_bigrams, df)}
 
     c: Counter = Counter()
     for t in texts:
@@ -2422,38 +2070,22 @@ def test_bigrams_match_python(spark, texts):
     assert got == {bg: n for bg, n in c.items() if n >= 5}
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("aab c")).map("".join),
-        min_size=1,
-        max_size=6,
-    )
-)
-@settings(**_SETTINGS)
-def test_char_entropy_matches_python(spark, texts):
+@given(cases(st.lists(st.lists(st.sampled_from("aab c")).map("".join), min_size=1, max_size=6)))
+@batched
+def test_char_entropy_matches_python(spark, batch):
     """The HOF-fold Shannon entropy must equal -sum(p*log2 p) over the
     python character distribution (repeat-heavy and single-char texts
     included)."""
-    import math
-    from collections import Counter
-
     from impala_refresher_spark.operators.text import quality_char_entropy
-    import impala_refresher_spark.operators.text as tx
 
-    texts = [t or "x" for t in texts]  # empty-text parity is pinned in test_edge_cases
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: r.char_entropy for r in quality_char_entropy(spark, "x").collect()
-        }
-    finally:
-        tx.load_table = orig
+    # empty-text parity is pinned in test_edge_cases
+    docs = offset([[(j, t or "x") for j, t in enumerate(texts)] for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        r.doc_id: r.char_entropy for r in run_on(spark, quality_char_entropy, df)
+    }
 
-    for i, t in enumerate(texts):
+    for i, t in docs:
         c = Counter(t)
         n = len(t)
         ent = -sum((k / n) * math.log2(k / n) for k in c.values())
@@ -2462,18 +2094,19 @@ def test_char_entropy_matches_python(spark, texts):
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 10), st.integers(0, 40)),  # (hour, value quarters)
-        min_size=1,
-        max_size=12,
+        st.tuples(
+            st.integers(0, 10),
+            st.integers(0, 40),
+        ),
+        min_size=1, max_size=12,  # (hour, value quarters)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global hourly series
 def test_linear_interpolation_matches_python(spark, pts):
     """Gap-filled linear interpolation must equal the python fill:
     observed buckets keep their value, gaps get pv + (nv-pv)*dt/DT
     between the surrounding observations."""
     from impala_refresher_spark.operators.analytics import timeseries_interpolate_linear
-    import impala_refresher_spark.operators.analytics as an
 
     rows = [
         (i + 1, _BASE + timedelta(hours=h, minutes=i % 50), 1, "purchase", q / 4.0, "{}")
@@ -2481,19 +2114,11 @@ def test_linear_interpolation_matches_python(spark, pts):
     ]
     # one filtered-out row so the event_type filter is exercised
     rows.append((len(rows) + 1, _BASE, 1, "view", 99.0, "{}"))
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.bucket - _BASE).total_seconds() // 3600: (r.is_observed, r.val)
-            for r in timeseries_interpolate_linear(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        (r.bucket - _BASE).total_seconds() // 3600: (r.is_observed, r.val)
+        for r in run_on(spark, timeseries_interpolate_linear, df)
+    }
 
     hourly: dict[int, list] = {}
     for h, q in pts:
@@ -2525,6 +2150,19 @@ def _lev(a: str, b: str) -> int:
     return prev[-1]
 
 
+def _fuzzy_pairs(names):
+    """The fuzzy edges over distinct names, sorted: same trailing token
+    (the block), |len| <= 3 apart, Levenshtein <= 3."""
+    uniq = sorted(set(names))
+    return [
+        (a, b, _lev(a, b))
+        for i, a in enumerate(uniq)
+        for b in uniq[i + 1:]
+        if a.rsplit(" ", 1)[-1] == b.rsplit(" ", 1)[-1] and abs(len(a) - len(b)) <= 3 and _lev(a, b) <= 3
+    ]
+
+
+
 @st.composite
 def name_corpus(draw):
     """Two-token names over a tweakable vocab so trailing-token blocks
@@ -2539,138 +2177,84 @@ def name_corpus(draw):
     ]
 
 
-@given(name_corpus())
-@settings(**_SETTINGS)
-def test_fuzzy_join_matches_python_levenshtein(spark, names):
+def _names_by_case(batch):
+    """name_corpus cases with the case id appended to the trailing token,
+    the blocking key; lengths and edit distances within a case stay put."""
+    return [f"{nm}{i}" for i, names in enumerate(batch) for nm in names]
+
+
+@given(cases(name_corpus()))
+@batched
+def test_fuzzy_join_matches_python_levenshtein(spark, batch):
     """The blocked fuzzy join must equal python: trailing-token
     blocking, |len| <= 3 prefilter, unit-cost Levenshtein <= 3 on
     distinct names."""
     from impala_refresher_spark.operators.linkage import fuzzy_join_part_names
-    import impala_refresher_spark.operators.linkage as lk
 
+    names = _names_by_case(batch)
     df = spark.createDataFrame(
         [(i + 1, nm) for i, nm in enumerate(names)], "p_partkey long, p_name string"
     )
-    orig = lk.load_table
-    lk.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.name_a, r.name_b, r.edit_dist)
-            for r in fuzzy_join_part_names(spark, "x").collect()
-        )
-    finally:
-        lk.load_table = orig
+    got = sorted(
+        (r.name_a, r.name_b, r.edit_dist)
+        for r in run_on(spark, fuzzy_join_part_names, df)
+    )
 
-    uniq = sorted(set(names))
-    want = []
-    for i, a in enumerate(uniq):
-        for b in uniq[i + 1:]:
-            if (
-                a.rsplit(" ", 1)[-1] == b.rsplit(" ", 1)[-1]
-                and abs(len(a) - len(b)) <= 3
-                and _lev(a, b) <= 3
-            ):
-                want.append((a, b, _lev(a, b)))
-    assert got == sorted(want)
+    assert got == _fuzzy_pairs(names)
 
 
-@given(name_corpus())
-@settings(**_SETTINGS)
-def test_entity_resolution_matches_union_find(spark, names):
+@given(cases(name_corpus()))
+@batched
+def test_entity_resolution_matches_union_find(spark, batch):
     """The iterative min-label clustering must equal union-find over
     the same fuzzy edges: canonical = lexicographic min of each
     component, singletons canonical to themselves, cluster sizes from
     the component census."""
     from impala_refresher_spark.operators.linkage import entity_resolution_clusters
-    import impala_refresher_spark.operators.linkage as lk
 
+    names = _names_by_case(batch)
     df = spark.createDataFrame(
         [(i + 1, nm) for i, nm in enumerate(names)], "p_partkey long, p_name string"
     )
-    orig = lk.load_table
-    lk.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.p_name: (r.canonical, r.cluster_size)
-            for r in entity_resolution_clusters(spark, "x").collect()
-        }
-    finally:
-        lk.load_table = orig
+    got = {
+        r.p_name: (r.canonical, r.cluster_size)
+        for r in run_on(spark, entity_resolution_clusters, df)
+    }
 
-    uniq = sorted(set(names))
-    parent = {n: n for n in uniq}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for i, a in enumerate(uniq):
-        for b in uniq[i + 1:]:
-            if (
-                a.rsplit(" ", 1)[-1] == b.rsplit(" ", 1)[-1]
-                and abs(len(a) - len(b)) <= 3
-                and _lev(a, b) <= 3
-            ):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[ra] = rb
-    comps: dict[str, list] = {}
-    for n in uniq:
-        comps.setdefault(find(n), []).append(n)
-    want = {}
-    for mem in comps.values():
-        canon = min(mem)
-        for n in mem:
-            want[n] = (canon, len(mem))
-    assert got == want
+    comps = _components([(a, b) for a, b, _ in _fuzzy_pairs(names)], set(names))
+    assert got == {n: (min(mem), len(mem)) for mem in comps for n in mem}
 
 
 @given(
     st.lists(
-        st.tuples(st.integers(1, 40), st.integers(1, 400)),  # (orderkey, quarters)
-        min_size=1,
-        max_size=16,
-        unique_by=lambda t: t[0],
+        st.tuples(
+            st.integers(1, 40),
+            st.integers(1, 400),
+        ),
+        min_size=1, max_size=16, unique_by=lambda t: t[0],  # (orderkey, quarters)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global interval
 def test_subsample_ci_matches_python(spark, orders):
     """The 16-bucket subsample CI must equal python: per-bucket means
     (cents-rounded), grand mean, between-bucket stdev, +-2.131/sqrt(16)
     interval — single-bucket inputs yield NULL sd and CI."""
-    from statistics import stdev
-
     from impala_refresher_spark.operators.evaluation import subsample_ci_revenue
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(
         [(ok, q / 4.0) for ok, q in orders], "o_orderkey long, o_totalprice double"
     )
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        r = subsample_ci_revenue(spark, "x").collect()[0]
-    finally:
-        ev.load_table = orig
+    r = run_on(spark, subsample_ci_revenue, df)[0]
 
     # Spark's round() is HALF_UP on the shortest decimal repr of the
     # double; python's built-in round() is banker's. On an exact .xx5
     # mean (e.g. 42.125) they diverge by a full cent, which then
     # exceeds the sd tolerance — model Spark's rounding exactly
     # (hypothesis found 42.125: round()->42.12, Spark->42.13).
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r2(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
-        )
-
     buckets: dict[int, list] = {}
     for ok, q in orders:
         buckets.setdefault(ok % 16, []).append(q / 4.0)
-    means = [r2(sum(v) / len(v)) for _, v in sorted(buckets.items())]
+    means = [half_up(sum(v) / len(v), 2) for _, v in sorted(buckets.items())]
     assert r.n_subsamples == len(means)
     assert abs(r.grand_mean - sum(means) / len(means)) <= 1.1e-2
     if len(means) < 2:
@@ -2683,31 +2267,19 @@ def test_subsample_ci_matches_python(spark, orders):
     assert abs(r.ci_hi - (gm + 2.131 * sd / 4.0)) <= 2.1e-2
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["en", "de", "xx"]), st.integers(1, 20)),
-        min_size=1,
-        max_size=16,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.sampled_from(["en", "de", "xx"]), st.integers(1, 20)), min_size=1, max_size=16))
+@settings(**SETTINGS)  # one case per example: one global statistic
 def test_kappa_matches_python(spark, docs):
     """Cohen's kappa from the integer marginal products must equal the
     textbook computation, including pe = 1 (single-cell matrix) where
     try_divide yields NULL."""
     from impala_refresher_spark.operators.evaluation import langid_confusion_kappa
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(docs, "lang string, n_chars int")
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.label, r.pred): (r.n, r.po, r.pe, r.kappa)
-            for r in langid_confusion_kappa(spark, "x").collect()
-        }
-    finally:
-        ev.load_table = orig
+    got = {
+        (r.label, r.pred): (r.n, r.po, r.pe, r.kappa)
+        for r in run_on(spark, langid_confusion_kappa, df)
+    }
 
     langs = {"en", "de", "es", "fr"}
     cm: dict[tuple, int] = {}
@@ -2735,7 +2307,7 @@ def test_kappa_matches_python(spark, docs):
 @given(
     st.lists(st.integers(1, 30), min_size=1, max_size=20)  # o_custkey stream
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one sketch over all keys
 def test_cms_matches_python(spark, keys):
     """The count-min sketch cells and probe minima must equal python's
     direct evaluation of the portable (k*a+b) mod p mod 512 family —
@@ -2743,18 +2315,12 @@ def test_cms_matches_python(spark, keys):
     from impala_refresher_spark.operators.rollup_hypertable import (
         cms_frequency_estimate,
     )
-    import impala_refresher_spark.operators.rollup_hypertable as rh
 
     df = spark.createDataFrame([(i + 1, k) for i, k in enumerate(keys)], "o_orderkey long, o_custkey long")
-    orig = rh.load_table
-    rh.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.probe_key: (r.exact_n, r.cms_n, r.overcount)
-            for r in cms_frequency_estimate(spark, "x").collect()
-        }
-    finally:
-        rh.load_table = orig
+    got = {
+        r.probe_key: (r.exact_n, r.cms_n, r.overcount)
+        for r in run_on(spark, cms_frequency_estimate, df)
+    }
 
     fam = [(2654435761, 97), (2246822519, 1009), (3266489917, 8191), (668265263, 131071)]
     cells: dict[tuple, int] = {}
@@ -2781,32 +2347,25 @@ def test_cms_matches_python(spark, keys):
             st.one_of(st.none(), st.integers(1, 9)),
             st.one_of(st.none(), st.integers(1, 40)),
         ),
-        min_size=1,
-        max_size=14,
+        min_size=1, max_size=14,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one profile of the whole table
 def test_profile_stats_match_python_with_nulls(spark, rows):
     """The one-pass column profile must equal python counting — with
     NULLs injected (absent from every fixture): COUNT(DISTINCT)
     ignores them, null tallies count them, min/max skip them, and an
     all-NULL column profiles as (0 distinct, NULL min/max)."""
     from impala_refresher_spark.operators.profiling import profile_table_stats
-    import impala_refresher_spark.operators.profiling as pf
 
     df = spark.createDataFrame(
         [(s, p, c, None if q is None else q / 4.0) for s, p, c, q in rows],
         "o_orderstatus string, o_orderpriority string, o_custkey long, o_totalprice double",
     )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.col_name: (r.n_rows, r.n_nulls, r.n_distinct, r.min_val, r.max_val)
-            for r in profile_table_stats(spark, "x").collect()
-        }
-    finally:
-        pf.load_table = orig
+    got = {
+        r.col_name: (r.n_rows, r.n_nulls, r.n_distinct, r.min_val, r.max_val)
+        for r in run_on(spark, profile_table_stats, df)
+    }
 
     n = len(rows)
     status = [s for s, _, _, _ in rows]
@@ -2851,12 +2410,11 @@ def fk_case(draw):
 
 
 @given(fk_case())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one orphan count per edge over all rows
 def test_fk_orphans_match_python(spark, case):
     """Per-edge orphan counts must equal python set-difference
     counting over every foreign-key edge."""
     from impala_refresher_spark.operators.profiling import fk_orphans_audit
-    import impala_refresher_spark.operators.profiling as pf
 
     dims, li, o = case
     tables = {
@@ -2872,12 +2430,7 @@ def test_fk_orphans_match_python(spark, case):
             [(k,) for k in dims["customer"]], "c_custkey long"
         ),
     }
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {r.fk: r.n_orphans for r in fk_orphans_audit(spark, "x").collect()}
-    finally:
-        pf.load_table = orig
+    got = {r.fk: r.n_orphans for r in run_on(spark, fk_orphans_audit, tables)}
 
     want = {
         "lineitem.l_orderkey->orders": sum(
@@ -2897,34 +2450,34 @@ def test_fk_orphans_match_python(spark, case):
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(1, 200), st.integers(1, 400), st.sampled_from(["F", "O"])),
-        min_size=1,
-        max_size=16,
-        unique_by=lambda t: t[0],
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 200),
+                st.integers(1, 400),
+                st.sampled_from(["F", "O"]),
+            ),
+            min_size=1, max_size=16, unique_by=lambda t: t[0],
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_snapshot_diff_matches_python(spark, rows):
+@batched
+def test_snapshot_diff_matches_python(spark, batch):
     """The full-outer snapshot diff must equal the python dict diff of
     the same deterministic v2 derivation (delete %97, reprice %7=3,
     insert %131=5) — identical IEEE products on both sides."""
     from impala_refresher_spark.operators.lakehouse import snapshot_diff_orders
-    import impala_refresher_spark.operators.lakehouse as lh
 
+    # a multiple of 97 * 7 * 131 keeps each key's v2 derivation
+    rows = offset(batch, (0,), k=97 * 7 * 131)
     df = spark.createDataFrame(
         [(k, q / 4.0, s) for k, q, s in rows],
         "o_orderkey long, o_totalprice double, o_orderstatus string",
     )
-    orig = lh.load_table
-    lh.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.o_orderkey: (r.change_type, r.old_price, r.new_price)
-            for r in snapshot_diff_orders(spark, "x").collect()
-        }
-    finally:
-        lh.load_table = orig
+    got = {
+        r.o_orderkey: (r.change_type, r.old_price, r.new_price)
+        for r in run_on(spark, snapshot_diff_orders, df)
+    }
 
     old = {k: (q / 4.0, s) for k, q, s in rows}
     new = {}
@@ -2947,25 +2500,26 @@ def test_snapshot_diff_matches_python(spark, rows):
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(1, 50),  # orderkey
-            st.integers(0, 3),  # day
-            st.integers(1, 9),  # custkey
-            st.integers(1, 400),  # price quarters
-        ),
-        min_size=1,
-        max_size=16,
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 50),  # orderkey
+                st.integers(0, 3),  # day
+                st.integers(1, 9),  # custkey
+                st.integers(1, 400),  # price quarters
+            ),
+            min_size=1, max_size=16,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_partition_checksums_match_python(spark, rows):
+@batched
+def test_partition_checksums_match_python(spark, batch):
     """Per-day order-insensitive checksums must equal direct python
     evaluation of the portable integer row hash — and permuting the
     rows must not change them (the anti-entropy contract)."""
     from impala_refresher_spark.operators.lakehouse import partition_checksums
-    import impala_refresher_spark.operators.lakehouse as lh
-    from datetime import date
+
+    rows = offset(batch, (1,), k=4)  # each case its own days
 
     def run(perm):
         df = spark.createDataFrame(
@@ -2975,15 +2529,10 @@ def test_partition_checksums_match_python(spark, rows):
             ],
             "o_orderkey long, o_orderdate date, o_custkey long, o_totalprice double",
         )
-        orig = lh.load_table
-        lh.load_table = lambda spark, sf, name: df
-        try:
-            return {
-                r.day: (r.n_rows, r.checksum)
-                for r in partition_checksums(spark, "x").collect()
-            }
-        finally:
-            lh.load_table = orig
+        return {
+            r.day: (r.n_rows, r.checksum)
+            for r in run_on(spark, partition_checksums, df)
+        }
 
     got = run(rows)
     want: dict = {}
@@ -2996,31 +2545,19 @@ def test_partition_checksums_match_python(spark, rows):
     assert run(rows[::-1]) == want  # order-insensitive
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["en", "de", "xx"]), st.integers(1, 20)),
-        min_size=1,
-        max_size=16,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.sampled_from(["en", "de", "xx"]), st.integers(1, 20)), min_size=1, max_size=16))
+@settings(**SETTINGS)  # one case per example: classes pool all documents
 def test_precision_recall_matches_python(spark, docs):
     """Per-class precision/recall/F1 must equal python over the same
     deterministic prediction; classes absent from one side (predicted-
     only or labeled-only) still get rows with NULL-guarded ratios."""
     from impala_refresher_spark.operators.evaluation import langid_precision_recall
-    import impala_refresher_spark.operators.evaluation as ev
 
     df = spark.createDataFrame(docs, "lang string, n_chars int")
-    orig = ev.load_table
-    ev.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.cls: (r.tp, r.support, r.precision, r.recall, r.f1)
-            for r in langid_precision_recall(spark, "x").collect()
-        }
-    finally:
-        ev.load_table = orig
+    got = {
+        r.cls: (r.tp, r.support, r.precision, r.recall, r.f1)
+        for r in run_on(spark, langid_precision_recall, df)
+    }
 
     langs = {"en", "de", "es", "fr"}
     pairs = [
@@ -3051,20 +2588,20 @@ def test_precision_recall_matches_python(spark, docs):
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 13), st.integers(1, 400)),  # (day, quarters)
-        min_size=1,
-        max_size=16,
+        st.tuples(
+            st.integers(0, 13),
+            st.integers(1, 400),
+        ),
+        min_size=1, max_size=16,  # (day, quarters)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global daily series
 def test_decomposition_matches_python(spark, rows):
     """Trend/seasonal/residual must equal the python pipeline: 7-ROW
     centered MA (full windows only), per-dow mean of detrended values
     (NULL-trend rows skipped by AVG), residual = rest — each stage
     cents-rounded before the next."""
     from impala_refresher_spark.operators.profiling import timeseries_decompose_daily
-    import impala_refresher_spark.operators.profiling as pf
-    from datetime import date
 
     df = spark.createDataFrame(
         [
@@ -3073,38 +2610,26 @@ def test_decomposition_matches_python(spark, rows):
         ],
         "o_orderkey long, o_orderdate date, o_totalprice double",
     )
-    orig = pf.load_table
-    pf.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.day, r.rev, r.trend, r.seasonal, r.residual)
-            for r in timeseries_decompose_daily(spark, "x").collect()
-        ]
-    finally:
-        pf.load_table = orig
+    got = [
+        (r.day, r.rev, r.trend, r.seasonal, r.residual)
+        for r in run_on(spark, timeseries_decompose_daily, df)
+    ]
 
     # model Spark's HALF_UP round, not python's banker's: a 7-day mean
     # can land exactly on a .xx5 decimal (e.g. 70.875/7 = 10.125, both
     # binary-exact), where the two roundings diverge by a cent that
     # then compounds through seasonal and residual past the tolerances
     # (the test_subsample_ci_matches_python class)
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r2(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP)
-        )
-
     daily: dict[int, float] = {}
     for d, q in rows:
         daily[d] = daily.get(d, 0.0) + q / 4.0
     days = sorted(daily)
-    revs = {d: r2(daily[d]) for d in days}
+    revs = {d: half_up(daily[d], 2) for d in days}
     trend = {}
     for i, d in enumerate(days):
         frame = days[max(0, i - 3) : i + 4]
         if len(frame) == 7 and i >= 3:
-            trend[d] = r2(sum(revs[x] for x in frame) / 7)
+            trend[d] = half_up(sum(revs[x] for x in frame) / 7, 2)
     by_dow: dict[int, list] = {}
     for d in days:
         by_dow.setdefault((date(2024, 1, 1) + timedelta(days=d)).weekday(), []).append(d)
@@ -3112,7 +2637,7 @@ def test_decomposition_matches_python(spark, rows):
     for dow, mem in by_dow.items():
         det = [revs[d] - trend[d] for d in mem if d in trend]
         if det:
-            seasonal[dow] = r2(sum(det) / len(det))
+            seasonal[dow] = half_up(sum(det) / len(det), 2)
     want = []
     for d in days:
         if d in trend:
@@ -3123,7 +2648,7 @@ def test_decomposition_matches_python(spark, rows):
                     revs[d],
                     trend[d],
                     seasonal[dow],
-                    r2(revs[d] - trend[d] - seasonal[dow]),
+                    half_up(revs[d] - trend[d] - seasonal[dow], 2),
                 )
             )
     assert [(d, r) for d, r, *_ in got] == [(d, r) for d, r, *_ in want]
@@ -3132,48 +2657,27 @@ def test_decomposition_matches_python(spark, rows):
         assert abs(gr - wr) <= 3.1e-2
 
 
-@given(
-    st.lists(st.sampled_from(["web", "book", "code"]), min_size=1, max_size=20)
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.sampled_from(["web", "book", "code"]), min_size=1, max_size=20))
+@settings(**SETTINGS)  # one case per example: quotas over all rows
 def test_mixture_temperature_matches_python(spark, sources):
     """sqrt-temperature quotas and md5-ordered admission must equal
     the python computation — quota can exceed a tail source's size
     (all its docs admitted), and the head is truncated at quota."""
-    import hashlib
-    import math
-
     from impala_refresher_spark.operators.pipeline import corpus_mixture_temperature
-    import impala_refresher_spark.operators.pipeline as pl
 
     df = spark.createDataFrame(
         [(i + 1, s) for i, s in enumerate(sources)], "doc_id long, source string"
     )
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.doc_id, r.source, r.quota)
-            for r in corpus_mixture_temperature(spark, "x").collect()
-        )
-    finally:
-        pl.load_table = orig
-
-    from collections import Counter
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def r6d(x):
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+    got = sorted(
+        (r.doc_id, r.source, r.quota)
+        for r in run_on(spark, corpus_mixture_temperature, df)
+    )
 
     cnt = Counter(sources)
-    denom = r6d(sum(math.sqrt(c) for _, c in sorted(cnt.items())))
+    denom = half_up(sum(math.sqrt(c) for _, c in sorted(cnt.items())), 6)
     want = []
     for src, c in cnt.items():
-        quota = int(
-            Decimal(repr(r6d(math.sqrt(c) / denom) * 200)).quantize(
-                Decimal("1"), rounding=ROUND_HALF_UP
-            )
-        )
+        quota = int(half_up(half_up(math.sqrt(c) / denom, 6) * 200, 0))
         members = sorted(
             (hashlib.md5(str(i + 1).encode()).hexdigest(), i + 1)
             for i, s in enumerate(sources)
@@ -3184,28 +2688,23 @@ def test_mixture_temperature_matches_python(spark, sources):
     assert got == sorted(want)
 
 
-@given(st.lists(st.tuples(st.integers(1, 500), st.integers(1, 50)), min_size=1, max_size=16, unique_by=lambda t: t[0]))
-@settings(**_SETTINGS)
+@given(
+    st.lists(
+        st.tuples(st.integers(1, 500), st.integers(1, 50)),
+        min_size=1, max_size=16, unique_by=lambda t: t[0],
+    )
+)
+@settings(**SETTINGS)  # one case per example: one summary row per split over all docs
 def test_train_val_test_split_matches_python(spark, docs):
     """The md5-prefix 90/5/5 split summary must equal python hashlib
     bucketing of the same doc_ids."""
-    import hashlib
-
     from impala_refresher_spark.operators.analytics import train_val_test_split
-    import impala_refresher_spark.sources.tables as tables_mod
 
     df = spark.createDataFrame(docs, "doc_id long, n_chars long")
-    # this operator does `from ...tables import load_table` INSIDE the
-    # function body, so patch the source module, not the operator module
-    orig = tables_mod.load_table
-    tables_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.split: (r.n_docs, r.total_chars)
-            for r in train_val_test_split(spark, "x").collect()
-        }
-    finally:
-        tables_mod.load_table = orig
+    got = {
+        r.split: (r.n_docs, r.total_chars)
+        for r in run_on(spark, train_val_test_split, df)
+    }
 
     want: dict[str, list] = {}
     for doc_id, n_chars in docs:
@@ -3215,28 +2714,20 @@ def test_train_val_test_split_matches_python(spark, docs):
     assert got == {s: (len(v), sum(v)) for s, v in want.items()}
 
 
-@given(event_sequences())
-@settings(**_SETTINGS)
-def test_first_touch_matches_python(spark, rows):
+@given(cases(event_sequences()))
+@batched
+def test_first_touch_matches_python(spark, batch):
     """min_by(event_type, ts) must equal the python argmin per user
     (unique timestamps per user by construction — the operator's
     documented determinism precondition)."""
     from impala_refresher_spark.operators.analytics import first_touch_attribution
-    import impala_refresher_spark.operators.analytics as an
 
-    df = spark.createDataFrame(
-        [(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.user_id: (r.first_event_type, r.first_ts, r.n_events)
-            for r in first_touch_attribution(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    rows = offset(batch, (0, 2))
+    df = spark.createDataFrame([(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows], EVENTS)
+    got = {
+        r.user_id: (r.first_event_type, r.first_ts, r.n_events)
+        for r in run_on(spark, first_touch_attribution, df)
+    }
 
     by_user: dict[int, list] = {}
     for _, ts, u, t, _ in rows:
@@ -3247,37 +2738,24 @@ def test_first_touch_matches_python(spark, rows):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("abc"), min_size=1, max_size=8).map(" ".join),
-        min_size=1,
-        max_size=8,
-    )
-)
-@settings(**_SETTINGS)
-def test_repetition_ratio_matches_python(spark, texts):
+@given(cases(st.lists(st.lists(st.sampled_from("abc"), min_size=1, max_size=8).map(" ".join), min_size=1, max_size=8)))
+@batched
+def test_repetition_ratio_matches_python(spark, batch):
     """The repetition filter must equal python 1 - distinct/total with
     the strict >0.5 threshold applied to the ROUNDED ratio."""
     from impala_refresher_spark.operators.analytics import quality_repetition_ratio
-    import impala_refresher_spark.operators.analytics as an
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (r.rep_ratio, r.n_tokens)
-            for r in quality_repetition_ratio(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        r.doc_id: (r.rep_ratio, r.n_tokens)
+        for r in run_on(spark, quality_repetition_ratio, df)
+    }
 
     want = {}
-    for i, t in enumerate(texts):
+    for i, t in docs:
         toks = t.split(" ")
-        ratio = _r4(1.0 - len(set(toks)) / len(toks))
+        ratio = half_up(1.0 - len(set(toks)) / len(toks), 4)
         if ratio > 0.5:
             want[i] = (ratio, len(toks))
     assert set(got) == set(want)
@@ -3287,40 +2765,26 @@ def test_repetition_ratio_matches_python(spark, texts):
 
 @given(
     st.lists(
-        st.tuples(
-            st.integers(0, 8),
-            st.sampled_from(["purchase", "view"]),
-            st.integers(0, 40),
-        ),
-        min_size=1,
-        max_size=14,
+        st.tuples(st.integers(0, 8), st.sampled_from(["purchase", "view"]), st.integers(0, 40)),
+        min_size=1, max_size=14,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the spine spans the global day bounds
 def test_zero_filled_series_matches_python(spark, pts):
     """The spine join must produce one row per calendar day between
     the GLOBAL bounds (all event types), with explicit zeros for days
     whose purchases are absent."""
     from impala_refresher_spark.operators.analytics import daily_events_zero_filled
-    import impala_refresher_spark.operators.analytics as an
 
     rows = [
         (i + 1, _BASE + timedelta(days=d, minutes=i), 1, t, q / 4.0, "{}")
         for i, (d, t, q) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.day: (r.n_events, r.total_value)
-            for r in daily_events_zero_filled(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = {
+        r.day: (r.n_events, r.total_value)
+        for r in run_on(spark, daily_events_zero_filled, df)
+    }
 
     lo, hi = min(d for d, _, _ in pts), max(d for d, _, _ in pts)
     want = {}
@@ -3342,27 +2806,19 @@ def test_zero_filled_series_matches_python(spark, pts):
             st.sampled_from(["src1", "bad"]),
             st.integers(0, 12),  # n_chars (mismatches possible)
         ),
-        min_size=1,
-        max_size=12,
-        unique_by=lambda t: t[0],
+        min_size=1, max_size=12, unique_by=lambda t: t[0],
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one violation count per rule over all rows
 def test_dq_rules_match_python(spark, docs):
     """Every declarative DQ rule's violation count must equal direct
     python evaluation of the same predicate."""
     from impala_refresher_spark.operators.analytics import dq_rule_violations
-    import impala_refresher_spark.operators.analytics as an
 
     df = spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        r = dq_rule_violations(spark, "x").collect()[0]
-    finally:
-        an.load_table = orig
+    r = run_on(spark, dq_rule_violations, df)[0]
 
     assert r.n_rows == len(docs)
     assert r.null_or_empty_text == sum(1 for d in docs if len(d[1]) == 0)
@@ -3378,14 +2834,11 @@ def test_dq_rules_match_python(spark, docs):
     st.lists(st.integers(1, 8), min_size=1, max_size=14),  # order custkeys
     st.lists(st.integers(1, 8), min_size=1, max_size=14),  # event user_ids
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global estimate
 def test_join_cardinality_matches_python(spark, okeys, ukeys):
     """The exact join-size formula sum(ca*cb) over shared keys must
     equal the python product count (and equal the actual join size)."""
-    from collections import Counter
-
     from impala_refresher_spark.operators.analytics import join_cardinality_estimate
-    import impala_refresher_spark.operators.analytics as an
 
     tables = {
         "orders": spark.createDataFrame(
@@ -3396,12 +2849,7 @@ def test_join_cardinality_matches_python(spark, okeys, ukeys):
             "event_id long, ts timestamp, user_id long",
         ),
     }
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: tables[name]
-    try:
-        r = join_cardinality_estimate(spark, "x").collect()[0]
-    finally:
-        an.load_table = orig
+    r = run_on(spark, join_cardinality_estimate, tables)[0]
 
     ca, cb = Counter(okeys), Counter(ukeys)
     shared = set(ca) & set(cb)
@@ -3419,25 +2867,16 @@ def test_join_cardinality_matches_python(spark, okeys, ukeys):
 
 
 @given(st.lists(st.integers(1, 6), min_size=1, max_size=18))
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global profile
 def test_skew_profile_matches_numpy(spark, custkeys):
     """The per-key skew profile must equal numpy: linear-interpolated
     p50/p99 of the count distribution (floored), max/mean skew factor."""
-    import numpy as np
-    from collections import Counter
-
     from impala_refresher_spark.operators.analytics import join_key_skew_profile
-    import impala_refresher_spark.operators.analytics as an
 
     df = spark.createDataFrame(
         [(i + 1, k) for i, k in enumerate(custkeys)], "o_orderkey long, o_custkey long"
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        r = join_key_skew_profile(spark, "x").collect()[0]
-    finally:
-        an.load_table = orig
+    r = run_on(spark, join_key_skew_profile, df)[0]
 
     counts = np.array(sorted(Counter(custkeys).values()))
     assert r.n_keys == len(counts) and r.max_rows == counts.max()
@@ -3447,55 +2886,37 @@ def test_skew_profile_matches_numpy(spark, custkeys):
 
 
 @given(st.lists(st.integers(1, 400), min_size=1, max_size=16))
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the threshold is a global mean
 def test_above_avg_filter_matches_python(spark, quarters):
     """The scalar-subquery filter must keep exactly the rows python
     keeps with the same 1.5x-mean threshold."""
     from impala_refresher_spark.operators.analytics import above_avg_orders
-    import impala_refresher_spark.operators.analytics as an
 
     df = spark.createDataFrame(
         [(i + 1, q / 4.0) for i, q in enumerate(quarters)],
         "o_orderkey long, o_totalprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.o_orderkey for r in above_avg_orders(spark, "x").collect()}
-    finally:
-        an.load_table = orig
+    got = {r.o_orderkey for r in run_on(spark, above_avg_orders, df)}
 
     avg = sum(q / 4.0 for q in quarters) / len(quarters)
     want = {i + 1 for i, q in enumerate(quarters) if q / 4.0 > 1.5 * avg}
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 3), st.sampled_from(["A", "B", "C"])),
-        min_size=1,
-        max_size=16,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.integers(0, 3), st.sampled_from(["A", "B", "C"])), min_size=1, max_size=16))
+@settings(**SETTINGS)  # one case per example: the divisor is the global segment set
 def test_relational_division_matches_python(spark, pairs):
     """Relational division (nations covering ALL segments) must equal
     the python set cover check against the GLOBAL segment set."""
     from impala_refresher_spark.operators.analytics import (
         nations_covering_all_segments,
     )
-    import impala_refresher_spark.operators.analytics as an
 
     df = spark.createDataFrame(
         [(i + 1, nk, seg) for i, (nk, seg) in enumerate(pairs)],
         "c_custkey long, c_nationkey long, c_mktsegment string",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.nationkey for r in nations_covering_all_segments(spark, "x").collect()}
-    finally:
-        an.load_table = orig
+    got = {r.nationkey for r in run_on(spark, nations_covering_all_segments, df)}
 
     all_segs = {seg for _, seg in pairs}
     per_nation: dict[int, set] = {}
@@ -3504,36 +2925,20 @@ def test_relational_division_matches_python(spark, pairs):
     assert got == {nk for nk, segs in per_nation.items() if segs == all_segs}
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("abc"), min_size=1, max_size=7).map(" ".join),
-        min_size=1,
-        max_size=6,
-    )
-)
-@settings(**_SETTINGS)
-def test_trigram_lm_matches_python(spark, texts):
+@given(cases(st.lists(st.lists(st.sampled_from("abc"), min_size=1, max_size=7).map(" ".join), min_size=1, max_size=6)))
+@batched
+def test_trigram_lm_matches_python(spark, batch):
     """The corpus trigram LM score must equal python: corpus trigram /
     bigram-context counts, per-occurrence -log2(c3/c2), averaged per
     doc; docs with < 3 tokens are absent."""
-    import math
-    from collections import Counter
-
     from impala_refresher_spark.operators.text import quality_lm_trigram
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (r.n_trigrams, r.avg_nll)
-            for r in quality_lm_trigram(spark, "x").collect()
-        }
-    finally:
-        tx.load_table = orig
+    texts = _tag_texts(batch)
+    df = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = {
+        r.doc_id: (r.n_trigrams, r.avg_nll)
+        for r in run_on(spark, quality_lm_trigram, df)
+    }
 
     tri_c: Counter = Counter()
     bi_c: Counter = Counter()
@@ -3557,37 +2962,30 @@ def test_trigram_lm_matches_python(spark, texts):
 
 
 @given(
-    st.lists(
-        st.lists(st.sampled_from(["customer", "a", "b"]), min_size=1, max_size=7).map(
-            " ".join
-        ),
-        min_size=1,
-        max_size=5,
+    cases(
+        st.lists(
+            st.lists(st.sampled_from(["customer", "a", "b"]), min_size=1, max_size=7).map(" ".join),
+            min_size=1,
+            max_size=5,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_kwic_matches_python(spark, texts):
+@batched
+def test_kwic_matches_python(spark, batch):
     """Keyword-in-context extraction must equal python slicing: every
     occurrence, +-2 tokens, truncated at document edges (first/last
     token occurrences included)."""
     from impala_refresher_spark.operators.text import text_keyword_in_context
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got = sorted(
+        (r.doc_id, r.pos, r.left_ctx, r.right_ctx)
+        for r in run_on(spark, text_keyword_in_context, df)
     )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.doc_id, r.pos, r.left_ctx, r.right_ctx)
-            for r in text_keyword_in_context(spark, "x").collect()
-        )
-    finally:
-        tx.load_table = orig
 
     want = []
-    for i, t in enumerate(texts):
+    for i, t in docs:
         toks = t.split(" ")
         for p, tok in enumerate(toks):
             if tok == "customer":
@@ -3613,31 +3011,20 @@ def test_kwic_matches_python(spark, texts):
         max_size=6,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: df and avgdl are corpus-wide
 def test_bm25_matches_python(spark, texts):
     """BM25(k1=1.2, b=0.75) of the fixed 3-term query must equal the
     textbook python computation over corpus df / dl / avgdl — docs
     hitting no query term are absent (no zero-row padding)."""
-    import math
-    from collections import Counter
-
     from impala_refresher_spark.operators.text import (
         _BM25_B,
         _BM25_K1,
         _BM25_TERMS,
         text_bm25_score,
     )
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.doc_id: r.bm25 for r in text_bm25_score(spark, "x").collect()}
-    finally:
-        tx.load_table = orig
+    df = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = {r.doc_id: r.bm25 for r in run_on(spark, text_bm25_score, df)}
 
     n_docs = len(texts)
     toks = {i: t.split(" ") for i, t in enumerate(texts)}
@@ -3665,49 +3052,43 @@ def test_bm25_matches_python(spark, texts):
 
 
 @given(
-    st.lists(
+    cases(
         st.lists(
-            st.sampled_from(["the", "of", "customer", "aa", "abcdefghijkl", "x"]),
+            st.lists(
+                st.sampled_from(["the", "of", "customer", "aa", "abcdefghijkl", "x"]),
+                min_size=1,
+                max_size=8,
+            ).map(" ".join),
             min_size=1,
-            max_size=8,
-        ).map(" ".join),
-        min_size=1,
-        max_size=6,
+            max_size=6,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_gopher_battery_matches_python(spark, texts):
+@batched
+def test_gopher_battery_matches_python(spark, batch):
     """The HOF Gopher feature battery and pass flag must equal a
     direct python computation of the Rae-et-al rules (mean word
     length, dup fraction, stopword floor, top-bigram concentration) —
     single-token docs take the bigram = 0.0 branch."""
-    from collections import Counter
-
     from impala_refresher_spark.operators.text import STOPWORDS, quality_gopher_rules
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (
-                r.mean_word_len,
-                r.dup_word_frac,
-                r.stopword_frac,
-                r.top_bigram_frac,
-                r.passes_gopher,
-            )
-            for r in quality_gopher_rules(spark, "x").collect()
-        }
-    finally:
-        tx.load_table = orig
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        r.doc_id: (
+            r.mean_word_len,
+            r.dup_word_frac,
+            r.stopword_frac,
+            r.top_bigram_frac,
+            r.passes_gopher,
+        )
+        for r in run_on(spark, quality_gopher_rules, df)
+    }
 
     stop = set(STOPWORDS)
-    for i, t in enumerate(texts):
+    for i, t in docs:
         w = t.split(" ")
+
         n = len(w)
         mwl = sum(len(x) for x in w) / n
         dup = 1.0 - len(set(w)) / n
@@ -3731,31 +3112,23 @@ def test_gopher_battery_matches_python(spark, texts):
         max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)
 def test_exact_dedup_and_hash_twin_match_python(spark, texts):
     """Exact dedup must keep min doc_id per text with the right copy
     count, and the sha256-keyed twin must produce the SAME partition
     of documents (hash grouping loses nothing)."""
-    import hashlib
-
     from impala_refresher_spark.operators.dedup import dedup_exact, dedup_exact_hash
-    import impala_refresher_spark.operators.dedup as dd
 
     df = spark.createDataFrame(
-        [(i + 1, t) for i, t in enumerate(texts)], "doc_id long, text string"
+        [(i + 1, t) for i, t in enumerate(texts)], DOCS
     )
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.keep_doc_id, r.n_copies) for r in dedup_exact(spark, "x").collect()
-        )
-        got_h = sorted(
-            (r.text_hash, r.keep_doc_id, r.n_copies)
-            for r in dedup_exact_hash(spark, "x").collect()
-        )
-    finally:
-        dd.load_table = orig
+    got = sorted(
+        (r.keep_doc_id, r.n_copies) for r in run_on(spark, dedup_exact, df)
+    )
+    got_h = sorted(
+        (r.text_hash, r.keep_doc_id, r.n_copies)
+        for r in run_on(spark, dedup_exact_hash, df)
+    )
 
     groups: dict[str, list] = {}
     for i, t in enumerate(texts):
@@ -3769,27 +3142,19 @@ def test_exact_dedup_and_hash_twin_match_python(spark, texts):
     assert got_h == want_h
 
 
-@given(event_sequences())
-@settings(**_SETTINGS)
-def test_window_dedup_keep_first_matches_python(spark, rows):
+@given(cases(event_sequences()))
+@batched
+def test_window_dedup_keep_first_matches_python(spark, batch):
     """Keep-first dedup must survive exactly each (user, type)'s
     earliest event by (ts, event_id)."""
     from impala_refresher_spark.operators.dedup import window_dedup_keep_first
-    import impala_refresher_spark.operators.dedup as dd
 
-    df = spark.createDataFrame(
-        [(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+    rows = offset(batch, (0, 2))
+    df = spark.createDataFrame([(e, ts, u, t, v, "{}") for e, ts, u, t, v in rows], EVENTS)
+    got = sorted(
+        (r.user_id, r.event_type, r.event_id)
+        for r in run_on(spark, window_dedup_keep_first, df)
     )
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.user_id, r.event_type, r.event_id)
-            for r in window_dedup_keep_first(spark, "x").collect()
-        )
-    finally:
-        dd.load_table = orig
 
     first: dict[tuple, tuple] = {}
     for e, ts, u, t, _ in rows:
@@ -3799,75 +3164,45 @@ def test_window_dedup_keep_first_matches_python(spark, rows):
     assert got == sorted((u, t, e) for (u, t), (_, e) in first.items())
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("abcd"), min_size=1, max_size=6).map(" ".join),
-        min_size=1,
-        max_size=8,
-    )
-)
-@settings(**_SETTINGS)
-def test_decontaminate_matches_python(spark, texts):
+@given(cases(st.lists(st.lists(st.sampled_from("abcd"), min_size=1, max_size=6).map(" ".join), min_size=1, max_size=8)))
+@batched
+def test_decontaminate_matches_python(spark, batch):
     """Decontamination must flag exactly the training docs sharing ANY
     3-shingle with the eval split (doc_id % 50 == 0), and keep
     shingle-less short docs unflagged."""
     from impala_refresher_spark.operators.dedup import decontaminate_train_set
-    import impala_refresher_spark.operators.dedup as dd
 
-    # doc_ids 49..: every 50th is eval
-    docs = [(49 + i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: r.contaminated
-            for r in decontaminate_train_set(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
-
-    def sh(t):
-        toks = t.split(" ")
-        return {" ".join(toks[j : j + 3]) for j in range(len(toks) - 2)}
+    # doc_ids 49.. per case, so each case's second doc is its eval doc
+    # (every 50th); the case id is in every token
+    docs = [(49 + j + 100 * i, _tag(t, i)) for i, texts in enumerate(batch) for j, t in enumerate(texts)]
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        r.doc_id: r.contaminated
+        for r in run_on(spark, decontaminate_train_set, df)
+    }
 
     eval_sh = set()
     for i, t in docs:
         if i % 50 == 0:
-            eval_sh |= sh(t)
-    want = {i: bool(sh(t) & eval_sh) for i, t in docs if i % 50 != 0}
+            eval_sh |= _shingles3(t.split(" "))
+    want = {i: bool(_shingles3(t.split(" ")) & eval_sh) for i, t in docs if i % 50 != 0}
     assert got == want
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("ab"), min_size=1, max_size=12).map(" ".join),
-        min_size=1,
-        max_size=6,
-    )
-)
-@settings(**_SETTINGS)
-def test_dup_spans_match_python(spark, texts):
+@given(cases(st.lists(st.lists(st.sampled_from("ab"), min_size=1, max_size=12).map(" ".join), min_size=1, max_size=6)))
+@batched
+def test_dup_spans_match_python(spark, batch):
     """The 8-word duplicated-span inventory must equal python window
     extraction: spans in >= 2 distinct docs with occurrence totals and
     doc ranges; sub-8-token docs contribute nothing."""
-    from collections import Counter
-
     from impala_refresher_spark.operators.dedup import _SPAN_N, dup_span_ngrams
-    import impala_refresher_spark.operators.dedup as dd
 
-    df = spark.createDataFrame(
-        [(i + 1, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    texts = _tag_texts(batch)
+    df = spark.createDataFrame([(i + 1, t) for i, t in enumerate(texts)], DOCS)
+    got = sorted(
+        (r.gram, r.n_docs, r.n_occurrences, r.first_doc, r.last_doc)
+        for r in run_on(spark, dup_span_ngrams, df)
     )
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.gram, r.n_docs, r.n_occurrences, r.first_doc, r.last_doc)
-            for r in dup_span_ngrams(spark, "x").collect()
-        )
-    finally:
-        dd.load_table = orig
 
     per: dict[str, Counter] = {}
     for i, t in enumerate(texts):
@@ -3883,30 +3218,28 @@ def test_dup_spans_match_python(spark, texts):
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(1, 30), st.integers(0, 160)),  # (doc_id, n_chars)
-        min_size=1,
-        max_size=10,
-        unique_by=lambda t: t[0],
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 30),
+                st.integers(0, 160),
+            ),
+            min_size=1, max_size=10, unique_by=lambda t: t[0],  # (doc_id, n_chars)
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_frame_sample_matches_python_range(spark, docs):
+@batched
+def test_frame_sample_matches_python_range(spark, batch):
     """Every-50th frame sampling must equal python range(0, n, 50) —
     including zero-frame media (NO rows, not a sequence-bounds error;
     Spark's inclusive sequence needed the lazy guard)."""
     from impala_refresher_spark.operators.multimodal import frame_sample
-    import impala_refresher_spark.operators.multimodal as mm
 
+    docs = offset(batch, (0,), k=300)  # a multiple of 3 keeps each doc's d % 3
     df = spark.createDataFrame(docs, "doc_id long, n_chars long")
-    orig = mm.load_table
-    mm.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.media_id, r.frame_idx) for r in frame_sample(spark, "x").collect()
-        )
-    finally:
-        mm.load_table = orig
+    got = sorted(
+        (r.media_id, r.frame_idx) for r in run_on(spark, frame_sample, df)
+    )
 
     want = sorted(
         (d, f) for d, n in docs if d % 3 == 2 for f in range(0, n, 50)
@@ -3915,30 +3248,27 @@ def test_frame_sample_matches_python_range(spark, docs):
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(1, 600), st.sampled_from(["en", "de"]), st.sampled_from(["w", "b"])),
-        min_size=1,
-        max_size=16,
-        unique_by=lambda t: t[0],
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 600),
+                st.sampled_from(["en", "de"]),
+                st.sampled_from(["w", "b"]),
+            ),
+            min_size=1, max_size=16, unique_by=lambda t: t[0],
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_stratified_sample_matches_python(spark, docs):
+@batched
+def test_stratified_sample_matches_python(spark, batch):
     """The per-stratum hash-threshold sample must equal python hashlib
     bucketing: en kept at <= '28', the rest at <= 'cc' (append-stable
     by construction)."""
-    import hashlib
-
     from impala_refresher_spark.operators.pipeline import sample_stratified_by_source
-    import impala_refresher_spark.operators.pipeline as pl
 
+    docs = offset(batch, (0,))
     df = spark.createDataFrame(docs, "doc_id long, lang string, source string")
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.doc_id for r in sample_stratified_by_source(spark, "x").collect()}
-    finally:
-        pl.load_table = orig
+    got = {r.doc_id for r in run_on(spark, sample_stratified_by_source, df)}
 
     want = {
         d
@@ -3952,37 +3282,27 @@ def test_stratified_sample_matches_python(spark, docs):
 @given(
     st.lists(
         st.tuples(st.integers(1, 400), st.sampled_from(["w", "b", "c"])),
-        min_size=1,
-        max_size=20,
-        unique_by=lambda t: t[0],
+        min_size=1, max_size=20, unique_by=lambda t: t[0],
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: shard positions and quotas span all docs
 def test_shuffle_interleave_and_quota_match_python(spark, docs):
     """The md5 shard/position shuffle and the per-source quota must
     both equal python: shard = first hex digit, positions dense 1..k
     in (md5, doc_id) order, at most 15 winners per source."""
-    import hashlib
-
     from impala_refresher_spark.operators.pipeline import (
         corpus_shuffle_interleave,
         corpus_source_quota,
     )
-    import impala_refresher_spark.operators.pipeline as pl
 
     df = spark.createDataFrame(docs, "doc_id long, source string")
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: df
-    try:
-        got_shuffle = {
-            r.doc_id: (r.shard, r.shard_pos)
-            for r in corpus_shuffle_interleave(spark, "x").collect()
-        }
-        got_quota = sorted(
-            (r.doc_id, r.source) for r in corpus_source_quota(spark, "x").collect()
-        )
-    finally:
-        pl.load_table = orig
+    got_shuffle = {
+        r.doc_id: (r.shard, r.shard_pos)
+        for r in run_on(spark, corpus_shuffle_interleave, df)
+    }
+    got_quota = sorted(
+        (r.doc_id, r.source) for r in run_on(spark, corpus_source_quota, df)
+    )
 
     keyed = sorted(
         (hashlib.md5(str(d).encode()).hexdigest(), d, s) for d, s in docs
@@ -4003,34 +3323,24 @@ def test_shuffle_interleave_and_quota_match_python(spark, docs):
     assert got_quota == sorted(want_quota)
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["F", "O"]), st.integers(1, 6)),  # (status, quarters)
-        min_size=1,
-        max_size=14,
-    )
-)
-@settings(**_SETTINGS)
-def test_window_ranking_battery_matches_python(spark, rows):
+@given(cases(st.lists(st.tuples(st.sampled_from(["F", "O"]), st.integers(1, 6)), min_size=1, max_size=14)))
+@batched  # cases of (status, quarters) rows
+def test_window_ranking_battery_matches_python(spark, batch):
     """row_number / rank / dense_rank / ntile must equal python over
     the (price DESC, key ASC) total order — DUPLICATE prices included
     (rank ties resolve by the key tiebreak; dense_rank compresses)."""
     from impala_refresher_spark.operators.windows import window_ranking
-    import impala_refresher_spark.operators.windows as wn
 
+    # the case id is folded into the status, the window's partition key
+    rows = [(f"{i}{s}", q) for i, c in enumerate(batch) for s, q in c]
     df = spark.createDataFrame(
         [(i + 1, s, q / 4.0) for i, (s, q) in enumerate(rows)],
         "o_orderkey long, o_orderstatus string, o_totalprice double",
     )
-    orig = wn.load_table
-    wn.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.o_orderkey: (r.rn, r.rnk, r.drnk, r.quartile)
-            for r in window_ranking(spark, "x").collect()
-        }
-    finally:
-        wn.load_table = orig
+    got = {
+        r.o_orderkey: (r.rn, r.rnk, r.drnk, r.quartile)
+        for r in run_on(spark, window_ranking, df)
+    }
 
     want = {}
     for status in {s for s, _ in rows}:
@@ -4047,34 +3357,24 @@ def test_window_ranking_battery_matches_python(spark, rows):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["A", "B"]), st.integers(0, 2000)),  # (seg, balance)
-        min_size=1,
-        max_size=14,
-    )
-)
-@settings(**_SETTINGS)
-def test_range_frame_peer_count_matches_python(spark, rows):
+@given(cases(st.lists(st.tuples(st.sampled_from(["A", "B"]), st.integers(0, 2000)), min_size=1, max_size=14)))
+@batched  # cases of (segment, balance) rows
+def test_range_frame_peer_count_matches_python(spark, batch):
     """The RANGE 500-preceding count must equal python interval
     counting — PEERS (equal balances) are all included regardless of
     row order, the property ROWS frames do not have."""
     from impala_refresher_spark.operators.windows import window_range_frame
-    import impala_refresher_spark.operators.windows as wn
 
+    # the case id is folded into the segment, the window's partition key
+    rows = [(f"{i}{s}", b) for i, c in enumerate(batch) for s, b in c]
     df = spark.createDataFrame(
         [(i + 1, seg, float(b)) for i, (seg, b) in enumerate(rows)],
         "c_custkey long, c_mktsegment string, c_acctbal double",
     )
-    orig = wn.load_table
-    wn.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.c_custkey: r.peers_within_500
-            for r in window_range_frame(spark, "x").collect()
-        }
-    finally:
-        wn.load_table = orig
+    got = {
+        r.c_custkey: r.peers_within_500
+        for r in run_on(spark, window_range_frame, df)
+    }
 
     for i, (seg, b) in enumerate(rows):
         want = sum(
@@ -4083,34 +3383,23 @@ def test_range_frame_peer_count_matches_python(spark, rows):
         assert got[i + 1] == want, i + 1
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(1, 3), st.integers(0, 50)),  # (nationkey, balance)
-        min_size=1,
-        max_size=14,
-    )
-)
-@settings(**_SETTINGS)
-def test_distribution_functions_match_python(spark, rows):
+@given(cases(st.lists(st.tuples(st.integers(1, 3), st.integers(0, 50)), min_size=1, max_size=14)))
+@batched  # cases of (nationkey, balance) rows
+def test_distribution_functions_match_python(spark, batch):
     """percent_rank (rank-1)/(n-1) and cume_dist (rows<=me)/n must
     equal the closed forms — single-row partitions pin percent_rank
     to 0.0 (no division), and cume_dist counts FULL-KEY peers."""
     from impala_refresher_spark.operators.windows import window_distribution
-    import impala_refresher_spark.operators.windows as wn
 
+    rows = offset(batch, (0,))
     df = spark.createDataFrame(
         [(i + 1, nk, float(b)) for i, (nk, b) in enumerate(rows)],
         "s_suppkey long, s_nationkey long, s_acctbal double",
     )
-    orig = wn.load_table
-    wn.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.s_suppkey: (r.pct_rank, r.cum_dist)
-            for r in window_distribution(spark, "x").collect()
-        }
-    finally:
-        wn.load_table = orig
+    got = {
+        r.s_suppkey: (r.pct_rank, r.cum_dist)
+        for r in run_on(spark, window_distribution, df)
+    }
 
     for nk in {nk for nk, _ in rows}:
         mem = sorted((b, i + 1) for i, (n2, b) in enumerate(rows) if n2 == nk)
@@ -4123,35 +3412,30 @@ def test_distribution_functions_match_python(spark, rows):
 
 
 @given(
-    st.lists(
-        st.tuples(st.sampled_from(["A", "R"]), st.integers(1, 20), st.integers(1, 40)),
-        min_size=1,
-        max_size=14,
+    cases(
+        st.lists(
+            st.tuples(st.sampled_from(["A", "R"]), st.integers(1, 20), st.integers(1, 40)),
+            min_size=1, max_size=14,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_moment_aggregates_match_python(spark, rows):
+@batched
+def test_moment_aggregates_match_python(spark, batch):
     """stddev/var/corr/covar per group must equal the statistics-
     module / textbook computations — single-row groups yield NULL
     moments, zero-variance groups NULL correlation."""
-    from statistics import covariance, stdev, variance
-
     from impala_refresher_spark.operators.analytics import agg_stats_moments
-    import impala_refresher_spark.operators.analytics as an
 
+    # the case id is folded into the return flag, the group key
+    rows = [(f"{i}{f}", q, p) for i, c in enumerate(batch) for f, q, p in c]
     df = spark.createDataFrame(
         [(f, float(q), float(p)) for f, q, p in rows],
         "l_returnflag string, l_quantity double, l_extendedprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.l_returnflag: (r.n, r.sd_qty, r.var_qty, r.corr_qty_price, r.covar_qty_price)
-            for r in agg_stats_moments(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.l_returnflag: (r.n, r.sd_qty, r.var_qty, r.corr_qty_price, r.covar_qty_price)
+        for r in run_on(spark, agg_stats_moments, df)
+    }
 
     for flag in {f for f, _, _ in rows}:
         qs = [float(q) for f, q, _ in rows if f == flag]
@@ -4171,28 +3455,24 @@ def test_moment_aggregates_match_python(spark, rows):
             assert abs(gcorr - covariance(qs, ps) / (sq * sp)) <= 1.1e-4
 
 
-@given(st.lists(st.integers(0, 400_000), min_size=1, max_size=16))
-@settings(**_SETTINGS)
-def test_histogram_buckets_match_python(spark, cents):
+@given(cases(st.lists(st.integers(0, 400_000), min_size=1, max_size=16)))
+@batched
+def test_histogram_buckets_match_python(spark, batch):
     """Fixed-width floor-division binning must equal python //-binning
     with per-bucket min/max — boundary values land in the HIGHER
     bucket (floor semantics), empty buckets absent."""
     from impala_refresher_spark.operators.analytics import histogram_totalprice
-    import impala_refresher_spark.operators.analytics as an
 
+    # each case shifted by 100 bucket widths (25,000.00 each): its own buckets
+    cents = [c + i * 250_000_000 for i, cs in enumerate(batch) for c in cs]
     df = spark.createDataFrame(
         [(i + 1, c / 100.0) for i, c in enumerate(cents)],
         "o_orderkey long, o_totalprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.bucket: (r.n, r.lo, r.hi)
-            for r in histogram_totalprice(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.bucket: (r.n, r.lo, r.hi)
+        for r in run_on(spark, histogram_totalprice, df)
+    }
 
     want: dict[int, list] = {}
     for c in cents:
@@ -4203,35 +3483,34 @@ def test_histogram_buckets_match_python(spark, cents):
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(1, 120), st.integers(1, 9), st.integers(1, 400)),
-        min_size=1,
-        max_size=16,
-        unique_by=lambda t: t[0],
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 120),
+                st.integers(1, 9),
+                st.integers(1, 400),
+            ),
+            min_size=1, max_size=16, unique_by=lambda t: t[0],
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_merge_upsert_matches_python(spark, rows):
+@batched
+def test_merge_upsert_matches_python(spark, batch):
     """MERGE-as-full-outer-join must equal the python dict merge of
     the same deterministic update batch: %7 repriced (update), %13
     offset-inserted (insert), the rest kept — per-key action tags and
     identical IEEE products."""
     from impala_refresher_spark.operators.lakehouse import merge_upsert_orders
-    import impala_refresher_spark.operators.lakehouse as lh
 
+    rows = offset(batch, (0,), k=7 * 13 * 2)  # a multiple of 7 * 13 keeps each key's action
     df = spark.createDataFrame(
         [(k, c, "F", q / 4.0) for k, c, q in rows],
         "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double",
     )
-    orig = lh.load_table
-    lh.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.o_orderkey: (r.o_custkey, r.o_orderstatus, r.o_totalprice, r.merge_action)
-            for r in merge_upsert_orders(spark, "x").collect()
-        }
-    finally:
-        lh.load_table = orig
+    got = {
+        r.o_orderkey: (r.o_custkey, r.o_orderstatus, r.o_totalprice, r.merge_action)
+        for r in run_on(spark, merge_upsert_orders, df)
+    }
 
     want = {}
     for k, c, q in rows:
@@ -4245,84 +3524,65 @@ def test_merge_upsert_matches_python(spark, rows):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 5), st.integers(1, 40)),  # (minute, value quarters)
-        min_size=1,
-        max_size=10,
-    )
-)
-@settings(**_SETTINGS)
-def test_scd2_intervals_match_python(spark, pts):
+@given(cases(st.lists(st.tuples(st.integers(0, 5), st.integers(1, 40)), min_size=1, max_size=10)))
+@batched  # cases of (minute, value quarters) points
+def test_scd2_intervals_match_python(spark, batch):
     """SCD2 interval construction must equal the python sweep: each
     change valid until the NEXT change by (ts, event_id), the last
     row open-ended and flagged current — duplicate timestamps fold in
     event_id order."""
     from impala_refresher_spark.operators.lakehouse import scd2_user_value_history
-    import impala_refresher_spark.operators.lakehouse as lh
 
+    # each case is its own user, a multiple of 50 (the operator's user sample)
+    pts = [(50 * (i + 1), m, q) for i, c in enumerate(batch) for m, q in c]
     rows = [
-        (i + 1, _BASE + timedelta(minutes=m), 50, "purchase", q / 4.0, "{}")
-        for i, (m, q) in enumerate(pts)
+        (i + 1, _BASE + timedelta(minutes=m), u, "purchase", q / 4.0, "{}")
+        for i, (u, m, q) in enumerate(pts)
     ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    orig = lh.load_table
-    lh.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.valid_from, r.valid_to, r.value, r.is_current)
-            for r in scd2_user_value_history(spark, "x").collect()
-        ]
-    finally:
-        lh.load_table = orig
+    df = spark.createDataFrame(rows, EVENTS)
+    got = by_case(run_on(spark, scd2_user_value_history, df), lambda r: r.user_id)
 
-    seq = sorted((ts, e, v) for e, ts, _, _, v, _ in rows)
-    want = [
-        (
-            ts,
-            seq[i + 1][0] if i + 1 < len(seq) else None,
-            round(v, 4),
-            i + 1 == len(seq),
-        )
-        for i, (ts, e, v) in enumerate(seq)
-    ]
-    # output order: user, valid_from, value — replicate for determinism
-    want.sort(key=lambda r: (r[0], r[2]))
-    assert got == want
+    for u in {u for _, _, u, *_ in rows}:
+        seq = sorted((ts, e, v) for e, ts, uu, _, v, _ in rows if uu == u)
+        want = [
+            (
+                ts,
+                seq[i + 1][0] if i + 1 < len(seq) else None,
+                round(v, 4),
+                i + 1 == len(seq),
+            )
+            for i, (ts, e, v) in enumerate(seq)
+        ]
+        # output order: user, valid_from, value — replicate for determinism
+        want.sort(key=lambda r: (r[0], r[2]))
+        assert [(r.valid_from, r.valid_to, r.value, r.is_current) for r in got[u]] == want
 
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 600), st.integers(0, 600)),  # (partkey, suppkey)
-        min_size=1,
-        max_size=16,
+        st.tuples(
+            st.integers(0, 600),
+            st.integers(0, 600),
+        ),
+        min_size=1, max_size=16,  # (partkey, suppkey)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: z-buckets pool all rows
 def test_zorder_morton_matches_python(spark, keys):
     """The Morton bit-interleave and per-bucket dual-key min/max stats
     must equal direct python bit arithmetic — and each 2^10 bucket
     must bound BOTH 8-bit keys within 32 values (the data-skipping
     property the layout exists for)."""
     from impala_refresher_spark.operators.lakehouse import zorder_cluster_stats
-    import impala_refresher_spark.operators.lakehouse as lh
 
     df = spark.createDataFrame(
         [(i + 1, pk, sk) for i, (pk, sk) in enumerate(keys)],
         "l_linenumber long, l_partkey long, l_suppkey long",
     )
-    orig = lh.load_table
-    lh.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.zbucket: (r.px_min, r.px_max, r.sx_min, r.sx_max, r.n_rows)
-            for r in zorder_cluster_stats(spark, "x").collect()
-        }
-    finally:
-        lh.load_table = orig
+    got = {
+        r.zbucket: (r.px_min, r.px_max, r.sx_min, r.sx_max, r.n_rows)
+        for r in run_on(spark, zorder_cluster_stats, df)
+    }
 
     def morton(x, y):
         code = 0
@@ -4350,12 +3610,6 @@ def test_zorder_morton_matches_python(spark, keys):
         assert phi - plo < 32 and shi - slo < 32  # dual-dimension bound
 
 
-def _r2(x: float) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
-
-
 @st.composite
 def star_case(draw):
     """A miniature star schema: 2 regions, 3 nations, customers/orders/
@@ -4376,16 +3630,20 @@ def star_case(draw):
     return region, nation, customer, orders, lineitem
 
 
-@given(star_case())
-@settings(**_SETTINGS)
-def test_star_join_revenue_matches_python(spark, case):
+@given(cases(star_case()))
+@batched
+def test_star_join_revenue_matches_python(spark, batch):
     """The flagship 5-table star join must equal the python nested-
     loop evaluation: date range [1996, 1999), revenue = sum of
     price*(1-discount) per (region, year), orphan-free inner joins."""
     from impala_refresher_spark.operators.relational import revenue_by_region_year
-    import impala_refresher_spark.operators.relational as rel
 
-    region, nation, customer, orders, lineitem = case
+    # every key takes a disjoint range per case; region names carry the case id
+    region = [(rk + i * 10, f"{name}{i}") for i, c in enumerate(batch) for rk, name in c[0]]
+    nation = offset([c[1] for c in batch], (0, 1), k=10)
+    customer = offset([c[2] for c in batch], (0, 1), k=10)
+    orders = offset([c[3] for c in batch], (0, 1), k=10)
+    lineitem = offset([c[4] for c in batch], (0,), k=10)
     tables = {
         "region": spark.createDataFrame(region, "r_regionkey long, r_name string"),
         "nation": spark.createDataFrame(
@@ -4399,15 +3657,10 @@ def test_star_join_revenue_matches_python(spark, case):
             lineitem, "l_orderkey long, l_extendedprice double, l_discount double"
         ),
     }
-    orig = rel.load_table
-    rel.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.region_name, r.order_year, r.revenue, r.n_items)
-            for r in revenue_by_region_year(spark, "x").collect()
-        ]
-    finally:
-        rel.load_table = orig
+    got = [
+        (r.region_name, r.order_year, r.revenue, r.n_items)
+        for r in run_on(spark, revenue_by_region_year, tables)
+    ]
 
     nk_of = {c: nk for c, nk in customer}
     rk_of = {n: rk for n, rk, _ in nation}
@@ -4421,35 +3674,36 @@ def test_star_join_revenue_matches_python(spark, case):
         key = (rname[rk_of[nk_of[c]]], d.year)
         acc.setdefault(key, []).append(price * (1 - disc))
     want = sorted(
-        (rn, y, _r2(sum(v)), len(v)) for (rn, y), v in acc.items()
+        (rn, y, half_up(sum(v), 2), len(v)) for (rn, y), v in acc.items()
     )
     assert got == want
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["A", "R"]),
-            st.sampled_from(["F", "O"]),
-            st.integers(1, 40),  # qty
-            st.integers(1, 400),  # price quarters
-            st.booleans(),  # shipdate in range?
-        ),
-        min_size=1,
-        max_size=14,
+    cases(
+        st.lists(
+            st.tuples(
+                st.sampled_from(["A", "R"]),
+                st.sampled_from(["F", "O"]),
+                st.integers(1, 40),  # qty
+                st.integers(1, 400),  # price quarters
+                st.booleans(),  # shipdate in range?
+            ),
+            min_size=1, max_size=14,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_pricing_summary_matches_python(spark, rows):
+@batched
+def test_pricing_summary_matches_python(spark, batch):
     """TPC-H Q1's aggregate battery must equal python sums/avgs/
     extrema per (returnflag, linestatus) with the shipdate cutoff
     applied first."""
-    from datetime import date
-
     from impala_refresher_spark.operators.relational import agg_pricing_summary
-    import impala_refresher_spark.operators.relational as rel
 
+    # the case id is folded into the return flag, a group key
+    rows = [(f"{i}{f}", *rest) for i, c in enumerate(batch) for f, *rest in c]
     df = spark.createDataFrame(
+
         [
             (
                 f,
@@ -4464,24 +3718,19 @@ def test_pricing_summary_matches_python(spark, rows):
         "l_returnflag string, l_linestatus string, l_quantity double, "
         "l_extendedprice double, l_discount double, l_shipdate date",
     )
-    orig = rel.load_table
-    rel.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.l_returnflag, r.l_linestatus): (
-                r.sum_qty,
-                r.sum_base_price,
-                r.sum_disc_price,
-                r.avg_qty,
-                r.avg_price,
-                r.min_price,
-                r.max_price,
-                r.count_order,
-            )
-            for r in agg_pricing_summary(spark, "x").collect()
-        }
-    finally:
-        rel.load_table = orig
+    got = {
+        (r.l_returnflag, r.l_linestatus): (
+            r.sum_qty,
+            r.sum_base_price,
+            r.sum_disc_price,
+            r.avg_qty,
+            r.avg_price,
+            r.min_price,
+            r.max_price,
+            r.count_order,
+        )
+        for r in run_on(spark, agg_pricing_summary, df)
+    }
 
     groups: dict[tuple, list] = {}
     for f, s, q, p, inr in rows:
@@ -4492,46 +3741,36 @@ def test_pricing_summary_matches_python(spark, rows):
         qs = [q for q, _ in mem]
         ps = [p for _, p in mem]
         want[k] = (
-            _r2(sum(qs)),
-            _r2(sum(ps)),
-            _r2(sum(p * 0.75 for p in ps)),
-            _r2(sum(qs) / len(qs)),
-            _r2(sum(ps) / len(ps)),
-            _r2(min(ps)),
-            _r2(max(ps)),
+            half_up(sum(qs), 2),
+            half_up(sum(ps), 2),
+            half_up(sum(p * 0.75 for p in ps), 2),
+            half_up(sum(qs) / len(qs), 2),
+            half_up(sum(ps) / len(ps), 2),
+            half_up(min(ps), 2),
+            half_up(max(ps), 2),
             len(mem),
         )
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["A", "B"]), st.integers(0, 8)),  # (segment, balance)
-        min_size=1,
-        max_size=14,
-    )
-)
-@settings(**_SETTINGS)
-def test_topk_per_group_matches_python(spark, rows):
+@given(cases(st.lists(st.tuples(st.sampled_from(["A", "B"]), st.integers(0, 8)), min_size=1, max_size=14)))
+@batched  # cases of (segment, balance) rows
+def test_topk_per_group_matches_python(spark, batch):
     """Top-3 per group must equal python sorting by (balance DESC,
     custkey ASC) — balance TIES resolve by key, never partition
     luck."""
     from impala_refresher_spark.operators.relational import topk_per_group
-    import impala_refresher_spark.operators.relational as rel
 
+    # the case id is folded into the segment, the window's partition key
+    rows = [(f"{i}{s}", b) for i, c in enumerate(batch) for s, b in c]
     df = spark.createDataFrame(
         [(i + 1, seg, float(b)) for i, (seg, b) in enumerate(rows)],
         "c_custkey long, c_mktsegment string, c_acctbal double",
     )
-    orig = rel.load_table
-    rel.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.c_mktsegment, r.rk, r.c_custkey)
-            for r in topk_per_group(spark, "x").collect()
-        )
-    finally:
-        rel.load_table = orig
+    got = sorted(
+        (r.c_mktsegment, r.rk, r.c_custkey)
+        for r in run_on(spark, topk_per_group, df)
+    )
 
     want = []
     for seg in {s for s, _ in rows}:
@@ -4563,34 +3802,21 @@ def embedding_corpus(draw):
 
 
 @given(embedding_corpus())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the centroids are sampled from all vectors
 def test_kmeans_two_iterations_match_python(spark, vecs):
     """Two Lloyd iterations (md5-sample init, argmin with first-match
     tiebreak, 6dp-rounded means, EMPTY clusters collapsing by cid
     order) must equal the python replication step for step."""
-    import hashlib
-
     from impala_refresher_spark.operators.similarity import (
         _KM_K,
         kmeans_refine_assignments,
     )
-    import impala_refresher_spark.operators.similarity as sim
-    from decimal import ROUND_HALF_UP, Decimal
-
     df = spark.createDataFrame(
         vecs, "vec_id long, embedding array<float>, label int"
     )
-    orig = sim.load_table
-    sim.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.vec_id: r.cluster for r in kmeans_refine_assignments(spark, "x").collect()
-        }
-    finally:
-        sim.load_table = orig
-
-    def r6(x):
-        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+    got = {
+        r.vec_id: r.cluster for r in run_on(spark, kmeans_refine_assignments, df)
+    }
 
     ordered = sorted((hashlib.md5(str(v).encode()).hexdigest(), v, e) for v, e, _ in vecs)
     cents = [e for _, _, e in ordered[:_KM_K]]
@@ -4609,32 +3835,27 @@ def test_kmeans_two_iterations_match_python(spark, vecs):
     for v, e, _ in vecs:
         by_cid.setdefault(a[v], []).append(e)
     cents2 = [
-        [r6(sum(xs) / len(xs)) for xs in zip(*mem)]
+        [half_up(sum(xs) / len(xs), 6) for xs in zip(*mem)]
         for _, mem in sorted(by_cid.items())
     ]
     assert got == assign(cents2)
 
 
-@given(embedding_corpus())
-@settings(**_SETTINGS)
-def test_label_centroids_match_python(spark, vecs):
+@given(cases(embedding_corpus()))
+@batched
+def test_label_centroids_match_python(spark, batch):
     """Per-label element-wise means (1-based dims) must equal the
     python column average."""
     from impala_refresher_spark.operators.similarity import label_centroids
-    import impala_refresher_spark.operators.similarity as sim
 
+    vecs = offset(batch, (0, 2), k=100)  # vector ids and labels per case
     df = spark.createDataFrame(
         vecs, "vec_id long, embedding array<float>, label int"
     )
-    orig = sim.load_table
-    sim.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.label, r.dim): (r.centroid_val, r.n_vectors)
-            for r in label_centroids(spark, "x").collect()
-        }
-    finally:
-        sim.load_table = orig
+    got = {
+        (r.label, r.dim): (r.centroid_val, r.n_vectors)
+        for r in run_on(spark, label_centroids, df)
+    }
 
     by_label: dict[int, list] = {}
     for _, e, lab in vecs:
@@ -4648,28 +3869,21 @@ def test_label_centroids_match_python(spark, vecs):
         assert got[k][1] == n and abs(got[k][0] - cv) <= 1.1e-6, k
 
 
-@given(embedding_corpus())
-@settings(**_SETTINGS)
-def test_int8_quantize_matches_python(spark, vecs):
+@given(cases(embedding_corpus()))
+@batched
+def test_int8_quantize_matches_python(spark, batch):
     """Symmetric int8 codes must equal python round-half-away
     (x/max|x|*127); zero vectors are filtered before the divide."""
-    import math
-
     from impala_refresher_spark.operators.similarity import int8_quantize_vectors
-    import impala_refresher_spark.operators.similarity as sim
 
+    vecs = offset(batch, (0,), k=100)
     df = spark.createDataFrame(
         vecs, "vec_id long, embedding array<float>, label int"
     )
-    orig = sim.load_table
-    sim.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.vec_id: (r.scale_factor, list(r.q))
-            for r in int8_quantize_vectors(spark, "x").collect()
-        }
-    finally:
-        sim.load_table = orig
+    got = {
+        r.vec_id: (r.scale_factor, list(r.q))
+        for r in run_on(spark, int8_quantize_vectors, df)
+    }
 
     def rha(x):  # round half away from zero (Spark/DuckDB integer round)
         return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
@@ -4700,7 +3914,7 @@ def q21_case(draw):
 
 
 @given(q21_case())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: a global top 20
 def test_q21_decorrelation_matches_literal_exists(spark, case):
     """The single-aggregate rewrite of Q21's EXISTS / NOT EXISTS pair
     must equal the LITERAL nested-loop evaluation of the spec — sole
@@ -4709,7 +3923,6 @@ def test_q21_decorrelation_matches_literal_exists(spark, case):
     from impala_refresher_spark.operators.tpch import (
         tpch_q21_suppliers_who_kept_waiting,
     )
-    import impala_refresher_spark.operators.tpch as tp
 
     orders, lineitem = case
     suppliers = [(k, f"S{k}", k % 2) for k in (1, 2, 3)]
@@ -4727,15 +3940,10 @@ def test_q21_decorrelation_matches_literal_exists(spark, case):
             lineitem, "l_orderkey long, l_suppkey long, l_shipdate timestamp"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.s_name, r.numwait)
-            for r in tpch_q21_suppliers_who_kept_waiting(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.s_name, r.numwait)
+        for r in run_on(spark, tpch_q21_suppliers_who_kept_waiting, tables)
+    ]
 
     o_of = {ok: (st_, od) for ok, st_, od in orders}
     name_of = {k: nm for k, nm, _ in suppliers}
@@ -4758,24 +3966,26 @@ def test_q21_decorrelation_matches_literal_exists(spark, case):
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["1-URGENT", "3-LOW"]),
-            st.integers(2, 28),  # orderdate day (in the Q4 window)
-            st.sampled_from([30, 59, 60, 61, 120]),  # ship delta days
-            st.booleans(),  # in the date window?
-        ),
-        min_size=1,
-        max_size=12,
+    cases(
+        st.lists(
+            st.tuples(
+                st.sampled_from(["1-URGENT", "3-LOW"]),
+                st.integers(2, 28),  # orderdate day (in the Q4 window)
+                st.sampled_from([30, 59, 60, 61, 120]),  # ship delta days
+                st.booleans(),  # in the date window?
+            ),
+            min_size=1, max_size=12,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_q4_semi_join_matches_literal_exists(spark, rows):
+@batched
+def test_q4_semi_join_matches_literal_exists(spark, batch):
     """Q4's left-semi EXISTS must equal literal per-order evaluation —
     strict >60-day boundary, multi-line orders counted ONCE."""
     from impala_refresher_spark.operators.tpch import tpch_q4_order_priority
-    import impala_refresher_spark.operators.tpch as tp
 
+    # the case id is folded into the priority, the group key
+    rows = [(f"{prio}#{i}", *rest) for i, c in enumerate(batch) for prio, *rest in c]
     orders, lineitem = [], []
     for i, (prio, day, delta, inwin) in enumerate(rows):
         ok = i + 1
@@ -4791,15 +4001,10 @@ def test_q4_semi_join_matches_literal_exists(spark, rows):
             lineitem, "l_orderkey long, l_shipdate timestamp"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.o_orderpriority: r.order_count
-            for r in tpch_q4_order_priority(spark, "x").collect()
-        }
-    finally:
-        tp._t = orig
+    got = {
+        r.o_orderpriority: r.order_count
+        for r in run_on(spark, tpch_q4_order_priority, tables)
+    }
 
     want: dict[str, int] = {}
     for ok, prio, od in orders:
@@ -4819,11 +4024,10 @@ def test_q4_semi_join_matches_literal_exists(spark, rows):
             st.integers(-40, 160),  # balance quarters
             st.sampled_from(["none", "1-URGENT", "3-LOW"]),  # their order, if any
         ),
-        min_size=1,
-        max_size=14,
+        min_size=1, max_size=14,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the balance threshold is a global mean
 def test_q22_anti_join_matches_literal_not_exists(spark, custs):
     """Q22's scalar threshold + anti join must equal the literal spec:
     positive-balance average (cents-rounded), strict > threshold,
@@ -4831,7 +4035,6 @@ def test_q22_anti_join_matches_literal_not_exists(spark, custs):
     from impala_refresher_spark.operators.tpch import (
         tpch_q22_global_sales_opportunity,
     )
-    import impala_refresher_spark.operators.tpch as tp
 
     customer = [(i + 1, nk, q / 4.0) for i, (nk, q, _) in enumerate(custs)]
     orders = [
@@ -4848,27 +4051,22 @@ def test_q22_anti_join_matches_literal_not_exists(spark, custs):
             "o_orderkey long, o_custkey long, o_orderpriority string",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.cntrycode: (r.numcust, r.totacctbal)
-            for r in tpch_q22_global_sales_opportunity(spark, "x").collect()
-        }
-    finally:
-        tp._t = orig
+    got = {
+        r.cntrycode: (r.numcust, r.totacctbal)
+        for r in run_on(spark, tpch_q22_global_sales_opportunity, tables)
+    }
 
     pos = [b for _, _, b in customer if b > 0.0]
     if not pos:
         assert got == {}
         return
-    threshold = _r2(sum(pos) / len(pos))
+    threshold = half_up(sum(pos) / len(pos), 2)
     urgent = {c for _, c, pr in (orders or []) if pr == "1-URGENT"}
     acc: dict[int, list] = {}
     for ck, nk, b in customer:
         if nk in (1, 5, 9, 13, 17, 21, 24) and b > threshold and ck not in urgent:
             acc.setdefault(nk, []).append(b)
-    want = {nk: (len(v), _r2(sum(v))) for nk, v in acc.items()}
+    want = {nk: (len(v), half_up(sum(v), 2)) for nk, v in acc.items()}
     assert got == want
 
 
@@ -4894,17 +4092,18 @@ def q2_case(draw):
     return parts, lineitem
 
 
-@given(q2_case())
-@settings(**_SETTINGS)
-def test_q2_aggregate_prune_matches_literal_min(spark, case):
+@given(cases(q2_case()))
+@batched
+def test_q2_aggregate_prune_matches_literal_min(spark, batch):
     """Q2's decorrelated min-cost join (with the broadcast-semi-join
     aggregate prune) must equal the literal per-part minimum over
     EUROPE suppliers — unit-cost TIES keep every best supplier, and
     zero-quantity lines contribute NULL costs skipped by MIN."""
     from impala_refresher_spark.operators.tpch import tpch_q2_min_cost_supplier
-    import impala_refresher_spark.operators.tpch as tp
 
-    parts, lineitem = case
+    # parts take disjoint key ranges per case; the suppliers are shared
+    parts = offset([p for p, _ in batch], (0,), k=10)
+    lineitem = offset([li for _, li in batch], (0,), k=10)
     suppliers = [(k, f"S{k}", float(k * 10), k % 2) for k in (1, 2, 3, 4)]
     tables = {
         "supplier": spark.createDataFrame(
@@ -4922,15 +4121,10 @@ def test_q2_aggregate_prune_matches_literal_min(spark, case):
             lineitem, "l_partkey long, l_suppkey long, l_quantity double, l_extendedprice double"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = sorted(
-            (r.p_partkey, r.s_name, r.unit_cost)
-            for r in tpch_q2_min_cost_supplier(spark, "x").collect()
-        )
-    finally:
-        tp._t = orig
+    got = sorted(
+        (r.p_partkey, r.s_name, r.unit_cost)
+        for r in run_on(spark, tpch_q2_min_cost_supplier, tables)
+    )
 
     eu_supp = {k for k, _, _, nk in suppliers if nk % 2 == 0}  # nation 0 -> EUROPE
     keep_parts = {pk for pk, sz, ty in parts if sz == 15 and ty == "STANDARD"}
@@ -4953,40 +4147,31 @@ def test_q2_aggregate_prune_matches_literal_min(spark, case):
 
 
 @given(
-    st.lists(
-        st.lists(st.sampled_from(["ab", "12", "x7", "!", "a!b"]), min_size=0, max_size=5).map(
-            " ".join
-        ),
-        min_size=1,
-        max_size=6,
+    cases(
+        st.lists(
+            st.lists(st.sampled_from(["ab", "12", "x7", "!", "a!b"]), min_size=0, max_size=5).map(" ".join),
+            min_size=1,
+            max_size=6,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_token_count_and_fingerprint_match_python(spark, texts):
+@batched
+def test_token_count_and_fingerprint_match_python(spark, batch):
     """The BPE-ish regex token count must equal python re.findall of
     the same pattern, and the rolling polynomial fingerprint must
     equal the sequential python fold (order-sensitive by design)."""
-    import re
-
     from impala_refresher_spark.operators.text import doc_fingerprint, token_count_regex
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got_counts = {
-            r.doc_id: (r.n_bpe_ish, r.n_ws)
-            for r in token_count_regex(spark, "x").collect()
-        }
-        got_fp = {r.doc_id: r.fingerprint for r in doc_fingerprint(spark, "x").collect()}
-    finally:
-        tx.load_table = orig
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got_counts = {
+        r.doc_id: (r.n_bpe_ish, r.n_ws)
+        for r in run_on(spark, token_count_regex, df)
+    }
+    got_fp = {r.doc_id: r.fingerprint for r in run_on(spark, doc_fingerprint, df)}
 
     pat = re.compile(r"[a-z]+|[0-9]+|[^a-z0-9 ]")
-    for i, t in enumerate(texts):
+    for i, t in docs:
         assert got_counts[i] == (len(pat.findall(t)), len(t.split(" "))), i
         acc = 0
         for tok in t.split(" "):
@@ -4996,36 +4181,29 @@ def test_token_count_and_fingerprint_match_python(spark, texts):
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["en", "de"]), st.one_of(st.none(), st.integers(1, 99))
-        ),
-        min_size=1,
-        max_size=12,
+    cases(
+        st.lists(
+            st.tuples(st.sampled_from(["en", "de"]), st.one_of(st.none(), st.integers(1, 99))),
+            min_size=1, max_size=12,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_median_udaf_matches_python(spark, docs):
+@batched
+def test_median_udaf_matches_python(spark, batch):
     """The applyInPandas per-group median must equal statistics.median
     (pandas interpolates even counts the same way), skip NULL values,
     and yield NULL — not NaN — for an all-NULL group."""
-    from statistics import median
-
     from impala_refresher_spark.operators.udfs import udaf_median_chars
-    import impala_refresher_spark.operators.udfs as ud
 
+    # the case id is folded into the language, the group key
+    docs = [(f"{lang}{i}", n) for i, c in enumerate(batch) for lang, n in c]
     df = spark.createDataFrame(
         [(i, lang, n) for i, (lang, n) in enumerate(docs)],
         "doc_id long, lang string, n_chars long",
     )
-    orig = ud.load_table
-    ud.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.lang: r.median_chars for r in udaf_median_chars(spark, "x").collect()
-        }
-    finally:
-        ud.load_table = orig
+    got = {
+        r.lang: r.median_chars for r in run_on(spark, udaf_median_chars, df)
+    }
 
     for lang in {l for l, _ in docs}:
         vals = [n for l, n in docs if l == lang and n is not None]
@@ -5042,27 +4220,19 @@ def test_median_udaf_matches_python(spark, docs):
         max_size=12,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: batch docs are checked against the whole corpus
 def test_incremental_batch_dedup_matches_python(spark, texts):
     """The daily-batch anti-join dedup must equal python set math:
     batch docs (id % 10 == 0) collapse per hash to min id, then drop
     anything whose text exists in the corpus split."""
-    import hashlib
-
     from impala_refresher_spark.operators.dedup import dedup_incremental_batch
-    import impala_refresher_spark.operators.dedup as dd
 
     docs = [(i * 5, t) for i, t in enumerate(texts)]  # ids 0,5,10,... mix splits
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: r.text_hash
-            for r in dedup_incremental_batch(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        r.doc_id: r.text_hash
+        for r in run_on(spark, dedup_incremental_batch, df)
+    }
 
     corpus_texts = {t for i, t in docs if i % 10 != 0}
     batch: dict[str, int] = {}
@@ -5074,44 +4244,37 @@ def test_incremental_batch_dedup_matches_python(spark, texts):
 
 
 @given(
-    st.lists(
+    cases(
         st.lists(
-            st.sampled_from(
-                ["hello", "customer", "a@b.com", "https://x.io/p", "12345", "123", "supplier"]
-            ),
+            st.lists(
+                st.sampled_from(
+                    ["hello", "customer", "a@b.com", "https://x.io/p", "12345", "123", "supplier"]
+                ),
+                min_size=1,
+                max_size=6,
+            ).map(" ".join),
             min_size=1,
             max_size=6,
-        ).map(" ".join),
-        min_size=1,
-        max_size=6,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_pii_redaction_matches_python_re(spark, texts):
+@batched
+def test_pii_redaction_matches_python_re(spark, batch):
     """The PII scrub must equal python re: same alternation, same
     replacement, same hit counts — short digit runs survive the \\b\\d{4,}
     rule, zero-hit docs are absent."""
-    import re
-
     from impala_refresher_spark.operators.text import _PII_PATTERN, text_redact_pii
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (r.clean_text, r.n_redactions)
-            for r in text_redact_pii(spark, "x").collect()
-        }
-    finally:
-        tx.load_table = orig
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        r.doc_id: (r.clean_text, r.n_redactions)
+        for r in run_on(spark, text_redact_pii, df)
+    }
 
     pat = re.compile(_PII_PATTERN)
     want = {}
-    for i, t in enumerate(texts):
+    for i, t in docs:
         n = len(pat.findall(t))
         if n > 0:
             want[i] = (pat.sub("[REDACTED]", t), n)
@@ -5119,41 +4282,35 @@ def test_pii_redaction_matches_python_re(spark, texts):
 
 
 @given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.lists(st.sampled_from("aZ9 "), min_size=0, max_size=10).map("".join),
-        ),
-        min_size=1,
-        max_size=8,
+    cases(
+        st.lists(
+            st.one_of(st.none(), st.lists(st.sampled_from("aZ9 "), min_size=0, max_size=10).map("".join)),
+            min_size=1,
+            max_size=8,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_multimodal_features_match_python(spark, texts):
+@batched
+def test_multimodal_features_match_python(spark, batch):
     """The mapInPandas fake-decode features must equal direct python
     evaluation over the encoded bytes — EMPTY media decoding to
     (0, 0) (the oracle needed an explicit guard: ascii('') = 0 made
     it say (64, 64)) and NULL media yielding NULL features (the bare
     maps crashed the whole Arrow batch) both included."""
     from impala_refresher_spark.operators.multimodal import multimodal_features
-    import impala_refresher_spark.operators.multimodal as mm
 
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,), k=300)  # keeps id % 3
     df = spark.createDataFrame(
-        [(i, t, "en", "src1", 0) for i, t in enumerate(texts)],
+        [(i, t, "en", "src1", 0) for i, t in docs],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    orig = mm.load_table
-    mm.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.media_id: (r.modality, r.n_bytes, r.width, r.height, r.byte_sum_16)
-            for r in multimodal_features(spark, "x").collect()
-        }
-    finally:
-        mm.load_table = orig
+    got = {
+        r.media_id: (r.modality, r.n_bytes, r.width, r.height, r.byte_sum_16)
+        for r in run_on(spark, multimodal_features, df)
+    }
 
     want = {}
-    for i, t in enumerate(texts):
+    for i, t in docs:
         modality = ["image", "audio", "video"][i % 3]
         if t is None:
             want[i] = (modality, None, None, None, None)
@@ -5165,55 +4322,44 @@ def test_multimodal_features_match_python(spark, texts):
 
 
 @given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.lists(st.sampled_from("ab "), min_size=0, max_size=8).map("".join),
-        ),
-        min_size=1,
-        max_size=10,
+    cases(
+        st.lists(
+            st.one_of(st.none(), st.lists(st.sampled_from("ab "), min_size=0, max_size=8).map("".join)),
+            min_size=1,
+            max_size=10,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_pandas_token_count_matches_python_with_nulls(spark, texts):
+@batched
+def test_pandas_token_count_matches_python_with_nulls(spark, batch):
     """The Arrow-batched token count must equal python split counting
     AND survive NULL texts as NULL counts — the plain-int32 cast
     crashed the whole batch on one NaN where the oracle quietly
     NULLed."""
     from impala_refresher_spark.operators.udfs import udf_pandas_token_count
-    import impala_refresher_spark.operators.udfs as ud
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = ud.load_table
-    ud.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: r.n_tokens
-            for r in udf_pandas_token_count(spark, "x").collect()
-        }
-    finally:
-        ud.load_table = orig
-
-    want = {
-        i: (None if t is None else len(t.split(" "))) for i, t in enumerate(texts)
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        r.doc_id: r.n_tokens
+        for r in run_on(spark, udf_pandas_token_count, df)
     }
+
+    want = {i: (None if t is None else len(t.split(" "))) for i, t in docs}
     assert got == want
 
 
 @given(
-    st.lists(
-        st.one_of(
-            st.none(),
-            st.lists(st.sampled_from("aZ9 "), min_size=0, max_size=80).map("".join),
-        ),
-        min_size=1,
-        max_size=8,
+    cases(
+        st.lists(
+            st.one_of(st.none(), st.lists(st.sampled_from("aZ9 "), min_size=0, max_size=80).map("".join)),
+            min_size=1,
+            max_size=8,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_multimodal_resize_matches_python(spark, texts):
+@batched
+def test_multimodal_resize_matches_python(spark, batch):
     """The resize stub's output accounting must equal direct python
     stride arithmetic — empty media (out_h 0, out_bytes 0) and NULL
     media (all-NULL outputs; DuckDB's NULL-ignoring LEAST needed an
@@ -5222,24 +4368,19 @@ def test_multimodal_resize_matches_python(spark, texts):
         _TARGET_W,
         multimodal_resize,
     )
-    import impala_refresher_spark.operators.multimodal as mm
 
+    docs = offset([list(enumerate(texts)) for texts in batch], (0,))
     df = spark.createDataFrame(
-        [(i, t, "en", "src1", 0) for i, t in enumerate(texts)],
+        [(i, t, "en", "src1", 0) for i, t in docs],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    orig = mm.load_table
-    mm.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.media_id: (r.out_w, r.out_h, r.out_bytes)
-            for r in multimodal_resize(spark, "x").collect()
-        }
-    finally:
-        mm.load_table = orig
+    got = {
+        r.media_id: (r.out_w, r.out_h, r.out_bytes)
+        for r in run_on(spark, multimodal_resize, df)
+    }
 
     want = {}
-    for i, t in enumerate(texts):
+    for i, t in docs:
         if t is None:
             want[i] = (_TARGET_W, None, None)
             continue
@@ -5251,42 +4392,30 @@ def test_multimodal_resize_matches_python(spark, texts):
 
 
 @given(
-    st.lists(st.tuples(st.integers(1, 4), st.integers(1, 40)), max_size=10),
-    st.lists(st.tuples(st.integers(1, 4), st.integers(0, 40)), max_size=10),
+    cases(
+        st.tuples(
+            st.lists(st.tuples(st.integers(1, 4), st.integers(1, 40)), max_size=10),
+            st.lists(st.tuples(st.integers(1, 4), st.integers(0, 40)), max_size=10),
+        )
+    )
 )
-@settings(**_SETTINGS)
-def test_cogroup_reconcile_matches_python(spark, orders, events):
+@batched
+def test_cogroup_reconcile_matches_python(spark, batch):
     """The two-sided cogroup merge must equal the python dict merge —
     keys present on only ONE side get a zero count and 0.0 total for
     the other."""
     from impala_refresher_spark.operators.udfs import cogroup_reconcile
-    import impala_refresher_spark.operators.udfs as ud
 
-    if not orders and not events:
-        return
+    orders = offset([o for o, _ in batch], (0,), k=10)
+    events = offset([e for _, e in batch], (0,), k=10)
     tables = {
-        "orders": spark.createDataFrame(
-            [(c, q / 4.0) for c, q in orders] or [(99, 0.0)],
-            "o_custkey long, o_totalprice double",
-        ),
-        "events": spark.createDataFrame(
-            [(c, q / 4.0) for c, q in events] or [(99, 0.0)],
-            "user_id long, value double",
-        ),
+        "orders": spark.createDataFrame([(c, q / 4.0) for c, q in orders], "o_custkey long, o_totalprice double"),
+        "events": spark.createDataFrame([(c, q / 4.0) for c, q in events], "user_id long, value double"),
     }
-    if not orders:
-        tables["orders"] = tables["orders"].filter("o_custkey < 0")
-    if not events:
-        tables["events"] = tables["events"].filter("user_id < 0")
-    orig = ud.load_table
-    ud.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.custkey: (r.n_orders, r.n_events, r.total_spend, r.total_event_value)
-            for r in cogroup_reconcile(spark, "x").collect()
-        }
-    finally:
-        ud.load_table = orig
+    got = {
+        r.custkey: (r.n_orders, r.n_events, r.total_spend, r.total_event_value)
+        for r in run_on(spark, cogroup_reconcile, tables)
+    }
 
     keys = {c for c, _ in orders} | {c for c, _ in events}
     want = {}
@@ -5298,34 +4427,31 @@ def test_cogroup_reconcile_matches_python(spark, orders, events):
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(1, 2), st.integers(1, 4), st.integers(1, 3), st.integers(1, 20)),
-        min_size=1,
-        max_size=12,
+    cases(
+        st.lists(
+            st.tuples(st.integers(1, 2), st.integers(1, 4), st.integers(1, 3), st.integers(1, 20)),
+            min_size=1, max_size=12,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_sliding_frames_match_python(spark, rows):
+@batched
+def test_sliding_frames_match_python(spark, batch):
     """The 3-row moving sum and running average must equal python
     slices over the (orderkey, linenumber, quantity) total order —
     DUPLICATE (orderkey, linenumber) pairs resolve by the quantity
     tiebreak."""
     from impala_refresher_spark.operators.windows import window_sliding
-    import impala_refresher_spark.operators.windows as wn
 
+    rows = offset(batch, (0,))  # suppliers, the window's partition key
     df = spark.createDataFrame(
+
         [(s, ok, ln, float(q)) for s, ok, ln, q in rows],
         "l_suppkey long, l_orderkey long, l_linenumber long, l_quantity double",
     )
-    orig = wn.load_table
-    wn.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.l_suppkey, r.l_orderkey, r.l_linenumber, r.l_quantity, r.qty_3row, r.qty_running_avg)
-            for r in window_sliding(spark, "x").collect()
-        )
-    finally:
-        wn.load_table = orig
+    got = sorted(
+        (r.l_suppkey, r.l_orderkey, r.l_linenumber, r.l_quantity, r.qty_3row, r.qty_running_avg)
+        for r in run_on(spark, window_sliding, df)
+    )
 
     want = []
     for sk in {s for s, _, _, _ in rows}:
@@ -5336,7 +4462,7 @@ def test_sliding_frames_match_python(spark, rows):
             frame = [x[2] for x in mem[max(0, i - 2) : i + 1]]
             prefix = [x[2] for x in mem[: i + 1]]
             want.append(
-                (sk, ok, ln, q, _r2(sum(frame)), _r4(sum(prefix) / len(prefix)))
+                (sk, ok, ln, q, half_up(sum(frame), 2), half_up(sum(prefix) / len(prefix), 4))
             )
     # duplicate full rows make per-row matching ambiguous only between
     # IDENTICAL tuples, so multiset compare is exact
@@ -5344,20 +4470,20 @@ def test_sliding_frames_match_python(spark, rows):
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(1, 2), st.integers(0, 6), st.integers(1, 20)),
-        min_size=1,
-        max_size=10,
+    cases(
+        st.lists(
+            st.tuples(st.integers(1, 2), st.integers(0, 6), st.integers(1, 20)),
+            min_size=1, max_size=10,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_analytic_lag_lead_match_python(spark, rows):
+@batched
+def test_analytic_lag_lead_match_python(spark, batch):
     """lag/lead/first/last over the (orderdate, orderkey) order must
     equal python neighbor indexing, with NULL edges."""
     from impala_refresher_spark.operators.windows import window_analytic
-    import impala_refresher_spark.operators.windows as wn
-    from datetime import date
 
+    rows = offset(batch, (0,))  # customers, the window's partition key
     df = spark.createDataFrame(
         [
             (i + 1, c, date(2024, 1, 1 + d), float(q))
@@ -5365,15 +4491,10 @@ def test_analytic_lag_lead_match_python(spark, rows):
         ],
         "o_orderkey long, o_custkey long, o_orderdate date, o_totalprice double",
     )
-    orig = wn.load_table
-    wn.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.o_orderkey: (r.prev_price, r.next_price, r.first_price, r.last_price)
-            for r in window_analytic(spark, "x").collect()
-        }
-    finally:
-        wn.load_table = orig
+    got = {
+        r.o_orderkey: (r.prev_price, r.next_price, r.first_price, r.last_price)
+        for r in run_on(spark, window_analytic, df)
+    }
 
     for c in {c for c, _, _ in rows}:
         mem = sorted(
@@ -5396,42 +4517,20 @@ def test_analytic_lag_lead_match_python(spark, rows):
 # ---------------------------------------------------------------------------
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 9), st.integers(0, 9)),
-        min_size=0,
-        max_size=14,
-    )
-)
-@settings(**_SETTINGS)
-def test_connected_components_match_union_find(spark, edges):
+@given(cases(st.lists(st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=14)))
+@batched
+def test_connected_components_match_union_find(spark, batch):
     """Min-label propagation must equal a python union-find's
     min-reachable-id labeling on arbitrary graphs — chains longer than
-    one round, self-loops, duplicate and reversed edges."""
+    one round, self-loops, duplicate and reversed edges; each case's
+    graph takes its own node ids, so its components are its own."""
     from impala_refresher_spark.operators.dedup import connected_components
 
-    df = spark.createDataFrame(edges, "a long, b long") if edges else (
-        spark.createDataFrame([], "a long, b long")
-    )
+    edges = offset(batch, (0, 1), k=100)
+    df = spark.createDataFrame(edges, "a long, b long")
     got = {r.node: r.label for r in connected_components(df, "a", "b").collect()}
 
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comps: dict[int, list] = {}
-    for n in parent:
-        comps.setdefault(find(n), []).append(n)
-    want = {n: min(members) for members in comps.values() for n in members}
+    want = {n: min(members) for members in _components(edges) for n in members}
     assert got == want
 
 
@@ -5457,9 +4556,9 @@ def _txt_docs(draw):
     return docs
 
 
-@given(_txt_docs())
-@settings(**_SETTINGS)
-def test_text_quality_family_matches_python(spark, docs):
+@given(cases(_txt_docs()))
+@batched
+def test_text_quality_family_matches_python(spark, batch):
     """quality_score / lang_id_heuristic / text_lexicon_score vs direct
     python over the same token streams — empty texts (split('') = ['']),
     marker-count ties (en > es > de priority), all-stopword docs."""
@@ -5471,22 +4570,15 @@ def test_text_quality_family_matches_python(spark, docs):
         quality_score,
         text_lexicon_score,
     )
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got_q = {r.doc_id: r.quality for r in quality_score(spark, "x").collect()}
-        got_l = {r.doc_id: r.lang_pred for r in lang_id_heuristic(spark, "x").collect()}
-        got_s = {
-            r.doc_id: (r.sentiment, r.n_scored)
-            for r in text_lexicon_score(spark, "x").collect()
-        }
-    finally:
-        tx.load_table = orig
+    docs = offset(batch, (0,))
+    df = spark.createDataFrame(docs, "doc_id long, text string, lang string, source string, n_chars long")
+    got_q = {r.doc_id: r.quality for r in run_on(spark, quality_score, df)}
+    got_l = {r.doc_id: r.lang_pred for r in run_on(spark, lang_id_heuristic, df)}
+    got_s = {
+        r.doc_id: (r.sentiment, r.n_scored)
+        for r in run_on(spark, text_lexicon_score, df)
+    }
 
     stop = set(STOPWORDS)
     lex = dict(_LEXICON)
@@ -5523,35 +4615,22 @@ def test_text_quality_family_matches_python(spark, docs):
 # ---------------------------------------------------------------------------
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(1, 4), st.integers(1, 10**6)),
-        min_size=1,
-        max_size=20,
-    )
-)
-@settings(**_SETTINGS)
-def test_linear_counting_matches_python(spark, rows):
+@given(cases(st.lists(st.tuples(st.integers(1, 4), st.integers(1, 10**6)), min_size=1, max_size=20)))
+@batched
+def test_linear_counting_matches_python(spark, batch):
     """The per-nation LC estimate must equal the python sketch: same
     integer hash family, same occupied-bucket count, same clamped
     -m·ln(1-V/m) rounded HALF_UP."""
-    import math
-
     from impala_refresher_spark.operators.rollup_hypertable import (
         linear_counting_distinct,
     )
-    import impala_refresher_spark.operators.rollup_hypertable as rh
 
+    rows = offset(batch, (0,), k=10)  # nations, the sketch's group key
     df = spark.createDataFrame(rows, "c_nationkey int, c_custkey long")
-    orig = rh.load_table
-    rh.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.nationkey: (r.occupied, r.exact_n, r.lc_estimate)
-            for r in linear_counting_distinct(spark, "x").collect()
-        }
-    finally:
-        rh.load_table = orig
+    got = {
+        r.nationkey: (r.occupied, r.exact_n, r.lc_estimate)
+        for r in run_on(spark, linear_counting_distinct, df)
+    }
 
     want = {}
     for nk in {n for n, _ in rows}:
@@ -5568,40 +4647,28 @@ def test_linear_counting_matches_python(spark, rows):
 # ---------------------------------------------------------------------------
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(100, 103), st.integers(-3, 6)),
-        min_size=1,
-        max_size=12,
-    )
-)
-@settings(**_SETTINGS)
-def test_hhi_matches_python(spark, lines):
+@given(cases(st.lists(st.tuples(st.integers(100, 103), st.integers(-3, 6)), min_size=1, max_size=12)))
+@batched
+def test_hhi_matches_python(spark, batch):
     """Per-nation HHI vs the textbook Σ(10000·share²): integer-cent
     revenue, negative lines, and all-zero nations (NULL, the guarded
-    degenerate) — supplier 100/101 sell for nation 0, 102/103 for 1."""
+    degenerate) — supplier 100/101 sell for nation 0, 102/103 for 1;
+    each case has its own suppliers and nations."""
     from impala_refresher_spark.operators.analytics import hhi_supplier_concentration
-    import impala_refresher_spark.operators.analytics as an
 
+    lines = offset(batch, (0,))
+    nation_of = {sk + i * 1000: (sk - 100) // 2 + i * 10 for i in range(len(batch)) for sk in range(100, 104)}
     li = spark.createDataFrame(
         [(i, sk, rev * 1.0) for i, (sk, rev) in enumerate(lines)],
         "l_orderkey long, l_suppkey long, l_extendedprice double",
     )
-    supp = spark.createDataFrame(
-        [(100, 0), (101, 0), (102, 1), (103, 1)], "s_suppkey long, s_nationkey int"
-    )
+    supp = spark.createDataFrame(list(nation_of.items()), "s_suppkey long, s_nationkey int")
     tables = {"lineitem": li, "supplier": supp}
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.nationkey: (r.n_suppliers, r.hhi)
-            for r in hhi_supplier_concentration(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.nationkey: (r.n_suppliers, r.hhi)
+        for r in run_on(spark, hhi_supplier_concentration, tables)
+    }
 
-    nation_of = {100: 0, 101: 0, 102: 1, 103: 1}
     per_supp: dict[tuple, int] = {}
     for sk, rev in lines:
         key = (nation_of[sk], sk)
@@ -5613,30 +4680,17 @@ def test_hhi_matches_python(spark, lines):
         if tot == 0:
             hhi = None
         else:
-            hhi = _r2(sum(10000.0 * v * v for v in revs) / (float(tot) * tot))
+            hhi = half_up(sum(10000.0 * v * v for v in revs) / (float(tot) * tot), 2)
         want[nk] = (len(revs), hhi)
     assert got == want
 
 
-def _r2(x: float) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
-
-
-@given(
-    st.lists(
-        st.tuples(st.integers(100, 102), st.integers(0, 400)),
-        min_size=1,
-        max_size=10,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.integers(100, 102), st.integers(0, 400)), min_size=1, max_size=10))
+@settings(**SETTINGS)  # one case per example: shares of one global total
 def test_revenue_share_matches_python(spark, orders):
     """Percent-of-total by nation vs python: cents-grid prices so the
     2dp revenue round is exact; the all-zero corpus yields NULL shares."""
     from impala_refresher_spark.operators.analytics import revenue_share_by_nation
-    import impala_refresher_spark.operators.analytics as an
 
     o = spark.createDataFrame(
         [(i, ck, cents / 100.0) for i, (ck, cents) in enumerate(orders)],
@@ -5649,15 +4703,10 @@ def test_revenue_share_matches_python(spark, orders):
         [(0, "ALPHA"), (1, "BETA")], "n_nationkey int, n_name string"
     )
     tables = {"orders": o, "customer": c, "nation": n}
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.n_name: (r.revenue, r.share)
-            for r in revenue_share_by_nation(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.n_name: (r.revenue, r.share)
+        for r in run_on(spark, revenue_share_by_nation, tables)
+    }
 
     nation_of = {100: "ALPHA", 101: "ALPHA", 102: "BETA"}
     rev: dict[str, float] = {}
@@ -5671,44 +4720,36 @@ def test_revenue_share_matches_python(spark, orders):
         if total == 0.0:
             assert gs is None, name
         else:
-            assert abs(gs - _r4(v / total)) <= 1.1e-4, name
+            assert abs(gs - half_up(v / total, 4)) <= 1.1e-4, name
     assert set(got) == set(rev)
 
 
 @given(
     st.lists(
         st.tuples(st.integers(1, 15), st.integers(0, 50)),
-        min_size=1,
-        max_size=12,
-        unique_by=lambda t: t[0],
+        min_size=1, max_size=12, unique_by=lambda t: t[0],
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global Lorenz curve
 def test_gini_matches_python(spark, custs):
     """Lorenz deciles + Gini vs the textbook 2Σi·xᵢ/(nΣx) − (n+1)/n with
     python NTILE replication; an all-zero corpus NULLs both statistics."""
     from impala_refresher_spark.operators.analytics import revenue_concentration_gini
-    import impala_refresher_spark.operators.analytics as an
 
     o = spark.createDataFrame(
         [(i, ck, cents / 100.0, "O") for i, (ck, cents) in enumerate(custs)],
         "o_orderkey long, o_custkey long, o_totalprice double, o_orderstatus string",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: o
-    try:
-        got = {
-            r.decile: (r.n_customers, r.lorenz_cum_share, r.gini)
-            for r in revenue_concentration_gini(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.decile: (r.n_customers, r.lorenz_cum_share, r.gini)
+        for r in run_on(spark, revenue_concentration_gini, o)
+    }
 
     per = sorted(((cents, ck) for ck, cents in custs))
     n = len(per)
     total = sum(v for v, _ in per)
     wsum = sum(2 * (i + 1) * v for i, (v, _) in enumerate(per))
-    gini = None if total == 0 else _r4(wsum / (n * float(total)) - (n + 1) / n)
+    gini = None if total == 0 else half_up(wsum / (n * float(total)) - (n + 1) / n, 4)
     # NTILE(10): first n%10 buckets get ceil(n/10) rows
     base, extra = divmod(n, 10)
     want = {}
@@ -5721,7 +4762,7 @@ def test_gini_matches_python(spark, custs):
         rows = per[pos : pos + size]
         pos += size
         cum += sum(v for v, _ in rows)
-        lorenz = None if total == 0 else _r4(cum / float(total))
+        lorenz = None if total == 0 else half_up(cum / float(total), 4)
         want[d] = (size, lorenz, gini)
     assert got == want
 
@@ -5744,51 +4785,24 @@ def _mh_docs(draw):
     return texts
 
 
-@given(_mh_docs())
-@settings(**_SETTINGS)
-def test_minhash_lsh_matches_python(spark, texts):
+@given(cases(_mh_docs()))
+@batched
+def test_minhash_lsh_matches_python(spark, batch):
     """The ENTIRE LSH pipeline is deterministic integer arithmetic
     (md5-prefix shingle hash, 32 affine permutations mod Mersenne31,
     exact 4-tuple banding, exact-Jaccard verify) — so it must equal a
     from-scratch python implementation pair for pair."""
-    import hashlib
+    from impala_refresher_spark.operators.dedup import _BANDS, _ROWS_PER_BAND, dedup_minhash_lsh
 
-    from impala_refresher_spark.operators.dedup import (
-        _AS,
-        _BANDS,
-        _BS,
-        _MERSENNE,
-        _ROWS_PER_BAND,
-        dedup_minhash_lsh,
-    )
-    import impala_refresher_spark.operators.dedup as dd
+    texts = _tag_texts(batch)
+    df = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in run_on(spark, dedup_minhash_lsh, df)
+    }
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in dedup_minhash_lsh(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
-
-    def shingles(t):
-        toks = t.split(" ")
-        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-
-    sh = {i: shingles(t) for i, t in enumerate(texts)}
-    sig = {}
-    for i, s in sh.items():
-        if not s:
-            continue
-        hs = [
-            int(hashlib.md5(x.encode()).hexdigest()[:15], 16) % _MERSENNE for x in s
-        ]
-        sig[i] = [min((a * h + b) % _MERSENNE for h in hs) for a, b in zip(_AS, _BS)]
+    sh = {i: _shingles3(t.split(" ")) for i, t in enumerate(texts)}
+    sig = {i: _minhash(s) for i, s in sh.items() if s}
     buckets: dict[tuple, list] = {}
     for i, s in sig.items():
         for band in range(_BANDS):
@@ -5805,15 +4819,15 @@ def test_minhash_lsh_matches_python(spark, texts):
     for a, b in cands:
         inter = len(sh[a] & sh[b])
         union = len(sh[a] | sh[b])
-        j = _r4(inter / union)
+        j = half_up(inter / union, 4)
         if j >= 0.4:
             want[(a, b)] = j
     assert got == want
 
 
-@given(_mh_docs())
-@settings(**_SETTINGS)
-def test_minhash_incremental_matches_python(spark, texts):
+@given(cases(_mh_docs()))
+@batched
+def test_minhash_incremental_matches_python(spark, batch):
     """The incremental batch-vs-corpus LSH lookup must equal the
     from-spec python model: batch docs (id % 10 == 0) band-collide
     against corpus docs only, verify by exact Jaccard >= 0.4, and each
@@ -5821,44 +4835,17 @@ def test_minhash_incremental_matches_python(spark, texts):
     to the smaller corpus id) — never a batch-batch or corpus-corpus
     pair. Ids stride by 5 so half the docs land in the batch
     partition (i*5 % 10 == 0 for even i)."""
-    import hashlib
+    from impala_refresher_spark.operators.dedup import _BANDS, _ROWS_PER_BAND, dedup_minhash_incremental
 
-    from impala_refresher_spark.operators.dedup import (
-        _AS,
-        _BANDS,
-        _BS,
-        _MERSENNE,
-        _ROWS_PER_BAND,
-        dedup_minhash_incremental,
-    )
-    import impala_refresher_spark.operators.dedup as dd
+    texts = _tag_texts(batch)
+    df = spark.createDataFrame([(i * 5, t) for i, t in enumerate(texts)], DOCS)
+    got = {
+        r.doc_id: (r.dup_of, r.jaccard)
+        for r in run_on(spark, dedup_minhash_incremental, df)
+    }
 
-    df = spark.createDataFrame(
-        [(i * 5, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (r.dup_of, r.jaccard)
-            for r in dedup_minhash_incremental(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
-
-    def shingles(t):
-        toks = t.split(" ")
-        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-
-    sh = {i * 5: shingles(t) for i, t in enumerate(texts)}
-    sig = {}
-    for i, s in sh.items():
-        if not s:
-            continue
-        hs = [
-            int(hashlib.md5(x.encode()).hexdigest()[:15], 16) % _MERSENNE for x in s
-        ]
-        sig[i] = [min((a * h + b) % _MERSENNE for h in hs) for a, b in zip(_AS, _BS)]
+    sh = {i * 5: _shingles3(t.split(" ")) for i, t in enumerate(texts)}
+    sig = {i: _minhash(s) for i, s in sh.items() if s}
     corpus_buckets: dict[tuple, list] = {}
     for i, s in sig.items():
         if i % 10 == 0:
@@ -5884,7 +4871,7 @@ def test_minhash_incremental_matches_python(spark, texts):
             cur = (-(inter / union), c)
             if prev is None or cur < prev:
                 want[b] = cur
-    want = {b: (c, _r4(-negj)) for b, (negj, c) in want.items()}
+    want = {b: (c, half_up(-negj, 4)) for b, (negj, c) in want.items()}
     assert got == want
 
 
@@ -5896,22 +4883,21 @@ def test_minhash_incremental_matches_python(spark, texts):
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 3),          # suppkey
-            st.integers(0, 4),          # ship month offset from 1996-12
-            st.sampled_from([10, 20, 40]),   # integer-dollar price
-            st.sampled_from([0.0, 0.5]),     # exact-binary discount
+            st.integers(1, 3),  # suppkey
+            st.integers(0, 4),  # ship month offset from 1996-12
+            st.sampled_from([10, 20, 40]),  # integer-dollar price
+            st.sampled_from([0.0, 0.5]),  # exact-binary discount
         ),
-        min_size=1,
-        max_size=8,
+        min_size=1, max_size=8,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: a global maximum
 def test_q15_top_supplier_ties_match_python(spark, lines):
+
     """Q15's scalar-subquery max must return EVERY supplier tied at the
     best quarterly revenue (tiny price/discount grid forces ties) and
     apply the quarter window literally."""
     from impala_refresher_spark.operators.tpch import tpch_q15_top_supplier
-    import impala_refresher_spark.operators.tpch as tp
 
     tables = {
         "lineitem": spark.createDataFrame(
@@ -5925,17 +4911,10 @@ def test_q15_top_supplier_ties_match_python(spark, lines):
             [(k, f"S{k}") for k in (1, 2, 3)], "s_suppkey long, s_name string"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.s_suppkey, r.s_name, r.total_revenue)
-            for r in tpch_q15_top_supplier(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
-
-    from datetime import datetime
+    got = [
+        (r.s_suppkey, r.s_name, r.total_revenue)
+        for r in run_on(spark, tpch_q15_top_supplier, tables)
+    ]
 
     lo, hi = datetime(1997, 1, 1), datetime(1997, 4, 1)
     rev: dict[int, float] = {}
@@ -5943,7 +4922,7 @@ def test_q15_top_supplier_ties_match_python(spark, lines):
         ts = _BASE.replace(year=1996, month=12) + timedelta(days=31 * m)
         if lo <= ts < hi:
             rev[sk] = rev.get(sk, 0.0) + p * (1.0 - d)
-    rev = {k: _r2(v) for k, v in rev.items()}
+    rev = {k: half_up(v, 2) for k, v in rev.items()}
     if not rev:
         assert got == []
         return
@@ -5955,21 +4934,19 @@ def test_q15_top_supplier_ties_match_python(spark, lines):
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 4),            # partkey
-            st.integers(1, 3),            # suppkey (1,2 -> NATION_2; 3 -> other)
-            st.integers(1, 50),           # integer-dollar price
+            st.integers(1, 4),  # partkey
+            st.integers(1, 3),  # suppkey (1,2 -> NATION_2; 3 -> other)
+            st.integers(1, 50),  # integer-dollar price
             st.sampled_from([0.0, 0.5]),  # exact-binary discount
         ),
-        min_size=1,
-        max_size=10,
+        min_size=1, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the threshold is a share of the global total
 def test_q11_threshold_matches_python(spark, lines):
     """Q11's HAVING-above-scalar-subquery: per-part value vs 0.2% of the
     nation total, both sides rounded, evaluated literally in python."""
     from impala_refresher_spark.operators.tpch import tpch_q11_important_stock
-    import impala_refresher_spark.operators.tpch as tp
 
     tables = {
         "lineitem": spark.createDataFrame(
@@ -5983,15 +4960,10 @@ def test_q11_threshold_matches_python(spark, lines):
             [(0, "NATION_0"), (2, "NATION_2")], "n_nationkey long, n_name string"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.ps_partkey, r.part_value)
-            for r in tpch_q11_important_stock(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.ps_partkey, r.part_value)
+        for r in run_on(spark, tpch_q11_important_stock, tables)
+    ]
 
     supplied = [
         (pk, p * (1.0 - d)) for pk, sk, p, d in lines if sk in (1, 2)
@@ -5999,9 +4971,9 @@ def test_q11_threshold_matches_python(spark, lines):
     per_part: dict[int, float] = {}
     for pk, v in supplied:
         per_part[pk] = per_part.get(pk, 0.0) + v
-    threshold = _r2(sum(v for _, v in supplied) * 0.002)
+    threshold = half_up(sum(v for _, v in supplied) * 0.002, 2)
     want = sorted(
-        ((pk, _r2(v)) for pk, v in per_part.items() if _r2(v) > threshold),
+        ((pk, half_up(v, 2)) for pk, v in per_part.items() if half_up(v, 2) > threshold),
         key=lambda t: (-t[1], t[0]),
     )
     assert got == want
@@ -6010,56 +4982,45 @@ def test_q11_threshold_matches_python(spark, lines):
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 3),       # partkey
-            st.integers(1, 10),      # quantity
-            st.integers(1, 100),     # integer-dollar price
+            st.integers(1, 3),  # partkey
+            st.integers(1, 10),  # quantity
+            st.integers(1, 100),  # integer-dollar price
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     ),
     st.sets(st.integers(1, 3), min_size=0, max_size=3),  # Brand#3 parts
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global average
 def test_q17_small_quantity_matches_python(spark, lines, brand3):
     """Q17's correlated-AVG decorrelation evaluated literally: per-part
     half-average threshold, brand filter, and the empty-input NULL."""
     from impala_refresher_spark.operators.tpch import (
         tpch_q17_small_quantity_revenue,
     )
-    import impala_refresher_spark.operators.tpch as tp
 
     tables = {
         "lineitem": spark.createDataFrame(
             [(pk, q * 1.0, p * 1.0) for pk, q, p in lines],
             "l_partkey long, l_quantity double, l_extendedprice double",
-        )
-        if lines
-        else spark.createDataFrame(
-            [], "l_partkey long, l_quantity double, l_extendedprice double"
         ),
         "part": spark.createDataFrame(
             [(pk, "Brand#3" if pk in brand3 else "Brand#1") for pk in (1, 2, 3)],
             "p_partkey long, p_brand string",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        rows = tpch_q17_small_quantity_revenue(spark, "x").collect()
-    finally:
-        tp._t = orig
+    rows = run_on(spark, tpch_q17_small_quantity_revenue, tables)
     assert len(rows) == 1
 
     thr = {}
     for pk in {pk for pk, _, _ in lines}:
         qs = [q for p2, q, _ in lines if p2 == pk]
-        thr[pk] = _r4(0.5 * (sum(qs) / len(qs)))
+        thr[pk] = half_up(0.5 * (sum(qs) / len(qs)), 4)
     kept = [
         p
         for pk, q, p in lines
         if pk in brand3 and q < thr[pk]
     ]
-    want = _r2(sum(kept) / 7.0) if kept else None
+    want = half_up(sum(kept) / 7.0, 2) if kept else None
     assert rows[0].avg_yearly == want
 
 
@@ -6074,24 +5035,14 @@ def test_q17_small_quantity_matches_python(spark, lines, brand3):
         max_size=8,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: a global top 50
 def test_top_tokens_ties_match_python(spark, texts):
     """Global top-50 heavy hitters: count-desc token-asc ordering with a
     61-token vocabulary so the LIMIT boundary cuts through tie groups."""
-    from collections import Counter
-
     from impala_refresher_spark.operators.text import text_top_tokens
-    import impala_refresher_spark.operators.text as tx
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    orig = tx.load_table
-    tx.load_table = lambda spark, sf, name: df
-    try:
-        got = [(r.token, r.n) for r in text_top_tokens(spark, "x").collect()]
-    finally:
-        tx.load_table = orig
+    df = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = [(r.token, r.n) for r in run_on(spark, text_top_tokens, df)]
 
     counts = Counter()
     for t in texts:
@@ -6130,69 +5081,44 @@ def _corpus_case(draw):
     return docs, embs
 
 
-@given(_corpus_case())
-@settings(**_SETTINGS)
-def test_pipeline_training_corpus_matches_python(spark, case):
+@given(cases(_corpus_case()))
+@batched
+def test_pipeline_training_corpus_matches_python(spark, batch):
     """The one-plan corpus pipeline (quality gate -> keep-first exact
     dedup -> cosine near-dup drop -> embedding join) vs literal python:
     duplicate texts, out-of-range lengths, missing embeddings, zero
     vectors (NULL cosine fails the threshold), same-label near-dups."""
-    import math
-
-    import numpy as np
-
     from impala_refresher_spark.operators.pipeline import pipeline_training_corpus
-    import impala_refresher_spark.operators.pipeline as pl
 
-    docs, embs = case
+    # ids and labels (the pair-join block) take disjoint ranges per case and
+    # every token carries the case id, so exact dedup keys are per case
+    docs = [(d + 100 * i, _tag(t, i), *rest) for i, c in enumerate(batch) for d, t, *rest in c[0]]
+    embs = offset([e for _, e in batch], (0, 1), k=100)
     tables = {
         "documents": spark.createDataFrame(
             docs, "doc_id long, text string, lang string, source string, n_chars long"
         ),
-        "embeddings": spark.createDataFrame(
-            embs, "vec_id long, label int, embedding array<float>"
-        )
-        if embs
-        else spark.createDataFrame([], "vec_id long, label int, embedding array<float>"),
-    }
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.doc_id: (r.lang, r.source, r.n_chars, r.n_tokens, r.label)
-            for r in pipeline_training_corpus(spark, "x").collect()
-        }
-    finally:
-        pl.load_table = orig
 
-    def unit(v):
-        comps = [float(np.float32(x)) for x in v]
-        s = 0.0
-        for c in comps:
-            s = s + c * c
-        n = math.sqrt(s)
-        if n == 0.0:
-            return None
-        return [c / n for c in comps]
+        "embeddings": spark.createDataFrame(embs, "vec_id long, label int, embedding array<float>"),
+    }
+    got = {
+        r.doc_id: (r.lang, r.source, r.n_chars, r.n_tokens, r.label)
+        for r in run_on(spark, pipeline_training_corpus, tables)
+    }
 
     first_of_text: dict[str, int] = {}
     for doc_id, text, *_ in docs:
         first_of_text.setdefault(text, doc_id)
     survivors = set(first_of_text.values())
 
-    uv = {vid: unit(vec) for vid, _, vec in embs}
+    uv = {vid: _unit(_f32(vec)) for vid, _, vec in embs}
     label_of = {vid: lab for vid, lab, _ in embs}
     drops = set()
     for vid_a, lab_a, _ in embs:
         for vid_b, lab_b, _ in embs:
             if vid_a < vid_b and lab_a == lab_b:
                 ua, ub = uv[vid_a], uv[vid_b]
-                if ua is None or ub is None:
-                    continue
-                s = 0.0
-                for x, y in zip(ua, ub):
-                    s = s + x * y
-                if s >= 0.35:
+                if ua is not None and ub is not None and _fold_dot(ua, ub) >= 0.35:
                     drops.add(vid_b)
 
     want = {}
@@ -6216,76 +5142,41 @@ def _surv_case(draw):
     return docs, embs
 
 
-@given(_surv_case())
-@settings(**_SETTINGS)
-def test_cluster_survivors_match_python(spark, case):
+@given(cases(_surv_case()))
+@batched
+def test_cluster_survivors_match_python(spark, batch):
     """dedup_cluster_survivors end-to-end (blocked cosine pair graph ->
     connected components -> best-member window) vs python: union-find
     over the literal >=0.35 pair set, survivor = longest doc then
     smallest id, n_chars ties included. Singletons never appear."""
-    import math
-
-    import numpy as np
-
     from impala_refresher_spark.operators.dedup import dedup_cluster_survivors
-    import impala_refresher_spark.operators.dedup as dd
 
-    docs, embs = case
+    # ids and labels (the pair-graph blocks) take disjoint ranges per case
+    docs = offset([d for d, _ in batch], (0,), k=100)
+    embs = offset([e for _, e in batch], (0, 1), k=100)
     tables = {
-        "documents": spark.createDataFrame(
-            [(i, c) for i, c in docs], "doc_id long, n_chars long"
-        ),
+        "documents": spark.createDataFrame(docs, "doc_id long, n_chars long"),
         "embeddings": spark.createDataFrame(
             embs, "vec_id long, label int, embedding array<float>"
         ),
     }
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.component_id: (r.survivor_id, r.survivor_chars, r.n_members)
-            for r in dedup_cluster_survivors(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
+    got = {
+        r.component_id: (r.survivor_id, r.survivor_chars, r.n_members)
+        for r in run_on(spark, dedup_cluster_survivors, tables)
+    }
 
-    def unit(v):
-        comps = [float(np.float32(x)) for x in v]
-        s = 0.0
-        for c in comps:
-            s = s + c * c
-        nrm = math.sqrt(s)
-        return None if nrm == 0.0 else [c / nrm for c in comps]
-
-    uv = {vid: unit(vec) for vid, _, vec in embs}
+    uv = {vid: _unit(_f32(vec)) for vid, _, vec in embs}
     lab = {vid: l for vid, l, _ in embs}
     chars = dict(docs)
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    linked = set()
-    for a in lab:
-        for b in lab:
-            if a < b and lab[a] == lab[b] and uv[a] is not None and uv[b] is not None:
-                s = 0.0
-                for x, y in zip(uv[a], uv[b]):
-                    s = s + x * y
-                if s >= 0.35:
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        parent[ra] = rb
-                    linked.update((a, b))
-    comps: dict[int, list] = {}
-    for v in linked:
-        comps.setdefault(find(v), []).append(v)
+    linked = [
+        (a, b)
+        for a in lab
+        for b in lab
+        if a < b and lab[a] == lab[b] and uv[a] is not None and uv[b] is not None
+        and _fold_dot(uv[a], uv[b]) >= 0.35
+    ]
     want = {}
-    for members in comps.values():
+    for members in _components(linked):
         cid = min(members)
         best = sorted(members, key=lambda v: (-chars[v], v))[0]
         want[cid] = (best, chars[best], len(members))
@@ -6299,37 +5190,26 @@ def test_cluster_survivors_match_python(spark, case):
         max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the seeds are sampled from all vectors
 def test_semdedup_matches_python(spark, vecs):
     """SemDeDup end-to-end vs python: md5-ordered seed pick, argmin
     assignment (first-min tie = smallest cid), within-cluster >=0.35
     pairs, keep-first fold to (cluster, drop_id, canonical_id)."""
-    import hashlib
-    import math
-
-    import numpy as np
-
     from impala_refresher_spark.operators.dedup import (
         _SEM_K,
         _SEM_THRESH,
         semdedup_embeddings,
     )
-    import impala_refresher_spark.operators.dedup as dd
 
     embs = [(i, 0, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(embs, "vec_id long, label int, embedding array<float>")
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.cluster, r.drop_id): r.canonical_id
-            for r in semdedup_embeddings(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
+    got = {
+        (r.cluster, r.drop_id): r.canonical_id
+        for r in run_on(spark, semdedup_embeddings, df)
+    }
 
     emb = {
-        i: [float(np.float32(x)) for x in v] for i, _, v in embs
+        i: _f32(v) for i, _, v in embs
     }
     order = sorted(emb, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
     cents = [emb[i] for i in order[:_SEM_K]]
@@ -6345,22 +5225,12 @@ def test_semdedup_matches_python(spark, vecs):
         ds = [sqdist(v, c) for c in cents]
         cid[i] = ds.index(min(ds))
 
-    def unit(v):
-        s = 0.0
-        for c in v:
-            s = s + c * c
-        nrm = math.sqrt(s)
-        return None if nrm == 0.0 else [c / nrm for c in v]
-
-    uv = {i: unit(v) for i, v in emb.items()}
+    uv = {i: _unit(v) for i, v in emb.items()}
     want: dict[tuple, int] = {}
     for a in emb:
         for b in emb:
             if a < b and cid[a] == cid[b] and uv[a] is not None and uv[b] is not None:
-                s = 0.0
-                for x, y in zip(uv[a], uv[b]):
-                    s = s + x * y
-                if s >= _SEM_THRESH:
+                if _fold_dot(uv[a], uv[b]) >= _SEM_THRESH:
                     key = (cid[b], b)
                     want[key] = min(want.get(key, a), a)
     assert got == want
@@ -6369,24 +5239,20 @@ def test_semdedup_matches_python(spark, vecs):
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 2),                 # partkey: 1 STANDARD, 2 PROMO
-            st.integers(0, 2),                 # ship month offset from 1997-08
-            st.integers(0, 40),                # integer-dollar price (0 allowed)
+            st.integers(1, 2),  # partkey: 1 STANDARD, 2 PROMO
+            st.integers(0, 2),  # ship month offset from 1997-08
+            st.integers(0, 40),  # integer-dollar price (0 allowed)
             st.sampled_from([0.0, 0.5, 1.0]),  # exact-binary discount, 1.0 nets 0
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global share
 def test_q14_promo_share_matches_python(spark, lines):
     """Q14's promo share vs python, including the all-zero-net month
     (denominator 0.00 -> NULL share, the try_divide guard) and the
     empty month (NULL sums -> NULL share)."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q14_promo_revenue
-    import impala_refresher_spark.operators.tpch as tp
 
     rows = [
         (pk, datetime(1997, 8 + m, 15), p * 1.0, d) for pk, m, p, d in lines
@@ -6395,57 +5261,43 @@ def test_q14_promo_share_matches_python(spark, lines):
         "lineitem": spark.createDataFrame(
             rows,
             "l_partkey long, l_shipdate timestamp, l_extendedprice double, l_discount double",
-        )
-        if rows
-        else spark.createDataFrame(
-            [],
-            "l_partkey long, l_shipdate timestamp, l_extendedprice double, l_discount double",
         ),
         "part": spark.createDataFrame(
             [(1, "STANDARD"), (2, "PROMO")], "p_partkey long, p_type string"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        out = tpch_q14_promo_revenue(spark, "x").collect()
-    finally:
-        tp._t = orig
+    out = run_on(spark, tpch_q14_promo_revenue, tables)
     assert len(out) == 1
 
     kept = [(pk, p * (1.0 - d)) for pk, m, p, d in lines if m == 1]
     if not kept:
         want = None
     else:
-        num = _r2(sum(v for pk, v in kept if pk == 2))
-        den = _r2(sum(v for _, v in kept))
-        want = None if den == 0.0 else _r4(100.0 * num / den)
+        num = half_up(sum(v for pk, v in kept if pk == 2), 2)
+        den = half_up(sum(v for _, v in kept), 2)
+        want = None if den == 0.0 else half_up(100.0 * num / den, 4)
     assert out[0].promo_revenue_pct == want
 
 
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 2),                 # partkey: 1 STANDARD, 2 PROMO
-            st.integers(1, 2),                 # suppkey: 1 -> NATION_5, 2 -> NATION_6
-            st.integers(10, 11),               # custkey: 10 AMERICA, 11 EUROPE
-            st.integers(1995, 1998),           # order year
-            st.integers(0, 30),                # integer-dollar price (0 allowed)
+            st.integers(1, 2),  # partkey: 1 STANDARD, 2 PROMO
+            st.integers(1, 2),  # suppkey: 1 -> NATION_5, 2 -> NATION_6
+            st.integers(10, 11),  # custkey: 10 AMERICA, 11 EUROPE
+            st.integers(1995, 1998),  # order year
+            st.integers(0, 30),  # integer-dollar price (0 allowed)
             st.sampled_from([0.0, 0.5, 1.0]),  # exact-binary discount
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: shares per year over all orders
 def test_q8_market_share_matches_python(spark, lines):
     """Q8's per-year market share vs python through the full 8-table
     join maze: region/part/date filters, NATION_5 numerator, and the
     all-zero-volume year (NULL share, the try_divide guard)."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q8_market_share
-    import impala_refresher_spark.operators.tpch as tp
 
     orders = [
         (i, ck, datetime(yr, 6, 15)) for i, (_, _, ck, yr, _, _) in enumerate(lines)
@@ -6471,29 +5323,13 @@ def test_q8_market_share_matches_python(spark, lines):
         "region": spark.createDataFrame(
             [(0, "AMERICA"), (1, "EUROPE")], "r_regionkey long, r_name string"
         ),
-        "orders": spark.createDataFrame(
-            orders, "o_orderkey long, o_custkey long, o_orderdate timestamp"
-        )
-        if orders
-        else spark.createDataFrame(
-            [], "o_orderkey long, o_custkey long, o_orderdate timestamp"
-        ),
+        "orders": spark.createDataFrame(orders, "o_orderkey long, o_custkey long, o_orderdate timestamp"),
         "lineitem": spark.createDataFrame(
             li,
             "l_orderkey long, l_partkey long, l_suppkey long, l_extendedprice double, l_discount double",
-        )
-        if li
-        else spark.createDataFrame(
-            [],
-            "l_orderkey long, l_partkey long, l_suppkey long, l_extendedprice double, l_discount double",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = {r.o_year: r.mkt_share for r in tpch_q8_market_share(spark, "x").collect()}
-    finally:
-        tp._t = orig
+    got = {r.o_year: r.mkt_share for r in run_on(spark, tpch_q8_market_share, tables)}
 
     by_year: dict[int, list] = {}
     for pk, sk, ck, yr, p, d in lines:
@@ -6502,16 +5338,14 @@ def test_q8_market_share_matches_python(spark, lines):
         by_year.setdefault(yr, []).append((sk, p * (1.0 - d)))
     want = {}
     for yr, vols in by_year.items():
-        num = _r2(sum(v for sk, v in vols if sk == 1))
-        den = _r2(sum(v for _, v in vols))
-        want[yr] = None if den == 0.0 else _r4(num / den)
+        num = half_up(sum(v for sk, v in vols if sk == 1), 2)
+        den = half_up(sum(v for _, v in vols), 2)
+        want[yr] = None if den == 0.0 else half_up(num / den, 4)
     assert got == want
 
 
-@given(
-    st.lists(st.tuples(st.integers(1, 4), st.booleans()), min_size=0, max_size=12),
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.tuples(st.integers(1, 4), st.booleans()), min_size=0, max_size=12),)
+@settings(**SETTINGS)  # one case per example: one global distribution
 def test_q13_distribution_counts_zero_order_customers(spark, orders):
     """Q13's LEFT-join-then-count distribution vs python: customers with
     ONLY urgent (excluded) orders must land in the c_count = 0 bucket,
@@ -6519,33 +5353,20 @@ def test_q13_distribution_counts_zero_order_customers(spark, orders):
     from impala_refresher_spark.operators.tpch import (
         tpch_q13_customer_distribution,
     )
-    import impala_refresher_spark.operators.tpch as tp
 
     tables = {
         "customer": spark.createDataFrame(
             [(k,) for k in (1, 2, 3, 4)], "c_custkey long"
         ),
         "orders": spark.createDataFrame(
-            [
-                (i, ck, "URGENT-1" if urg else "3-MEDIUM")
-                for i, (ck, urg) in enumerate(orders)
-            ],
+            [(i, ck, "URGENT-1" if urg else "3-MEDIUM") for i, (ck, urg) in enumerate(orders)],
             "o_orderkey long, o_custkey long, o_orderpriority string",
-        )
-        if orders
-        else spark.createDataFrame(
-            [], "o_orderkey long, o_custkey long, o_orderpriority string"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.c_count, r.custdist)
-            for r in tpch_q13_customer_distribution(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.c_count, r.custdist)
+        for r in run_on(spark, tpch_q13_customer_distribution, tables)
+    ]
 
     per_cust = {k: 0 for k in (1, 2, 3, 4)}
     for ck, urg in orders:
@@ -6561,31 +5382,23 @@ def test_q13_distribution_counts_zero_order_customers(spark, orders):
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 5),              # orderkey
-            st.sampled_from([100, 150]),    # quantity per line
+            st.integers(1, 5),  # orderkey
+            st.sampled_from([100, 150]),  # quantity per line
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: a global top 20
 def test_q18_having_topk_matches_python(spark, lines):
     """Q18's HAVING sum > 250 gate and tie-broken top-20 vs python —
     coarse quantities force exact boundary sums (200, 250, 300)."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import (
         tpch_q18_large_volume_customers,
     )
-    import impala_refresher_spark.operators.tpch as tp
 
     odate = datetime(1997, 3, 1)
     tables = {
-        "lineitem": spark.createDataFrame(
-            [(ok, q * 1.0) for ok, q in lines], "l_orderkey long, l_quantity double"
-        )
-        if lines
-        else spark.createDataFrame([], "l_orderkey long, l_quantity double"),
+        "lineitem": spark.createDataFrame([(ok, q * 1.0) for ok, q in lines], "l_orderkey long, l_quantity double"),
         "orders": spark.createDataFrame(
             [(ok, 100 + ok % 2, odate, 1000.0) for ok in (1, 2, 3, 4, 5)],
             "o_orderkey long, o_custkey long, o_orderdate timestamp, o_totalprice double",
@@ -6594,15 +5407,10 @@ def test_q18_having_topk_matches_python(spark, lines):
             [(100, "C100"), (101, "C101")], "c_custkey long, c_name string"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.c_name, r.c_custkey, r.o_orderkey, r.o_totalprice, r.total_qty)
-            for r in tpch_q18_large_volume_customers(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.c_name, r.c_custkey, r.o_orderkey, r.o_totalprice, r.total_qty)
+        for r in run_on(spark, tpch_q18_large_volume_customers, tables)
+    ]
 
     qty: dict[int, float] = {}
     for ok, q in lines:
@@ -6619,32 +5427,33 @@ def test_q18_having_topk_matches_python(spark, lines):
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(1, 2),     # partkey: 1 red, 2 not
-            st.integers(1, 3),     # suppkey: 1,2 in nation group; 3 outside
-            st.booleans(),         # shipped in 1998?
-            st.integers(0, 8),     # quantity
-        ),
-        min_size=0,
-        max_size=10,
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 2),  # partkey: 1 red, 2 not
+                st.integers(1, 3),  # suppkey: 1,2 in nation group; 3 outside
+                st.booleans(),  # shipped in 1998?
+                st.integers(0, 8),  # quantity
+            ),
+            min_size=0, max_size=10,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_q20_excess_stock_matches_python(spark, lines):
+@batched
+def test_q20_excess_stock_matches_python(spark, batch):
     """Q20's flow threshold (outside > 0.5 * in-1998, in-1998 > 0) and
     the nation-group semi-join vs literal python."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q20_excess_stock_parts
-    import impala_refresher_spark.operators.tpch as tp
 
+    # suppliers (the flows' key) take disjoint keys per case; nations are shared
+    lines = offset(batch, (1,), k=10)
+    sks = [k + 10 * i for i in range(len(batch)) for k in (1, 2, 3)]
     tables = {
         "part": spark.createDataFrame(
             [(1, "red metallic"), (2, "blue shiny")], "p_partkey long, p_name string"
         ),
         "supplier": spark.createDataFrame(
-            [(1, "S1", 11.0, 1), (2, "S2", 22.0, 2), (3, "S3", 33.0, 0)],
+            [(k, f"S{k}", k * 11.0, {1: 1, 2: 2, 3: 0}[k % 10]) for k in sks],
             "s_suppkey long, s_name string, s_acctbal double, s_nationkey long",
         ),
         "nation": spark.createDataFrame(
@@ -6657,22 +5466,12 @@ def test_q20_excess_stock_matches_python(spark, lines):
                 for pk, sk, in98, q in lines
             ],
             "l_partkey long, l_suppkey long, l_shipdate timestamp, l_quantity double",
-        )
-        if lines
-        else spark.createDataFrame(
-            [],
-            "l_partkey long, l_suppkey long, l_shipdate timestamp, l_quantity double",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.s_name, r.s_acctbal)
-            for r in tpch_q20_excess_stock_parts(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.s_name, r.s_acctbal)
+        for r in run_on(spark, tpch_q20_excess_stock_parts, tables)
+    ]
 
     flows: dict[tuple, list] = {}
     for pk, sk, in98, q in lines:
@@ -6683,95 +5482,80 @@ def test_q20_excess_stock_matches_python(spark, lines):
     excess = {
         sk
         for (pk, sk), (q98, qout) in flows.items()
-        if q98 > 0 and _r2(qout) > _r2(0.5 * q98)
+        if q98 > 0 and half_up(qout, 2) > half_up(0.5 * q98, 2)
     }
-    want = sorted(
-        (f"S{sk}", sk * 11.0) for sk in excess if sk in (1, 2)
-    )
+    want = sorted((f"S{sk}", sk * 11.0) for sk in excess if sk % 10 in (1, 2))
+
     assert got == want
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 20), st.integers(0, 12)),  # (day, quarter-$)
-        min_size=1,
-        max_size=12,
-    )
-)
-@settings(**_SETTINGS)
-def test_rolling_7day_range_frame_matches_python(spark, rows):
+@given(cases(st.lists(st.tuples(st.integers(0, 20), st.integers(0, 12)), min_size=1, max_size=12)))
+@batched  # cases of (day, quarter-$) points
+def test_rolling_7day_range_frame_matches_python(spark, batch):
     """The RANGE -6..0 trailing average vs python: calendar GAPS must
     shorten the window (range frame), never widen it (rows frame).
     Prices on the exact-binary quarter-dollar grid so daily sums are
     order-insensitive (an arbitrary cents grid can round differently
     per accumulation order — a query-level contract, not a bug)."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.analytics import rolling_7day_revenue
-    import impala_refresher_spark.operators.analytics as an
 
+    # 30 days apart per case: no 7-day window reaches another case's days
+    rows = offset(batch, (0,), k=30)
     base = datetime(2024, 1, 1)
+
     df = spark.createDataFrame(
         [(base + timedelta(days=d), q * 0.25) for d, q in rows],
         "o_orderdate timestamp, o_totalprice double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            str(r.day): (r.revenue, r.avg_7day)
-            for r in rolling_7day_revenue(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        str(r.day): (r.revenue, r.avg_7day)
+        for r in run_on(spark, rolling_7day_revenue, df)
+    }
 
     daily: dict[int, float] = {}
     for d, q in rows:
         daily[d] = daily.get(d, 0.0) + q * 0.25
-    daily = {d: _r2(v) for d, v in daily.items()}
+    daily = {d: half_up(v, 2) for d, v in daily.items()}
     for d, rev in daily.items():
         window = [daily[k] for k in sorted(daily) if d - 6 <= k <= d]
-        avg = _r2(sum(window) / len(window))
+        avg = half_up(sum(window) / len(window), 2)
         day = (base + timedelta(days=d)).date()
         assert got[str(day)] == (rev, avg), d
     assert len(got) == len(daily)
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(0, 2), st.integers(0, 100)),
-        min_size=1,
-        max_size=12,
-        unique_by=lambda t: t[1],  # unique balances -> deterministic argmax
+    cases(
+        st.lists(
+            st.tuples(st.integers(0, 2), st.integers(0, 100)),
+            min_size=1,
+            max_size=12,
+            unique_by=lambda t: t[1],  # unique balances -> deterministic argmax
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_argminmax_attribution_matches_python(spark, custs):
+@batched
+def test_argminmax_attribution_matches_python(spark, batch):
     """max_by per group vs python argmax (ordering values unique per
     the operator's documented determinism contract)."""
     from impala_refresher_spark.operators.analytics import top_account_by_nation
-    import impala_refresher_spark.operators.analytics as an
 
+    custs = offset(batch, (0,), k=10)  # nations, the group key
     df = spark.createDataFrame(
         [(i, f"C{i}", nk, bal / 4.0) for i, (nk, bal) in enumerate(custs)],
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double",
     )
-    orig = an.load_table
-    an.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.c_nationkey: (r.top_customer, r.top_acctbal)
-            for r in top_account_by_nation(spark, "x").collect()
-        }
-    finally:
-        an.load_table = orig
+    got = {
+        r.c_nationkey: (r.top_customer, r.top_acctbal)
+        for r in run_on(spark, top_account_by_nation, df)
+    }
 
     want = {}
     for i, (nk, bal) in enumerate(custs):
         cur = want.get(nk)
         if cur is None or bal / 4.0 > cur[1]:
             want[nk] = (f"C{i}", bal / 4.0)
-    want = {nk: (nm, _r2(b)) for nk, (nm, b) in want.items()}
+    want = {nk: (nm, half_up(b, 2)) for nk, (nm, b) in want.items()}
     assert got == want
 
 
@@ -6782,79 +5566,43 @@ def test_argminmax_attribution_matches_python(spark, custs):
         max_size=8,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: each query ranks every vector
 def test_ann_lsh_matches_python(spark, vecs):
     """The full LSH-ANN pipeline vs python: seeded hyperplane margins
     (strict L->R fold), sign-bit buckets, weakest-plane multi-probe
     (first-min argmin), exact-cosine rerank, tie-broken top-10 —
     including zero vectors (NULL cosine ranks last)."""
-    import math
-
-    import numpy as np
-
     from impala_refresher_spark.operators.similarity import (
         _hyperplanes,
         ann_lsh_topk,
     )
-    import impala_refresher_spark.operators.similarity as sim
 
     embs = [(i, 0, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(embs, "vec_id long, label int, embedding array<float>")
-    orig = sim.load_table
-    sim.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.q_id, r.vec_id, r.cos_sim, r.rk)
-            for r in ann_lsh_topk(spark, "x").collect()
-        ]
-    finally:
-        sim.load_table = orig
+    got = [
+        (r.q_id, r.vec_id, r.cos_sim, r.rk)
+        for r in run_on(spark, ann_lsh_topk, df)
+    ]
 
     planes = _hyperplanes(8, 64)
-    emb = {i: [float(np.float32(x)) for x in v] for i, _, v in embs}
-
-    def fold_dot(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s = s + x * y
-        return s
+    emb = {i: _f32(v) for i, _, v in embs}
 
     def margins(v):
-        return [fold_dot(v, p) for p in planes]
+        return [_fold_dot(v, p) for p in planes]
 
     def bucket(ms):
         return sum(1 << i for i, m in enumerate(ms) if m >= 0)
-
-    def cos(a, b):
-        na = math.sqrt(fold_dot(a, a))
-        nb = math.sqrt(fold_dot(b, b))
-        return None if na * nb == 0.0 else _r6(fold_dot(a, b) / (na * nb))
 
     buckets = {i: bucket(margins(v)) for i, v in emb.items()}
     want = []
     for q in sorted(emb):
         if q >= 5:
             continue
-        ms = margins(emb[q])
-        absm = [abs(m) for m in ms]
+        absm = [abs(m) for m in margins(emb[q])]
         weakest = absm.index(min(absm))
         probes = {buckets[q], buckets[q] ^ (1 << weakest)}
-        cands = [
-            v for v in emb if v != q and buckets[v] in probes
-        ]
-        ranked = sorted(
-            ((cos(emb[q], emb[v]), v) for v in cands),
-            key=lambda t: ((0, -t[0]) if t[0] is not None else (1, 0), t[1]),
-        )
-        for rk, (cs, v) in enumerate(ranked[:10], start=1):
-            want.append((q, v, cs, rk))
+        want += _top10(q, [v for v in emb if v != q and buckets[v] in probes], emb)
     assert sorted(got) == sorted(want)
-
-
-def _r6(x: float) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
 
 @st.composite
@@ -6870,47 +5618,26 @@ def _ann_vecs(draw):
 
 
 @given(_ann_vecs())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the centroids are sampled from all vectors
 def test_ann_ivf_matches_python(spark, items):
     """IVF-ANN vs python: stride-sampled centroids, sequential-fold
     cell dots, stable argsort (tie -> lower cell), 2-probe candidate
     join, exact rerank."""
-    import math
-
-    import numpy as np
-
     from impala_refresher_spark.operators.similarity import ann_ivf_topk
-    import impala_refresher_spark.operators.similarity as sim
 
     embs = [(vid, 0, [float(x) for x in v]) for vid, v in items]
     df = spark.createDataFrame(embs, "vec_id long, label int, embedding array<float>")
-    orig = sim.load_table
-    sim.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.q_id, r.vec_id, r.cos_sim, r.rk)
-            for r in ann_ivf_topk(spark, "x").collect()
-        ]
-    finally:
-        sim.load_table = orig
+    got = [
+        (r.q_id, r.vec_id, r.cos_sim, r.rk)
+        for r in run_on(spark, ann_ivf_topk, df)
+    ]
 
-    emb = {i: [float(np.float32(x)) for x in v] for i, _, v in embs}
+    emb = {i: _f32(v) for i, _, v in embs}
     cents = [emb[i] for i in sorted(emb) if i % 61 == 0][:16]
 
-    def fold_dot(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s = s + x * y
-        return s
-
     def ranking(v):
-        dots = [fold_dot(v, c) for c in cents]
+        dots = [_fold_dot(v, c) for c in cents]
         return sorted(range(len(cents)), key=lambda c: (-dots[c], c))
-
-    def cos(a, b):
-        na = math.sqrt(fold_dot(a, a))
-        nb = math.sqrt(fold_dot(b, b))
-        return None if na * nb == 0.0 else _r6(fold_dot(a, b) / (na * nb))
 
     cell = {i: ranking(v)[0] for i, v in emb.items()}
     want = []
@@ -6918,13 +5645,7 @@ def test_ann_ivf_matches_python(spark, items):
         if q >= 5:
             continue
         probes = set(ranking(emb[q])[:2])
-        cands = [v for v in emb if v != q and cell[v] in probes]
-        ranked = sorted(
-            ((cos(emb[q], emb[v]), v) for v in cands),
-            key=lambda t: ((0, -t[0]) if t[0] is not None else (1, 0), t[1]),
-        )
-        for rk, (cs, v) in enumerate(ranked[:10], start=1):
-            want.append((q, v, cs, rk))
+        want += _top10(q, [v for v in emb if v != q and cell[v] in probes], emb)
     assert sorted(got) == sorted(want)
 
 
@@ -6935,33 +5656,22 @@ def test_ann_ivf_matches_python(spark, items):
         max_size=7,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the codebooks are sampled from all vectors
 def test_ann_pq_matches_python(spark, vecs):
     """PQ-ANN vs python: md5-ordered codebook sample, per-subspace
     fold-exact argmin codes (tie -> lowest k), LUT ADC fold in
     subspace order, top-64 candidate cut, exact rerank."""
-    import hashlib
-    import math
-
-    import numpy as np
-
     from impala_refresher_spark.operators.similarity import ann_pq_topk
-    import impala_refresher_spark.operators.similarity as sim
 
     embs = [(i, 0, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(embs, "vec_id long, label int, embedding array<float>")
-    orig = sim.load_table
-    sim.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.q_id, r.vec_id, r.cos_sim, r.rk)
-            for r in ann_pq_topk(spark, "x").collect()
-        ]
-    finally:
-        sim.load_table = orig
+    got = [
+        (r.q_id, r.vec_id, r.cos_sim, r.rk)
+        for r in run_on(spark, ann_pq_topk, df)
+    ]
 
     M, K, DSUB = 8, 16, 8
-    emb = {i: [float(np.float32(x)) for x in v] for i, _, v in embs}
+    emb = {i: _f32(v) for i, _, v in embs}
     order = sorted(emb, key=lambda i: (hashlib.md5(str(i + 2).encode()).hexdigest(), i))
     books = [
         [
@@ -6970,12 +5680,6 @@ def test_ann_pq_matches_python(spark, vecs):
         ]
         for m in range(M)
     ]
-
-    def fold_dot(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s = s + x * y
-        return s
 
     def sqd(a, b):
         s = 0.0
@@ -6997,7 +5701,7 @@ def test_ann_pq_matches_python(spark, vecs):
         if q >= 5:
             continue
         lut = [
-            [fold_dot(emb[q][m * DSUB : (m + 1) * DSUB], bc) for bc in books[m]]
+            [_fold_dot(emb[q][m * DSUB : (m + 1) * DSUB], bc) for bc in books[m]]
             for m in range(M)
         ]
         adc = {}
@@ -7008,19 +5712,7 @@ def test_ann_pq_matches_python(spark, vecs):
             for m in range(M):
                 s = s + lut[m][cs[m]]
             adc[v] = s
-        cand = sorted(adc, key=lambda v: (-adc[v], v))[:64]
-
-        def cos(a, b):
-            na = math.sqrt(fold_dot(a, a))
-            nb = math.sqrt(fold_dot(b, b))
-            return None if na * nb == 0.0 else _r6(fold_dot(a, b) / (na * nb))
-
-        ranked = sorted(
-            ((cos(emb[q], emb[v]), v) for v in cand),
-            key=lambda t: ((0, -t[0]) if t[0] is not None else (1, 0), t[1]),
-        )
-        for rk, (cs_, v) in enumerate(ranked[:10], start=1):
-            want.append((q, v, cs_, rk))
+        want += _top10(q, sorted(adc, key=lambda v: (-adc[v], v))[:64], emb)
     assert sorted(got) == sorted(want)
 
 
@@ -7031,32 +5723,25 @@ def test_ann_pq_matches_python(spark, vecs):
             st.sampled_from(["HI", "LO", None]),
             st.integers(0, 12),  # quarter-dollars (exact binary)
         ),
-        min_size=1,
-        max_size=10,
+        min_size=1, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the grand-total grouping set spans all rows
 def test_cube_with_null_group_values_matches_python(spark, rows):
     """CUBE over columns that THEMSELVES contain NULL: the aggregated-
     out NULL marker and a genuine NULL group value must coexist as the
     enumeration of all four grouping sets — pinned against a python
     model that enumerates the sets explicitly."""
     from impala_refresher_spark.operators.relational import agg_cube
-    import impala_refresher_spark.operators.relational as rel
 
     df = spark.createDataFrame(
         [(s, p, q * 0.25) for s, p, q in rows],
         "o_orderstatus string, o_orderpriority string, o_totalprice double",
     )
-    orig = rel._t
-    rel._t = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.o_orderstatus, r.o_orderpriority, r.total, r.n)
-            for r in agg_cube(spark, "x").collect()
-        ]
-    finally:
-        rel._t = orig
+    got = [
+        (r.o_orderstatus, r.o_orderpriority, r.total, r.n)
+        for r in run_on(spark, agg_cube, df)
+    ]
 
     out = []
     for keep_s, keep_p in ((True, True), (True, False), (False, True), (False, False)):
@@ -7069,7 +5754,7 @@ def test_cube_with_null_group_values_matches_python(spark, rows):
                 (
                     None if ks == "\x00agg" else ks,
                     None if kp == "\x00agg" else kp,
-                    _r2(sum(vs)),
+                    half_up(sum(vs), 2),
                     len(vs),
                 )
             )
@@ -7081,25 +5766,21 @@ def test_cube_with_null_group_values_matches_python(spark, rows):
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 3),    # suppkey -> nation 3/7/1
-            st.integers(1, 3),    # custkey -> nation 7/3/1
+            st.integers(1, 3),  # suppkey -> nation 3/7/1
+            st.integers(1, 3),  # custkey -> nation 7/3/1
             st.integers(1996, 1998),
-            st.integers(0, 30),   # integer-dollar price
+            st.integers(0, 30),  # integer-dollar price
             st.sampled_from([0.0, 0.5]),
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: revenue per fixed nation pair over all lines
 def test_q7_bilateral_direction_matches_python(spark, lines):
     """Q7's nation-pair disjunction vs python: only the two directed
     (supp, cust) pairs survive; same-nation and third-nation rows drop;
     year grouping from the ship date."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q7_volume_shipping
-    import impala_refresher_spark.operators.tpch as tp
 
     snat = {1: 3, 2: 7, 3: 1}
     cnat = {1: 7, 2: 3, 3: 1}
@@ -7119,28 +5800,17 @@ def test_q7_bilateral_direction_matches_python(spark, lines):
             [(1, "NATION_1"), (3, "NATION_3"), (7, "NATION_7")],
             "n_nationkey long, n_name string",
         ),
-        "orders": spark.createDataFrame(orders, "o_orderkey long, o_custkey long")
-        if orders
-        else spark.createDataFrame([], "o_orderkey long, o_custkey long"),
+        "orders": spark.createDataFrame(orders, "o_orderkey long, o_custkey long"),
         "lineitem": spark.createDataFrame(
             li,
             "l_orderkey long, l_suppkey long, l_shipdate timestamp, l_extendedprice double, l_discount double",
-        )
-        if li
-        else spark.createDataFrame(
-            [],
-            "l_orderkey long, l_suppkey long, l_shipdate timestamp, l_extendedprice double, l_discount double",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.supp_nation, r.cust_nation, r.l_year, r.revenue)
-            for r in tpch_q7_volume_shipping(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.supp_nation, r.cust_nation, r.l_year, r.revenue)
+
+        for r in run_on(spark, tpch_q7_volume_shipping, tables)
+    ]
 
     agg: dict[tuple, float] = {}
     for sk, ck, yr, p, d in lines:
@@ -7148,32 +5818,32 @@ def test_q7_bilateral_direction_matches_python(spark, lines):
         if {(sn, cn)} & {(3, 7), (7, 3)} and 1996 <= yr < 1998:
             key = (f"NATION_{sn}", f"NATION_{cn}", yr)
             agg[key] = agg.get(key, 0.0) + p * (1.0 - d)
-    want = sorted((s, c, y, _r2(v)) for (s, c, y), v in agg.items())
+    want = sorted((s, c, y, half_up(v, 2)) for (s, c, y), v in agg.items())
     assert got == want
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 3),       # order index
-            st.sampled_from(["A", "N", "R"]),
-            st.integers(0, 120),     # ship lag days from the order date
-            st.booleans(),           # ship in 1998? (else 1997 -> filtered)
-        ),
-        min_size=0,
-        max_size=10,
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(0, 3),  # order index
+                st.sampled_from(["A", "N", "R"]),
+                st.integers(0, 120),  # ship lag days from the order date
+                st.booleans(),  # ship in 1998? (else 1997 -> filtered)
+            ),
+            max_size=10,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_q12_late_shipping_matches_python(spark, lines):
+@batched
+def test_q12_late_shipping_matches_python(spark, batch):
     """Q12's late-line split vs python: the >60-day lateness residual
     (strict, boundary day 60 excluded), the ship-year scan filter, and
     the high/low priority complement."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q12_priority_shipping
-    import impala_refresher_spark.operators.tpch as tp
 
+    # the case id is folded into the return flag, the group key; orders are shared
+    lines = [(ok, f"{i}{rf}", *rest) for i, c in enumerate(batch) for ok, rf, *rest in c]
     prio = {0: "1-URGENT", 1: "2-HIGH", 2: "3-MEDIUM", 3: "5-LOW"}
     odate = datetime(1997, 11, 1)
     tables = {
@@ -7187,28 +5857,17 @@ def test_q12_late_shipping_matches_python(spark, lines):
                 for ok, rf, lag, in98 in lines
             ],
             "l_orderkey long, l_returnflag string, l_shipdate timestamp",
-        )
-        if lines
-        else spark.createDataFrame(
-            [], "l_orderkey long, l_returnflag string, l_shipdate timestamp"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.l_returnflag, r.high_line_count, r.low_line_count)
-            for r in tpch_q12_priority_shipping(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
-
-    from datetime import datetime as _dt
+    got = [
+        (r.l_returnflag, r.high_line_count, r.low_line_count)
+        for r in run_on(spark, tpch_q12_priority_shipping, tables)
+    ]
 
     agg: dict[str, list] = {}
     for ok, rf, lag, in98 in lines:
         ship = odate + timedelta(days=lag if in98 else -300)
-        if not (_dt(1998, 1, 1) <= ship < _dt(1999, 1, 1)):
+        if not (datetime(1998, 1, 1) <= ship < datetime(1999, 1, 1)):
             continue
         if not ship > odate + timedelta(days=60):
             continue
@@ -7237,33 +5896,20 @@ def _attr_case(draw):
     return events
 
 
-@given(_attr_case())
-@settings(**_SETTINGS)
-def test_asof_attribution_matches_python(spark, events):
+@given(cases(_attr_case()))
+@batched
+def test_asof_attribution_matches_python(spark, batch):
     """asof_click_attribution vs python: latest click at-or-before each
     purchase, max event_id on same-timestamp clicks, NULL for
     never-clicked users — duplicate timestamps everywhere."""
     from impala_refresher_spark.operators.asof import asof_click_attribution
-    import impala_refresher_spark.operators.asof as am
 
-    df = (
-        spark.createDataFrame(
-            events, "event_id long, user_id long, event_type string, ts timestamp, value double"
-        )
-        if events
-        else spark.createDataFrame(
-            [], "event_id long, user_id long, event_type string, ts timestamp, value double"
-        )
-    )
-    orig = am.load_table
-    am.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.event_id: (r.click_ts, r.click_event_id)
-            for r in asof_click_attribution(spark, "x").collect()
-        }
-    finally:
-        am.load_table = orig
+    events = offset(batch, (0, 1))
+    df = spark.createDataFrame(events, "event_id long, user_id long, event_type string, ts timestamp, value double")
+    got = {
+        r.event_id: (r.click_ts, r.click_event_id)
+        for r in run_on(spark, asof_click_attribution, df)
+    }
 
     clicks: dict[tuple, int] = {}
     for eid, u, et, ts, _v in events:
@@ -7282,24 +5928,20 @@ def test_asof_attribution_matches_python(spark, events):
 @given(
     st.lists(
         st.tuples(
-            st.integers(0, 3),                  # order idx
-            st.integers(0, 20),                 # int-dollar price
+            st.integers(0, 3),  # order idx
+            st.integers(0, 20),  # int-dollar price
             st.sampled_from([0.0, 0.5]),
-            st.booleans(),                      # shipped after the cutoff?
+            st.booleans(),  # shipped after the cutoff?
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     ),
     st.lists(st.sampled_from(["BUILDING", "AUTO"]), min_size=2, max_size=2),
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: a global top 10
 def test_q3_unshipped_orders_match_python(spark, lines, segs):
     """Q3 vs python: segment prune, strict date cutoffs on both sides,
     revenue-desc/date/orderkey top-10."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q3_shipping_priority
-    import impala_refresher_spark.operators.tpch as tp
 
     cutoff = datetime(1998, 3, 15)
     odates = [cutoff + timedelta(days=(k % 2) * 2 - 1) for k in range(4)]  # +-1 day
@@ -7317,22 +5959,12 @@ def test_q3_unshipped_orders_match_python(spark, lines, segs):
                 for ok, p, d, late in lines
             ],
             "l_orderkey long, l_extendedprice double, l_discount double, l_shipdate timestamp",
-        )
-        if lines
-        else spark.createDataFrame(
-            [],
-            "l_orderkey long, l_extendedprice double, l_discount double, l_shipdate timestamp",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.l_orderkey, r.revenue, r.o_orderdate)
-            for r in tpch_q3_shipping_priority(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.l_orderkey, r.revenue, r.o_orderdate)
+        for r in run_on(spark, tpch_q3_shipping_priority, tables)
+    ]
 
     rev: dict[int, float] = {}
     for ok, p, d, late in lines:
@@ -7342,111 +5974,94 @@ def test_q3_unshipped_orders_match_python(spark, lines, segs):
             continue
         rev[ok] = rev.get(ok, 0.0) + p * (1.0 - d)
     want = sorted(
-        ((ok, _r2(v), odates[ok]) for ok, v in rev.items()),
+        ((ok, half_up(v, 2), odates[ok]) for ok, v in rev.items()),
         key=lambda t: (-t[1], t[2], t[0]),
     )[:10]
     assert got == want
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(1, 3),    # custkey -> nation 1/2/9 (9 not ASIA)
-            st.integers(1, 3),    # suppkey -> nation 1/2/9
-            st.booleans(),        # order in 1996?
-            st.integers(0, 20),
-            st.sampled_from([0.0, 0.5]),
-        ),
-        min_size=0,
-        max_size=10,
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 3),  # custkey -> nation 1/2/9 (9 not ASIA)
+                st.integers(1, 3),  # suppkey -> nation 1/2/9
+                st.booleans(),  # order in 1996?
+                st.integers(0, 20),
+                st.sampled_from([0.0, 0.5]),
+            ),
+            min_size=0, max_size=10,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_q5_local_supplier_matches_python(spark, lines):
+@batched
+def test_q5_local_supplier_matches_python(spark, batch):
     """Q5's same-nation residual vs python: revenue only counts when
     customer and supplier share a nation AND that nation is in ASIA."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q5_local_supplier_volume
-    import impala_refresher_spark.operators.tpch as tp
 
-    nat = {1: 1, 2: 2, 3: 9}
+    # customers, suppliers and nations (the group key) take disjoint keys
+    # per case; key k of case i sits in nation nat[k] + 100 * i
+    lines = offset(batch, (0, 1), k=10)
+    nat = {k + 10 * i: n + 100 * i for i in range(len(batch)) for k, n in ((1, 1), (2, 2), (3, 9))}
     orders = [
         (i, ck, datetime(1996 if in96 else 1995, 7, 1))
         for i, (ck, _, in96, _, _) in enumerate(lines)
     ]
     li = [(i, sk, p * 1.0, d) for i, (_, sk, _, p, d) in enumerate(lines)]
     tables = {
-        "customer": spark.createDataFrame(
-            [(k, nat[k]) for k in (1, 2, 3)], "c_custkey long, c_nationkey long"
-        ),
-        "supplier": spark.createDataFrame(
-            [(k, nat[k]) for k in (1, 2, 3)], "s_suppkey long, s_nationkey long"
-        ),
+        "customer": spark.createDataFrame(list(nat.items()), "c_custkey long, c_nationkey long"),
+        "supplier": spark.createDataFrame(list(nat.items()), "s_suppkey long, s_nationkey long"),
         "nation": spark.createDataFrame(
-            [(1, "NATION_1", 0), (2, "NATION_2", 0), (9, "NATION_9", 1)],
+            [(n, f"NATION_{n}", int(n % 100 == 9)) for n in nat.values()],
             "n_nationkey long, n_name string, n_regionkey long",
         ),
         "region": spark.createDataFrame(
             [(0, "ASIA"), (1, "EUROPE")], "r_regionkey long, r_name string"
         ),
-        "orders": spark.createDataFrame(
-            orders, "o_orderkey long, o_custkey long, o_orderdate timestamp"
-        )
-        if orders
-        else spark.createDataFrame(
-            [], "o_orderkey long, o_custkey long, o_orderdate timestamp"
-        ),
+        "orders": spark.createDataFrame(orders, "o_orderkey long, o_custkey long, o_orderdate timestamp"),
         "lineitem": spark.createDataFrame(
             li, "l_orderkey long, l_suppkey long, l_extendedprice double, l_discount double"
-        )
-        if li
-        else spark.createDataFrame(
-            [], "l_orderkey long, l_suppkey long, l_extendedprice double, l_discount double"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.n_name: r.revenue
-            for r in tpch_q5_local_supplier_volume(spark, "x").collect()
-        }
-    finally:
-        tp._t = orig
+    got = {
+        r.n_name: r.revenue
+        for r in run_on(spark, tpch_q5_local_supplier_volume, tables)
+    }
 
     agg: dict[str, float] = {}
     for ck, sk, in96, p, d in lines:
-        if not in96 or nat[ck] != nat[sk] or nat[sk] == 9:
+        if not in96 or nat[ck] != nat[sk] or nat[sk] % 100 == 9:
             continue
         key = f"NATION_{nat[sk]}"
         agg[key] = agg.get(key, 0.0) + p * (1.0 - d)
-    assert got == {k: _r2(v) for k, v in agg.items()}
+    assert got == {k: half_up(v, 2) for k, v in agg.items()}
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(1, 2),                # partkey: 1 'steel bolt', 2 'iron nut'
-            st.integers(1, 2),                # suppkey -> nation 1/2
-            st.integers(1996, 1998),
-            st.integers(0, 20),               # int-dollar price
-            st.sampled_from([0.0, 0.5]),
-            st.integers(1, 4),                # quantity
-        ),
-        min_size=0,
-        max_size=10,
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(1, 2),  # partkey: 1 'steel bolt', 2 'iron nut'
+                st.integers(1, 2),  # suppkey -> nation 1/2
+                st.integers(1996, 1998),
+                st.integers(0, 20),  # int-dollar price
+                st.sampled_from([0.0, 0.5]),
+                st.integers(1, 4),  # quantity
+            ),
+            min_size=0, max_size=10,
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_q9_profit_matches_python(spark, lines):
+@batched
+def test_q9_profit_matches_python(spark, batch):
     """Q9's profit expression and name LIKE filter vs python on a
     0.1-exact value grid (negative profits included)."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q9_product_type_profit
-    import impala_refresher_spark.operators.tpch as tp
 
+    # suppliers and their nations (a group key) take disjoint keys per case
+    lines = offset(batch, (1,), k=10)
+    sks = sorted({sk + 10 * i for i in range(len(batch)) for sk in (1, 2)})
     orders = [
         (i, datetime(yr, 4, 1)) for i, (_, _, yr, _, _, _) in enumerate(lines)
     ]
@@ -7459,38 +6074,20 @@ def test_q9_profit_matches_python(spark, lines):
             [(1, "steel bolt", 5.0), (2, "iron nut", 7.0)],
             "p_partkey long, p_name string, p_retailprice double",
         ),
-        "supplier": spark.createDataFrame(
-            [(1, 1), (2, 2)], "s_suppkey long, s_nationkey long"
-        ),
-        "nation": spark.createDataFrame(
-            [(1, "NATION_1"), (2, "NATION_2")], "n_nationkey long, n_name string"
-        ),
-        "orders": spark.createDataFrame(
-            orders, "o_orderkey long, o_orderdate timestamp"
-        )
-        if orders
-        else spark.createDataFrame([], "o_orderkey long, o_orderdate timestamp"),
+        "supplier": spark.createDataFrame([(k, k) for k in sks], "s_suppkey long, s_nationkey long"),
+        "nation": spark.createDataFrame([(k, f"NATION_{k}") for k in sks], "n_nationkey long, n_name string"),
+
+        "orders": spark.createDataFrame(orders, "o_orderkey long, o_orderdate timestamp"),
         "lineitem": spark.createDataFrame(
             li,
             "l_orderkey long, l_partkey long, l_suppkey long, l_extendedprice double,"
             " l_discount double, l_quantity double",
-        )
-        if li
-        else spark.createDataFrame(
-            [],
-            "l_orderkey long, l_partkey long, l_suppkey long, l_extendedprice double,"
-            " l_discount double, l_quantity double",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.nation, r.o_year, r.sum_profit)
-            for r in tpch_q9_product_type_profit(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.nation, r.o_year, r.sum_profit)
+        for r in run_on(spark, tpch_q9_product_type_profit, tables)
+    ]
 
     agg: dict[tuple, float] = {}
     for pk, sk, yr, p, d, q in lines:
@@ -7500,7 +6097,7 @@ def test_q9_profit_matches_python(spark, lines):
         key = (f"NATION_{sk}", yr)
         agg[key] = agg.get(key, 0.0) + amount
     want = sorted(
-        ((n, y, _r2(v)) for (n, y), v in agg.items()),
+        ((n, y, half_up(v, 2)) for (n, y), v in agg.items()),
         key=lambda t: (t[0], -t[1]),
     )
     assert got == want
@@ -7509,44 +6106,25 @@ def test_q9_profit_matches_python(spark, lines):
 @given(
     st.lists(
         st.tuples(
-            st.booleans(),                               # in 1997?
+            st.booleans(),  # in 1997?
             st.sampled_from([0.04, 0.05, 0.06, 0.07, 0.08]),
-            st.integers(20, 28),                         # quantity around the <24 cut
-            st.integers(1, 30),                          # int-dollar price
+            st.integers(20, 28),  # quantity around the <24 cut
+            st.integers(1, 30),  # int-dollar price
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global sum
 def test_q6_scan_filter_matches_python(spark, lines):
     """Q6's float BETWEEN bounds and strict quantity cut vs python —
     the 0.05/0.07 discount literals are the same doubles both sides."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q6_forecast_revenue
-    import impala_refresher_spark.operators.tpch as tp
 
-    df = (
-        spark.createDataFrame(
-            [
-                (datetime(1997 if in97 else 1996, 5, 1), d, q * 1.0, p * 1.0)
-                for in97, d, q, p in lines
-            ],
-            "l_shipdate timestamp, l_discount double, l_quantity double, l_extendedprice double",
-        )
-        if lines
-        else spark.createDataFrame(
-            [],
-            "l_shipdate timestamp, l_discount double, l_quantity double, l_extendedprice double",
-        )
+    df = spark.createDataFrame(
+        [(datetime(1997 if in97 else 1996, 5, 1), d, q * 1.0, p * 1.0) for in97, d, q, p in lines],
+        "l_shipdate timestamp, l_discount double, l_quantity double, l_extendedprice double",
     )
-    orig = tp._t
-    tp._t = lambda spark, sf, name: df
-    try:
-        rows = tpch_q6_forecast_revenue(spark, "x").collect()
-    finally:
-        tp._t = orig
+    rows = run_on(spark, tpch_q6_forecast_revenue, df)
     assert len(rows) == 1
 
     kept = [
@@ -7554,31 +6132,27 @@ def test_q6_scan_filter_matches_python(spark, lines):
         for in97, d, q, p in lines
         if in97 and 0.05 <= d <= 0.07 and q < 24
     ]
-    want = _r2(sum(kept)) if kept else None
+    want = half_up(sum(kept), 2) if kept else None
     assert rows[0].revenue == want
 
 
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 4),           # custkey
-            st.booleans(),               # order in the quarter?
+            st.integers(1, 4),  # custkey
+            st.booleans(),  # order in the quarter?
             st.sampled_from(["R", "N"]),
             st.integers(0, 20),
             st.sampled_from([0.0, 0.5]),
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: a global top 20
 def test_q10_returned_revenue_matches_python(spark, lines):
     """Q10 vs python: quarter + returnflag filters, per-customer
     revenue, revenue-desc/custkey top-20."""
-    from datetime import datetime
-
     from impala_refresher_spark.operators.tpch import tpch_q10_returned_items
-    import impala_refresher_spark.operators.tpch as tp
 
     orders = [
         (i, ck, datetime(1997, 2 if inq else 6, 1))
@@ -7593,39 +6167,22 @@ def test_q10_returned_revenue_matches_python(spark, lines):
         "nation": spark.createDataFrame(
             [(0, "NATION_0"), (1, "NATION_1")], "n_nationkey long, n_name string"
         ),
-        "orders": spark.createDataFrame(
-            orders, "o_orderkey long, o_custkey long, o_orderdate timestamp"
-        )
-        if orders
-        else spark.createDataFrame(
-            [], "o_orderkey long, o_custkey long, o_orderdate timestamp"
-        ),
+        "orders": spark.createDataFrame(orders, "o_orderkey long, o_custkey long, o_orderdate timestamp"),
         "lineitem": spark.createDataFrame(
-            li,
-            "l_orderkey long, l_returnflag string, l_extendedprice double, l_discount double",
-        )
-        if li
-        else spark.createDataFrame(
-            [],
-            "l_orderkey long, l_returnflag string, l_extendedprice double, l_discount double",
+            li, "l_orderkey long, l_returnflag string, l_extendedprice double, l_discount double"
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.c_custkey, r.c_name, r.revenue, r.n_name)
-            for r in tpch_q10_returned_items(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.c_custkey, r.c_name, r.revenue, r.n_name)
+        for r in run_on(spark, tpch_q10_returned_items, tables)
+    ]
 
     rev: dict[int, float] = {}
     for ck, inq, rf, p, d in lines:
         if inq and rf == "R":
             rev[ck] = rev.get(ck, 0.0) + p * (1.0 - d)
     want = sorted(
-        ((ck, f"C{ck}", _r2(v), f"NATION_{ck % 2}") for ck, v in rev.items()),
+        ((ck, f"C{ck}", half_up(v, 2), f"NATION_{ck % 2}") for ck, v in rev.items()),
         key=lambda t: (-t[2], t[0]),
     )[:20]
     assert got == want
@@ -7633,19 +6190,20 @@ def test_q10_returned_revenue_matches_python(spark, lines):
 
 @given(
     st.lists(
-        st.tuples(st.integers(1, 4), st.integers(1, 4)),  # (partkey, suppkey)
-        min_size=0,
-        max_size=14,
+        st.tuples(
+            st.integers(1, 4),
+            st.integers(1, 4),
+        ),
+        min_size=0, max_size=14,  # (partkey, suppkey)
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: counts over fixed parts and all lines
 def test_q16_supplier_counts_match_python(spark, lines):
     """Q16 vs python: brand/type/size exclusion filters, COUNT DISTINCT
     suppliers, count-desc tie-broken ordering."""
     from impala_refresher_spark.operators.tpch import (
         tpch_q16_parts_supplier_counts,
     )
-    import impala_refresher_spark.operators.tpch as tp
 
     parts = [
         (1, "Brand#13", "SMALL ANODIZED", 5),   # excluded brand
@@ -7657,21 +6215,12 @@ def test_q16_supplier_counts_match_python(spark, lines):
         "part": spark.createDataFrame(
             parts, "p_partkey long, p_brand string, p_type string, p_size int"
         ),
-        "lineitem": spark.createDataFrame(
-            [(pk, sk) for pk, sk in lines], "l_partkey long, l_suppkey long"
-        )
-        if lines
-        else spark.createDataFrame([], "l_partkey long, l_suppkey long"),
+        "lineitem": spark.createDataFrame(lines, "l_partkey long, l_suppkey long"),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        got = [
-            (r.p_brand, r.p_type, r.p_size, r.supplier_cnt)
-            for r in tpch_q16_parts_supplier_counts(spark, "x").collect()
-        ]
-    finally:
-        tp._t = orig
+    got = [
+        (r.p_brand, r.p_type, r.p_size, r.supplier_cnt)
+        for r in run_on(spark, tpch_q16_parts_supplier_counts, tables)
+    ]
 
     supp = {s for pk, s in lines if pk == 4}
     want = [("Brand#3", "LARGE BRUSHED", 14, len(supp))] if supp else []
@@ -7681,21 +6230,19 @@ def test_q16_supplier_counts_match_python(spark, lines):
 @given(
     st.lists(
         st.tuples(
-            st.integers(1, 3),     # partkey -> (brand, size) rows below
-            st.integers(0, 40),    # quantity
-            st.integers(1, 20),    # int-dollar price
+            st.integers(1, 3),  # partkey -> (brand, size) rows below
+            st.integers(0, 40),  # quantity
+            st.integers(1, 20),  # int-dollar price
             st.sampled_from([0.0, 0.5]),
         ),
-        min_size=0,
-        max_size=10,
+        min_size=0, max_size=10,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global sum
 def test_q19_disjunctive_predicate_matches_python(spark, lines):
     """Q19's OR-of-ANDs spanning both join sides vs python — quantity
     boundaries inclusive on both ends per BETWEEN."""
     from impala_refresher_spark.operators.tpch import tpch_q19_discounted_revenue
-    import impala_refresher_spark.operators.tpch as tp
 
     parts = {1: ("Brand#12", 10), 2: ("Brand#23", 20), 3: ("Brand#4", 30)}
     tables = {
@@ -7706,19 +6253,9 @@ def test_q19_disjunctive_predicate_matches_python(spark, lines):
         "lineitem": spark.createDataFrame(
             [(pk, q * 1.0, p * 1.0, d) for pk, q, p, d in lines],
             "l_partkey long, l_quantity double, l_extendedprice double, l_discount double",
-        )
-        if lines
-        else spark.createDataFrame(
-            [],
-            "l_partkey long, l_quantity double, l_extendedprice double, l_discount double",
         ),
     }
-    orig = tp._t
-    tp._t = lambda spark, sf, name: tables[name]
-    try:
-        rows = tpch_q19_discounted_revenue(spark, "x").collect()
-    finally:
-        tp._t = orig
+    rows = run_on(spark, tpch_q19_discounted_revenue, tables)
     assert len(rows) == 1
 
     def match(pk, q):
@@ -7730,7 +6267,7 @@ def test_q19_disjunctive_predicate_matches_python(spark, lines):
         )
 
     kept = [p * (1.0 - d) for pk, q, p, d in lines if match(pk, q)]
-    want = _r2(sum(kept)) if kept else None
+    want = half_up(sum(kept), 2) if kept else None
     assert rows[0].revenue == want
 
 
@@ -7758,28 +6295,20 @@ def _v2_docs(draw):
 
 
 @given(_v2_docs())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: exact and span dedup keep the first copy corpus-wide
 def test_pipeline_v2_matches_python(spark, docs):
     """Corpus pipeline v2 (Gopher gate -> exact keep-first -> 8-word
     span drop) vs literal python over the same texts: gate thresholds
     inclusive, span keeper = lowest doc_id containing the gram."""
     from impala_refresher_spark.operators.pipeline import pipeline_training_corpus_v2
-    import impala_refresher_spark.operators.pipeline as pl
 
     df = spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string"
     )
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.doc_id: (r.lang, r.source, r.n_tokens)
-            for r in pipeline_training_corpus_v2(spark, "x").collect()
-        }
-    finally:
-        pl.load_table = orig
-
-    from collections import Counter
+    got = {
+        r.doc_id: (r.lang, r.source, r.n_tokens)
+        for r in run_on(spark, pipeline_training_corpus_v2, df)
+    }
 
     stop = {"the", "a", "of", "and", "to", "in"}
 
@@ -7819,27 +6348,20 @@ def test_pipeline_v2_matches_python(spark, docs):
     assert got == want
 
 
-@given(st.lists(st.integers(0, 10**6), min_size=1, max_size=20, unique=True))
-@settings(**_SETTINGS)
-def test_hash_sample_threshold_matches_python(spark, keys):
+@given(cases(st.lists(st.integers(0, 10**6), min_size=1, max_size=20, unique=True)))
+@batched
+def test_hash_sample_threshold_matches_python(spark, batch):
     """The md5-prefix deterministic sample: membership is exactly
     'first two hex chars <= 14' — string comparison, inclusive."""
-    import hashlib
-
     from impala_refresher_spark.operators.relational import (
         sample_hash_deterministic,
     )
-    import impala_refresher_spark.operators.relational as rel
 
+    keys = [k for (k,) in offset([[(k,) for k in ks] for ks in batch], (0,), k=10**7)]
     df = spark.createDataFrame(
         [(k, k * 1.0) for k in keys], "o_orderkey long, o_totalprice double"
     )
-    orig = rel._t
-    rel._t = lambda spark, sf, name: df
-    try:
-        got = {r.o_orderkey for r in sample_hash_deterministic(spark, "x").collect()}
-    finally:
-        rel._t = orig
+    got = {r.o_orderkey for r in run_on(spark, sample_hash_deterministic, df)}
 
     want = {
         k for k in keys if hashlib.md5(str(k).encode()).hexdigest()[:2] <= "14"
@@ -7856,28 +6378,9 @@ def test_hash_sample_threshold_matches_python(spark, keys):
 # ---------------------------------------------------------------------------
 
 
-def _half_up(v: float, places: int) -> float:
-    """Spark's ROUND: HALF_UP over the SHORTEST-DECIMAL repr of the
-    double (Java BigDecimal.valueOf = Double.toString; Python's repr
-    is the same shortest round-trip repr), unlike Python's banker's
-    round(). NB DuckDB differs at representability-boundary ties (it
-    rounds the exact binary value) — which is why query code rounds
-    money at scale 0 in the cents domain, where ties are exact."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-places)
-    return float(Decimal(repr(v)).quantize(q, rounding=ROUND_HALF_UP))
-
-
-@given(
-    st.lists(
-        st.lists(st.sampled_from("abcd"), min_size=0, max_size=8),
-        min_size=1,
-        max_size=8,
-    )
-)
-@settings(**_SETTINGS)
-def test_ngram_jaccard_pairs_match_bruteforce(spark, word_lists):
+@given(cases(st.lists(st.lists(st.sampled_from("abcd"), min_size=0, max_size=8), min_size=1, max_size=8)))
+@batched
+def test_ngram_jaccard_pairs_match_bruteforce(spark, batch):
     """The posting-list (self-join-free) 3-gram Jaccard plan must emit
     exactly the naive all-pairs >= 0.4 set: distinct word-3-gram
     shingles per doc, |A∩B|/|A∪B|, doc_a < doc_b — including docs
@@ -7885,22 +6388,15 @@ def test_ngram_jaccard_pairs_match_bruteforce(spark, word_lists):
     (jaccard 1.0), and ratios landing exactly on the 0.4 threshold."""
     import impala_refresher_spark.operators.dedup as dd
 
+    word_lists = _tag_words(batch)
     rows = [(i, " ".join(ws)) for i, ws in enumerate(word_lists)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in dd.dedup_ngram_jaccard(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
+    df = spark.createDataFrame(rows, DOCS)
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in run_on(spark, dd.dedup_ngram_jaccard, df)
+    }
 
-    def sh(ws):
-        return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
-
-    shingles = {i: sh(ws) for i, ws in enumerate(word_lists)}
+    shingles = {i: _shingles3(ws) for i, ws in enumerate(word_lists)}
     want = {}
     for a in shingles:
         for b in shingles:
@@ -7909,40 +6405,28 @@ def test_ngram_jaccard_pairs_match_bruteforce(spark, word_lists):
             inter = len(shingles[a] & shingles[b])
             union = len(shingles[a] | shingles[b])
             if 5 * inter >= 2 * union:  # inter/union >= 0.4, exact
-                want[(a, b)] = _half_up(inter / union, 4)
+                want[(a, b)] = half_up(inter / union, 4)
     assert got == want
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("abc"), min_size=0, max_size=10),
-        min_size=1,
-        max_size=8,
-    )
-)
-@settings(**_SETTINGS)
-def test_winnowing_fingerprints_match_python(spark, word_lists):
+@given(cases(st.lists(st.lists(st.sampled_from("abc"), min_size=0, max_size=10), min_size=1, max_size=8)))
+@batched
+def test_winnowing_fingerprints_match_python(spark, batch):
     """`fingerprint_winnowing` must emit exactly the from-spec MOSS
     pairs: md5-60-bit 3-gram hashes, min per full width-4 window
     (single clipped window for docs with 1..3 grams), distinct
     fingerprint VALUES per doc, pairs sharing >= 2 — under heavy
     gram repetition (3-letter alphabet), docs shorter than 3 tokens
     (never fingerprinted), and identical texts."""
-    import hashlib
-
     import impala_refresher_spark.operators.dedup as dd
 
+    word_lists = _tag_words(batch)
     rows = [(i, " ".join(ws)) for i, ws in enumerate(word_lists)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.doc_a, r.doc_b): (r.n_shared, r.n_fp_a, r.n_fp_b)
-            for r in dd.fingerprint_winnowing(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
+    df = spark.createDataFrame(rows, DOCS)
+    got = {
+        (r.doc_a, r.doc_b): (r.n_shared, r.n_fp_a, r.n_fp_b)
+        for r in run_on(spark, dd.fingerprint_winnowing, df)
+    }
 
     def fps(ws):
         if len(ws) < 3:
@@ -7969,15 +6453,9 @@ def test_winnowing_fingerprints_match_python(spark, word_lists):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from("abc"), min_size=0, max_size=20),
-        min_size=1,
-        max_size=8,
-    )
-)
-@settings(**_SETTINGS)
-def test_quote_containment_matches_python(spark, word_lists):
+@given(cases(st.lists(st.lists(st.sampled_from("abc"), min_size=0, max_size=20), min_size=1, max_size=8)))
+@batched
+def test_quote_containment_matches_python(spark, batch):
     """`quote_containment_join` must equal the from-spec model:
     first-12-token prefixes of every 7th doc, distinct 3-gram shingle
     containment |snip ∩ doc| / |snip| >= 0.8 against EVERY corpus doc
@@ -7986,52 +6464,44 @@ def test_quote_containment_matches_python(spark, word_lists):
     Ids stride by 7 so every doc is a snippet source."""
     import impala_refresher_spark.operators.dedup as dd
 
+    word_lists = _tag_words(batch)
     rows = [(i * 7, " ".join(ws)) for i, ws in enumerate(word_lists)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    orig = dd.load_table
-    dd.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.snip_id, r.doc_id): r.containment
-            for r in dd.quote_containment_join(spark, "x").collect()
-        }
-    finally:
-        dd.load_table = orig
-
-    def sh(ws):
-        return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
+    df = spark.createDataFrame(rows, DOCS)
+    got = {
+        (r.snip_id, r.doc_id): r.containment
+        for r in run_on(spark, dd.quote_containment_join, df)
+    }
 
     docs = {i * 7: ws for i, ws in enumerate(word_lists)}
     want = {}
     for sid, ws in docs.items():
-        snip = sh(ws[:12])
+        snip = _shingles3(ws[:12])
         if not snip:
             continue
         for did, dws in docs.items():
-            hit = len(snip & sh(dws))
+            hit = len(snip & _shingles3(dws))
+
             if 5 * hit >= 4 * len(snip):  # hit/|snip| >= 0.8, exact
-                want[(sid, did)] = _half_up(hit / len(snip), 4)
+                want[(sid, did)] = half_up(hit / len(snip), 4)
     assert got == want
 
 
 @given(
-    st.lists(
-        st.tuples(st.integers(1, 5), st.integers(1, 7), st.integers(0, 400)),
-        min_size=0,
-        max_size=12,
-    ),
-    st.lists(
+    cases(
         st.tuples(
-            st.integers(1, 6),
-            st.sampled_from(["1-URGENT", "3-MEDIUM", "5-LOW"]),
-        ),
-        min_size=0,
-        max_size=6,
-        unique_by=lambda t: t[0],
-    ),
+            st.lists(st.tuples(st.integers(1, 5), st.integers(1, 7), st.integers(0, 400)), max_size=12),
+            st.lists(
+                st.tuples(
+                    st.integers(1, 6),
+                    st.sampled_from(["1-URGENT", "3-MEDIUM", "5-LOW"]),
+                ),
+                max_size=6, unique_by=lambda t: t[0],
+            ),
+        )
+    )
 )
-@settings(**_SETTINGS)
-def test_salted_join_equals_plain_join(spark, items, orders):
+@batched
+def test_salted_join_equals_plain_join(spark, batch):
     """Skew-salting is a pure physical rewrite: the (key, salt)
     equi-join against the salt-replicated dimension must reproduce the
     plain join exactly — orphan fact rows drop out, matched rows are
@@ -8040,6 +6510,10 @@ def test_salted_join_equals_plain_join(spark, items, orders):
     order-independent and the comparison is exact."""
     import impala_refresher_spark.operators.relational as rel
 
+    # order keys take disjoint ranges per case; the priority, the group
+    # key, carries the case id
+    items = offset([c[0] for c in batch], (0,), k=10)
+    orders = [(ok + i * 10, f"{p}#{i}") for i, c in enumerate(batch) for ok, p in c[1]]
     li = spark.createDataFrame(
         [(ok, ln, q / 4.0) for ok, ln, q in items],
         "l_orderkey long, l_linenumber int, l_extendedprice double",
@@ -8048,15 +6522,10 @@ def test_salted_join_equals_plain_join(spark, items, orders):
         orders, "o_orderkey long, o_orderpriority string"
     )
     tables = {"lineitem": li, "orders": o}
-    orig = rel.load_table
-    rel.load_table = lambda spark, sf, name: tables[name]
-    try:
-        got = {
-            r.o_orderpriority: (r.revenue, r.n_items)
-            for r in rel.join_skew_salted(spark, "x").collect()
-        }
-    finally:
-        rel.load_table = orig
+    got = {
+        r.o_orderpriority: (r.revenue, r.n_items)
+        for r in run_on(spark, rel.join_skew_salted, tables)
+    }
 
     opri = dict(orders)
     agg: dict = {}
@@ -8065,7 +6534,7 @@ def test_salted_join_equals_plain_join(spark, items, orders):
             p = opri[ok]
             s, n = agg.get(p, (0.0, 0))
             agg[p] = (s + q / 4.0, n + 1)
-    want = {p: (_half_up(s, 2), n) for p, (s, n) in agg.items()}
+    want = {p: (half_up(s, 2), n) for p, (s, n) in agg.items()}
     assert got == want
 
 
@@ -8077,11 +6546,10 @@ def test_salted_join_equals_plain_join(spark, items, orders):
             st.sampled_from(["click", "view"]),
             st.integers(0, 100),
         ),
-        min_size=1,
-        max_size=16,
+        min_size=1, max_size=16,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: the refreshed day is the global last day
 def test_hypertable_incremental_refresh_matches_full_aggregate(
     spark, tmp_path_factory, evs
 ):
@@ -8125,51 +6593,45 @@ def test_hypertable_incremental_refresh_matches_full_aggregate(
         s, n = agg.get(key, (0.0, 0))
         agg[key] = (s + q / 4.0, n + 1)
     want = {
-        k: (n, _half_up(s, 2), _half_up(_half_up(s, 2) / n, 2))
+        k: (n, half_up(s, 2), half_up(half_up(s, 2) / n, 2))
         for k, (s, n) in agg.items()
     }
     assert got == want
 
 
 @given(
-    st.lists(
-        st.tuples(
-            st.integers(0, 40),
-            st.sampled_from(["en", "de"]),
-            st.integers(1, 50),
-        ),
-        min_size=1,
-        max_size=12,
-        unique_by=lambda t: t[0],
+    cases(
+        st.lists(
+            st.tuples(
+                st.integers(0, 40),
+                st.sampled_from(["en", "de"]),
+                st.integers(1, 50),
+            ),
+            min_size=1, max_size=12, unique_by=lambda t: t[0],
+        )
     )
 )
-@settings(**_SETTINGS)
-def test_weighted_reservoir_matches_python(spark, docs):
+@batched
+def test_weighted_reservoir_matches_python(spark, batch):
     """Efraimidis-Spirakis A-Res with the deterministic md5 uniform:
     the per-language window top-5 must equal the Python replica
     (log-space keys u^(1/w) as ln(u)/w, rounded to 9 dp, es_key DESC
     with doc_id tiebreak)."""
-    import hashlib
-    import math
-
     import impala_refresher_spark.operators.pipeline as pl
 
+    # the case id is folded into the language, the window's partition key
+    docs = [(d + i * 100, f"{lang}{i}", n) for i, c in enumerate(batch) for d, lang, n in c]
     df = spark.createDataFrame(docs, "doc_id long, lang string, n_chars int")
-    orig = pl.load_table
-    pl.load_table = lambda spark, sf, name: df
-    try:
-        got = [
-            (r.lang, r.doc_id, r.n_chars, r.rank)
-            for r in pl.sample_weighted_reservoir(spark, "x").collect()
-        ]
-    finally:
-        pl.load_table = orig
+    got = [
+        (r.lang, r.doc_id, r.n_chars, r.rank)
+        for r in run_on(spark, pl.sample_weighted_reservoir, df)
+    ]
 
     def key(doc_id, n_chars):
         u = (
             int(hashlib.md5(str(doc_id).encode()).hexdigest()[:8], 16) + 1.0
         ) / 4294967297.0
-        return _half_up(math.log(u) / n_chars, 9)
+        return half_up(math.log(u) / n_chars, 9)
 
     want = []
     for lang in sorted({d[1] for d in docs}):
@@ -8188,11 +6650,10 @@ def test_weighted_reservoir_matches_python(spark, docs):
             st.integers(0, 9),  # minute (event_id disambiguates ties)
             st.sampled_from(["signup", "click", "view", "buy", "churn"]),
         ),
-        min_size=0,
-        max_size=14,
+        min_size=0, max_size=14,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one graph walked from the literal 'signup'
 def test_recursive_reachability_matches_python_bfs(spark, evs):
     """The literal WITH RECURSIVE walk must equal a Python BFS over
     the per-user consecutive-transition graph: min hop count from
@@ -8207,21 +6668,8 @@ def test_recursive_reachability_matches_python_bfs(spark, evs):
         (u, eid, _BASE + timedelta(minutes=m), et)
         for eid, (u, m, et) in enumerate(evs)
     ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts timestamp, event_type string"
-    )
-    # r09: the operator derives the edge list via load_table (the
-    # recursive CTE now runs over a materialized edge view), so the
-    # injection seam is graph.load_table (bound at import), not
-    # register_views
-    import impala_refresher_spark.operators.graph as graph_mod
-
-    orig = graph_mod.load_table
-    graph_mod.load_table = lambda spark, sf, name: df
-    try:
-        got = {r.node: r.dist for r in sql_recursive_reachability(spark, "x").collect()}
-    finally:
-        graph_mod.load_table = orig
+    df = spark.createDataFrame(rows, "user_id long, event_id long, ts timestamp, event_type string")
+    got = {r.node: r.dist for r in run_on(spark, sql_recursive_reachability, df)}
 
     per_user: dict = {}
     for u, eid, ts, et in rows:
@@ -8250,14 +6698,14 @@ def test_recursive_reachability_matches_python_bfs(spark, evs):
         max_size=4,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: one global power iteration
 def test_pca_power_iteration_matches_python(spark, raw):
     """Two unrolled Gram-free power iterations v <- X^T(Xv) must equal
     the literal Python evaluation: strict L->R per-row dot folds, the
     (dim, sum) aggregate, ROUND-stabilized iteration vectors. Inputs
     are exact quarters so every sum is order-independent dyadic
     arithmetic and the comparison is exact (final 2-dp round via the
-    Spark-semantics _half_up)."""
+    Spark-semantics half_up)."""
     import impala_refresher_spark.operators.similarity as sim
 
     vecs = [[x / 4.0 for x in row] for row in raw]
@@ -8265,20 +6713,15 @@ def test_pca_power_iteration_matches_python(spark, raw):
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
-    orig = sim.load_table
-    sim.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            r.dim: r.loading
-            for r in sim.pca_power_iteration(spark, "x").collect()
-        }
-    finally:
-        sim.load_table = orig
+    got = {
+        r.dim: r.loading
+        for r in run_on(spark, sim.pca_power_iteration, df)
+    }
 
     # floats through a float32 column: quarters in [-2, 2] are exact
     s1 = [sum(x * 0.125 for x in v) for v in vecs]
     z1 = [
-        _half_up(sum(s * v[d] for s, v in zip(s1, vecs)), 4)
+        half_up(sum(s * v[d] for s, v in zip(s1, vecs)), 4)
         for d in range(64)
     ]
     s2 = []
@@ -8288,21 +6731,14 @@ def test_pca_power_iteration_matches_python(spark, raw):
             acc += v[i] * z1[i]
         s2.append(acc)
     want = {
-        d: _half_up(sum(s * v[d] for s, v in zip(s2, vecs)), 2)
+        d: half_up(sum(s * v[d] for s, v in zip(s2, vecs)), 2)
         for d in range(64)
     }
     assert got == want
 
 
-@given(
-    st.lists(
-        st.text(alphabet=list("ab é\U0001f4a7"), max_size=12)
-        | st.none(),
-        min_size=1,
-        max_size=6,
-    )
-)
-@settings(**_SETTINGS)
+@given(st.lists(st.text(alphabet=list("ab é\U0001f4a7"), max_size=12) | st.none(), min_size=1, max_size=6))
+@settings(**SETTINGS)  # one case per example: the operator reads only doc_id < 20
 def test_udtf_tokenize_matches_python(spark, texts):
     """The lateral-joined Python UDTF must equal enumerate(split(' ')):
     ordinals, tokens, and Python char lengths — across empty strings,
@@ -8310,17 +6746,13 @@ def test_udtf_tokenize_matches_python(spark, texts):
     NULL text (outer lateral join, one ('', 0) row at pos 0)."""
     import impala_refresher_spark.operators.udfs as ud
 
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    orig = ud.load_table
-    ud.load_table = lambda spark, sf, name: df
-    try:
-        got = sorted(
-            (r.doc_id, r.pos, r.token, r.tok_chars)
-            for r in ud.udtf_tokenize(spark, "x").collect()
-        )
-    finally:
-        ud.load_table = orig
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, DOCS)
+
+    got = sorted(
+        (r.doc_id, r.pos, r.token, r.tok_chars)
+        for r in run_on(spark, ud.udtf_tokenize, df)
+    )
 
     want = sorted(
         (i, pos, tok, len(tok))
@@ -8330,19 +6762,15 @@ def test_udtf_tokenize_matches_python(spark, texts):
     assert got == want
 
 
-@given(
-    st.lists(
-        st.lists(
-            st.sampled_from(["customer", "order", "x"]),
-            min_size=0,
-            max_size=6,
-        ),
-        min_size=1,
-        max_size=6,
-    )
+# cases of docs as token lists, for the term-serving indexes
+_TERM_DOCS = cases(
+    st.lists(st.lists(st.sampled_from(["customer", "order", "x"]), max_size=6), min_size=1, max_size=6)
 )
-@settings(**_SETTINGS)
-def test_inverted_index_lookup_matches_python(spark, tmp_path_factory, docs):
+
+
+@given(_TERM_DOCS)
+@batched
+def test_inverted_index_lookup_matches_python(spark, tmp_path_factory, batch):
     """Serving a term from the materialized token-bucket-partitioned
     posting index must equal the direct Python scan: every doc whose
     whitespace tokens include the term, with its exact term frequency
@@ -8354,7 +6782,8 @@ def test_inverted_index_lookup_matches_python(spark, tmp_path_factory, docs):
     )
 
     d = str(tmp_path_factory.mktemp("ii_sf"))
-    rows = [(i, " ".join(ws), "en", len(" ".join(ws))) for i, ws in enumerate(docs)]
+    docs = offset([list(enumerate(c)) for c in batch], (0,))
+    rows = [(i, " ".join(ws), "en", len(" ".join(ws))) for i, ws in docs]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, n_chars int"
     ).coalesce(1).write.parquet(f"{d}/documents.parquet")
@@ -8363,11 +6792,7 @@ def test_inverted_index_lookup_matches_python(spark, tmp_path_factory, docs):
         r.doc_id: (r.tf, r.lang, r.n_chars)
         for r in inverted_index_serve(spark, d).collect()
     }
-    want = {
-        i: (ws.count("customer"), "en", len(" ".join(ws)))
-        for i, ws in enumerate(docs)
-        if "customer" in ws
-    }
+    want = {i: (ws.count("customer"), "en", len(" ".join(ws))) for i, ws in docs if "customer" in ws}
     assert got == want
 
 
@@ -8399,27 +6824,21 @@ def chunk_corpus(draw):
     return [(i + 1, " ".join(f"t{j}" for j in range(n))) for i, n in enumerate(sizes)]
 
 
-@given(chunk_corpus())
-@settings(**_SETTINGS)
-def test_chunk_sliding_matches_python(spark, docs):
+@given(cases(chunk_corpus()))
+@batched
+def test_chunk_sliding_matches_python(spark, batch):
     """Every (doc, chunk) must equal the literal python slicing rule:
     starts at 0, S, 2S, ... with n_chunks = 1 + ceil(max(0, n-W)/S);
     windows clamp at the end; every token is covered; consecutive
     chunks overlap by exactly W - S (except a short last chunk)."""
-    import math
-
     import impala_refresher_spark.operators.text as txt
 
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    orig = txt.load_table
-    txt.load_table = lambda spark, sf, name: df
-    try:
-        got = {
-            (r.doc_id, r.chunk_id): (r.n_tokens, r.chunk_text)
-            for r in txt.text_chunk_sliding(spark, "x").collect()
-        }
-    finally:
-        txt.load_table = orig
+    docs = offset(batch, (0,))
+    df = spark.createDataFrame(docs, DOCS)
+    got = {
+        (r.doc_id, r.chunk_id): (r.n_tokens, r.chunk_text)
+        for r in run_on(spark, txt.text_chunk_sliding, df)
+    }
 
     W, S = txt._CHUNK_W, txt._CHUNK_S
     want = {}
@@ -8457,7 +6876,7 @@ def prefix_rows(draw):
 
 
 @given(prefix_rows(), st.booleans())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: global running sums
 def test_global_running_matches_naive_window(spark, rows, ascending):
     """`with_global_running` must equal the naive single-partition
     window on every row — for both sort directions, under key ties
@@ -8530,7 +6949,7 @@ def test_global_running_matches_naive_window(spark, rows, ascending):
 
 
 @given(prefix_rows(), st.booleans())
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: global row numbers
 def test_fused_row_numbers_match_naive_windows(spark, rows, ascending):
     """`with_global_row_numbers` (the fused multi-order pass) must
     equal a naive row_number window per spec — two specs over
@@ -8588,17 +7007,18 @@ def span_corpus(draw):
     return docs
 
 
-@given(span_corpus())
-@settings(**_SETTINGS)
-def test_span_removal_matches_python_interval_union(spark, docs):
+@given(cases(span_corpus()))
+@batched
+def test_span_removal_matches_python_interval_union(spark, batch):
     from impala_refresher_spark.operators.dedup import (
         _SPAN_N,
         span_removal_coverage,
     )
 
+    docs = _tag_words(batch)
     df = spark.createDataFrame(
         [(i, " ".join(toks)) for i, toks in enumerate(docs)],
-        "doc_id long, text string",
+        DOCS,
     )
     got = {
         r.doc_id: (r.n_tokens, r.n_dup_tokens)
@@ -8629,39 +7049,30 @@ def test_span_removal_matches_python_interval_union(spark, docs):
 
 @given(
     st.lists(
-        st.lists(
-            st.floats(
-                min_value=-2.0, max_value=2.0, allow_nan=False, width=32
-            ),
-            min_size=64,
-            max_size=64,
-        ),
+        st.lists(st.floats(min_value=-2.0, max_value=2.0, allow_nan=False, width=32), min_size=64, max_size=64),
         min_size=1,
         max_size=3,
     )
 )
-@settings(**_SETTINGS)
+@settings(**SETTINGS)  # one case per example: a batch of 64-float vectors overruns Hypothesis's buffer
 def test_random_projection_matches_python_fold(spark, vecs):
     """Spark's zip_with/aggregate fold (float32 widened to double,
     strict L→R) must agree with the identical python fold to within
     the final ROUND-6 display step (|round6(x) - x| <= 5e-7)."""
-    import numpy as np
-
     from impala_refresher_spark.operators.similarity import (
         _RP_K,
         _rp_sign,
         random_project,
     )
 
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
+    vecs = list(enumerate(vecs))
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+
     out = random_project(df).collect()
     assert len(out) == len(vecs) * _RP_K
     got = {(r.vec_id, r.pos): r.proj_val for r in out}
-    for i, v in enumerate(vecs):
-        stored = [float(np.float32(x)) for x in v]  # parquet float32
+    for i, v in vecs:
+        stored = _f32(v)  # parquet float32
         for j in range(_RP_K):
             acc = 0.0
             for k, x in enumerate(stored):
@@ -8670,35 +7081,24 @@ def test_random_projection_matches_python_fold(spark, vecs):
             assert abs(got[(i, j)] - want) <= 5e-7 + 1e-12, (i, j, want)
 
 
-@given(
-    st.lists(
-        st.lists(
-            st.sampled_from(["customer", "order", "x"]),
-            min_size=0,
-            max_size=6,
-        ),
-        min_size=1,
-        max_size=6,
-    )
-)
-@settings(**_SETTINGS)
-def test_delta_merge_lookup_matches_python(spark, tmp_path_factory, docs):
+@given(_TERM_DOCS)
+@batched
+def test_delta_merge_lookup_matches_python(spark, tmp_path_factory, batch):
     """M13: serving a term from the base+delta two-segment index must
     equal the direct Python scan WITH correct provenance — doc_ids are
     laid out as i+4 so the first doc always lands in the delta batch
     (doc_id % 13 == 4) and later docs in the base segment, proving the
     merged lookup is lossless across the segment split and that the
     delta segment genuinely serves (an empty/ignored delta would drop
-    the batch docs)."""
+    the batch docs); cases stride by a multiple of 13, so each case's
+    first doc is a delta doc."""
     from impala_refresher_spark.operators.lakehouse import (
         inverted_index_delta_merge,
     )
 
     d = str(tmp_path_factory.mktemp("dm_sf"))
-    rows = [
-        (i + 4, " ".join(ws), "en", len(" ".join(ws)))
-        for i, ws in enumerate(docs)
-    ]
+    docs = offset([[(i + 4, ws) for i, ws in enumerate(c)] for c in batch], (0,), k=13 * 10)
+    rows = [(i, " ".join(ws), "en", len(" ".join(ws))) for i, ws in docs]
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, n_chars int"
     ).coalesce(1).write.parquet(f"{d}/documents.parquet")
@@ -8708,12 +7108,9 @@ def test_delta_merge_lookup_matches_python(spark, tmp_path_factory, docs):
         for r in inverted_index_delta_merge(spark, d).collect()
     }
     want = {
-        i + 4: (
-            ws.count("customer"),
-            "delta" if (i + 4) % 13 == 4 else "base",
-            "en",
-        )
-        for i, ws in enumerate(docs)
+        i: (ws.count("customer"), "delta" if i % 13 == 4 else "base", "en")
+        for i, ws in docs
         if "customer" in ws
     }
+
     assert got == want
