@@ -10,10 +10,9 @@ source: oracled queries come first, oldest last-green round first
 (never-green and net-new names lead, name breaks ties), and the two
 rows-only native-sketch queries sit at the tail. The window rotates by
 itself whenever a ``CORRECTNESS_r*.json`` file lands. Nothing is
-re-queued by hand: a query whose transitive source changed is
-re-verified by a clean full-registry ``scripts/driver_sim.py --vanilla``
-sweep plus ``scripts/gen_ledger.py --rebaseline``, which the sweep
-certificate gates.
+re-queued by hand: any change to the package sources is re-verified by
+a clean full-registry ``scripts/driver_sim.py --vanilla`` sweep, whose
+certificate ``scripts/gen_ledger.py`` checks against the tree.
 """
 
 from __future__ import annotations

@@ -68,13 +68,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale
-# (region/nation are bounded by geography; supplier/part/customer are
-# broadcastable at test SFs but shuffle at 100 TB — joins mark only the
-# always-small ones for explicit broadcast and let AQE decide the rest).
-ALWAYS_BROADCAST = ("region", "nation")
-
-
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 # (applicationId, path) -> (key, schema); see the module docstring.

@@ -48,8 +48,7 @@ def main() -> None:
 
     from impala_refresher_spark.queries import ORACLES, QUERIES
 
-    sys.path.insert(0, "tests")
-    from oracle_util import compare, duckdb_conn
+    from tests.oracle_util import compare, duckdb_conn
 
     con = duckdb_conn(sf_dir)
     # Any non-numeric spec is a name list, so a single misspelled name
@@ -86,15 +85,14 @@ def main() -> None:
         print("FAILED:", failed)
         sys.exit(1)
 
-    # A clean FULL-registry vanilla sweep is the evidence gen_ledger's
-    # --rebaseline requires (r08): record it, tied to the exact package
-    # sources it exercised via the content hash.
+    # A clean FULL-registry vanilla sweep is the evidence gen_ledger
+    # checks: record it, tied to the exact package sources it exercised
+    # via the content hash.
     if vanilla and set(ok) >= set(ORACLES):
         import json
 
-        from scripts.gen_ledger import _package_hash
+        from scripts.gen_ledger import CERT_PATH, _package_hash
 
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         cert = {
             "sf_dir": sf_dir,
             "n_checked": len(names),
@@ -103,7 +101,12 @@ def main() -> None:
             "failed": [],
             "package_hash": _package_hash(),
         }
-        json.dump(cert, open(os.path.join(root, "SWEEP_CERT.json"), "w"), indent=1)
+        # Written aside and renamed into place, so a killed sweep leaves
+        # the previous cert (or none), never a truncated one.
+        tmp = f"{CERT_PATH}.{os.getpid()}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(cert, f, indent=1)
+        os.replace(tmp, CERT_PATH)
         print(f"SWEEP_CERT.json written (package_hash={cert['package_hash']})")
 
 

@@ -5,210 +5,56 @@ registered query's last driver-green round from
 ``queries.last_green_rounds`` (the same evidence that orders the
 registry, so the registry order is the upcoming driver window), and
 rewrites the "## Driver verification ledger" section (everything from
-that heading to the end of COVERAGE.md). Run after each round's
-CORRECTNESS file lands so the steady-state policy (SURVEY §7) stays
-auditable:
+that heading to the end of COVERAGE.md). After any change to the
+package sources, the ledger sequence is:
 
+    python scripts/driver_sim.py 248 /root/testdata/sf0.01 --vanilla
     python scripts/gen_ledger.py
 
+Freshness has one key: SWEEP_CERT.json, which ``driver_sim.py`` writes
+only after a clean full-registry ``--vanilla`` sweep, records the
+content hash of every runtime source it swept (``_package_hash``). The
+oracle evidence is about the code on disk iff that cert is current
+(``cert_current``). Like Impala's REFRESH, which invalidates a whole
+table's metadata, the key is coarse: any byte change to a package .py
+file or to ``__spark_entry__.py`` needs a fresh sweep.
+
 Status legend:
-- "green, unchanged"      — has a green driver row; code untouched since
-                            (ENFORCED: source+oracle content hash matches
-                            the one recorded at that green — see below).
+- "green, unchanged"      — has a green driver row and the cert is
+                            current.
 - "rNN window (...)"      — scheduled in the CURRENT round's 50-slot
                             registry window (first check or re-verify).
-- "STALE GREEN"           — has a green row but the query's source or
-                            oracle changed since, and it is NOT in the
-                            current window (must be empty — re-verify
-                            with a full sweep and --rebaseline; exits
-                            nonzero).
-- "BACKLOG"               — oracled but never hash-checked and NOT in
+- "STALE GREEN"           — has a green row, the cert is not current,
+                            and it is NOT in the current window (must be
+                            empty — run the sweep; exits nonzero).
+- "BACKLOG"               — oracled but never driver-green and NOT in
                             the current window (must be empty).
 - "rows-only by design"   — no SQL oracle on purpose; pytest contract.
-
-Hash enforcement (r05 ADVICE): the ledger used to TRUST that green
-evidence referred to the current code — the SURVEY §7 re-queue policy
-was manual. Now LEDGER_HASHES.json records, per query, a sha256 of the
-query's TRANSITIVE source + the oracle SQL as of the last time that
-query's green round advanced; on regeneration, a query whose current
-hash differs from the recorded one is downgraded out of
-"green, unchanged" and must sit in the current window or be
-re-verified by a full sweep plus ``--rebaseline``.
-
-Transitivity (r06 verdict item 2): hashing only
-``inspect.getsource(fn)`` missed edits to shared same-package helpers
-— the r06 ``_shingles`` rewrite changed five consumers' semantics
-surface without flipping a single recorded hash, and the re-queue
-obligation had to ride in a hand-written comment. ``_source_hash`` now
-walks the function's code object (including nested lambdas /
-comprehensions) for referenced globals, recursing into same-package
-functions (``_shingles``, ``minhash_signatures``, ``prefix.*`` …) and
-folding in the repr of referenced module-level constants
-(``_MAX_DF``, ``_BM25_SQL`` …), so a helper or constant edit
-mechanically stales every consumer. ``tests/test_ledger.py`` proves a
-helper edit fires STALE GREEN.
-
-r08 (judge ADVICE): the constant fold covers list/dict/set values too
-(``_AS``/``_BS``, ``_LEXICON``, ``_DQ_RULES`` — previously invisible),
-with set reprs order-normalized; and ``--rebaseline`` is no longer a
-one-flag bypass — it refuses unless SWEEP_CERT.json (written only by
-a clean FULL-registry ``driver_sim --vanilla`` run) covers every
-currently-oracled query at the exact package sources on disk
-(``rebaseline_allowed``).
-
-A list/dict/set constant folds by the source text of its module-level
-definition (plus whatever that definition reads), not by its run-time
-repr, so the hash does not depend on process state: a cache such as
-``tables._SCHEMAS`` filling up no longer changes every consumer's hash.
-Immutable constants keep the repr fold.
 """
 
 from __future__ import annotations
 
-import ast
 import glob
 import hashlib
-import inspect
 import json
 import os
 import re
 import sys
-import types
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 HEADING = "## Driver verification ledger (last green round per query)"
-HASHES_PATH = os.path.join(ROOT, "LEDGER_HASHES.json")
+CERT_PATH = os.path.join(ROOT, "SWEEP_CERT.json")
 _PACKAGE = "impala_refresher_spark"
-
-
-def _referenced_names(fn) -> set[str]:
-    """Global names referenced by ``fn``'s code object, including from
-    nested code objects (lambdas, comprehensions, inner defs)."""
-    code = getattr(fn, "__code__", None)
-    names: set[str] = set()
-    stack = [code] if code is not None else []
-    while stack:
-        c = stack.pop()
-        names.update(c.co_names)
-        for const in c.co_consts:
-            if isinstance(const, types.CodeType):
-                stack.append(const)
-    return names
-
-
-def _const_repr(obj) -> str:
-    """Deterministic repr for hashable-into-the-ledger constants.
-    Sets iterate in hash order (PYTHONHASHSEED-dependent for strings),
-    so set-typed constants are rendered as sorted element reprs — at
-    ANY nesting depth (r08 judge: a set nested inside a list/dict
-    constant would otherwise repr in hash order and flip the
-    transitive hash between interpreter runs). list/tuple/dict
-    preserve source order; their VALUES recurse through this fn."""
-    if isinstance(obj, (set, frozenset)):
-        inner = ", ".join(sorted(_const_repr(x) for x in obj))
-        return f"{type(obj).__name__}({{{inner}}})"
-    if isinstance(obj, (list, tuple)):
-        inner = ", ".join(_const_repr(x) for x in obj)
-        if isinstance(obj, tuple):
-            return f"({inner},)" if len(obj) == 1 else f"({inner})"
-        return f"[{inner}]"
-    if isinstance(obj, dict):
-        inner = ", ".join(
-            f"{_const_repr(k)}: {_const_repr(v)}" for k, v in obj.items()
-        )
-        return f"{{{inner}}}"
-    return repr(obj)
-
-
-# Constant types folded into the transitive hash. r08 (judge ADVICE):
-# list/dict/set joined the original scalar/tuple set — editing _AS /
-# _BS (MinHash coefficients), _LEXICON, _DQ_RULES and every other
-# list-valued module constant now mechanically stales its consumers.
-_CONST_TYPES = (str, bytes, int, float, bool, tuple, frozenset, list, dict, set)
-# Folded by their definition, not their run-time repr (module docstring).
-_MUTABLE_TYPES = (list, dict, set)
-
-
-def _definition(path: str | None, name: str) -> tuple[str, set[str]] | None:
-    """Source text of the module-level statements in ``path`` that bind
-    ``name`` (assignment, annotated or augmented), and the names their
-    values read; None when the module does not bind it at top level."""
-    if not path or not path.endswith(".py"):
-        return None
-    with open(path) as f:
-        src = f.read()
-    stmts = [
-        node
-        for node in ast.parse(src).body
-        if isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign))
-        and any(
-            isinstance(t, ast.Name) and t.id == name
-            for target in (node.targets if isinstance(node, ast.Assign) else [node.target])
-            for t in ast.walk(target)
-        )
-    ]
-    if not stmts:
-        return None
-    reads = {
-        n.id
-        for node in stmts
-        if node.value is not None
-        for n in ast.walk(node.value)
-        if isinstance(n, ast.Name)
-    }
-    return "\n".join(ast.get_source_segment(src, node) for node in stmts), reads
-
-
-def _collect_sources(fn, package: str, seen: set[int], out: list[str]) -> None:
-    """Append ``fn``'s source plus, recursively, the source of every
-    same-package function and the fold of every simple module-level
-    constant it references. Deterministic: contributions are gathered
-    in sorted-name order at each level."""
-    if id(fn) in seen:
-        return
-    seen.add(id(fn))
-    try:
-        out.append(inspect.getsource(fn))
-    except (OSError, TypeError):
-        out.append(repr(fn))
-    _fold_globals(_referenced_names(fn), getattr(fn, "__globals__", {}), package, seen, out)
-
-
-def _fold_globals(
-    names: set[str], g: dict, package: str, seen: set[int], out: list[str]
-) -> None:
-    """Fold each of ``names`` as looked up in the module globals ``g``:
-    a same-package function by its transitive source, a mutable
-    container by the source of its definition plus, recursively, the
-    names that definition reads (``_AS`` reads ``_MINHASH_K``), and any
-    other constant by its repr. Each function and container folds once."""
-    for nm in sorted(names):
-        obj = g.get(nm)
-        if obj is None:
-            continue
-        if isinstance(obj, types.FunctionType) and getattr(
-            obj, "__module__", ""
-        ).startswith(package):
-            _collect_sources(obj, package, seen, out)
-        elif isinstance(obj, _MUTABLE_TYPES) and (
-            found := _definition(g.get("__file__"), nm)
-        ):
-            if id(obj) in seen:
-                continue
-            seen.add(id(obj))
-            out.append(found[0])
-            _fold_globals(found[1], g, package, seen, out)
-        elif isinstance(obj, _CONST_TYPES):
-            out.append(f"{nm}={_const_repr(obj)}")
 
 
 def _package_hash(root: str = ROOT) -> str:
     """Content hash of every runtime source a sweep certifies: the
     package's .py files plus the driver entry. Used to tie a
     SWEEP_CERT.json to the exact code it swept — robust to doc-only
-    commits (unlike a git SHA) and to a dirty working tree."""
+    commits (unlike a git SHA), to a dirty working tree and to the
+    checkout path."""
     h = hashlib.sha256()
     paths = sorted(
         glob.glob(os.path.join(root, _PACKAGE, "**", "*.py"), recursive=True)
@@ -223,22 +69,28 @@ def _package_hash(root: str = ROOT) -> str:
 
 # Fixture dirs a SWEEP_CERT may cite (TESTDATA.md: the three
 # driver-generated scale factors). Anything else — however green —
-# does not authorize a rebaseline.
+# is no evidence.
 _ACCEPTED_SF_DIRS = frozenset(
     f"/root/testdata/sf{sf}" for sf in ("0.001", "0.01", "0.1")
 )
 
 
-def rebaseline_allowed(
+def load_cert(path: str = CERT_PATH) -> dict | None:
+    """The sweep certificate, or None if no clean full sweep wrote one."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def cert_current(
     cert: dict | None, oracled: set[str], pkg_hash: str
 ) -> tuple[bool, str]:
-    """Mechanical precondition for --rebaseline (r07 judge ADVICE: the
-    flag used to be a one-flag bypass of the stale gate, its
-    legitimacy requirement living only in a comment). A rebaseline is
-    evidence-backed iff a SWEEP_CERT.json — written ONLY by
-    scripts/driver_sim.py after a full-registry --vanilla run with 0
-    failures — covers every currently-oracled query AND certifies the
-    exact package sources on disk right now."""
+    """Whether the sweep evidence is about the code on disk: a
+    SWEEP_CERT.json — written ONLY by scripts/driver_sim.py after a
+    full-registry --vanilla run with 0 failures — covers every
+    currently-oracled query, certifies the exact package sources on
+    disk right now, and swept a driver-generated fixture dir."""
     if cert is None:
         return False, "no SWEEP_CERT.json (run a full-registry driver_sim sweep first)"
     if cert.get("failed"):
@@ -251,9 +103,6 @@ def rebaseline_allowed(
             "package sources changed since the sweep "
             f"(cert {cert.get('package_hash')} != current {pkg_hash})"
         )
-    # r08 judge: the cert used to bind only the CODE, so a sweep over
-    # an arbitrary tiny/synthetic fixture dir would authorize a
-    # rebaseline. Accept only the driver-generated fixture set.
     if cert.get("sf_dir") not in _ACCEPTED_SF_DIRS:
         return False, (
             f"sweep fixture dir {cert.get('sf_dir')!r} is not one of the "
@@ -262,27 +111,16 @@ def rebaseline_allowed(
     return True, "ok"
 
 
-def _source_hash(fn, oracle: str | None, package: str = _PACKAGE) -> str:
-    parts: list[str] = []
-    _collect_sources(fn, package, set(), parts)
-    h = hashlib.sha256()
-    for p in parts:
-        h.update(p.encode())
-        h.update(b"\x00")
-    h.update((oracle or "").encode())
-    return h.hexdigest()[:16]
-
-
 def compute_statuses(
     names: list[str],
     oracled: set[str],
     last_green: dict[str, int],
-    stored: dict[str, dict],
-    current: dict[str, str],
+    fresh: bool,
     window: set[str],
     cur: int,
 ) -> tuple[list[tuple[str, str, str]], list[str], list[str]]:
-    """Pure status computation (unit-tested in tests/test_ledger.py).
+    """Pure status computation (unit-tested in tests/test_ledger.py);
+    ``fresh`` is ``cert_current``'s verdict.
 
     Returns (rows, backlog, stale) where rows = [(name, last_green_str,
     status)]. BACKLOG / STALE GREEN must be empty for a clean exit."""
@@ -294,18 +132,17 @@ def compute_statuses(
             lg, status = "—", "rows-only by design (pytest accuracy contract)"
         elif n in last_green:
             lg = f"r{last_green[n]:02d}"
-            changed = stored.get(n, {}).get("hash") != current[n]
             if n in window:
                 status = f"r{cur:02d} window (re-verify)"
-            elif changed:
-                status = "STALE GREEN (source changed since green; re-queue!)"
+            elif not fresh:
+                status = "STALE GREEN (source changed since the sweep; re-sweep!)"
                 stale.append(n)
             else:
                 status = "green, unchanged"
         else:
             lg = "never"
             if n in window:
-                status = f"r{cur:02d} window (first hash check)"
+                status = f"r{cur:02d} window (first check)"
             else:
                 status = "BACKLOG"
                 backlog.append(n)
@@ -326,41 +163,7 @@ def main() -> None:
     # The registry order is the next driver window (queries.py).
     names = list(QUERIES)
     window = set(names[:50])
-
-    stored: dict[str, dict] = {}
-    if os.path.exists(HASHES_PATH):
-        stored = json.load(open(HASHES_PATH))
-    current = {
-        n: _source_hash(QUERIES[n], ORACLES.get(n)) for n in names
-    }
-    # Advance the recorded hash whenever a query's green round advanced
-    # (that green certified the code as it exists NOW — gen_ledger runs
-    # right after each round's CORRECTNESS file lands, before new edits).
-    # --rebaseline: rewrite EVERY stored hash with the current
-    # algorithm/code, keeping green rounds — needed whenever the hash
-    # ALGORITHM changes (old hashes are incomparable; r07: transitive,
-    # r08: list/dict/set constants). r08: no longer a one-flag bypass —
-    # gated on SWEEP_CERT.json evidence (rebaseline_allowed above).
-    rebaseline = "--rebaseline" in sys.argv[1:]
-    if rebaseline:
-        cert = None
-        cert_path = os.path.join(ROOT, "SWEEP_CERT.json")
-        if os.path.exists(cert_path):
-            cert = json.load(open(cert_path))
-        allowed, why = rebaseline_allowed(cert, set(ORACLES), _package_hash())
-        if not allowed:
-            print(f"--rebaseline REFUSED: {why}")
-            sys.exit(2)
-    for n in names:
-        lg = last_green.get(n)
-        if lg is None:
-            continue
-        rec = stored.get(n)
-        if rec is None or lg > rec.get("green_round", 0) or rebaseline:
-            stored[n] = {"green_round": lg, "hash": current[n]}
-    json.dump(
-        {n: stored[n] for n in sorted(stored)}, open(HASHES_PATH, "w"), indent=1
-    )
+    fresh, why = cert_current(load_cert(), set(ORACLES), _package_hash())
 
     lines = [
         HEADING,
@@ -369,19 +172,19 @@ def main() -> None:
         "`scripts/gen_ledger.py`; regenerate after each round. "
         f"`r{cur:02d}` rows are scheduled in the current round's driver "
         "window (registry slots 1-50; the registry is ordered oldest "
-        "driver evidence first, see `queries.py`). Policy: any code or "
-        "oracle change to a driver-green query must be re-verified by a "
-        "full-registry `driver_sim.py --vanilla` sweep plus "
-        "`gen_ledger.py --rebaseline` — ENFORCED by source hashes "
-        "(LEDGER_HASHES.json): \"green, unchanged\" additionally asserts "
-        "the query's source + oracle hash matches the one recorded at its "
-        "last green. The BACKLOG and STALE GREEN statuses must never appear.",
+        "driver evidence first, see `queries.py`). Policy: any change to "
+        "the package sources must be re-verified by a full-registry "
+        "`driver_sim.py --vanilla` sweep — ENFORCED by SWEEP_CERT.json: "
+        "\"green, unchanged\" additionally asserts that the cert covers "
+        "every oracled query with 0 failures and that its package hash "
+        "matches the sources on disk. The BACKLOG and STALE GREEN "
+        "statuses must never appear.",
         "",
         "| Query | Last driver-green | Status |",
         "|---|---|---|",
     ]
     rows, backlog, stale = compute_statuses(
-        names, set(ORACLES), last_green, stored, current, window, cur
+        names, set(ORACLES), last_green, fresh, window, cur
     )
     for n, lg, status in rows:
         lines.append(f"| `{n}` | {lg} | {status} |")
@@ -398,7 +201,7 @@ def main() -> None:
         if backlog:
             print("BACKLOG (oracled, never checked, outside window):", backlog)
         if stale:
-            print("STALE GREEN (source changed, outside window):", stale)
+            print(f"STALE GREEN (sweep cert not current: {why}):", stale)
         sys.exit(1)
 
 

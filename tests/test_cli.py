@@ -18,7 +18,7 @@ def _run(*argv: str) -> subprocess.CompletedProcess:
         [sys.executable, "-m", "impala_refresher_spark", *argv],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         env=_ENV,
         timeout=180,
     )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from impala_refresher_spark.operators.asof import asof_join
 from impala_refresher_spark.operators.dedup import _shingles
 from impala_refresher_spark.sources.tables import fan_out
+from tests.oracle_util import compare
 
 
 def _ts(m):
@@ -424,13 +425,8 @@ def test_km_survival_zero_factor_cutover(spark, tmp_path):
     while DuckDB's LN(0) errors; this pins the guarded cutover and the
     Spark/oracle agreement on a manufactured d == n input the fixture
     may never produce."""
-    import sys
-
     from impala_refresher_spark.operators.evaluation import survival_user_retention
     from impala_refresher_spark.registry import ORACLES
-
-    sys.path.insert(0, "tests")
-    from oracle_util import compare
 
     from datetime import timedelta
 
@@ -498,10 +494,6 @@ def test_zscore_zero_variance_group_yields_no_rows_not_error(spark, tmp_path):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
         )
-    import sys
-
-    sys.path.insert(0, "tests")
-    from oracle_util import compare
 
     compare(outlier_orders_zscore(spark, d), con, ORACLES["outlier_orders_zscore"])
 
@@ -517,7 +509,6 @@ def test_char_entropy_degenerate_texts(spark, tmp_path):
 
     from impala_refresher_spark.operators.text import quality_char_entropy
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     docs = [
@@ -550,7 +541,6 @@ def test_int8_quantize_zero_vector_excluded(spark, tmp_path):
         int8_quantize_vectors,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     spark.createDataFrame(
@@ -580,7 +570,6 @@ def test_nearest_event_same_ts_clicks_pick_min_id(spark, tmp_path):
 
     from impala_refresher_spark.operators.asof import nearest_event_join
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     def t(s):
         return datetime(2024, 1, 1, 0, 0, s)
@@ -634,7 +623,6 @@ def test_zero_norm_embedding_cosine_family_matches_oracle(spark, tmp_path):
         knn_join_topk,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     def base_vec(seed: int) -> list:
         # exact-quarter floats: float32 -> double conversion is lossless
@@ -687,7 +675,6 @@ def test_zero_total_revenue_ratios_null_not_error(spark, tmp_path):
         revenue_share_by_nation,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     spark.createDataFrame(
@@ -739,7 +726,6 @@ def test_pivot_unpivot_null_edges_match_oracle(spark, tmp_path):
 
     from impala_refresher_spark.operators.relational import agg_pivot, unpivot_metrics
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     spark.createDataFrame(
@@ -785,7 +771,6 @@ def test_rollup_grouping_sets_null_values_match_oracle(spark, tmp_path):
         agg_rollup,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     spark.createDataFrame(
@@ -815,7 +800,6 @@ def test_csv_roundtrip_embedded_newlines_lossless(spark, tmp_path):
 
     from impala_refresher_spark.registry import ORACLES
     from impala_refresher_spark.sources.sinks import sink_csv_roundtrip
-    from oracle_util import compare
 
     d = str(tmp_path)
     rows = [
@@ -857,7 +841,6 @@ def test_join_family_null_keys_match_oracle(spark, tmp_path):
         join_semi,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     spark.createDataFrame(
@@ -904,7 +887,6 @@ def test_date_functions_boundary_dates_match_oracle(spark, tmp_path):
     from impala_refresher_spark.functions.scalar import fn_dates
     from impala_refresher_spark.operators.analytics import cohort_retention
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
     import impala_refresher_spark.functions.scalar as sc
 
     d = str(tmp_path)
@@ -946,7 +928,6 @@ def test_unicode_text_hashing_and_lengths_match_oracle(spark, tmp_path):
         token_count_regex,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     docs = [
@@ -977,7 +958,6 @@ def test_fn_math_negative_price_log_domain_matches_oracle(spark, tmp_path):
 
     from impala_refresher_spark.functions.scalar import fn_math
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     spark.createDataFrame(
@@ -1040,7 +1020,6 @@ def test_chunk_sliding_boundary_docs_match_oracle(spark, tmp_path):
         text_chunk_sliding,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     W, S = _CHUNK_W, _CHUNK_S
@@ -1076,7 +1055,6 @@ def test_rrf_fusion_one_sided_candidates_match_oracle(spark, tmp_path):
 
     from impala_refresher_spark.operators.text import retrieval_rrf_fusion
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     docs = [
@@ -1133,7 +1111,6 @@ def test_new_dedup_family_degenerate_docs(spark, tmp_path):
         quote_containment_join,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     doc_a = " ".join(f"t{i}" for i in range(1, 21))       # 20 tokens
@@ -1202,7 +1179,6 @@ def test_fn_json_adversarial_props(spark, tmp_path):
 
     from impala_refresher_spark.functions.scalar import fn_json
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     rows = [
@@ -1252,7 +1228,6 @@ def test_fn_variant_shred_adversarial_props(spark, tmp_path):
 
     from impala_refresher_spark.functions.scalar import fn_variant_shred
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     rows = [
@@ -1309,7 +1284,6 @@ def test_levenshtein_unicode_dialect_limitation(spark, tmp_path):
 
     from impala_refresher_spark.operators.linkage import fuzzy_join_part_names
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
     from pyspark.sql import functions as F
 
     d = str(tmp_path)
@@ -1350,7 +1324,6 @@ def test_fn_strings_ascii_parity_and_case_mapping_limitation(spark, tmp_path):
 
     from impala_refresher_spark.functions.scalar import fn_strings
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
     from pyspark.sql import functions as F
 
     d = str(tmp_path)
@@ -1388,7 +1361,6 @@ def test_span_removal_interval_union_hand_values(spark, tmp_path):
 
     from impala_refresher_spark.operators.dedup import dedup_span_removal
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     shared = " ".join(f"t{i}" for i in range(10))  # t0..t9
@@ -1434,7 +1406,6 @@ def test_random_projection_basis_and_zero_vectors(spark, tmp_path):
         embed_random_projection,
     )
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     basis = [1.0] + [0.0] * 63
@@ -1468,7 +1439,6 @@ def test_ngram_jaccard_df_cap_parity_when_cap_fires(spark, tmp_path, monkeypatch
 
     from impala_refresher_spark.operators import dedup
     from impala_refresher_spark.registry import ORACLES
-    from oracle_util import compare
 
     d = str(tmp_path)
     docs = [

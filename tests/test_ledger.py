@@ -1,244 +1,56 @@
-"""Tests for the stale-green ledger gate (scripts/gen_ledger.py).
+"""Tests for the stale-green ledger gate (scripts/gen_ledger.py) and
+the probe-normalized bench comparison (scripts/bench_compare.py).
 
-The r06 verdict's item 2: the per-query source hash missed edits to
-shared same-package helpers (the ``_shingles`` episode — a semantics-
-relevant helper changed after certification and the mechanical gate
-stayed silent). These tests prove the transitive hash closes that
-blind spot: editing a helper (or a referenced module-level constant)
-in a scratch package flips every consumer's hash, and the status
-computation then fires STALE GREEN for any consumer outside the
-current window.
-
-Pure hashing + status logic; only the live-ledger check uses the Spark
-session, to fill a run-time cache between two hashings.
+The ledger's one freshness key is SWEEP_CERT.json: a clean full-registry
+vanilla sweep tied to the package sources by a content hash. These
+tests check the cert gate's cases, the status computation it feeds, and
+the committed tree's cert. Pure logic; no Spark session.
 """
 
 from __future__ import annotations
 
-import importlib
 import os
 import sys
-import textwrap
-
-import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.gen_ledger import _source_hash, compute_statuses  # noqa: E402
-
-_PKG_V1 = '''
-_SCALE = 3
-
-def _helper(x):
-    return x * _SCALE
-
-def query_a(spark, sf_dir):
-    return _helper(1)
-
-def query_b(spark, sf_dir):
-    return 42
-'''
-
-_PKG_HELPER_EDIT = _PKG_V1.replace("return x * _SCALE", "return x * _SCALE + 1")
-_PKG_CONST_EDIT = _PKG_V1.replace("_SCALE = 3", "_SCALE = 4")
-_PKG_LAMBDA = '''
-_SCALE = 3
-
-def _helper(x):
-    return x * _SCALE
-
-def query_a(spark, sf_dir):
-    return (lambda v: _helper(v))(1)
-
-def query_b(spark, sf_dir):
-    return 42
-'''
+from scripts.gen_ledger import compute_statuses  # noqa: E402
 
 
-def _load_scratch_pkg(tmp_path, name: str, body: str):
-    """Write a one-module scratch package and import its module fresh."""
-    pkg = tmp_path / name
-    pkg.mkdir(parents=True)
-    (pkg / "__init__.py").write_text("")
-    (pkg / "ops.py").write_text(textwrap.dedent(body))
-    sys.path.insert(0, str(tmp_path))
-    try:
-        for m in (name, f"{name}.ops"):
-            sys.modules.pop(m, None)
-        mod = importlib.import_module(f"{name}.ops")
-    finally:
-        sys.path.pop(0)
-    return mod
+def test_stale_green_fires_outside_window():
+    """A cert that is not current flags every green oracled query
+    outside the window as STALE GREEN (the nonzero-exit condition in
+    gen_ledger.main); a current cert flags none. BACKLOG (oracled,
+    never green, outside the window) does not depend on the cert."""
+    names = ["q_in", "q_out", "q_never", "q_never_in", "q_rows"]
+    oracled = set(names) - {"q_rows"}
+    last_green = {"q_in": 6, "q_out": 6}
+    window = {"q_in", "q_never_in"}
 
-
-def _hashes(tmp_path, name, body):
-    mod = _load_scratch_pkg(tmp_path, name, body)
-    return {
-        "query_a": _source_hash(mod.query_a, "SELECT 1", package=name),
-        "query_b": _source_hash(mod.query_b, "SELECT 2", package=name),
-    }
-
-
-def test_helper_edit_flips_consumer_hash(tmp_path):
-    """Editing a helper's BODY (the query's own source unchanged) must
-    flip the consumer's hash — the exact _shingles failure mode."""
-    h1 = _hashes(tmp_path / "a", "scratchpkg1", _PKG_V1)
-    h2 = _hashes(tmp_path / "b", "scratchpkg1", _PKG_HELPER_EDIT)
-    assert h1["query_a"] != h2["query_a"], "helper edit invisible to consumer"
-    assert h1["query_b"] == h2["query_b"], "non-consumer must be unaffected"
-
-
-def test_constant_edit_flips_consumer_hash(tmp_path):
-    """Module-level constants referenced transitively (_MAX_DF-class)
-    are part of the hash."""
-    h1 = _hashes(tmp_path / "a", "scratchpkg2", _PKG_V1)
-    h2 = _hashes(tmp_path / "b", "scratchpkg2", _PKG_CONST_EDIT)
-    assert h1["query_a"] != h2["query_a"], "constant edit invisible"
-    assert h1["query_b"] == h2["query_b"]
-
-
-def test_helper_reference_inside_lambda_is_seen(tmp_path):
-    """References from nested code objects (lambdas — the dominant
-    shape in this package's zip_with/transform pipelines) count."""
-    h1 = _hashes(tmp_path / "a", "scratchpkg3", _PKG_LAMBDA)
-    h2 = _hashes(
-        tmp_path / "b",
-        "scratchpkg3",
-        _PKG_LAMBDA.replace("return x * _SCALE", "return x * _SCALE + 1"),
-    )
-    assert h1["query_a"] != h2["query_a"]
-
-
-def test_stale_green_fires_outside_window(tmp_path):
-    """End-to-end status logic: a green query whose transitive hash
-    changed and which is NOT in the window must be STALE GREEN (the
-    nonzero-exit condition in gen_ledger.main)."""
-    h1 = _hashes(tmp_path / "a", "scratchpkg4", _PKG_V1)
-    h2 = _hashes(tmp_path / "b", "scratchpkg4", _PKG_HELPER_EDIT)
-    names = ["query_a", "query_b"]
-    oracled = {"query_a", "query_b"}
-    last_green = {"query_a": 6, "query_b": 6}
-    stored = {n: {"green_round": 6, "hash": h1[n]} for n in names}
-    # window holds neither → the edited consumer must be flagged
     rows, backlog, stale = compute_statuses(
-        names, oracled, last_green, stored, h2, window=set(), cur=7
+        names, oracled, last_green, fresh=False, window=window, cur=7
     )
-    assert stale == ["query_a"]
-    assert backlog == []
-    status = dict((n, s) for n, _, s in rows)
-    assert "STALE GREEN" in status["query_a"]
-    assert status["query_b"] == "green, unchanged"
-    # re-queued into the window → clean
+    assert stale == ["q_out"]
+    assert backlog == ["q_never"]
+    status = {n: s for n, _, s in rows}
+    assert "STALE GREEN" in status["q_out"]
+    assert status["q_in"] == "r07 window (re-verify)"
+    assert status["q_never_in"].startswith("r07 window")
+    assert status["q_rows"].startswith("rows-only by design")
+
     rows, backlog, stale = compute_statuses(
-        names, oracled, last_green, stored, h2, window={"query_a"}, cur=7
+        names, oracled, last_green, fresh=True, window=window, cur=7
     )
-    assert stale == [] and backlog == []
+    assert stale == []
+    assert backlog == ["q_never"]
+    assert {n: s for n, _, s in rows}["q_out"] == "green, unchanged"
 
 
-def test_real_package_transitivity_shingles():
-    """The motivating case on the real package: _shingles' source is a
-    hash input for every consumer the r06 ledger missed."""
-    from impala_refresher_spark.queries import ORACLES, QUERIES
-    from scripts.gen_ledger import _collect_sources
-    import inspect
-    from impala_refresher_spark.operators import dedup
-
-    shingle_src = inspect.getsource(dedup._shingles)
-    for name in (
-        "dedup_ngram_jaccard",
-        "dedup_minhash_lsh",
-        "dedup_minhash_incremental",
-        "decontaminate_train_set",
-        "quote_containment_join",
-    ):
-        parts: list[str] = []
-        _collect_sources(QUERIES[name], "impala_refresher_spark", set(), parts)
-        assert shingle_src in parts, f"{name} hash misses _shingles"
-    # and a non-consumer does not pull it in
-    parts = []
-    _collect_sources(
-        QUERIES["dedup_exact"], "impala_refresher_spark", set(), parts
-    )
-    assert shingle_src not in parts
-
-
-_PKG_LIST = '''
-_K = 3
-_COEFFS = [3, 5, 7]
-_RULES = {"min_len": 2}
-_STOP = {"a", "the"}
-_SEEDS = [i * 2 for i in range(_K)]
-_CACHE = {}
-
-def _helper(x):
-    _CACHE[x] = x
-    return x * _COEFFS[0] + _RULES["min_len"] + len(_STOP) + sum(_SEEDS)
-
-def query_a(spark, sf_dir):
-    return _helper(1)
-
-def query_b(spark, sf_dir):
-    return 42
-'''
-
-
-@pytest.mark.parametrize(
-    "edit",
-    [
-        ("_COEFFS = [3, 5, 7]", "_COEFFS = [3, 5, 8]"),
-        ('_RULES = {"min_len": 2}', '_RULES = {"min_len": 3}'),
-        ('_STOP = {"a", "the"}', '_STOP = {"a", "an", "the"}'),
-        ("_K = 3", "_K = 4"),
-    ],
-    ids=["list", "dict", "set", "list-definition-input"],
-)
-def test_collection_constant_edit_flips_consumer_hash(tmp_path, edit):
-    """r07 judge ADVICE: list/dict/set module constants (_AS/_BS-class
-    MinHash coefficients, _LEXICON, _DQ_RULES) must be hash inputs —
-    the scalar-only isinstance check left exactly this edit class
-    invisible to the STALE GREEN gate."""
-    h1 = _hashes(tmp_path / "a", "scratchpkg5", _PKG_LIST)
-    h2 = _hashes(tmp_path / "b", "scratchpkg5", _PKG_LIST.replace(*edit))
-    assert h1["query_a"] != h2["query_a"], "collection-constant edit invisible"
-    assert h1["query_b"] == h2["query_b"], "non-consumer must be unaffected"
-
-
-def test_runtime_cache_fill_keeps_consumer_hash(tmp_path):
-    """A module-level dict that fills at run time (a cache, like
-    ``tables._SCHEMAS``) folds by its definition, so the consumer's hash
-    does not depend on what the process has run."""
-    mod = _load_scratch_pkg(tmp_path, "scratchpkg6", _PKG_LIST)
-    h1 = _source_hash(mod.query_a, "SELECT 1", package="scratchpkg6")
-    mod.query_a(None, None)
-    assert mod._CACHE
-    assert _source_hash(mod.query_a, "SELECT 1", package="scratchpkg6") == h1
-
-
-def test_set_constant_repr_is_order_independent():
-    """Set iteration order is hash-seed-dependent; the ledger repr must
-    not be, or hashes would flip between interpreter runs."""
-    from scripts.gen_ledger import _const_repr
-
-    assert _const_repr({"b", "a", "c"}) == _const_repr({"c", "a", "b"})
-    assert _const_repr(frozenset({1, 2})) == _const_repr(frozenset({2, 1}))
-    assert _const_repr({"x": 1}) == "{'x': 1}"
-    # r08 judge: sets NESTED inside list/dict/tuple constants must also
-    # render order-independently, and plain containers must keep their
-    # stock repr so existing ledger hashes don't flip.
-    assert _const_repr([{"b", "a"}, 3]) == _const_repr([{"a", "b"}, 3])
-    assert _const_repr({"k": {"y", "x"}}) == _const_repr({"k": {"x", "y"}})
-    assert _const_repr(({"q", "p"},)) == _const_repr(({"p", "q"},))
-    assert _const_repr([1, "a", (2.5,)]) == repr([1, "a", (2.5,)])
-    assert _const_repr({"k": [1, 2], "j": (3,)}) == repr(
-        {"k": [1, 2], "j": (3,)}
-    )
-
-
-def test_rebaseline_gate_requires_full_clean_matching_sweep():
-    """r07 judge ADVICE: --rebaseline must be evidence-gated, not a
-    one-flag bypass — it refuses without a cert, on any failure, on
-    partial coverage, and on a package-source mismatch."""
-    from scripts.gen_ledger import rebaseline_allowed
+def test_sweep_cert_gate_requires_full_clean_matching_sweep():
+    """The cert is current only for a clean sweep that covers every
+    oracled query, at the package sources on disk, over a
+    driver-generated fixture dir."""
+    from scripts.gen_ledger import cert_current
 
     oracled = {"q1", "q2"}
     good = {
@@ -248,21 +60,21 @@ def test_rebaseline_gate_requires_full_clean_matching_sweep():
         "sf_dir": "/root/testdata/sf0.01",
     }
 
-    assert rebaseline_allowed(good, oracled, "abc") == (True, "ok")
-    assert not rebaseline_allowed(None, oracled, "abc")[0]
-    assert not rebaseline_allowed({**good, "failed": ["q2"]}, oracled, "abc")[0]
-    assert not rebaseline_allowed({**good, "ok": ["q1"]}, oracled, "abc")[0]
-    assert not rebaseline_allowed(good, oracled, "OTHER")[0]
-    # r08 judge: a green sweep over a non-driver fixture dir must not
-    # authorize a rebaseline — the cert binds data as well as code.
-    assert not rebaseline_allowed(
+    assert cert_current(good, oracled, "abc") == (True, "ok")
+    assert not cert_current(None, oracled, "abc")[0]
+    assert not cert_current({**good, "failed": ["q2"]}, oracled, "abc")[0]
+    assert not cert_current({**good, "ok": ["q1"]}, oracled, "abc")[0]
+    assert not cert_current(good, oracled, "OTHER")[0]
+    # the cert binds data as well as code: a green sweep over a
+    # non-driver fixture dir is no evidence
+    assert not cert_current(
         {**good, "sf_dir": "/tmp/tiny_synthetic"}, oracled, "abc"
     )[0]
-    assert not rebaseline_allowed(
+    assert not cert_current(
         {k: v for k, v in good.items() if k != "sf_dir"}, oracled, "abc"
     )[0]
     # extra swept names beyond the current registry are harmless
-    assert rebaseline_allowed(
+    assert cert_current(
         {**good, "ok": ["q0", "q1", "q2"]}, oracled, "abc"
     )[0]
 
@@ -367,32 +179,22 @@ def test_registry_order_is_the_evidence_order_and_tail_invariant_holds():
     assert not set(names[-2:]) & set(ORACLES)
 
 
-def test_live_ledger_has_no_backlog_or_stale_green(spark, sf_dir):
-    """The ledger gate on the tree as committed: every oracled query's
-    source hash matches the one recorded at its last green, or it sits
-    in the current driver window. A code change that reaches an
-    oracled query must land with a full sweep and ``gen_ledger.py
-    --rebaseline``. Hashed in this process, before and after
-    ``load_table`` fills the ``tables._SCHEMAS`` cache: the hash must
-    not depend on what the process has run."""
-    import json
-
+def test_live_ledger_has_no_backlog_or_stale_green():
+    """The ledger gate on the tree as committed: SWEEP_CERT.json
+    certifies the package sources on disk, and every oracled query has
+    driver evidence or sits in the current window. A change to any
+    package source or to ``__spark_entry__.py`` must land with a fresh
+    full-registry ``driver_sim.py --vanilla`` sweep."""
     from impala_refresher_spark.queries import ORACLES, QUERIES, last_green_rounds
-    from impala_refresher_spark.sources import tables
-    from scripts.gen_ledger import HASHES_PATH
+    from scripts.gen_ledger import _package_hash, cert_current, load_cert
+
+    fresh, why = cert_current(load_cert(), set(ORACLES), _package_hash())
+    assert fresh, why
 
     names = list(QUERIES)
-    before = {n: _source_hash(QUERIES[n], ORACLES.get(n)) for n in names}
-    tables.load_table(spark, sf_dir, "region")
-    assert tables._SCHEMAS
-    current = {n: _source_hash(QUERIES[n], ORACLES.get(n)) for n in names}
-    assert current == before
-
-    with open(HASHES_PATH) as f:
-        stored = json.load(f)
     last_green = last_green_rounds()
     _, backlog, stale = compute_statuses(
-        names, set(ORACLES), last_green, stored, current,
+        names, set(ORACLES), last_green, fresh,
         window=set(names[:50]), cur=max(last_green.values()) + 1,
     )
     assert backlog == []

@@ -20,7 +20,7 @@ from fractions import Fraction
 from statistics import covariance, median, stdev, variance
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from props_util import DOCS, EVENTS, SETTINGS, batched, by_case, cases, half_up, offset, run_on
 from pyspark.sql import functions as F
 
@@ -548,6 +548,7 @@ def test_clamped_balance_matches_python_fold(spark, batch):
 
 
 @given(cases(st.lists(st.tuples(st.integers(1, 2), st.integers(0, 200)), min_size=1, max_size=14)))
+@example([[(1, 0), (1, 30), (1, 59)]])  # gaps of exactly 1800 s and 1740 s
 @batched
 def test_sessionize_matches_python_sweep(spark, batch):
     """Gaps-and-islands sessionization (30-min gap, >= boundary) must
@@ -2184,6 +2185,7 @@ def _names_by_case(batch):
 
 
 @given(cases(name_corpus()))
+@example([["red box", "rust box"]])  # same block, edit distance exactly 3
 @batched
 def test_fuzzy_join_matches_python_levenshtein(spark, batch):
     """The blocked fuzzy join must equal python: trailing-token
