@@ -25,7 +25,6 @@ cancelled and is abandoned as a daemon thread that ends on its own.
 from __future__ import annotations
 
 import contextlib
-import os
 import threading
 import time
 import uuid
@@ -39,7 +38,7 @@ from pyspark.sql import types as T
 
 from impala_refresher_spark.registry import query
 from impala_refresher_spark.sources.tables import (
-    SCRATCH_ROOT,
+    call_dir,
     load_table,
     materialize,
     register_views,
@@ -314,15 +313,13 @@ def recover_partitions_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``.../event_type=X/`` from an external writer and recoverPartitions
     makes them queryable without rewriting data.
     """
-    path = os.path.join(SCRATCH_ROOT, "events_partitioned")
+    path = call_dir("events_partitioned")
     events = load_table(spark, sf_dir, "events")
     # Shuffle on the partition column before a partitionBy write: each
     # task then writes whole partitions (one file per partition instead
     # of tasks x partitions small files) and the write parallelizes
     # across the partition values — the standard ingest-write pattern.
-    events.repartition("event_type").write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(path)
+    events.repartition("event_type").write.partitionBy("event_type").parquet(path)
 
     spark.sql("DROP TABLE IF EXISTS events_partitioned")
     spark.sql(

@@ -27,7 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import fan_out, load_table
+from impala_refresher_spark.sources.tables import call_dir, fan_out, load_table, scratch_tag
 
 
 # ---------------------------------------------------------------------------
@@ -454,28 +454,24 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the join key at WRITE time, so every later join on that key skips
     the exchange entirely. At 100 TB this one-time layout cost
     amortizes across every downstream join/aggregate on the key.
+
+    Each table is external, over a ``call_dir`` of this process: the
+    in-memory catalog and its files live and die together, and no two
+    processes share a location.
     """
-    import shutil
-
-    from impala_refresher_spark.sources.tables import scratch_tag
-
     # freshness-keyed: an in-place fixture update changes the tag, so a
     # stale bucketed copy is never reused (it would diverge from the
     # oracle, which always reads the raw files)
     tag = scratch_tag(sf_dir, "orders", "customer")
     t_orders, t_cust = f"orders_bkt_{tag}", f"customer_bkt_{tag}"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
     for name, src, key in ((t_orders, "orders", "o_custkey"), (t_cust, "customer", "c_custkey")):
         if not spark.catalog.tableExists(name):
-            # the session catalog is in-memory: a fresh process may find
-            # the managed location on disk without the table — clear it
-            shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
             (
                 load_table(spark, sf_dir, src)
                 .write.bucketBy(8, key)
                 .sortBy(key)
                 .mode("overwrite")
-                .saveAsTable(name)
+                .saveAsTable(name, path=call_dir(name))
             )
     return t_orders, t_cust
 

@@ -69,9 +69,6 @@ def get_spark(app_name: str = "impala_refresher_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # The events fixture stores TIMESTAMP(NANOS) which Spark cannot
-        # read natively; read as long and convert in the loader.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # Small-file fixtures: don't create thousands of tiny tasks, but

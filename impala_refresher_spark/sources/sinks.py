@@ -1,6 +1,8 @@
 """Sinks (S2): parquet and CSV writers, declared as round-trip queries
 so the write path is oracle-checked (write → re-read → values must
-still match the DuckDB view of the original data).
+still match the DuckDB view of the original data). Each call writes
+into its own fresh directory (``call_dir``), so two sessions or two
+calls never share an output path.
 
 Scale notes: ``df.write.parquet`` produces one file per partition —
 at 100 TB you size output files via AQE coalescing or an explicit
@@ -12,13 +14,11 @@ poorly — never the at-scale format.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import SCRATCH_ROOT, load_table, materialize
+from impala_refresher_spark.sources.tables import call_dir, load_table, materialize
 
 
 @query(
@@ -32,13 +32,12 @@ from impala_refresher_spark.sources.tables import SCRATCH_ROOT, load_table, mate
 def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 parquet: write a filtered projection, read it back. Parquet
     round-trips every fixture type exactly (incl. timestamps)."""
-    out = os.path.join(SCRATCH_ROOT, "orders_high_value.parquet")
+    out = call_dir("orders_high_value")
     (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 150000)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-        .write.mode("overwrite")
-        .parquet(out)
+        .write.parquet(out)
     )
     return spark.read.parquet(out)
 
@@ -62,13 +61,13 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine). The cost is that multiLine CSV files are not split across
     tasks — acceptable for an interchange sink; at 100 TB keep
     newline-bearing text in parquet/ORC (S1) instead of CSV."""
-    out = os.path.join(SCRATCH_ROOT, "customer_pos.csv")
+    out = call_dir("customer_pos")
     df = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") >= 0)
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
     )
-    df.write.mode("overwrite").option("header", True).csv(out)
+    df.write.option("header", True).csv(out)
     return (
         spark.read.schema(df.schema)
         .option("header", True)
@@ -90,13 +89,13 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (schema inference on JSON is a full extra pass — never at scale).
     The nested ``props`` JSON string survives as-is: the writer quotes
     it as a string field, the reader restores it byte-identically."""
-    out = os.path.join(SCRATCH_ROOT, "events_purchases.json")
+    out = call_dir("events_purchases")
     df = (
-        load_table(spark, sf_dir, "events")  # nanos-safe under any session
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("purchase", "signup"))
         .select("event_id", "event_type", "value", "props")
     )
-    df.write.mode("overwrite").json(out)
+    df.write.json(out)
     return spark.read.schema(df.schema).json(out)
 
 
@@ -113,13 +112,13 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics and predicate pushdown, like parquet row groups) —
     write a filtered projection, read it back. Interop surface for
     Hive-era lakes; parquet stays the default."""
-    out = os.path.join(SCRATCH_ROOT, "part_premium.orc")
+    out = call_dir("part_premium")
     df = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_retailprice") > 950)
         .select("p_partkey", "p_name", "p_brand", "p_retailprice")
     )
-    df.write.mode("overwrite").orc(out)
+    df.write.orc(out)
     return spark.read.schema(df.schema).orc(out)
 
 
@@ -150,14 +149,12 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         "frag_events", sf_dir, ("events",), lambda p: events.repartition(64).write.parquet(p)
     )
 
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    out = os.path.join(SCRATCH_ROOT, f"compacted_events_{sf}.parquet")
+    out = call_dir("compacted_events")
     (
         spark.read.parquet(frag)
         .repartitionByRange(4, "ts")
         .sortWithinPartitions("ts")
-        .write.mode("overwrite")
-        .parquet(out)
+        .write.parquet(out)
     )
     return spark.read.parquet(out).select("event_id", "user_id", "event_type", "value")
 
@@ -220,13 +217,13 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: mergeSchema reconciles FOOTERS (one small read per
     file), not data; at 100 TB you still pin an explicit read schema
     in serving paths and reserve mergeSchema for discovery/backfill,
-    because a million footer reads is itself a job. Overwrite-then-
-    append keeps the fixture write idempotent per run."""
-    out = os.path.join(SCRATCH_ROOT, "events_evolving.parquet")
+    because a million footer reads is itself a job. Each call writes
+    both batches into its own fresh directory (``call_dir``)."""
+    out = call_dir("events_evolving")
     e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     old = e.filter(F.col("event_id") % 2 == 0).select("event_id", "user_id")
     new = e.filter(F.col("event_id") % 2 == 1).select("event_id", "user_id", "value")
-    old.write.mode("overwrite").parquet(out)
+    old.write.parquet(out)
     new.write.mode("append").parquet(out)
     return spark.read.option("mergeSchema", "true").parquet(out).select(
         "event_id", "user_id", "value"

@@ -41,13 +41,23 @@ directory carries its builder's pid, and each build first deletes the
 build). Resolving a name deletes the stale siblings of its
 ``(prefix, sf)`` group (earlier fixture versions); other scale
 factors' copies are untouched.
+
+Per-call policy (output a query writes on every call, not shared):
+``call_dir(prefix)`` returns a fresh path ``{prefix}-{pid}-{uuid}``
+beside the ``.inflight`` builds, so no two processes or calls ever
+write the same directory and the same sweep reclaims a killed
+process's dirs. A process keeps one dir per prefix, the latest, which
+the DataFrame that call returned still reads: asking for the next one
+deletes the previous one, and an exit handler deletes the rest.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import stat
+import threading
 import uuid
 from collections.abc import Callable, Sequence
 
@@ -96,39 +106,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     file listed and read on every execution, directories are never
     cached, and rewriting the file is the only invalidation.
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS). Spark builds
-    differ in how they surface that type, so normalize ALL observed
-    behaviors to a plain microsecond ``timestamp`` (matching how DuckDB
-    coerces nanos to its micro-precision TIMESTAMP, so oracle
-    comparisons agree on both values and schema):
+    ``events.ts`` is normalized to a plain microsecond ``timestamp``,
+    as DuckDB reads it, so oracle comparisons agree on values and schema:
 
-    - read errors (PARQUET_TYPE_ILLEGAL on builds that refuse nanos):
-      set ``spark.sql.legacy.parquet.nanosAsLong`` (a runtime SQL conf)
-      and retry — self-sufficient under a vanilla driver session;
-    - ``bigint`` (nanosAsLong in effect): ``timestamp_micros(ns/1000)``;
-    - ``timestamp_ntz`` (builds that read nanos natively as NTZ): cast
-      to ``timestamp`` — both this session and the driver's run with a
-      UTC session timezone, so the wall-clock reinterpretation is the
-      identity and values equal DuckDB's naive micros.
+    - ``timestamp_ntz`` (the fixtures' TIMESTAMP(MICROS)): cast to
+      ``timestamp``; the package's sessions and the driver's use a UTC
+      session timezone, so the cast keeps every value;
+    - ``bigint`` (TIMESTAMP(NANOS) under a caller's
+      ``spark.sql.legacy.parquet.nanosAsLong``; Spark refuses such a
+      file without it): ``timestamp_micros(ns div 1000)``.
     """
     path = f"{sf_dir}/{name}.parquet"
     file_key = _file_key(path)
+    key = (file_key, spark.conf.get(_NANOS_AS_LONG, "false"))
     slot = (spark.sparkContext.applicationId, path)
     cached = _SCHEMAS.get(slot) if file_key is not None else None
-    if cached is not None and cached[0] == (*file_key, spark.conf.get(_NANOS_AS_LONG, "false")):
+    if cached is not None and cached[0] == key:
         df = spark.read.schema(cached[1]).parquet(path)
     else:
-        try:
-            df = spark.read.parquet(path)
-        except Exception:
-            if name != "events":
-                raise
-            spark.conf.set(_NANOS_AS_LONG, "true")
-            df = spark.read.parquet(path)
-        # Keyed on the state after the call; a file that changed while
-        # its schema was inferred is not cached.
+        df = spark.read.parquet(path)
+        # A file that changed while its schema was inferred is not cached.
         if file_key is not None and _file_key(path) == file_key:
-            _SCHEMAS[slot] = ((*file_key, spark.conf.get(_NANOS_AS_LONG, "false")), df.schema)
+            _SCHEMAS[slot] = (key, df.schema)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -234,11 +233,11 @@ def scratch_path(prefix: str, sf_dir: str, *names: str) -> str:
 
 
 def _sweep_abandoned(inflight: str) -> None:
-    """Delete the ``.inflight`` builds of processes that no longer run:
-    a build dir is named ``{name}-{pid}-{uuid}``, and a builder killed
-    mid-write never reaches its cleanup. A live pid keeps its dir, so a
-    concurrent build is never touched; a recycled pid only delays the
-    sweep."""
+    """Delete the ``.inflight`` entries of processes that no longer run:
+    a build or call dir is named ``{name}-{pid}-{uuid}``, and a process
+    killed mid-write never reaches its cleanup. A live pid keeps its
+    dirs, so a concurrent build or call is never touched; a recycled
+    pid only delays the sweep."""
     for entry in os.listdir(inflight):
         parts = entry.rsplit("-", 2)
         if len(parts) != 3 or not parts[1].isdigit():
@@ -249,6 +248,15 @@ def _sweep_abandoned(inflight: str) -> None:
             shutil.rmtree(os.path.join(inflight, entry), ignore_errors=True)
         except OSError:  # exists, but another user's
             pass
+
+
+def _private_dir(name: str) -> str:
+    """A fresh path ``{name}-{pid}-{uuid}`` under ``SCRATCH_ROOT/.inflight``,
+    after sweeping the entries of dead processes."""
+    inflight = os.path.join(SCRATCH_ROOT, ".inflight")
+    os.makedirs(inflight, exist_ok=True)
+    _sweep_abandoned(inflight)
+    return os.path.join(inflight, f"{name}-{os.getpid()}-{uuid.uuid4().hex}")
 
 
 def materialize(
@@ -266,12 +274,7 @@ def materialize(
     done = os.path.join(path, _DONE)
     if os.path.exists(done):
         return path
-    inflight = os.path.join(SCRATCH_ROOT, ".inflight")
-    os.makedirs(inflight, exist_ok=True)
-    _sweep_abandoned(inflight)
-    tmp = os.path.join(
-        inflight, f"{os.path.basename(path)}-{os.getpid()}-{uuid.uuid4().hex}"
-    )
+    tmp = _private_dir(os.path.basename(path))
     try:
         write(tmp)
         open(os.path.join(tmp, _DONE), "a").close()
@@ -285,6 +288,29 @@ def materialize(
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return path
+
+
+# prefix -> this process's latest call dir (see call_dir).
+_CALL_DIRS: dict[str, str] = {}
+_CALL_LOCK = threading.Lock()
+
+
+def call_dir(prefix: str) -> str:
+    """A fresh path for one call's output, private to this process;
+    this process's previous dir for ``prefix`` is deleted, and the last
+    one at exit (module docstring)."""
+    path = _private_dir(prefix)
+    with _CALL_LOCK:
+        old, _CALL_DIRS[prefix] = _CALL_DIRS.get(prefix), path
+    if old is not None:
+        shutil.rmtree(old, ignore_errors=True)
+    return path
+
+
+@atexit.register
+def _drop_call_dirs() -> None:
+    for d in _CALL_DIRS.values():
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def register_views(

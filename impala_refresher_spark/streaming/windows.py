@@ -18,16 +18,14 @@ completeness against state footprint.
 
 from __future__ import annotations
 
-import atexit
 import shutil
-import threading
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
-from impala_refresher_spark.sources.tables import load_table, materialize
+from impala_refresher_spark.sources.tables import call_dir, load_table, materialize
 
 
 # ---------------------------------------------------------------------------
@@ -786,23 +784,6 @@ def run_stream_to_memory(
 # ---------------------------------------------------------------------------
 
 
-# Work dir of the last finished stream_cdc_merge call, whose returned
-# DataFrame reads the snapshot there. The next call deletes it, and one
-# exit handler deletes whatever is left.
-_cdc_work: list[str] = []
-_cdc_lock = threading.Lock()
-
-
-def _keep_cdc_work(work: str | None) -> None:
-    with _cdc_lock:
-        old, _cdc_work[:] = list(_cdc_work), [work] if work else []
-    for d in old:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_keep_cdc_work, None)
-
-
 @query(
     "stream_cdc_merge",
     """
@@ -841,14 +822,12 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Snapshot-per-epoch + checkpoint give exactly-once: a replayed
     epoch overwrites its own version directory idempotently.
 
-    Disk is bounded per process, not only per call: once the stream
-    stops, the checkpoint and every superseded snapshot are deleted,
-    leaving only the latest one, which the returned DataFrame reads.
-    That work dir lives until the next call finishes (which deletes it,
-    as the next call of a fixed-path sink overwrites the last output)
-    or the interpreter exits."""
+    Disk is bounded per process, not only per call: the work dir is a
+    ``call_dir``, and once the stream stops the checkpoint and every
+    superseded snapshot are deleted, leaving only the latest one, which
+    the returned DataFrame reads. That work dir lives until the next
+    call asks for its own (which deletes it) or the interpreter exits."""
     import os
-    import tempfile
 
     from pyspark.sql import Window as W
 
@@ -856,7 +835,7 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = materialize(
         "cdc_src", sf_dir, ("events",), lambda p: events.repartition(4).write.parquet(p)
     )
-    work = tempfile.mkdtemp(prefix="cdc_merge_")
+    work = call_dir("cdc_merge")
     versions: list[str] = []
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -899,7 +878,6 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     for v in set(versions) - {versions[-1]}:
         shutil.rmtree(v, ignore_errors=True)
-    _keep_cdc_work(work)
     final = spark.read.parquet(versions[-1])
     return final.select(
         "user_id",

@@ -72,18 +72,24 @@ def test_fan_out_parallelizes_small_scan(spark, sf_dir):
 
 
 def test_events_reads_under_vanilla_session_conf(spark, sf_dir):
-    """The driver checks queries under ITS OWN SparkSession, which does
-    not set spark.sql.legacy.parquet.nanosAsLong — load_table must be
-    self-sufficient. Simulate by unsetting the runtime conf first."""
+    """The driver checks queries under ITS OWN SparkSession, which, like
+    ``get_spark``'s, does not set spark.sql.legacy.parquet.nanosAsLong:
+    load_table must be self-sufficient. Unset the runtime conf first in
+    case an earlier caller set it, and restore it after."""
     from impala_refresher_spark.sources.tables import load_table
 
-    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
     try:
         df = load_table(spark, sf_dir, "events")
         assert dict(df.dtypes)["ts"] == "timestamp"
         assert df.limit(1).count() == 1
     finally:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
 
 
 def _with_job_ids(spark, fn):
@@ -156,14 +162,17 @@ def test_load_table_sees_rewritten_file_without_refresh(spark, sf_dir, tmp_path)
 
 
 def test_load_table_nanos_file_cold_then_warm_under_vanilla_conf(spark, tmp_path):
-    """A TIMESTAMP(NANOS) column's inferred type depends on nanosAsLong,
-    so the conf is part of the cached schema's key, read after the
-    PARQUET_TYPE_ILLEGAL retry: unsetting the conf re-resolves the
-    schema (and the retry sets it again), and the next call with the
-    conf left alone hits the cache. Every load gives a micro-precision
-    ``timestamp`` with the nanos truncated."""
+    """A TIMESTAMP(NANOS) column reads as ``bigint`` under nanosAsLong
+    and is illegal to Spark without it, so the conf is part of the
+    cached schema's key: turning it off re-resolves the schema (the
+    read fails, and load_table leaves the session's conf alone), and
+    turning it back on hits the entry cached before. Every load gives
+    a micro-precision ``timestamp`` with the nanos truncated. (The
+    fixtures store ``events.ts`` as TIMESTAMP(MICROS), which reads as
+    ``timestamp_ntz`` under either setting.)"""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    import pytest
 
     from impala_refresher_spark.sources.tables import load_table
 
@@ -174,18 +183,29 @@ def test_load_table_nanos_file_cold_then_warm_under_vanilla_conf(spark, tmp_path
     )
     pq.write_table(table, tmp_path / "events.parquet", version="2.6")
     d = str(tmp_path)
-    prev = spark.conf.get(conf)
+    prev = spark.conf.get(conf, None)
+
+    def load_with_conf_on(step, resolves):
+        spark.conf.set(conf, "true")
+        df, jobs = _with_job_ids(spark, lambda: load_table(spark, d, "events"))
+        assert bool(jobs) == resolves, step
+        assert dict(df.dtypes)["ts"] == "timestamp", step
+        got = sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+        assert got == [n // 1000 for n in ns], step
+
     try:
-        for step, resolves in (("cold", True), ("conf unset", True), ("warm", False)):
-            if step == "conf unset":
-                spark.conf.unset(conf)
-            df, jobs = _with_job_ids(spark, lambda: load_table(spark, d, "events"))
-            assert bool(jobs) == resolves, step
-            assert dict(df.dtypes)["ts"] == "timestamp", step
-            got = sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
-            assert got == [n // 1000 for n in ns], step
+        load_with_conf_on("cold", resolves=True)
+        spark.conf.unset(conf)
+        # resolving raises here; a cache hit would only build a lazy scan
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            load_table(spark, d, "events")
+        assert spark.conf.get(conf, None) is None
+        load_with_conf_on("warm", resolves=False)
     finally:
-        spark.conf.set(conf, prev)
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
 
 
 def _scratch_env(tmp_path, monkeypatch):
@@ -310,7 +330,9 @@ def test_materialize_sweeps_builds_of_dead_processes(tmp_path, monkeypatch):
 
 def test_scratch_root_and_marker_live_only_in_tables():
     """No package module but ``sources/tables.py`` names the scratch
-    directory or the completion marker, and none holds the checkout's
+    directory, its root or the completion marker, makes a temp dir or
+    reads the warehouse dir (every file a query writes goes through
+    ``materialize`` or ``call_dir``), and none holds the checkout's
     absolute path."""
     from pathlib import Path
 
@@ -318,14 +340,36 @@ def test_scratch_root_and_marker_live_only_in_tables():
 
     pkg = Path(impala_refresher_spark.__file__).parent
     checkout = str(pkg.parent)
+    owned = ("_scratch", "SCRATCH_ROOT", "_SUCCESS", "tempfile", "warehouse.dir")
     offenders = []
     for f in sorted(pkg.rglob("*.py")):
         rel, src = f.relative_to(pkg).as_posix(), f.read_text()
-        if checkout in src or (
-            rel != "sources/tables.py" and ("_scratch" in src or "_SUCCESS" in src)
-        ):
+        if checkout in src or (rel != "sources/tables.py" and any(w in src for w in owned)):
             offenders.append(rel)
     assert offenders == []
+
+
+def test_call_dir_keeps_one_dir_per_prefix_and_sweeps_dead_processes(tmp_path, monkeypatch):
+    """Each call gets a distinct path; asking again for a prefix deletes
+    this process's previous dir for it and leaves other prefixes' dirs;
+    a call dir left by a process that no longer runs is swept."""
+    import subprocess
+    import sys
+
+    tables, root, _ = _scratch_env(tmp_path, monkeypatch)
+    monkeypatch.setattr(tables, "_CALL_DIRS", {})
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait()
+    dead = root / ".inflight" / f"out-{child.pid}-{'0' * 32}"
+    dead.mkdir(parents=True)
+    first, other = tables.call_dir("out"), tables.call_dir("other")
+    assert not dead.exists()
+    for d in (first, other):
+        os.makedirs(d)
+    second = tables.call_dir("out")
+    assert len({first, second, other}) == 3
+    assert not os.path.exists(first) and os.path.exists(other)
+    assert os.path.basename(second).startswith(f"out-{os.getpid()}-")
 
 
 def test_topk_tiebreak_is_deterministic(spark):

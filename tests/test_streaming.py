@@ -625,16 +625,17 @@ def test_cdc_merge_keeps_only_the_snapshot_it_returns(spark, sf_dir, tmp_path, m
     next call deletes the previous call's work dir, so a session keeps
     one at a time. (The oracle match is ``test_oracle_diff``'s.)"""
     import os
-    import tempfile
 
     from impala_refresher_spark.queries import QUERIES
+    from impala_refresher_spark.sources import tables
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(tables, "SCRATCH_ROOT", str(tmp_path))
+    inflight = tmp_path / ".inflight"
     works = []
     for _ in range(2):
         df = QUERIES["stream_cdc_merge"](spark, sf_dir)
-        [work] = [p for p in os.listdir(tmp_path) if p.startswith("cdc_merge_")]
-        left = os.listdir(tmp_path / work)
+        [work] = [p for p in os.listdir(inflight) if p.startswith("cdc_merge-")]
+        left = os.listdir(inflight / work)
         assert len(left) == 1 and left[0].startswith("v"), left
         assert df.count() > 0
         works.append(work)
