@@ -17,56 +17,4 @@ Design principles (100 TB scale):
   everywhere possible; Arrow-batched Pandas UDFs when not.
 """
 
-from impala_refresher_spark.session import get_spark
-
-
-def __getattr__(name: str):
-    """Lazy re-exports of the reusable operator primitives, so
-    ``from impala_refresher_spark import asof_join`` works without
-    importing the full query registry (or any operator module you
-    don't touch) at package-import time."""
-    lazy = {
-        # reference-faithful refresh surface
-        "refresh_table": "operators.refresh",
-        "refresh_many": "operators.refresh",
-        "recover_partitions": "operators.refresh",
-        "all_refreshed": "operators.refresh",
-        "RefreshResult": "operators.refresh",
-        # reusable operator primitives
-        "asof_join": "operators.asof",
-        "blocked_pair_join": "operators.similarity",
-        # streaming building blocks (batch/stream dual-use transforms)
-        "tumbling_window_counts": "streaming.windows",
-        "sliding_window_agg": "streaming.windows",
-        "session_window_agg": "streaming.windows",
-        "watermarked_counts": "streaming.windows",
-        "stream_dedup": "streaming.windows",
-        "view_purchase_join": "streaming.windows",
-        "stateful_user_totals": "streaming.windows",
-    }
-    if name in lazy:
-        import importlib
-
-        mod = importlib.import_module(f"impala_refresher_spark.{lazy[name]}")
-        return getattr(mod, name)
-    raise AttributeError(f"module 'impala_refresher_spark' has no attribute {name!r}")
-
-
-__all__ = [
-    "get_spark",
-    "refresh_table",
-    "refresh_many",
-    "recover_partitions",
-    "all_refreshed",
-    "RefreshResult",
-    "asof_join",
-    "blocked_pair_join",
-    "tumbling_window_counts",
-    "sliding_window_agg",
-    "session_window_agg",
-    "watermarked_counts",
-    "stream_dedup",
-    "view_purchase_join",
-    "stateful_user_totals",
-]
 __version__ = "0.1.0"

@@ -103,18 +103,14 @@ def refresh_rollup_incremental(
     day_list = [str(d) for d in days]
     if not day_list:
         return
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            hourly_rollup(events.filter(F.to_date("ts").isin(day_list)))
-            .repartition("bucket_date")
-            .write.mode("overwrite")
-            .partitionBy("bucket_date")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        hourly_rollup(events.filter(F.to_date("ts").isin(day_list)))
+        .repartition("bucket_date")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket_date")
+        .parquet(path)
+    )
 
 
 @query(
@@ -131,25 +127,29 @@ def refresh_rollup_incremental(
 def hypertable_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-maintenance correctness, end to end: build the
     rollup WITHOUT the last day, refresh that day through the
-    incremental path (dynamic partition overwrite), and serve the
-    daily aggregate from the result. The oracle aggregates ALL raw
-    events — if the incremental append dropped, duplicated, or
-    double-merged anything, the last day's rows diverge.
+    incremental path (dynamic partition overwrite), both once per
+    fixture version, and serve the daily aggregate from the published
+    result. The oracle aggregates ALL raw events — if the incremental
+    append dropped, duplicated, or double-merged anything, the last
+    day's rows diverge.
     """
-    events = load_table(spark, sf_dir, "events")
-    last_day = events.agg(F.max(F.to_date("ts")).alias("d")).collect()[0].d
-    path = materialize(
-        "events_rollup_incr",
-        sf_dir,
-        ("events",),
-        lambda p: hourly_rollup(events.filter(F.to_date("ts") < F.lit(str(last_day))))
-        .repartition("bucket_date")
-        .write.partitionBy("bucket_date")
-        .parquet(p),
-    )
-    # the maintenance step under test: bring the last day in incrementally
-    # (idempotent: re-runs replace exactly that day's partition)
-    refresh_rollup_incremental(spark, events, path, [last_day])
+
+    def build(p: str) -> None:
+        events = load_table(spark, sf_dir, "events")
+        last_day = events.agg(F.max(F.to_date("ts")).alias("d")).collect()[0].d
+        (
+            hourly_rollup(events.filter(F.to_date("ts") < F.lit(str(last_day))))
+            .repartition("bucket_date")
+            .write.partitionBy("bucket_date")
+            .parquet(p)
+        )
+        # the maintenance step under test: bring the last day in
+        # incrementally. It runs on the private build before publish:
+        # rewriting the published copy in place would delete files that
+        # another session may be scanning.
+        refresh_rollup_incremental(spark, events, p, [last_day])
+
+    path = materialize("events_rollup_refreshed", sf_dir, ("events",), build)
     return _serve_daily(spark.read.parquet(path)).select(
         "day", "event_type", "n", "total_value"
     )

@@ -137,20 +137,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_SIZE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _size_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf string ("134217728", "128m", "128MB")."""
-    s = str(v).strip().lower()
-    if s.endswith("b") and not s[:-1].isdigit():
-        s = s[:-1]
-    unit = ""
-    if s and s[-1] in _SIZE_UNITS:
-        unit, s = s[-1], s[:-1]
-    return int(float(s)) * _SIZE_UNITS[unit]
-
-
 def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a scan to full core count IF it arrived
     in fewer splits — for CPU-heavy map stages (shingling, hashing,
@@ -187,8 +173,8 @@ def fan_out(df: DataFrame) -> DataFrame:
             total += os.path.getsize(p.path or uri)
         except OSError:
             return df
-    max_split = _size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    open_cost = _size_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4m"))
+    conf = spark._jsparkSession.sessionState().conf()
+    max_split, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
     # Spark packs splits toward targetSize = min(maxPartitionBytes,
     # max(openCost, totalPadded / defaultParallelism)).
     padded = total + len(files) * open_cost

@@ -512,7 +512,7 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The fixture arrives in one micro-batch, so update-mode output is
     exactly one final row per user.)"""
     events = load_table(spark, sf_dir, "events")
-    # micros; the raw fixture is nanos
+    # the file stream source reads a directory; the fixture is one file
     path = materialize("stateful_src", sf_dir, ("events",), lambda p: events.write.parquet(p))
     return run_stream_to_memory(
         spark,
@@ -699,7 +699,7 @@ def stream_stateful_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, so update mode emits one final row per user and the
     fold order matches the oracle's exactly."""
     events = load_table(spark, sf_dir, "events")
-    # micros; the raw fixture is nanos
+    # the file stream source reads a directory; the fixture is one file
     path = materialize("stateful_src", sf_dir, ("events",), lambda p: events.write.parquet(p))
     out = run_stream_to_memory(
         spark,

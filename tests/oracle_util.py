@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
 
 import duckdb
 
@@ -45,12 +46,29 @@ from impala_refresher_spark.sources.tables import TABLES
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table under ``sf_dir``.
+    ``<t>.parquet`` is read as one file, or, when it is a directory, as
+    the part files Spark wrote into it; an absent table gets no view."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        elif not os.path.exists(path):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
+
+
+def tiny_sf(spark, path, **tables) -> tuple[str, duckdb.DuckDBPyConnection]:
+    """Write hand-built tables, each given as ``(rows, ddl)``, under
+    ``path`` and return ``(sf_dir, con)`` with the oracle's views on
+    them. Each table is a one-file Spark directory ``<t>.parquet``, so
+    ``load_table`` reads it through its directory path."""
+    sf_dir = str(path)
+    for t, (rows, ddl) in tables.items():
+        spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(f"{sf_dir}/{t}.parquet")
+    return sf_dir, duckdb_conn(sf_dir)
 
 
 _NULL = "\x00<null>"

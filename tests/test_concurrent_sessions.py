@@ -1,6 +1,6 @@
 """Two Spark applications on one checkout at once: every query that
-writes files on each call must keep to its own output, so neither
-session's writes break the other's reads."""
+writes files must keep to its own output until it publishes it, so
+neither session's writes break the other's reads."""
 
 from __future__ import annotations
 
@@ -24,6 +24,7 @@ WRITERS = (
     "recover_partitions_status",
     "join_bucketed",
     "stream_cdc_merge",
+    "hypertable_rollup_incremental",
 )
 
 # One session: warm up, wait at a file barrier so both sessions start
@@ -53,8 +54,7 @@ print(json.dumps(failures))
 
 
 def test_two_sessions_run_the_writer_queries_at_once(tmp_path):
-    """Two processes run the 9 per-call writer queries three rounds
-    each, at the same time, over the same checkout: 0 failures in
+    """Two processes run the 10 writer queries three rounds each, at the same time, over the same checkout: 0 failures in
     either. The working directory is shared too, so a CWD-relative
     warehouse would be shared as well."""
     barrier = tmp_path / "barrier"

@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 
 from impala_refresher_spark.operators.asof import asof_join
 from impala_refresher_spark.operators.dedup import _shingles
+from impala_refresher_spark.registry import ORACLES
 from impala_refresher_spark.sources.tables import fan_out
-from tests.oracle_util import compare
+from tests.oracle_util import compare, tiny_sf
 
 
 def _ts(m):
@@ -386,9 +387,10 @@ def test_topk_tiebreak_is_deterministic(spark):
 
 
 def test_incremental_rollup_refresh_is_idempotent(spark, sf_dir):
-    """Re-running the incremental maintenance step must replace the
-    refreshed day's partition, not duplicate it (dynamic partition
-    overwrite) — same served rows on every run."""
+    """Repeated calls serve the same rows: the incremental maintenance
+    step runs once, inside the build, and a later call reads the
+    published copy. (Re-running the step itself is checked by
+    ``test_hypertable_incremental_refresh_matches_full_aggregate``.)"""
     from impala_refresher_spark.operators.rollup_hypertable import (
         hypertable_rollup_incremental,
     )
@@ -405,7 +407,7 @@ def test_except_all_keeps_multiplicity(spark):
     assert sorted(r.x for r in left.exceptAll(right).collect()) == [1, 2]
 
 
-def test_clamped_balance_floors_at_zero_and_recovers(spark):
+def test_clamped_balance_floors_at_zero_and_recovers(spark, tmp_path):
     """The clamp must bind mid-sequence: a debit below zero floors at
     0 and later credits build from 0, not from the negative — the
     exact behavior a plain windowed SUM (min-clamped at the end)
@@ -424,19 +426,15 @@ def test_clamped_balance_floors_at_zero_and_recovers(spark):
         (2, t(1), 1, "error", 20.0, "{}"),
         (3, t(2), 1, "purchase", 3.0, "{}"),
     ]
-    df = spark.createDataFrame(
+    d, _ = tiny_sf(spark, tmp_path, events=(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    import tempfile
-
-    d = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(f"{d}/events.parquet")
+    ))
     out = {r.user_id: r for r in clamped_running_balance(spark, d).collect()}
     assert out[1].balance_cents == 300
     assert out[1].n_txns == 3
 
 
-def test_pareto_keeps_duplicate_optimal_points(spark):
+def test_pareto_keeps_duplicate_optimal_points(spark, tmp_path):
     """Two parts with identical (price, size) on the frontier are
     mutually non-dominating (no strict inequality) — BOTH must
     survive; collapsing duplicates would under-report the frontier."""
@@ -448,14 +446,10 @@ def test_pareto_keeps_duplicate_optimal_points(spark):
         (3, "c", "B", "T", 5, 100.0),   # same price, smaller -> dominated
         (4, "d", "B", "T", 12, 200.0),  # bigger but pricier -> frontier
     ]
-    df = spark.createDataFrame(
+    d, _ = tiny_sf(spark, tmp_path, part=(
         rows,
         "p_partkey long, p_name string, p_brand string, p_type string, p_size int, p_retailprice double",
-    )
-    import tempfile
-
-    d = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(f"{d}/part.parquet")
+    ))
     keys = {r.p_partkey for r in pareto_frontier_parts(spark, d).collect()}
     assert keys == {1, 2, 4}
 
@@ -469,10 +463,9 @@ def test_km_survival_zero_factor_cutover(spark, tmp_path):
     while DuckDB's LN(0) errors; this pins the guarded cutover and the
     Spark/oracle agreement on a manufactured d == n input the fixture
     may never produce."""
-    from impala_refresher_spark.operators.evaluation import survival_user_retention
-    from impala_refresher_spark.registry import ORACLES
-
     from datetime import timedelta
+
+    from impala_refresher_spark.operators.evaluation import survival_user_retention
 
     def ev(eid, day, uid):
         return (eid, datetime(2024, 1, 1) + timedelta(days=day), uid, "click", 1.0, "{}")
@@ -486,24 +479,15 @@ def test_km_survival_zero_factor_cutover(spark, tmp_path):
         # user 30: span 10 days, churned -> ordinary factor 1 - 1/2
         ev(4, 0, 30), ev(5, 10, 30),
     ]
-    df = spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, events=(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    d = str(tmp_path)
-    df.coalesce(1).write.parquet(f"{d}/events.parquet")
+    ))
 
     out = {r["t"]: r for r in survival_user_retention(spark, d).collect()}
     assert out[10]["survival"] == 0.5 and out[10]["n"] == 2
     assert out[30]["d"] == 1 and out[30]["n"] == 1
     assert out[30]["survival"] == 0.0  # cutover, not NULL / not 0.5
     # and the DuckDB oracle agrees on the same degenerate input
-    # (register just the events view; the tmpdir has no other tables)
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet/*.parquet')"
-    )
     compare(survival_user_retention(spark, d), con, ORACLES["survival_user_retention"])
 
 
@@ -515,30 +499,27 @@ def test_zscore_zero_variance_group_yields_no_rows_not_error(spark, tmp_path):
     whose prices are all identical has stddev 0.0 — the z-score must
     come back NULL (row filtered) on BOTH engines, never raise."""
     from impala_refresher_spark.operators.analytics import outlier_orders_zscore
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
-    # segment A: constant price (sd = 0); segment B: varied prices
-    orders = [(i, 100 + i % 3, 50.0 if i < 6 else float(10 * i), "O") for i in range(12)]
-    spark.createDataFrame(
-        orders, "o_orderkey long, o_custkey long, o_totalprice double, o_orderstatus string"
-    ).coalesce(1).write.parquet(f"{d}/orders.parquet")
-    spark.createDataFrame(
-        [(100, "CONST"), (101, "CONST"), (102, "VAR")],
-        "c_custkey long, c_mktsegment string",
-    ).coalesce(1).write.parquet(f"{d}/customer.parquet")
+    # segment CONST (customer 100): constant price (sd = 0); segment VAR
+    # (customers 101 and 102): 50,50,70,100,50,50,80,110 (mean 70, sd 24.49)
+    orders = [
+        (i, 100 + i % 3, 50.0 if i % 3 == 0 or i < 6 else float(10 * i), "O") for i in range(12)
+    ]
+    d, con = tiny_sf(
+        spark,
+        tmp_path,
+        orders=(
+            orders, "o_orderkey long, o_custkey long, o_totalprice double, o_orderstatus string"
+        ),
+        customer=(
+            [(100, "CONST"), (101, "VAR"), (102, "VAR")], "c_custkey long, c_mktsegment string"
+        ),
+    )
 
     rows = outlier_orders_zscore(spark, d).collect()  # must not raise
-    # no order from a zero-variance group can be flagged
-    assert all(r.o_custkey == 102 or r.zscore is not None for r in rows)
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
-
+    # only order 11 (110.0, z = 40 / 24.49 = 1.633) is flagged; no order
+    # of the zero-variance segment can be
+    assert [(r.o_orderkey, r.zscore) for r in rows] == [(11, 1.633)]
     compare(outlier_orders_zscore(spark, d), con, ORACLES["outlier_orders_zscore"])
 
 
@@ -549,28 +530,19 @@ def test_char_entropy_degenerate_texts(spark, tmp_path):
     empty element, n=1), so entropy is 0.0 — but only measurement proves
     it. Pin the parity plus the hand-computable values (uniform text ->
     0.0, two balanced symbols -> 1.0 bit)."""
-    import duckdb
-
     from impala_refresher_spark.operators.text import quality_char_entropy
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     docs = [
         (1, "", "en", "web", 0),
         (2, "aaaa", "en", "web", 4),
         (3, "abab", "en", "web", 4),
     ]
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, documents=(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{d}/documents.parquet")
+    ))
 
     got = {r.doc_id: r.char_entropy for r in quality_char_entropy(spark, d).collect()}
     assert got == {1: 0.0, 2: 0.0, 3: 1.0}
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet/*.parquet')"
-    )
     compare(quality_char_entropy(spark, d), con, ORACLES["quality_char_entropy"])
 
 
@@ -578,28 +550,19 @@ def test_int8_quantize_zero_vector_excluded(spark, tmp_path):
     """An all-zero embedding has max|x| = 0: the scale divide would be
     0/0 (ANSI error on Spark, NULL on DuckDB) — both sides must filter
     it BEFORE the divide, and the surviving codes must be exact."""
-    import duckdb
-
     from impala_refresher_spark.operators.similarity import (
         embed_int8_quantize,
         int8_quantize_vectors,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, embeddings=(
         [(1, [0.0, 0.0, 0.0], 0), (2, [1.5, -3.0, 0.75], 1)],
         "vec_id long, embedding array<float>, label int",
-    ).coalesce(1).write.parquet(f"{d}/embeddings.parquet")
+    ))
 
     rows = int8_quantize_vectors(spark, d).collect()
     assert [r.vec_id for r in rows] == [2]  # zero vector filtered, no error
     assert rows[0].q == [64, -127, 32]  # round(x/3.0*127)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d}/embeddings.parquet/*.parquet')"
-    )
     # declared (exploded, scalar-only) form against the zipped-UNNEST oracle
     compare(embed_int8_quantize(spark, d), con, ORACLES["embed_int8_quantize"])
 
@@ -609,16 +572,11 @@ def test_nearest_event_same_ts_clicks_pick_min_id(spark, tmp_path):
     logs; fixture ts are µs-unique) must resolve to the smallest
     click_id on both engines — the backward running-last needs event_id
     DESC in its window order to agree with the oracle's ORDER BY cid."""
-    import duckdb
-    from datetime import datetime
-
     from impala_refresher_spark.operators.asof import nearest_event_join
-    from impala_refresher_spark.registry import ORACLES
 
     def t(s):
         return datetime(2024, 1, 1, 0, 0, s)
 
-    d = str(tmp_path)
     events = [
         # user 1: two clicks share ts=8 (before), expect click_id 100
         (100, t(8), 1, "click", 0.0, "{}"),
@@ -633,19 +591,14 @@ def test_nearest_event_same_ts_clicks_pick_min_id(spark, tmp_path):
         (401, t(13), 3, "click", 0.0, "{}"),
         (302, t(10), 3, "purchase", 9.9, "{}"),
     ]
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, events=(
         events,
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    ).coalesce(1).write.parquet(f"{d}/events.parquet")
+    ))
 
     out = nearest_event_join(spark, d)
     got = {r.purchase_id: r.click_id for r in out.collect()}
     assert got == {300: 100, 301: 200, 302: 400}
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet/*.parquet')"
-    )
     compare(out, con, ORACLES["nearest_event_join"])
 
 
@@ -658,46 +611,29 @@ def test_zero_norm_embedding_cosine_family_matches_oracle(spark, tmp_path):
     cosine-family query returns identical rows with the zero vector
     present — including the degenerate corpus whose QUERY vector
     (vec_id 0) is itself zero."""
-    import duckdb
-
     from impala_refresher_spark.operators.dedup import dedup_embedding_cosine
     from impala_refresher_spark.operators.similarity import (
         cosine_similarity_join,
         cosine_topk,
         knn_join_topk,
     )
-    from impala_refresher_spark.registry import ORACLES
 
     def base_vec(seed: int) -> list:
         # exact-quarter floats: float32 -> double conversion is lossless
         return [((seed * (i + 3)) % 9 - 4) / 4.0 for i in range(64)]
 
-    d = str(tmp_path / "main")
+    ddl = "vec_id long, embedding array<float>, label int"
     vecs = [(i, base_vec(i + 1), i % 2) for i in range(6)]
     vecs.append((6, vecs[4][1], 0))  # near-twin of vec 4 -> a real pair
     vecs.append((7, [0.0] * 64, 0))  # the zero vector
-    spark.createDataFrame(
-        vecs, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.parquet(f"{d}/embeddings.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d}/embeddings.parquet/*.parquet')"
-    )
+    d, con = tiny_sf(spark, tmp_path / "main", embeddings=(vecs, ddl))
     for q in (cosine_topk, cosine_similarity_join, knn_join_topk, dedup_embedding_cosine):
         compare(q(spark, d), con, ORACLES[q.__name__])
 
     # degenerate corpus: the QUERY vector itself is zero -> every sim is
     # NULL and the top-k falls back to the vec_id tiebreak on both sides
-    d0 = str(tmp_path / "zeroq")
     vecs0 = [(0, [0.0] * 64, 0)] + [(i, base_vec(i), i % 2) for i in range(1, 4)]
-    spark.createDataFrame(
-        vecs0, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.parquet(f"{d0}/embeddings.parquet")
-    con0 = duckdb.connect()
-    con0.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d0}/embeddings.parquet/*.parquet')"
-    )
+    d0, con0 = tiny_sf(spark, tmp_path / "zeroq", embeddings=(vecs0, ddl))
     out = cosine_topk(spark, d0)
     assert [r.cos_sim for r in out.collect()] == [None, None, None]
     compare(out, con0, ORACLES["cosine_topk"])
@@ -711,40 +647,27 @@ def test_zero_total_revenue_ratios_null_not_error(spark, tmp_path):
     where DuckDB yields NULL. All three are try_divide-guarded so the
     degenerate corpus answers NULL identically on both engines (found by
     the same sweep as the kappa empty-marginal COALESCE)."""
-    import duckdb
-
     from impala_refresher_spark.operators.analytics import (
         hhi_supplier_concentration,
         revenue_concentration_gini,
         revenue_share_by_nation,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, 100 + i % 3, 0.0, "O") for i in range(9)],
-        "o_orderkey long, o_custkey long, o_totalprice double, o_orderstatus string",
-    ).coalesce(1).write.parquet(f"{d}/orders.parquet")
-    spark.createDataFrame(
-        [(100, 0), (101, 0), (102, 1)],
-        "c_custkey long, c_nationkey int",
-    ).coalesce(1).write.parquet(f"{d}/customer.parquet")
-    spark.createDataFrame(
-        [(0, "ALPHA"), (1, "BETA")], "n_nationkey int, n_name string"
-    ).coalesce(1).write.parquet(f"{d}/nation.parquet")
-    spark.createDataFrame(
-        [(i, 200 + i % 2, 0.0) for i in range(8)],
-        "l_orderkey long, l_suppkey long, l_extendedprice double",
-    ).coalesce(1).write.parquet(f"{d}/lineitem.parquet")
-    spark.createDataFrame(
-        [(200, 0), (201, 1)], "s_suppkey long, s_nationkey int"
-    ).coalesce(1).write.parquet(f"{d}/supplier.parquet")
-
-    con = duckdb.connect()
-    for t in ("orders", "customer", "nation", "lineitem", "supplier"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
+    d, con = tiny_sf(
+        spark,
+        tmp_path,
+        orders=(
+            [(i, 100 + i % 3, 0.0, "O") for i in range(9)],
+            "o_orderkey long, o_custkey long, o_totalprice double, o_orderstatus string",
+        ),
+        customer=([(100, 0), (101, 0), (102, 1)], "c_custkey long, c_nationkey int"),
+        nation=([(0, "ALPHA"), (1, "BETA")], "n_nationkey int, n_name string"),
+        lineitem=(
+            [(i, 200 + i % 2, 0.0) for i in range(8)],
+            "l_orderkey long, l_suppkey long, l_extendedprice double",
+        ),
+        supplier=([(200, 0), (201, 1)], "s_suppkey long, s_nationkey int"),
+    )
 
     gini = revenue_concentration_gini(spark, d)
     assert all(r.gini is None and r.lorenz_cum_share is None for r in gini.collect())
@@ -766,31 +689,22 @@ def test_pivot_unpivot_null_edges_match_oracle(spark, tmp_path):
     combinations coalesce to 0.00 on both engines; NULL grouping keys
     and NULL pivot-column values survive as ordinary groups / are
     excluded from every listed pivot value identically."""
-    import duckdb
-
     from impala_refresher_spark.operators.relational import agg_pivot, unpivot_metrics
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [
-            (1, "1-URGENT", "F", 10.5),
-            (2, "1-URGENT", None, 20.0),   # NULL pivot value: in no column
-            (3, None, "O", 7.25),          # NULL grouping key
-            (4, "2-HIGH", "P", 0.0),
-        ],
-        "o_orderkey long, o_orderpriority string, o_orderstatus string, o_totalprice double",
-    ).coalesce(1).write.parquet(f"{d}/orders.parquet")
-    spark.createDataFrame(
-        [(1, None, 3), (2, 5.5, 4)],
-        "c_custkey long, c_acctbal double, c_nationkey int",
-    ).coalesce(1).write.parquet(f"{d}/customer.parquet")
-
-    con = duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
+    d, con = tiny_sf(
+        spark,
+        tmp_path,
+        orders=(
+            [
+                (1, "1-URGENT", "F", 10.5),
+                (2, "1-URGENT", None, 20.0),   # NULL pivot value: in no column
+                (3, None, "O", 7.25),          # NULL grouping key
+                (4, "2-HIGH", "P", 0.0),
+            ],
+            "o_orderkey long, o_orderpriority string, o_orderstatus string, o_totalprice double",
+        ),
+        customer=([(1, None, 3), (2, 5.5, 4)], "c_custkey long, c_acctbal double, c_nationkey int"),
+    )
 
     piv = agg_pivot(spark, d)
     rows = {r.o_orderpriority: (r.f_total, r.o_total, r.p_total) for r in piv.collect()}
@@ -808,16 +722,12 @@ def test_rollup_grouping_sets_null_values_match_oracle(spark, tmp_path):
     the aggregated-out marker and genuine NULL group values must
     coexist identically on both engines (the CUBE case is property-
     tested; rollup/sets share the Expand but different enumerations)."""
-    import duckdb
-
     from impala_refresher_spark.operators.relational import (
         agg_grouping_sets,
         agg_rollup,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, lineitem=(
         [
             ("R", None, 1.5, 10.0),
             (None, "O", 2.0, 20.0),
@@ -825,12 +735,7 @@ def test_rollup_grouping_sets_null_values_match_oracle(spark, tmp_path):
             ("R", "F", 4.0, 40.0),
         ],
         "l_returnflag string, l_linestatus string, l_quantity double, l_extendedprice double",
-    ).coalesce(1).write.parquet(f"{d}/lineitem.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{d}/lineitem.parquet/*.parquet')"
-    )
+    ))
     compare(agg_rollup(spark, d), con, ORACLES["agg_rollup"])
     compare(agg_grouping_sets(spark, d), con, ORACLES["agg_grouping_sets"])
 
@@ -840,20 +745,16 @@ def test_csv_roundtrip_embedded_newlines_lossless(spark, tmp_path):
     in string fields: the writer quotes them; the multiLine reader must
     restore every row byte-identically (the default reader shreds a
     quoted newline into two mangled rows — measured)."""
-    import duckdb
-
-    from impala_refresher_spark.registry import ORACLES
     from impala_refresher_spark.sources.sinks import sink_csv_roundtrip
 
-    d = str(tmp_path)
     rows = [
         (1, "alice\nbob", "SEG,A", 10.5),
         (2, 'quote "x" name', "SEG\nB", -3.0),  # negative: filtered out
         (3, "plain", "SEGC", 0.0),
     ]
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, customer=(
         rows, "c_custkey long, c_name string, c_mktsegment string, c_acctbal double"
-    ).coalesce(1).write.parquet(f"{d}/customer.parquet")
+    ))
 
     out = sink_csv_roundtrip(spark, d)
     got = sorted(tuple(r) for r in out.collect())
@@ -861,11 +762,6 @@ def test_csv_roundtrip_embedded_newlines_lossless(spark, tmp_path):
         (1, "alice\nbob", "SEG,A", 10.5),
         (3, "plain", "SEGC", 0.0),
     ]
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW customer AS SELECT * FROM read_parquet('{d}/customer.parquet/*.parquet')"
-    )
     compare(out, con, ORACLES["sink_csv_roundtrip"])
 
 
@@ -874,8 +770,6 @@ def test_join_family_null_keys_match_oracle(spark, tmp_path):
     them, left/right/full preserve them unmatched, semi never matches
     them, anti KEEPS them (NOT EXISTS over a NULL key is no-match) —
     pinned cross-engine."""
-    import duckdb
-
     from impala_refresher_spark.operators.relational import (
         join_anti,
         join_full_outer,
@@ -884,36 +778,29 @@ def test_join_family_null_keys_match_oracle(spark, tmp_path):
         join_right_outer,
         join_semi,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [
-            (1, 10, "F", 200000.0),
-            (2, None, "F", 150000.0),   # NULL key, passes filters
-            (3, 11, "O", 50000.0),
-            (4, None, "O", 99.0),
-        ],
-        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double",
-    ).coalesce(1).write.parquet(f"{d}/orders.parquet")
-    spark.createDataFrame(
-        [(10, "C10", "SEG"), (None, "CNULL", "SEG"), (12, "C12", "SEG")],
-        "c_custkey long, c_name string, c_mktsegment string",
-    ).coalesce(1).write.parquet(f"{d}/customer.parquet")
-    spark.createDataFrame(
-        [(0, "N0"), (None, "NNULL"), (2, "N2")], "n_nationkey long, n_name string"
-    ).coalesce(1).write.parquet(f"{d}/nation.parquet")
-    spark.createDataFrame(
-        [(100, "S100", 0), (101, "S101", None), (102, "S102", 7)],
-        "s_suppkey long, s_name string, s_nationkey long",
-    ).coalesce(1).write.parquet(f"{d}/supplier.parquet")
-
-    con = duckdb.connect()
-    for t in ("orders", "customer", "nation", "supplier"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
-
+    d, con = tiny_sf(
+        spark,
+        tmp_path,
+        orders=(
+            [
+                (1, 10, "F", 200000.0),
+                (2, None, "F", 150000.0),   # NULL key, passes filters
+                (3, 11, "O", 50000.0),
+                (4, None, "O", 99.0),
+            ],
+            "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double",
+        ),
+        customer=(
+            [(10, "C10", "SEG"), (None, "CNULL", "SEG"), (12, "C12", "SEG")],
+            "c_custkey long, c_name string, c_mktsegment string",
+        ),
+        nation=([(0, "N0"), (None, "NNULL"), (2, "N2")], "n_nationkey long, n_name string"),
+        supplier=(
+            [(100, "S100", 0), (101, "S101", None), (102, "S102", 7)],
+            "s_suppkey long, s_name string, s_nationkey long",
+        ),
+    )
     for q in (join_inner, join_left_outer, join_right_outer, join_full_outer,
               join_semi, join_anti):
         compare(q(spark, d), con, ORACLES[q.__name__])
@@ -925,15 +812,9 @@ def test_date_functions_boundary_dates_match_oracle(spark, tmp_path):
     """Date dialect parity on calendar boundaries: leap day, Dec-31/
     Jan-1, and a week-truncation anchor crossing the year boundary —
     fn_dates and the week-cohort rollup against the oracle."""
-    import duckdb
-    from datetime import datetime
-
     from impala_refresher_spark.functions.scalar import fn_dates
     from impala_refresher_spark.operators.analytics import cohort_retention
-    from impala_refresher_spark.registry import ORACLES
-    import impala_refresher_spark.functions.scalar as sc
 
-    d = str(tmp_path)
     dates = [
         datetime(1996, 2, 29),   # leap day
         datetime(1995, 12, 31),
@@ -941,19 +822,15 @@ def test_date_functions_boundary_dates_match_oracle(spark, tmp_path):
         datetime(1996, 3, 1),
         datetime(2000, 2, 29),   # century leap
     ]
-    spark.createDataFrame(
-        [(i, ts) for i, ts in enumerate(dates)], "o_orderkey long, o_orderdate timestamp"
-    ).coalesce(1).write.parquet(f"{d}/orders.parquet")
-    spark.createDataFrame(
-        [(i, i % 2, ts, "purchase", 1.0) for i, ts in enumerate(dates)],
-        "event_id long, user_id long, ts timestamp, event_type string, value double",
-    ).coalesce(1).write.parquet(f"{d}/events.parquet")
-
-    con = duckdb.connect()
-    for t in ("orders", "events"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
+    d, con = tiny_sf(
+        spark,
+        tmp_path,
+        orders=([(i, ts) for i, ts in enumerate(dates)], "o_orderkey long, o_orderdate timestamp"),
+        events=(
+            [(i, i % 2, ts, "purchase", 1.0) for i, ts in enumerate(dates)],
+            "event_id long, user_id long, ts timestamp, event_type string, value double",
+        ),
+    )
     compare(fn_dates(spark, d), con, ORACLES["fn_dates"])
     compare(cohort_retention(spark, d), con, ORACLES["cohort_retention"])
 
@@ -963,17 +840,13 @@ def test_unicode_text_hashing_and_lengths_match_oracle(spark, tmp_path):
     both engines, length() must count CHARACTERS not bytes, splitting
     and entropy must agree on non-ASCII tokens — pinned through the
     fingerprint, regex token count, char entropy, and exact-dedup ops."""
-    import duckdb
-
     from impala_refresher_spark.operators.dedup import dedup_exact_hash
     from impala_refresher_spark.operators.text import (
         doc_fingerprint,
         quality_char_entropy,
         token_count_regex,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     docs = [
         (1, "héllo wörld", "de", "web", 11),
         (2, "naïve café déjà vu", "fr", "web", 18),
@@ -981,14 +854,9 @@ def test_unicode_text_hashing_and_lengths_match_oracle(spark, tmp_path):
         (4, "héllo wörld", "de", "api", 11),   # exact dup of 1
         (5, "emoji 🎉 mix", "en", "web", 11),
     ]
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, documents=(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{d}/documents.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet/*.parquet')"
-    )
+    ))
     for q in (doc_fingerprint, token_count_regex, quality_char_entropy, dedup_exact_hash):
         compare(q(spark, d), con, ORACLES[q.__name__])
 
@@ -998,21 +866,12 @@ def test_fn_math_negative_price_log_domain_matches_oracle(spark, tmp_path):
     makes the log argument non-positive — NULL in Spark but an ERROR
     in DuckDB unless gated; negative keys also pin the pmod-vs-%%
     sign convention."""
-    import duckdb
-
     from impala_refresher_spark.functions.scalar import fn_math
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, part=(
         [(-3, -5.0, 2), (1, -1.0, 3), (2, 0.0, 4), (3, 12.5, 5)],
         "p_partkey long, p_retailprice double, p_size int",
-    ).coalesce(1).write.parquet(f"{d}/part.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW part AS SELECT * FROM read_parquet('{d}/part.parquet/*.parquet')"
-    )
+    ))
     out = fn_math(spark, d)
     got = {r.p_partkey: (r.log_price, r.bucket) for r in out.collect()}
     assert got[-3][0] is None and got[1][0] is None  # gated domain
@@ -1056,22 +915,16 @@ def test_chunk_sliding_boundary_docs_match_oracle(spark, tmp_path):
     W + k*S tokens fit exactly (last chunk full); one token past adds a
     short chunk; a single-token doc is one 1-token chunk. Differential
     proves Spark slice(start, W) and DuckDB l[a:b] clamp identically."""
-    import duckdb
-
     from impala_refresher_spark.operators.text import (
         _CHUNK_S,
         _CHUNK_W,
         text_chunk_sliding,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     W, S = _CHUNK_W, _CHUNK_S
     sizes = [1, W - 1, W, W + 1, W + S, W + S + 1, W + 2 * S, 3 * W]
     rows = [(i + 1, " ".join(f"w{j}" for j in range(n))) for i, n in enumerate(sizes)]
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
-        f"{d}/documents.parquet"
-    )
+    d, con = tiny_sf(spark, tmp_path, documents=(rows, "doc_id long, text string"))
 
     out = text_chunk_sliding(spark, d)
     per_doc = {
@@ -1081,11 +934,6 @@ def test_chunk_sliding_boundary_docs_match_oracle(spark, tmp_path):
 
     for (doc_id, text), n in zip(rows, sizes):
         assert per_doc[doc_id] == 1 + math.ceil(max(0, n - W) / S), (doc_id, n)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet/*.parquet')"
-    )
     compare(out, con, ORACLES["text_chunk_sliding"])
 
 
@@ -1095,12 +943,8 @@ def test_rrf_fusion_one_sided_candidates_match_oracle(spark, tmp_path):
     embedding whose doc has no query-term hits appears dense-only; a
     BM25 TIE (identical texts) must break by doc_id identically on both
     engines. Differential on a corpus built to hit all three."""
-    import duckdb
-
     from impala_refresher_spark.operators.text import retrieval_rrf_fusion
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     docs = [
         (0, "the query vector doc"),          # vec_id 0 = query, excluded from dense
         (1, "customer table fast customer"),  # strong lexical, HAS embedding
@@ -1109,9 +953,6 @@ def test_rrf_fusion_one_sided_candidates_match_oracle(spark, tmp_path):
         (4, "nothing relevant here at all"),  # no hits, HAS embedding (dense-only)
         (5, "table"),                         # weak lexical, HAS embedding
     ]
-    spark.createDataFrame(docs, "doc_id long, text string").coalesce(1).write.parquet(
-        f"{d}/documents.parquet"
-    )
     embs = [
         (0, [1.0, 0.0, 0.5, 0.25], 0),
         (1, [1.0, 0.0, 0.5, 0.25], 0),   # identical to query -> sim 1.0
@@ -1119,9 +960,12 @@ def test_rrf_fusion_one_sided_candidates_match_oracle(spark, tmp_path):
         (4, [0.5, 0.5, 0.5, 0.5], 1),
         (5, [-1.0, 0.0, -0.5, -0.25], 1),  # anti-parallel -> sim -1
     ]
-    spark.createDataFrame(
-        embs, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.parquet(f"{d}/embeddings.parquet")
+    d, con = tiny_sf(
+        spark,
+        tmp_path,
+        documents=(docs, "doc_id long, text string"),
+        embeddings=(embs, "vec_id long, embedding array<float>, label int"),
+    )
 
     out = retrieval_rrf_fusion(spark, d)
     rows = {r.doc_id: r for r in out.collect()}
@@ -1129,12 +973,6 @@ def test_rrf_fusion_one_sided_candidates_match_oracle(spark, tmp_path):
     assert rows[4].lex_rank is None and rows[4].dense_rank is not None
     assert rows[1].lex_rank < rows[2].lex_rank  # bm25 tie -> doc_id order
     assert 0 not in rows  # the query vector's own doc has no hits/candidacy
-
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
     compare(out, con, ORACLES["retrieval_rrf_fusion"])
 
 
@@ -1147,16 +985,12 @@ def test_new_dedup_family_degenerate_docs(spark, tmp_path):
     threshold), the near-dup batch doc resolves its argmax TIE to the
     smaller corpus id, and a snippet of an exactly-duplicated doc is
     contained in both copies at 1.0."""
-    import duckdb
-
     from impala_refresher_spark.operators.dedup import (
         dedup_minhash_incremental,
         fingerprint_winnowing,
         quote_containment_join,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     doc_a = " ".join(f"t{i}" for i in range(1, 21))       # 20 tokens
     doc_b = " ".join(f"t{i}" for i in range(1, 20)) + " zz"  # near-dup of A
     docs = [
@@ -1169,9 +1003,7 @@ def test_new_dedup_family_degenerate_docs(spark, tmp_path):
         (30, doc_b),      # batch: near-dup of BOTH 3 and 21 (tie)
         (35, ""),         # snippet source: empty text
     ]
-    spark.createDataFrame(docs, "doc_id long, text string").coalesce(1).write.parquet(
-        f"{d}/documents.parquet"
-    )
+    d, con = tiny_sf(spark, tmp_path, documents=(docs, "doc_id long, text string"))
 
     win = {
         (r.doc_a, r.doc_b): r.n_shared
@@ -1198,11 +1030,6 @@ def test_new_dedup_family_degenerate_docs(spark, tmp_path):
     # snippet of the duplicated doc is fully contained in BOTH copies
     assert quo[(21, 3)] == 1.0 and quo[(21, 21)] == 1.0
     assert quo[(14, 10)] == 1.0 and quo[(14, 14)] == 1.0
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet/*.parquet')"
-    )
     for fn, name in (
         (fingerprint_winnowing, "fingerprint_winnowing"),
         (dedup_minhash_incremental, "dedup_minhash_incremental"),
@@ -1219,12 +1046,8 @@ def test_fn_json_adversarial_props(spark, tmp_path):
     2.7→3, true→1) where Spark's from_json(k INT) is type-strict
     (NULL for all three). The r06-hardened oracle (json_valid guard +
     json_type gate) must match Spark on every class."""
-    import duckdb
-
     from impala_refresher_spark.functions.scalar import fn_json
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     rows = [
         (1, '{"k": 5}'),
         (2, '{"k": "12"}'),     # quoted number: typed parse NULLs
@@ -1241,9 +1064,7 @@ def test_fn_json_adversarial_props(spark, tmp_path):
         (13, '{"k": "é中"}'),
         (14, '{"k": -7}'),
     ]
-    spark.createDataFrame(rows, "event_id long, props string").coalesce(1).write.parquet(
-        f"{d}/events.parquet"
-    )
+    d, con = tiny_sf(spark, tmp_path, events=(rows, "event_id long, props string"))
     got = {r.event_id: (r.k_str, r.k_int, r.absent) for r in fn_json(spark, d).collect()}
     assert got[1] == ("5", 5, None)
     assert got[2] == ("12", None, None)
@@ -1251,11 +1072,6 @@ def test_fn_json_adversarial_props(spark, tmp_path):
     assert got[11] == ("2.7", None, None)
     assert got[12] == ("true", None, None)
     assert got[14] == ("-7", -7, None)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet/*.parquet')"
-    )
     compare(fn_json(spark, d), con, ORACLES["fn_json"])
 
 
@@ -1268,12 +1084,8 @@ def test_fn_variant_shred_adversarial_props(spark, tmp_path):
     objects (try_variant_get NULLs where the non-try form raises).
     The oracle's per-json_type coercion table must match Spark on
     every class."""
-    import duckdb
-
     from impala_refresher_spark.functions.scalar import fn_variant_shred
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     rows = [
         (1, "a", '{"k": 5}'),
         (2, "a", '{"k": "12"}'),
@@ -1294,9 +1106,9 @@ def test_fn_variant_shred_adversarial_props(spark, tmp_path):
         (17, "e", '{"k": "007"}'),   # parse on BOTH engines
         (18, "e", '{"k": "1e3"}'),   # scientific: Spark NULL, regex-gated
     ]
-    spark.createDataFrame(
-        rows, "event_id long, event_type string, props string"
-    ).coalesce(1).write.parquet(f"{d}/events.parquet")
+    d, con = tiny_sf(
+        spark, tmp_path, events=(rows, "event_id long, event_type string, props string")
+    )
 
     got = {
         r.event_type: (r.sum_k, r.max_k, r.n_missing, r.n)
@@ -1307,11 +1119,6 @@ def test_fn_variant_shred_adversarial_props(spark, tmp_path):
     assert got["c"] == (None, None, 4, 4)
     assert got["d"] == (None, None, 4, 5)  # row 15 has the path
     assert got["e"] == (12 + 7, 12, 3, 3)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet/*.parquet')"
-    )
     compare(fn_variant_shred(spark, d), con, ORACLES["fn_variant_shred"])
 
 
@@ -1324,13 +1131,8 @@ def test_levenshtein_unicode_dialect_limitation(spark, tmp_path):
     codepoint semantics on non-ASCII names with hand-computed values,
     documenting that only the DuckDB side is byte-limited (see the
     linkage module docstring)."""
-    import duckdb
-
     from impala_refresher_spark.operators.linkage import fuzzy_join_part_names
-    from impala_refresher_spark.registry import ORACLES
-    from pyspark.sql import functions as F
 
-    d = str(tmp_path)
     names = [
         "small brass widget", "smell brass widget",   # dist 1, same block
         "smalle brass widget",                        # insert, dist 1/2
@@ -1338,13 +1140,7 @@ def test_levenshtein_unicode_dialect_limitation(spark, tmp_path):
         "small brass gadget",                         # different block
         "x widget",                                   # short, same block
     ]
-    spark.createDataFrame([(n,) for n in names], "p_name string").coalesce(1).write.parquet(
-        f"{d}/part.parquet"
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW part AS SELECT * FROM read_parquet('{d}/part.parquet/*.parquet')"
-    )
+    d, con = tiny_sf(spark, tmp_path, part=([(n,) for n in names], "p_name string"))
     compare(fuzzy_join_part_names(spark, d), con, ORACLES["fuzzy_join_part_names"])
 
     # engine-side codepoint semantics on non-ASCII (no oracle compare)
@@ -1364,13 +1160,8 @@ def test_fn_strings_ascii_parity_and_case_mapping_limitation(spark, tmp_path):
     DuckDB yields 'ẞ', so the oracle contract holds for ASCII and
     plain-accent text ('café' ↔ 'CAFÉ' agrees) while exotic locale
     forms keep engine semantics."""
-    import duckdb
-
     from impala_refresher_spark.functions.scalar import fn_strings
-    from impala_refresher_spark.registry import ORACLES
-    from pyspark.sql import functions as F
 
-    d = str(tmp_path)
     docs = [
         (1, "", "en", "web"),
         (2, "x", "EN", "web"),
@@ -1378,12 +1169,8 @@ def test_fn_strings_ascii_parity_and_case_mapping_limitation(spark, tmp_path):
         (4, "a.b*c(d)e|f", "fr", "web"),
         (5, "café au lait", "FR", "books"),
     ]
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string"
-    ).coalesce(1).write.parquet(f"{d}/documents.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet/*.parquet')"
+    d, con = tiny_sf(
+        spark, tmp_path, documents=(docs, "doc_id long, text string, lang string, source string")
     )
     compare(fn_strings(spark, d), con, ORACLES["fn_strings"])
 
@@ -1401,12 +1188,8 @@ def test_span_removal_interval_union_hand_values(spark, tmp_path):
     overlapping dup grams would naively sum to 24 of 10 tokens; a doc
     sharing exactly one 8-gram counts exactly 8 covered tokens; short
     (<8 tokens) and unique docs count 0."""
-    import duckdb
-
     from impala_refresher_spark.operators.dedup import dedup_span_removal
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     shared = " ".join(f"t{i}" for i in range(10))  # t0..t9
     partial = "x1 x2 " + " ".join(f"t{i}" for i in range(8)) + " x3 x4"
     docs = [
@@ -1416,9 +1199,9 @@ def test_span_removal_interval_union_hand_values(spark, tmp_path):
         (4, partial, "en", "web", len(partial)),
         (5, "a b c d e", "en", "web", 9),
     ]
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, documents=(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{d}/documents.parquet")
+    ))
 
     got = {
         r.doc_id: (r.n_tokens, r.n_dup_tokens, r.dup_ratio)
@@ -1429,11 +1212,6 @@ def test_span_removal_interval_union_hand_values(spark, tmp_path):
     assert got[3] == (10, 0, 0.0)
     assert got[4] == (12, 8, 0.6667)
     assert got[5] == (5, 0, 0.0)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet/*.parquet')"
-    )
     compare(dedup_span_removal(spark, d), con, ORACLES["dedup_span_removal"])
 
 
@@ -1442,21 +1220,17 @@ def test_random_projection_basis_and_zero_vectors(spark, tmp_path):
     output dim (the sign matrix is deterministic md5, so the expected
     values are computable in the test); the zero vector projects to
     exactly zero; every vector emits exactly _RP_K rows."""
-    import duckdb
-
     from impala_refresher_spark.operators.similarity import (
         _RP_K,
         _rp_sign,
         embed_random_projection,
     )
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     basis = [1.0] + [0.0] * 63
     rows = [(1, basis, 0), (2, [0.0] * 64, 1)]
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.parquet(f"{d}/embeddings.parquet")
+    d, con = tiny_sf(
+        spark, tmp_path, embeddings=(rows, "vec_id long, embedding array<float>, label int")
+    )
 
     out = embed_random_projection(spark, d).collect()
     assert len(out) == 2 * _RP_K
@@ -1464,11 +1238,6 @@ def test_random_projection_basis_and_zero_vectors(spark, tmp_path):
     for j in range(_RP_K):
         assert got[(1, j)] == _rp_sign(j, 0) * 0.25
         assert got[(2, j)] == 0.0
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{d}/embeddings.parquet/*.parquet')"
-    )
     compare(embed_random_projection(spark, d), con, ORACLES["embed_random_projection"])
 
 
@@ -1479,12 +1248,8 @@ def test_ngram_jaccard_df_cap_parity_when_cap_fires(spark, tmp_path, monkeypatch
     shrunk to 3, the (A, B) pair whose jaccard reaches 0.4 only
     THROUGH the hot shingle must disappear on BOTH sides — set sizes
     stay full, only intersections lose the capped shingle."""
-    import duckdb
-
     from impala_refresher_spark.operators import dedup
-    from impala_refresher_spark.registry import ORACLES
 
-    d = str(tmp_path)
     docs = [
         (1, "p q r s t", "en", "web", 9),   # {pqr, qrs, rst}
         (2, "p q r s u", "en", "web", 9),   # {pqr, qrs, rsu} — j(1,2)=0.5 with pqr
@@ -1492,13 +1257,9 @@ def test_ngram_jaccard_df_cap_parity_when_cap_fires(spark, tmp_path, monkeypatch
         (4, "p q r w1 w2", "en", "web", 10),
         (5, "p q r y1 y2", "en", "web", 10),  # pqr df=5
     ]
-    spark.createDataFrame(
+    d, con = tiny_sf(spark, tmp_path, documents=(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(f"{d}/documents.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet/*.parquet')"
-    )
+    ))
 
     # uncapped semantics first: the hot shingle carries (1,2) to 0.5
     uncapped = {

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from impala_refresher_spark.sources.tables import load_table
-from impala_refresher_spark.streaming import (
+from impala_refresher_spark.streaming.windows import (
     run_stream_to_memory,
     session_window_agg,
     sliding_window_agg,
@@ -42,8 +42,8 @@ def scratch(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def events_stream_dir(spark, sf_dir, scratch):
-    """Fixture events re-written as micro-precision parquet so the
-    file streaming source can read them (the raw fixture is nanos)."""
+    """Fixture events copied into a directory, the input the file
+    streaming source needs (the fixture is one ``events.parquet`` file)."""
     path = f"{scratch}/events_src"
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(path)
     yield path
@@ -136,7 +136,7 @@ def test_t4_watermark_drops_late_data(spark, scratch):
 def test_t6_stream_stream_join_equals_batch(spark, sf_dir, events_stream_dir):
     """Stream-stream interval join (watermarks both sides, time-bound
     state eviction) must produce the same matches as the batch join."""
-    from impala_refresher_spark.streaming import view_purchase_join
+    from impala_refresher_spark.streaming.windows import view_purchase_join
 
     def make(df_stream):
         return view_purchase_join(
@@ -161,7 +161,7 @@ def test_stateful_totals_accumulate_across_batches(spark, scratch):
     """applyInPandasWithState must carry per-key state between
     micro-batches: the same user appearing in two batches yields a
     second emission with the RUNNING total, not a fresh count."""
-    from impala_refresher_spark.streaming import stateful_user_totals
+    from impala_refresher_spark.streaming.windows import stateful_user_totals
 
     path = f"{scratch}/stateful_src"
     ckpt = f"{scratch}/stateful_ckpt"
@@ -198,7 +198,7 @@ def test_stateful_totals_state_is_evicted_after_ttl(spark, scratch):
     user's TTL, their state is evicted — a later event for that user
     restarts the total from zero instead of resuming. (With
     GroupStateTimeout.NoTimeout the third emission would be 3.)"""
-    from impala_refresher_spark.streaming import stateful_user_totals
+    from impala_refresher_spark.streaming.windows import stateful_user_totals
 
     path = f"{scratch}/evict_src"
     ckpt = f"{scratch}/evict_ckpt"
@@ -286,7 +286,7 @@ def test_t5_stateful_dedup_drops_duplicate_ids(spark, scratch):
 def test_t7_stream_static_enrich_equals_batch(spark, sf_dir, events_stream_dir):
     """Stream-static join: the static customer dim joins each
     micro-batch; complete-mode aggregate must equal the batch plan."""
-    from impala_refresher_spark.streaming import enrich_with_customer
+    from impala_refresher_spark.streaming.windows import enrich_with_customer
 
     customer = load_table(spark, sf_dir, "customer")
     got = run_stream_to_memory(
@@ -369,7 +369,7 @@ def test_t13_left_outer_join_emits_nulls_after_watermark(spark, scratch):
     emitted with NULL purchase columns — but only AFTER the watermark
     passes its match window (state eviction is the emission trigger),
     never speculatively while a match could still arrive."""
-    from impala_refresher_spark.streaming import view_purchase_join
+    from impala_refresher_spark.streaming.windows import view_purchase_join
 
     path = f"{scratch}/outer_src"
     ckpt = f"{scratch}/outer_ckpt"
@@ -507,7 +507,7 @@ def test_checkpoint_restart_resumes_exactly_once(spark, scratch):
     already-processed batch is neither reprocessed (no double counts)
     nor lost, and new input lands on top. This is the operational
     contract that makes streaming jobs restartable at all."""
-    from impala_refresher_spark.streaming import tumbling_window_counts
+    from impala_refresher_spark.streaming.windows import tumbling_window_counts
 
     path = f"{scratch}/restart_src"
     ckpt = f"{scratch}/restart_ckpt"
@@ -555,7 +555,7 @@ def test_t18_full_outer_join_emits_both_sides_nulls(spark, scratch):
     """FULL OUTER stream-stream join: an unmatched view AND an
     unmatched purchase must each surface with NULLs on the other side
     — and only after the watermark closes their match windows."""
-    from impala_refresher_spark.streaming import view_purchase_join
+    from impala_refresher_spark.streaming.windows import view_purchase_join
 
     path = f"{scratch}/fo_src"
     ckpt = f"{scratch}/fo_ckpt"
