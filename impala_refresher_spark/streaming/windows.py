@@ -5,9 +5,14 @@ handling, stateful dedup.
 Each operator is a pure DataFrame→DataFrame transform, so the SAME
 function body runs on a batch DataFrame (for the DuckDB oracle) and a
 streaming DataFrame (``spark.readStream``) — Structured Streaming's
-unified-API guarantee. The declared queries run the batch path;
-``run_stream_to_memory`` + tests exercise the streaming path with
-watermarks against a file source built from the same fixture.
+unified-API guarantee. Most declared queries run the batch path;
+``stream_stateful_totals``, ``stream_stateful_ewma`` and
+``stream_cdc_merge`` run a real streaming query over a file source
+built from the same fixture. Every stream the package runs starts,
+drains and stops in ``_drain_stream`` (memory sink or foreachBatch),
+the one place to instrument it; ``run_stream_to_memory`` is its
+file-source → memory-sink entry point, which tests/test_streaming.py
+also drives.
 
 Scale notes: streaming state (window + session + dedup keys) lives in
 the state store, partitioned by group key across executors; the
@@ -18,10 +23,12 @@ completeness against state footprint.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
@@ -151,7 +158,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # T4 — watermark + late-data drop  /  T5 — stateful dedup
-# (streaming semantics — exercised via run_stream_to_memory in tests;
+# (streaming semantics — exercised in tests/test_streaming.py;
 # the declared queries run the batch-equivalent transform)
 # ---------------------------------------------------------------------------
 
@@ -585,8 +592,6 @@ def windowed_topk(counts: DataFrame, k: int = 2) -> DataFrame:
     current leader), so the streaming deployment applies this to the
     windowed-counts aggregate at serving time: complete-mode sink or
     foreachBatch — aggregate incrementally, rank on read."""
-    from pyspark.sql import Window as W
-
     w = W.partitionBy("window_start").orderBy(F.desc("n"), "event_type")
     return (
         counts.withColumn("rk", F.row_number().over(w))
@@ -718,35 +723,25 @@ def stream_stateful_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming harness
 # ---------------------------------------------------------------------------
 
-def run_stream_foreach_batch_parquet(
-    spark: SparkSession,
-    source_df_transform,
-    events_path: str,
-    schema,
-    out_path: str,
-    checkpoint: str,
+def _drain_stream(
+    out: DataFrame,
+    output_mode: str = "append",
+    query_name: str | None = None,
+    foreach_batch=None,
+    checkpoint: str | None = None,
 ) -> None:
-    """Production sink pattern: stream → foreachBatch → parquet.
-
-    foreachBatch hands each micro-batch to ordinary batch-writer code;
-    with append output mode only watermark-finalized rows reach the
-    sink, so the parquet directory accumulates exactly-once results
-    (the checkpoint replays an epoch only if its write never
-    committed). This is how a 100 TB/day pipeline lands streaming
-    aggregates in a lake table — same writer API as the batch sinks,
-    partitionBy/bucketBy included."""
-
-    def write_batch(df: DataFrame, epoch_id: int) -> None:
-        df.write.mode("append").parquet(out_path)
-
-    stream = spark.readStream.schema(schema).parquet(events_path)
-    q = (
-        source_df_transform(stream)
-        .writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    """The package's one stream driver: start ``out`` on the memory sink
+    ``query_name`` (or hand each micro-batch to ``foreach_batch``),
+    process all available input synchronously, and stop the query even
+    when a batch fails."""
+    writer = out.writeStream.outputMode(output_mode)
+    if foreach_batch is None:
+        writer = writer.format("memory").queryName(query_name)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
     try:
         q.processAllAvailable()
     finally:
@@ -765,17 +760,7 @@ def run_stream_to_memory(
     → memory sink, processing all available input synchronously.
     Returns the sink contents as a DataFrame."""
     stream = spark.readStream.schema(schema).parquet(events_path)
-    out = source_df_transform(stream)
-    q = (
-        out.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_stream(source_df_transform(stream), output_mode, query_name)
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -827,10 +812,6 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     superseded snapshot are deleted, leaving only the latest one, which
     the returned DataFrame reads. That work dir lives until the next
     call asks for its own (which deletes it) or the interpreter exits."""
-    import os
-
-    from pyspark.sql import Window as W
-
     events = load_table(spark, sf_dir, "events")
     src = materialize(
         "cdc_src", sf_dir, ("events",), lambda p: events.repartition(4).write.parquet(p)
@@ -866,15 +847,7 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_stream(stream, foreach_batch=merge_batch, checkpoint=os.path.join(work, "ckpt"))
     shutil.rmtree(os.path.join(work, "ckpt"), ignore_errors=True)
     for v in set(versions) - {versions[-1]}:
         shutil.rmtree(v, ignore_errors=True)

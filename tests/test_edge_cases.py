@@ -350,6 +350,28 @@ def test_scratch_root_and_marker_live_only_in_tables():
     assert offenders == []
 
 
+def test_streams_start_and_drain_only_in_one_helper():
+    """Every stream the package runs goes through
+    ``streaming/windows.py``'s ``_drain_stream``: no other top-level
+    definition touches ``writeStream`` or ``processAllAvailable``, so
+    one place starts, drains and stops them all."""
+    import ast
+    from pathlib import Path
+
+    import impala_refresher_spark
+
+    pkg = Path(impala_refresher_spark.__file__).parent
+    sites = set()
+    for f in sorted(pkg.rglob("*.py")):
+        for top in ast.parse(f.read_text()).body:
+            if any(
+                isinstance(n, ast.Attribute) and n.attr in ("writeStream", "processAllAvailable")
+                for n in ast.walk(top)
+            ):
+                sites.add(f"{f.relative_to(pkg).as_posix()}:{getattr(top, 'name', top.lineno)}")
+    assert sites == {"streaming/windows.py:_drain_stream"}
+
+
 def test_call_dir_keeps_one_dir_per_prefix_and_sweeps_dead_processes(tmp_path, monkeypatch):
     """Each call gets a distinct path; asking again for a prefix deletes
     this process's previous dir for it and leaves other prefixes' dirs;
