@@ -30,7 +30,9 @@ import time
 import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,13 +67,58 @@ class RefreshResult:
     duration_ms: int
 
 
+def _check_files(spark: SparkSession, name: str) -> None:
+    """Raise unless every file relation under ``name`` can still serve
+    what it was resolved against. Spark's refresh lists whatever is
+    there now, so without this a deleted file reads as no rows and a
+    file with other columns reads as all-NULL rows. Each root path must
+    exist. A relation read by path, whose schema was inferred from its
+    files, must still have a data file, and each of its local parquet
+    files' footers must hold every column of that schema (a footer read
+    is local and launches no Spark job). A catalog table's schema is
+    the catalog's: its files may lack a column added later, which reads
+    as NULL, so only its paths are checked."""
+    hadoop_conf = spark._jsc.hadoopConfiguration()
+    leaves = spark.table(name)._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        roots = rel.location().rootPaths()
+        for j in range(roots.size()):
+            root = roots.apply(j)
+            if not root.getFileSystem(hadoop_conf).exists(root):
+                raise FileNotFoundError(f"{root.toString()} no longer exists")
+        if leaf.catalogTable().isDefined():
+            continue
+        files = list(rel.location().inputFiles())
+        if not files:
+            raise FileNotFoundError("no data file is left under its paths")
+        if rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat":
+            continue
+        want = {c.lower() for c in rel.dataSchema().fieldNames()}
+        for f in files:
+            uri = urlparse(f)
+            if uri.scheme == "file":
+                have = {c.lower() for c in pq.read_schema(unquote(uri.path)).names}
+                if not want <= have:
+                    raise ValueError(f"{f} lacks column(s) {sorted(want - have)}")
+
+
 def refresh_table(spark: SparkSession, name: str) -> RefreshResult:
     """R1: refresh one table's cached metadata + data (A1 semantics,
-    ``impala-refresher.go:46-88``). Error text mirrors the reference's
-    normalized message (``impala-refresher.go:59-61``)."""
+    ``impala-refresher.go:46-88``), then check that its files can still
+    serve it (``_check_files``): a table whose file is gone or lost its
+    columns is reported, not refreshed into an empty or all-NULL read.
+    Error text mirrors the reference's normalized message
+    (``impala-refresher.go:59-61``)."""
     t0 = time.monotonic()
     try:
         spark.catalog.refreshTable(name)
+        _check_files(spark, name)
         return RefreshResult(name, True, None, int((time.monotonic() - t0) * 1000))
     except Exception as exc:  # any failure -> normalized error, never raises
         return RefreshResult(

@@ -17,13 +17,17 @@ which launches none. Only the ``StructType`` is kept: each call still
 builds a fresh relation (fresh attribute IDs, so self-joins are
 unaffected), and every execution lists and reads the file, so data is
 never served from the cache. The key is the file's
-``(st_ino, st_mtime_ns, st_size)`` plus the session's
-``spark.sql.legacy.parquet.nanosAsLong`` (it decides the inferred type
-of a TIMESTAMP(NANOS) column); there is one entry per
-``(applicationId, path)``, replaced when the key changes. A rewrite of
-the file is the only invalidation. Only regular files are cached: a
-directory (the 100 TB layout) infers on every call, because its mtime
-does not see nested files.
+``(st_ino, st_mtime_ns, st_size)`` plus the session confs that decide
+an inferred type (``_TYPE_CONFS``: ``nanosAsLong`` for a
+TIMESTAMP(NANOS) column, ``binaryAsString``, ``int96AsTimestamp`` and
+the like); there is one entry per ``(applicationId, path)``. When the
+file's key changes, its parquet footer is read first (a local read, no
+Spark job): if the footer's schema and Spark's row metadata, from which
+Spark infers, match the cached entry's, the rewrite kept the schema
+(appended rows, say) and the cached ``StructType`` is reused; otherwise
+the schema is inferred again and the entry replaced. Only regular files
+are cached: a directory (the 100 TB layout) infers on every call,
+because its mtime does not see nested files.
 
 Scratch policy (derived data written from fixtures, in one place):
 every materialization lives under ``SCRATCH_ROOT``, the checkout's
@@ -61,6 +65,7 @@ import threading
 import uuid
 from collections.abc import Callable, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -78,10 +83,21 @@ TABLES = (
     "embeddings",
 )
 
-_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# Session confs that change the type Spark infers for a parquet column.
+_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+# Spark's own schema, which it reads in preference to the parquet types.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
-# (applicationId, path) -> (key, schema); see the module docstring.
-_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+# (applicationId, path) -> (file key, footer, confs, schema); see the
+# module docstring.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, tuple, tuple, StructType]] = {}
 
 
 def _file_key(path: str) -> tuple | None:
@@ -96,15 +112,28 @@ def _file_key(path: str) -> tuple | None:
     return (st.st_ino, st.st_mtime_ns, st.st_size)
 
 
+def _footer(path: str) -> tuple | None:
+    """The part of a parquet footer that Spark infers a schema from: the
+    schema text, less ``str(ParquetSchema)``'s first line (the object's
+    address), and Spark's row metadata. None if the footer is unreadable;
+    inference then reports the error."""
+    try:
+        meta = pq.read_metadata(path)
+    except (OSError, ValueError):  # ArrowInvalid is a ValueError
+        return None
+    return str(meta.schema).split("\n", 1)[1], (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Plain parquet scan: pushdown-friendly.
 
     The file's schema is inferred once per Spark application and reused
-    while its key — ``(st_ino, st_mtime_ns, st_size)`` and
-    ``nanosAsLong`` — is unchanged, so a warm call launches no Spark
-    job. Only the schema is cached: the relation is rebuilt and the
-    file listed and read on every execution, directories are never
-    cached, and rewriting the file is the only invalidation.
+    while its key — ``(st_ino, st_mtime_ns, st_size)`` and the
+    ``_TYPE_CONFS`` — is unchanged, so a warm call launches no Spark
+    job; a rewrite whose footer schema is unchanged reuses it too.
+    Only the schema is cached: the relation is rebuilt and the file
+    listed and read on every execution, and directories are never
+    cached.
 
     ``events.ts`` is normalized to a plain microsecond ``timestamp``,
     as DuckDB reads it, so oracle comparisons agree on values and schema:
@@ -118,16 +147,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = f"{sf_dir}/{name}.parquet"
     file_key = _file_key(path)
-    key = (file_key, spark.conf.get(_NANOS_AS_LONG, "false"))
-    slot = (spark.sparkContext.applicationId, path)
-    cached = _SCHEMAS.get(slot) if file_key is not None else None
-    if cached is not None and cached[0] == key:
-        df = spark.read.schema(cached[1]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        # A file that changed while its schema was inferred is not cached.
-        if file_key is not None and _file_key(path) == file_key:
-            _SCHEMAS[slot] = (key, df.schema)
+    schema = footer = None
+    if file_key is not None:
+        slot = (spark.sparkContext.applicationId, path)
+        confs = tuple(spark.conf.get(k) for k in _TYPE_CONFS)
+        cached = _SCHEMAS.get(slot)
+        if cached is not None and (cached[0], cached[2]) == (file_key, confs):
+            schema = cached[3]
+        else:
+            footer = _footer(path)
+            if footer is not None and cached is not None and cached[1:3] == (footer, confs):
+                schema = cached[3]  # rewritten with the same schema
+    df = spark.read.schema(schema).parquet(path) if schema is not None else spark.read.parquet(path)
+    # A file that changed since its footer was read is not cached.
+    if footer is not None and _file_key(path) == file_key:
+        _SCHEMAS[slot] = (file_key, footer, confs, df.schema if schema is None else schema)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

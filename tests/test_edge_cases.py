@@ -136,9 +136,11 @@ def test_warm_load_table_launches_no_job(spark, sf_dir, tmp_path):
 
 
 def test_load_table_sees_rewritten_file_without_refresh(spark, sf_dir, tmp_path):
-    """The cached schema is keyed on the file's (inode, mtime, size):
-    an os.replace with appended rows and an extra column is seen by the
-    next load_table, with no refresh call in between."""
+    """The cached schema is keyed on the file's (inode, mtime, size), so
+    every os.replace is seen by the next load_table, with no refresh
+    call in between. A rewrite with appended rows keeps the footer's
+    schema, so its cached schema is reused and the load launches no
+    job; a rewrite with an extra column is inferred again."""
     import shutil
 
     import pyarrow as pa
@@ -149,15 +151,23 @@ def test_load_table_sees_rewritten_file_without_refresh(spark, sf_dir, tmp_path)
     path = tmp_path / "region.parquet"
     shutil.copy(f"{sf_dir}/region.parquet", path)
     d = str(tmp_path)
+
+    def rewrite(t):
+        pq.write_table(t, tmp_path / "next.parquet")
+        os.replace(tmp_path / "next.parquet", path)
+
     for _ in range(2):  # cold, then warm
         before = load_table(spark, d, "region")
         assert before.count() == 5 and "extra" not in before.columns
     t = pq.read_table(path)
     t = pa.concat_tables([t, t.slice(0, 3)])
-    t = t.append_column("extra", pa.array(range(t.num_rows), pa.int64()))
-    pq.write_table(t, tmp_path / "next.parquet")
-    os.replace(tmp_path / "next.parquet", path)
-    after = load_table(spark, d, "region")
+    rewrite(t)
+    appended, jobs = _with_job_ids(spark, lambda: load_table(spark, d, "region"))
+    assert jobs == []
+    assert appended.count() == 8 and "extra" not in appended.columns
+    rewrite(t.append_column("extra", pa.array(range(t.num_rows), pa.int64())))
+    after, jobs = _with_job_ids(spark, lambda: load_table(spark, d, "region"))
+    assert jobs
     assert after.count() == 8
     assert sorted(r.extra for r in after.select("extra").collect()) == list(range(8))
 

@@ -99,8 +99,10 @@ import json, os, shutil, subprocess
 from impala_refresher_spark.session import get_spark
 
 spark = get_spark("jit-tiers")
-mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+mf = spark._jvm.java.lang.management.ManagementFactory
+mx = mf.getRuntimeMXBean()
 args = list(mx.getInputArguments())
+gcs = sorted(b.getName() for b in mf.getGarbageCollectorMXBeans())
 spark.range(30_000_000).selectExpr("sum((id*7)%13)").collect()
 jcmd = os.path.join(os.environ.get("JAVA_HOME", ""), "bin", "jcmd")
 jcmd = jcmd if os.path.exists(jcmd) else shutil.which("jcmd")
@@ -115,18 +117,20 @@ if jcmd:
         int(line.split()[1]) for line in out.stdout.splitlines()
         if "GeneratedIteratorForCodegenStage" in line
     ]
-print(json.dumps({"args": args, "levels": levels}))
+print(json.dumps({"args": args, "gcs": gcs, "levels": levels}))
 spark.stop()
 """
 
 
 def test_driver_jvm_reserves_c2_for_hot_code():
     """``get_spark``'s driver JVM raises the tier-4 (C2) JIT thresholds
-    3x, and a caller's own ``extraJavaOptions`` does not displace them
-    (they ride in ``defaultJavaOptions``). Generated operator loops still
-    reach C2: after a 30M-row aggregate, a whole-stage-codegen iterator
-    method is compiled at level 4. Runs in a fresh interpreter, because
-    the flags apply only to a JVM that ``get_spark`` launches."""
+    3x and runs the parallel collector with a 20% GC-time goal, and a
+    caller's own ``extraJavaOptions`` does not displace them (they ride
+    in ``defaultJavaOptions``, as one run of flags). The collector in use
+    is the parallel pair. Generated operator loops still reach C2: after
+    a 30M-row aggregate, a whole-stage-codegen iterator method is
+    compiled at level 4. Runs in a fresh interpreter, because the flags
+    apply only to a JVM that ``get_spark`` launches."""
     import json
     import os
     import subprocess
@@ -147,14 +151,19 @@ def test_driver_jvm_reserves_c2_for_hot_code():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     seen = json.loads(out.stdout.splitlines()[-1])
-    for flag in (
+    ours = [
         "-XX:Tier4InvocationThreshold=15000",
         "-XX:Tier4MinInvocationThreshold=1800",
         "-XX:Tier4CompileThreshold=45000",
         "-XX:Tier4BackEdgeThreshold=120000",
-        "-XX:-UsePerfData",  # the caller's extraJavaOptions survive too
-    ):
-        assert flag in seen["args"], (flag, seen["args"])
+        "-XX:+UseParallelGC",
+        "-XX:GCTimeRatio=4",
+    ]
+    args = seen["args"]
+    at = args.index(ours[0]) if ours[0] in args else -1
+    assert args[at : at + len(ours)] == ours, args
+    assert "-XX:-UsePerfData" in args, args  # the caller's extraJavaOptions survive too
+    assert seen["gcs"] == ["PS MarkSweep", "PS Scavenge"], seen["gcs"]
     if seen["levels"] is None:
         pytest.skip("no jcmd next to the JVM or on PATH")
     assert 4 in seen["levels"], seen["levels"]

@@ -39,6 +39,69 @@ def test_refresh_table_missing_is_reported_not_raised(spark):
     assert "did not refresh" in r.error  # normalized message, go:59-61
 
 
+def test_refresh_fails_a_target_whose_files_are_gone_or_replaced(spark, tmp_path):
+    """A view over a table that was deleted, emptied of its part files,
+    or replaced by one with other columns, and a catalog table whose
+    directory was deleted, fail their refresh, where Spark's refresh
+    alone would then serve 0 rows or all-NULL rows; the CLI run on the
+    same session exits 1 for each. A view whose table gained a part
+    file still refreshes and reads the new rows."""
+    import os
+    import shutil
+
+    from impala_refresher_spark.__main__ import main
+    from impala_refresher_spark.sources.tables import load_table
+    from tests.oracle_util import tiny_sf
+
+    region = "r_regionkey int, r_name string"
+    sf_dir, con = tiny_sf(
+        spark,
+        tmp_path,
+        supplier=([(1, "S1", 0)], "s_suppkey int, s_name string, s_nationkey int"),
+        customer=([(1, "C1", 0)], "c_custkey int, c_name string, c_nationkey int"),
+        nation=([(0, "ALGERIA", 0)], "n_nationkey int, n_name string, n_regionkey int"),
+        region=([(0, "AFRICA"), (1, "AMERICA")], region),
+        part=([(1, "P1")], "p_partkey int, p_name string"),
+    )
+    con.close()
+    views = {  # view -> table
+        "fault_gone": "supplier",
+        "fault_emptied": "customer",
+        "fault_swapped": "nation",
+        "fault_grown": "region",
+    }
+    for view, table in views.items():
+        load_table(spark, sf_dir, table).createOrReplaceTempView(view)
+    spark.sql(f"CREATE TABLE fault_table USING parquet LOCATION '{sf_dir}/part.parquet'")
+    try:
+        assert all(refresh_table(spark, v).refreshed for v in [*views, "fault_table"])
+        shutil.rmtree(f"{sf_dir}/part.parquet")
+        table = refresh_table(spark, "fault_table")
+        assert not table.refreshed and "no longer exists" in table.error, table
+        shutil.rmtree(f"{sf_dir}/supplier.parquet")
+        for f in os.listdir(f"{sf_dir}/customer.parquet"):
+            if f.startswith("part-"):
+                os.remove(f"{sf_dir}/customer.parquet/{f}")
+        shutil.rmtree(f"{sf_dir}/nation.parquet")
+        shutil.copytree(f"{sf_dir}/region.parquet", f"{sf_dir}/nation.parquet")
+        spark.createDataFrame([(2, "ASIA")], region).write.mode("append").parquet(
+            f"{sf_dir}/region.parquet"
+        )
+        gone, emptied, swapped, grown = (refresh_table(spark, v) for v in views)
+        assert not gone.refreshed and "no longer exists" in gone.error, gone
+        assert not emptied.refreshed and "no data file" in emptied.error, emptied
+        assert not swapped.refreshed and "n_nationkey" in swapped.error, swapped
+        assert grown.refreshed and grown.error is None, grown
+        assert spark.table("fault_grown").count() == 3
+        for target in ("fault_gone", "fault_emptied", "fault_swapped", "fault_table"):
+            assert main(["--tables", target]) == 1, target
+        assert main(["--tables", "fault_grown"]) == 0
+    finally:
+        for view in views:
+            spark.catalog.dropTempView(view)
+        spark.sql("DROP TABLE IF EXISTS fault_table")
+
+
 def test_refresh_many_all_success_and_fold(spark, sf_dir):
     for t in ("region", "nation"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
