@@ -18,7 +18,7 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
@@ -80,6 +80,55 @@ def _shingles(col):
     return F.when(size >= n, F.array_distinct(grams)).otherwise(empty)
 
 
+# DuckDB twin of `_shingles`: one (doc_id, shingle) row per distinct
+# word 3-gram of each document — the `sh` CTE every shingle oracle
+# opens with.
+_SQL_SHINGLES = """sh AS (
+      SELECT doc_id, unnest(list_distinct(
+               list_transform(list_zip(toks[1:-3], toks[2:-2], toks[3:-1]),
+                              p -> p[1] || ' ' || p[2] || ' ' || p[3]))) AS shingle
+      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+    )"""
+
+
+def _posting_pairs(rel: DataFrame, keys: list[str], member, ids: str, pair) -> DataFrame:
+    """Posting-list pair emission without a self-join: group ``rel``
+    into one sorted ``member`` list (column ``ids``) per ``keys``
+    bucket, drop singleton and hot (> `_MAX_DF`) lists, and explode
+    every in-list pair as ``p = pair(x, y)``, x sorted before y. The
+    sort puts the pair in (lower, higher) order, so ``doc_a < doc_b``
+    holds without a filter; a list of width d emits d·(d-1)/2 pairs
+    map-side."""
+    posting = (
+        rel.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias(ids))
+        .filter((F.size(ids) > 1) & (F.size(ids) <= _MAX_DF))
+    )
+    arr = F.col(ids)
+    return posting.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    arr,
+                    lambda x, i: F.transform(
+                        F.slice(arr, i + 2, F.size(arr)), lambda y: pair(x, y)
+                    ),
+                )
+            )
+        ).alias("p")
+    )
+
+
+def _sized_pair(x, y) -> Column:
+    """(doc_a, doc_b, n_a, n_b) from two (id, n) posting members."""
+    return F.struct(
+        x["id"].alias("doc_a"),
+        y["id"].alias("doc_b"),
+        x["n"].alias("n_a"),
+        y["n"].alias("n_b"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # L1 — exact dedup
 # ---------------------------------------------------------------------------
@@ -131,17 +180,9 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ngram_jaccard_oracle() -> str:
     """DuckDB twin of `dedup_ngram_jaccard` — a function (r08) so the
-    scoreboard below can nest the exact-Jaccard truth as a CTE; the
-    returned text is byte-identical to the r03-certified inline
-    literal, so the registered oracle (and the ledger hash) is
-    unchanged."""
+    scoreboard below can nest the exact-Jaccard truth as a CTE."""
     return f"""
-    WITH sh AS (
-      SELECT doc_id, unnest(list_distinct(
-               list_transform(list_zip(toks[1:-3], toks[2:-2], toks[3:-1]),
-                              p -> p[1] || ' ' || p[2] || ' ' || p[3]))) AS shingle
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    ),
+    WITH {_SQL_SHINGLES},
     sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
     sh_ok AS (SELECT shingle FROM sh GROUP BY shingle
               HAVING COUNT(*) <= {_MAX_DF}),
@@ -178,30 +219,9 @@ def _jaccard_pairs(sh_arr: DataFrame) -> DataFrame:
         F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("shingle"),
     )
     # sort_array orders the structs by id (first field), so pair
-    # emission below preserves doc_a < doc_b.
-    posting = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= _MAX_DF))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(
-                        x["id"].alias("doc_a"),
-                        y["id"].alias("doc_b"),
-                        x["n"].alias("n_a"),
-                        y["n"].alias("n_b"),
-                    ),
-                ),
-            )
-        )
-    )
+    # emission preserves doc_a < doc_b.
     inter = (
-        posting.select(pair.alias("p"))
+        _posting_pairs(sh, ["shingle"], "doc", "ids", _sized_pair)
         .select("p.*")
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count("*").alias("n_inter"))
@@ -251,13 +271,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quote_containment_join",
-    """
-    WITH sh AS (
-      SELECT doc_id, unnest(list_distinct(
-               list_transform(list_zip(toks[1:-3], toks[2:-2], toks[3:-1]),
-                              p -> p[1] || ' ' || p[2] || ' ' || p[3]))) AS shingle
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    ),
+    f"""
+    WITH {_SQL_SHINGLES},
     snip AS (
       SELECT doc_id AS snip_id, unnest(list_distinct(
                list_transform(list_zip(p[1:-3], p[2:-2], p[3:-1]),
@@ -369,10 +384,11 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     return sig.select("doc_id", F.array(*[f"h{i}" for i in range(_MINHASH_K)]).alias("sig"))
 
 
-def _minhash_lsh_oracle() -> str:
-    """Generated DuckDB twin of `dedup_minhash_lsh`: the md5-based
-    shingle hash and exact-tuple banding make the ENTIRE LSH pipeline
-    deterministic integer arithmetic both engines agree on."""
+def _sql_minhash_bands() -> str:
+    """DuckDB twin of `minhash_signatures` + `_band_keys`: the
+    ``hashed``, ``sig`` and ``bands`` CTEs over the ``sh`` shingle CTE
+    — one (doc_id, band_id, x0..x3) row per band, bucketing on the
+    exact 4-tuple of the band's minhash values."""
     mins = ",\n             ".join(
         f"MIN(({a} * h + {b}) % {_MERSENNE}) AS h{i}"
         for i, (a, b) in enumerate(zip(_AS, _BS))
@@ -385,17 +401,7 @@ def _minhash_lsh_oracle() -> str:
         + " FROM sig"
         for b in range(_BANDS)
     )
-    on_tuple = " AND ".join(
-        ["a.band_id = {t}.band_id"] + [f"a.x{r} = {{t}}.x{r}" for r in range(_ROWS_PER_BAND)]
-    )
-    return f"""
-    WITH sh AS (
-      SELECT doc_id, unnest(list_distinct(
-               list_transform(list_zip(toks[1:-3], toks[2:-2], toks[3:-1]),
-                              p -> p[1] || ' ' || p[2] || ' ' || p[3]))) AS shingle
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    ),
-    hashed AS (
+    return f"""hashed AS (
       SELECT doc_id,
              ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {_MERSENNE} AS h
       FROM sh
@@ -407,7 +413,19 @@ def _minhash_lsh_oracle() -> str:
     ),
     bands AS (
       {band_selects}
-    ),
+    )"""
+
+
+def _minhash_lsh_oracle() -> str:
+    """Generated DuckDB twin of `dedup_minhash_lsh`: the md5-based
+    shingle hash and exact-tuple banding make the ENTIRE LSH pipeline
+    deterministic integer arithmetic both engines agree on."""
+    on_tuple = " AND ".join(
+        ["a.band_id = {t}.band_id"] + [f"a.x{r} = {{t}}.x{r}" for r in range(_ROWS_PER_BAND)]
+    )
+    return f"""
+    WITH {_SQL_SHINGLES},
+    {_sql_minhash_bands()},
     ok_buckets AS (
       SELECT band_id, x0, x1, x2, x3
       FROM bands GROUP BY band_id, x0, x1, x2, x3
@@ -463,13 +481,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_lsh_pairs(fan_out(load_table(spark, sf_dir, "documents")))
 
 
-def _minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
-    """`dedup_minhash_lsh`'s pipeline from a documents relation:
-    signature → band-bucket candidates → exact-Jaccard verify (the
-    verify side re-shingles only the semi-joined candidates)."""
-    sig = minhash_signatures(docs)
-
-    bands = sig.select(
+def _band_keys(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash): one row per band of each
+    signature, keyed on the EXACT ``:``-joined tuple of the band's
+    `_ROWS_PER_BAND` minhash values (no compressed band hash, so a
+    bucket collision is equality of the signature slice)."""
+    return sig.select(
         "doc_id",
         F.posexplode(
             F.array(
@@ -486,27 +503,44 @@ def _minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
             )
         ).alias("band_id", "band_hash"),
     )
+
+
+def _verify_candidates(
+    docs: DataFrame, candidates: DataFrame, ids: DataFrame, a: str, b: str
+) -> tuple[DataFrame, Column]:
+    """Exact-Jaccard verification of candidate pairs ``(a, b)``:
+    semi-join the corpus down to the candidate ``ids`` BEFORE
+    materializing shingle arrays, so verification cost is
+    O(candidates), not a full-corpus array shuffle (candidate ids are
+    KB-sized next to the corpus, so they broadcast; the shingle arrays
+    for non-candidates are never built or moved). Returns the
+    candidates joined to both sides' arrays and their Jaccard ratio."""
+    sh = docs.join(F.broadcast(ids), "doc_id", "left_semi").select(
+        "doc_id", _shingles(F.col("text")).alias("sh")
+    )
+    sa = sh.select(F.col("doc_id").alias(a), F.col("sh").alias("sh_a"))
+    sb = sh.select(F.col("doc_id").alias(b), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    return candidates.join(sa, a).join(sb, b), inter / union
+
+
+def _minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """`dedup_minhash_lsh`'s pipeline from a documents relation:
+    signature → band-bucket candidates → exact-Jaccard verify (the
+    verify side re-shingles only the semi-joined candidates)."""
+    bands = _band_keys(minhash_signatures(docs))
     # Bucket pair generation without a self-join (same posting-list
     # trick as dedup_ngram_jaccard): one shuffle on the bucket key,
     # pairs emitted in place, bucket width capped against hot buckets.
-    buckets = (
-        bands.groupBy("band_id", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= _MAX_DF))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        )
-    )
     candidates = (
-        buckets.select(pair.alias("p"))
+        _posting_pairs(
+            bands,
+            ["band_id", "band_hash"],
+            "doc_id",
+            "ids",
+            lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+        )
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
         # The candidate set feeds BOTH the broadcast id filter and the
@@ -517,29 +551,14 @@ def _minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
         # for running the corpus-sized LSH pipeline exactly once.
         .localCheckpoint()
     )
-
-    # Exact-Jaccard verification on candidates only. Semi-join the
-    # corpus down to ids that appear in a candidate pair BEFORE
-    # materializing shingle arrays: verification cost is O(candidates),
-    # not a full-corpus array shuffle (candidate ids are KB-sized next
-    # to the corpus, so they broadcast; the shingle arrays for
-    # non-candidates are never built or moved).
     cand_ids = (
         candidates.select(F.col("doc_a").alias("doc_id"))
         .union(candidates.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi").select(
-        "doc_id", _shingles(F.col("text")).alias("sh")
-    )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b"))
+    pairs, jaccard = _verify_candidates(docs, candidates, cand_ids, "doc_a", "doc_b")
     return (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.round(inter / union, 4))
+        pairs.withColumn("jaccard", F.round(jaccard, 4))
         .filter(F.col("jaccard") >= 0.4)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -672,29 +691,8 @@ def fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.explode("fps").alias("fp"),
     )
-    posting = (
-        ex.groupBy("fp")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= _MAX_DF))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                    lambda y: F.struct(
-                        x["id"].alias("doc_a"),
-                        y["id"].alias("doc_b"),
-                        x["n"].alias("n_a"),
-                        y["n"].alias("n_b"),
-                    ),
-                ),
-            )
-        )
-    )
     shared = (
-        posting.select(pair.alias("p"))
+        _posting_pairs(ex, ["fp"], "doc", "ids", _sized_pair)
         .select("p.*")
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count("*").alias("n_shared"))
@@ -831,34 +829,24 @@ def _simhash_pairs(d: DataFrame) -> DataFrame:
     # Posting-list pair generation (cf. dedup_ngram_jaccard): group each
     # chunk bucket once, emit pairs in place carrying BOTH fingerprints,
     # so no self-join and no join-back for the hamming verify.
-    buckets = (
-        chunks.groupBy("chunk_id", "chunk")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "simhash"))).alias("members"))
-        .filter((F.size("members") > 1) & (F.size("members") <= _MAX_DF))
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("members"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("members"), i + 2, F.size(F.col("members"))),
-                    lambda y: F.struct(
-                        x["doc_id"].alias("doc_a"),
-                        y["doc_id"].alias("doc_b"),
-                        x["simhash"].alias("sh_a"),
-                        y["simhash"].alias("sh_b"),
-                    ),
-                ),
-            )
-        )
+    pairs = _posting_pairs(
+        chunks,
+        ["chunk_id", "chunk"],
+        F.struct("doc_id", "simhash"),
+        "members",
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            x["simhash"].alias("sh_a"),
+            y["simhash"].alias("sh_b"),
+        ),
     )
     # Hamming-filter BEFORE the dedup shuffle: a pair sharing k>1
     # chunks appears k times, but the distinct only needs to dedup
     # VERIFIED near-dups (tiny) — filtering is map-side, so the
     # shuffle input drops from all candidates to the true positives.
     return (
-        buckets.select(pair.alias("p"))
-        .select(
+        pairs.select(
             "p.doc_a",
             "p.doc_b",
             F.bit_count(F.col("p.sh_a").bitwiseXOR(F.col("p.sh_b")))
@@ -1098,7 +1086,24 @@ def connected_components(
     return labels
 
 
-def _cluster_components_oracle() -> str:
+def _sql_components_walk(a: str, b: str) -> str:
+    """DuckDB twin of `connected_components` over the ``pairs`` CTE's
+    ``(a, b)`` columns: the symmetrized ``edges`` CTE and the recursive
+    ``walk(node, reach)`` closure, whose ``MIN(reach)`` per node is the
+    component label (the statement must open ``WITH RECURSIVE``)."""
+    return f"""edges AS (SELECT {a} AS src, {b} AS dst FROM pairs
+              UNION ALL SELECT {b}, {a} FROM pairs),
+    walk(node, reach) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.src, w.reach FROM edges e JOIN walk w ON e.dst = w.node
+    )"""
+
+
+def _embedding_walk_sql() -> str:
+    """The recursive closure over the label-blocked embedding-cosine
+    pair graph: ``WITH RECURSIVE`` u, pairs, edges and walk CTEs,
+    shared by the cluster oracles."""
     from impala_refresher_spark.operators.similarity import _SQL_UNIT, _sql_dot
 
     return f"""
@@ -1108,19 +1113,14 @@ def _cluster_components_oracle() -> str:
       FROM u a JOIN u b ON a.label = b.label AND a.vec_id < b.vec_id
       WHERE {_sql_dot("a.uv", "b.uv")} >= 0.35
     ),
-    edges AS (SELECT pa AS src, pb AS dst FROM pairs
-              UNION ALL SELECT pb, pa FROM pairs),
-    walk(node, reach) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, w.reach FROM edges e JOIN walk w ON e.dst = w.node
-    )
-    SELECT node AS vec_id, CAST(MIN(reach) AS BIGINT) AS component_id
-    FROM walk GROUP BY node
-    """
+    {_sql_components_walk("pa", "pb")}"""
 
 
-@query("dedup_cluster_components", _cluster_components_oracle())
+_SQL_COMPONENTS = """SELECT node AS vec_id, CAST(MIN(reach) AS BIGINT) AS component_id
+    FROM walk GROUP BY node"""
+
+
+@query("dedup_cluster_components", f"{_embedding_walk_sql()}\n    {_SQL_COMPONENTS}")
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS, not just pairs: connected components over the
     embedding-cosine similarity graph — every vector in a component
@@ -1190,43 +1190,14 @@ def _minhash_incremental_oracle() -> str:
     """Generated DuckDB twin of `dedup_minhash_incremental`: the same
     deterministic md5/Mersenne arithmetic as `_minhash_lsh_oracle`,
     restricted to new-batch x existing-corpus band collisions."""
-    mins = ",\n             ".join(
-        f"MIN(({a} * h + {b}) % {_MERSENNE}) AS h{i}"
-        for i, (a, b) in enumerate(zip(_AS, _BS))
-    )
-    band_selects = "\n      UNION ALL\n      ".join(
-        f"SELECT doc_id, {b} AS band_id, "
-        + ", ".join(
-            f"h{b * _ROWS_PER_BAND + r} AS x{r}" for r in range(_ROWS_PER_BAND)
-        )
-        + " FROM sig"
-        for b in range(_BANDS)
-    )
     on_tuple = " AND ".join(
         ["b.band_id = c.band_id"]
         + [f"b.x{r} = c.x{r}" for r in range(_ROWS_PER_BAND)]
     )
     xs = ", ".join(f"x{r}" for r in range(_ROWS_PER_BAND))
     return f"""
-    WITH sh AS (
-      SELECT doc_id, unnest(list_distinct(
-               list_transform(list_zip(toks[1:-3], toks[2:-2], toks[3:-1]),
-                              p -> p[1] || ' ' || p[2] || ' ' || p[3]))) AS shingle
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    ),
-    hashed AS (
-      SELECT doc_id,
-             ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {_MERSENNE} AS h
-      FROM sh
-    ),
-    sig AS (
-      SELECT doc_id,
-             {mins}
-      FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-      {band_selects}
-    ),
+    WITH {_SQL_SHINGLES},
+    {_sql_minhash_bands()},
     corpus_ok AS (
       SELECT band_id, {xs}
       FROM bands WHERE doc_id % 10 <> 0
@@ -1291,26 +1262,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/impala-refresher.go:46-181)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
     is_batch = F.col("doc_id") % 10 == 0
-    sig = minhash_signatures(d)
-    # same exact-tuple banding as dedup_minhash_lsh (kept inline so
-    # that query's ledger-hashed source stays untouched)
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        *[
-                            F.element_at("sig", band * _ROWS_PER_BAND + r + 1)
-                            for r in range(_ROWS_PER_BAND)
-                        ],
-                    )
-                    for band in range(_BANDS)
-                ]
-            )
-        ).alias("band_id", "band_hash"),
-    )
+    bands = _band_keys(minhash_signatures(d))
     posting = (
         bands.filter(~is_batch)
         .groupBy("band_id", "band_hash")
@@ -1327,28 +1279,19 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sized (bucket-width-capped), so checkpoint once
         .localCheckpoint()
     )
-    sh = d.join(
-        F.broadcast(
-            candidates.select(F.col("doc_id"))
-            .union(candidates.select(F.col("dup_of")))
-            .distinct()
-        ),
-        "doc_id",
-        "left_semi",
-    ).select("doc_id", _shingles(F.col("text")).alias("sh"))
-    sa = sh.select(F.col("doc_id"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("dup_of"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b"))
+    cand_ids = (
+        candidates.select(F.col("doc_id"))
+        .union(candidates.select(F.col("dup_of")))
+        .distinct()
+    )
+    pairs, jaccard = _verify_candidates(d, candidates, cand_ids, "doc_id", "dup_of")
     from pyspark.sql.window import Window
 
     best = Window.partitionBy("doc_id").orderBy(
         F.col("j").desc(), F.col("dup_of").asc()
     )
     return (
-        candidates.join(sa, "doc_id")
-        .join(sb, "dup_of")
-        .withColumn("j", inter / union)
+        pairs.withColumn("j", jaccard)
         .filter(F.col("j") >= 0.4)
         .withColumn("rn", F.row_number().over(best))
         .filter(F.col("rn") == 1)
@@ -1362,13 +1305,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "decontaminate_train_set",
-    """
-    WITH sh AS (
-      SELECT doc_id, unnest(list_distinct(
-               list_transform(list_zip(toks[1:-3], toks[2:-2], toks[3:-1]),
-                              p -> p[1] || ' ' || p[2] || ' ' || p[3]))) AS shingle
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    ),
+    f"""
+    WITH {_SQL_SHINGLES},
     eval_sh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0),
     contaminated AS (
       SELECT DISTINCT s.doc_id FROM sh s JOIN eval_sh e ON s.shingle = e.shingle
@@ -1618,24 +1556,8 @@ def span_removal_coverage(d: DataFrame) -> DataFrame:
 
 
 def _cluster_survivors_oracle() -> str:
-    from impala_refresher_spark.operators.similarity import _SQL_UNIT, _sql_dot
-
-    return f"""
-    WITH RECURSIVE u AS (SELECT vec_id, label, {_SQL_UNIT("embedding")} AS uv FROM embeddings),
-    pairs AS (
-      SELECT a.vec_id AS pa, b.vec_id AS pb
-      FROM u a JOIN u b ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE {_sql_dot("a.uv", "b.uv")} >= 0.35
-    ),
-    edges AS (SELECT pa AS src, pb AS dst FROM pairs
-              UNION ALL SELECT pb, pa FROM pairs),
-    walk(node, reach) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, w.reach FROM edges e JOIN walk w ON e.dst = w.node
-    ),
-    comp AS (SELECT node AS vec_id, CAST(MIN(reach) AS BIGINT) AS component_id
-             FROM walk GROUP BY node),
+    return f"""{_embedding_walk_sql()},
+    comp AS ({_SQL_COMPONENTS}),
     ranked AS (
       SELECT c.component_id, c.vec_id, d.n_chars,
              ROW_NUMBER() OVER (PARTITION BY c.component_id

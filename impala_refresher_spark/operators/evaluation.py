@@ -34,10 +34,9 @@ from impala_refresher_spark.operators.prefix import (
 from impala_refresher_spark.registry import query
 from impala_refresher_spark.sources.tables import load_table
 
-@query(
-    "langid_confusion_kappa",
-    """
-    WITH labeled AS (
+# DuckDB twin of `_langid_matrix`: the ``labeled`` (label, pred) rows
+# and the ``cm`` confusion-matrix CTE.
+_SQL_LANGID_MATRIX = """labeled AS (
         SELECT CASE WHEN lang IN ('en', 'de', 'es', 'fr')
                     THEN lang ELSE 'other' END AS label,
                CASE WHEN n_chars % 5 = 0 THEN 'other'
@@ -48,7 +47,37 @@ from impala_refresher_spark.sources.tables import load_table
     cm AS (
         SELECT label, pred, CAST(COUNT(*) AS BIGINT) AS n
         FROM labeled GROUP BY label, pred
-    ),
+    )"""
+
+
+def _langid_matrix(docs: DataFrame) -> DataFrame:
+    """(label, pred, n): the confusion matrix between the labeled
+    language and a deliberately imperfect, deterministic prediction
+    (the n_chars residue corrupts every 5th doc), so both engines
+    rebuild it identically. The KB-sized matrix is materialized ONCE:
+    its callers derive several relations from it, and without the cut
+    each would replay the corpus scan (measured: 4 scan nodes, no
+    exchange reuse) — the localCheckpoint discipline of the CC/BFS
+    edge relations."""
+    known = F.col("lang").isin("en", "de", "es", "fr")
+    label = F.when(known, F.col("lang")).otherwise("other")
+    pred = (
+        F.when(F.col("n_chars") % 5 == 0, "other")
+        .when(known, F.col("lang"))
+        .otherwise("other")
+    )
+    return (
+        docs.select(label.alias("label"), pred.alias("pred"))
+        .groupBy("label", "pred")
+        .agg(F.count("*").alias("n"))
+        .localCheckpoint()
+    )
+
+
+@query(
+    "langid_confusion_kappa",
+    f"""
+    WITH {_SQL_LANGID_MATRIX},
     tot AS (
         SELECT SUM(n) AS total,
                SUM(CASE WHEN label = pred THEN n ELSE 0 END) AS agree
@@ -91,25 +120,7 @@ def langid_confusion_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverge. The 'prediction' is a deterministic function of the
     fixture (n_chars residue corrupts every 5th doc) so both engines
     rebuild it identically."""
-    d = load_table(spark, sf_dir, "documents")
-    label = F.when(
-        F.col("lang").isin("en", "de", "es", "fr"), F.col("lang")
-    ).otherwise("other")
-    pred = (
-        F.when(F.col("n_chars") % 5 == 0, "other")
-        .when(F.col("lang").isin("en", "de", "es", "fr"), F.col("lang"))
-        .otherwise("other")
-    )
-    # materialize the KB-sized matrix ONCE: four derivations consume
-    # it, and without the cut each would replay the corpus scan
-    # (measured: 4 scan nodes, no exchange reuse) — same localCheckpoint
-    # discipline as the CC/BFS edge relations
-    cm = (
-        d.select(label.alias("label"), pred.alias("pred"))
-        .groupBy("label", "pred")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint()
-    )
+    cm = _langid_matrix(load_table(spark, sf_dir, "documents"))
     tot = cm.agg(
         F.sum("n").alias("total"),
         F.sum(F.when(F.col("label") == F.col("pred"), F.col("n")).otherwise(0)).alias(
@@ -244,19 +255,8 @@ def score_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "langid_precision_recall",
-    """
-    WITH labeled AS (
-        SELECT CASE WHEN lang IN ('en', 'de', 'es', 'fr')
-                    THEN lang ELSE 'other' END AS label,
-               CASE WHEN n_chars % 5 = 0 THEN 'other'
-                    WHEN lang IN ('en', 'de', 'es', 'fr') THEN lang
-                    ELSE 'other' END AS pred
-        FROM documents
-    ),
-    cm AS (
-        SELECT label, pred, CAST(COUNT(*) AS BIGINT) AS n
-        FROM labeled GROUP BY label, pred
-    ),
+    f"""
+    WITH {_SQL_LANGID_MATRIX},
     classes AS (
         SELECT label AS cls FROM cm
         UNION
@@ -295,21 +295,7 @@ def langid_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tp/pred/label marginals (one small join + aggregate over the
     MATRIX, not the corpus), so the corpus is scanned once regardless
     of class count."""
-    d = load_table(spark, sf_dir, "documents")
-    label = F.when(
-        F.col("lang").isin("en", "de", "es", "fr"), F.col("lang")
-    ).otherwise("other")
-    pred = (
-        F.when(F.col("n_chars") % 5 == 0, "other")
-        .when(F.col("lang").isin("en", "de", "es", "fr"), F.col("lang"))
-        .otherwise("other")
-    )
-    cm = (
-        d.select(label.alias("label"), pred.alias("pred"))
-        .groupBy("label", "pred")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint()  # one corpus scan; see langid_confusion_kappa
-    )
+    cm = _langid_matrix(load_table(spark, sf_dir, "documents"))
     classes = (
         cm.select(F.col("label").alias("cls"))
         .union(cm.select("pred"))

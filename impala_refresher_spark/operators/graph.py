@@ -16,7 +16,7 @@ not just the row count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from impala_refresher_spark.registry import query
@@ -122,8 +122,6 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it, and without the cut each would re-run the orders⋈lineitem
     # distinct (a production PageRank materializes exactly this
     # relation before iterating).
-    from pyspark.sql import Window
-
     edges_w = edges.withColumn(
         "outdeg", F.count("*").over(Window.partitionBy("src")).cast("double")
     ).localCheckpoint()
@@ -173,9 +171,11 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "bfs_event_transitions",
-    """
+def _reachability_oracle(max_hops: int) -> str:
+    """DuckDB twin of the event-transition reachability queries: hop
+    distance from 'signup' over `_transition_edges`' graph, a
+    recursive walk bounded at ``max_hops`` and reduced by MIN(dist)."""
+    return f"""
     WITH RECURSIVE seq AS (
         SELECT user_id, event_type,
                LAG(event_type) OVER (PARTITION BY user_id
@@ -192,14 +192,40 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT e.dst, w.dist + 1
         FROM walk w JOIN edges e ON e.src = w.node
-        WHERE w.dist < 8
+        WHERE w.dist < {max_hops}
     )
     SELECT node, CAST(MIN(dist) AS INTEGER) AS dist
     FROM walk
     GROUP BY node
     ORDER BY dist, node
-    """,
-)
+    """
+
+
+def _transition_edges(events: DataFrame) -> DataFrame:
+    """(src, dst): the distinct event-type transitions — edge = two
+    consecutive events (by ts, event_id) of the same user with
+    different types. Value-domain sized (≤ |event_types|² rows)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = events.select("event_type", F.lag("event_type").over(w).alias("prev_type"))
+    return (
+        seq.filter(
+            F.col("prev_type").isNotNull()
+            & (F.col("prev_type") != F.col("event_type"))
+        )
+        .select(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
+        .distinct()
+        # checkpoint FIRST (keeps the fact-sized window parallel),
+        # then narrow the value-domain-sized result to one partition
+        # so every frontier/recursion round is a 1-task join instead
+        # of 32 task launches per hop for KB of data. (coalesce before
+        # the checkpoint would collapse the window stage itself to 1
+        # task — measured 3x slower.)
+        .localCheckpoint()
+        .coalesce(1)
+    )
+
+
+@query("bfs_event_transitions", _reachability_oracle(8))
 def bfs_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS hop distance from 'signup' over the event-type transition
     graph (edge = two consecutive events by the same user) — the
@@ -216,29 +242,7 @@ def bfs_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned on src across rounds; the frontier is node-sized. The
     oracle replays the same search as a depth-bounded recursive CTE
     reduced by MIN(dist)."""
-    e = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    )
-    edges = (
-        seq.filter(
-            F.col("prev_type").isNotNull()
-            & (F.col("prev_type") != F.col("event_type"))
-        )
-        .select(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
-        .distinct()
-        # checkpoint FIRST (keeps the fact-sized window parallel),
-        # then narrow the value-domain-sized result (≤ |event_types|²
-        # rows) to one partition so every frontier round is a 1-task
-        # join instead of 32 task launches per hop for KB of data.
-        # (coalesce before the checkpoint would collapse the window
-        # stage itself to 1 task — measured 3x slower.)
-        .localCheckpoint()
-        .coalesce(1)
-    )
+    edges = _transition_edges(load_table(spark, sf_dir, "events"))
     # 1-partition seed (a literal SELECT), NOT createDataFrame: the
     # latter spreads one row over defaultParallelism mostly-empty
     # partitions, and every loop stage inherits that width. (Also:
@@ -270,33 +274,7 @@ def bfs_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return visited.select("node", "dist").orderBy("dist", "node")
 
 
-@query(
-    "sql_recursive_reachability",
-    """
-    WITH RECURSIVE seq AS (
-        SELECT user_id, event_type,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_type
-        FROM events
-    ),
-    edges AS (
-        SELECT DISTINCT prev_type AS src, event_type AS dst
-        FROM seq
-        WHERE prev_type IS NOT NULL AND prev_type <> event_type
-    ),
-    walk AS (
-        SELECT 'signup' AS node, 0 AS dist
-        UNION ALL
-        SELECT e.dst, w.dist + 1
-        FROM walk w JOIN edges e ON e.src = w.node
-        WHERE w.dist < 3
-    )
-    SELECT node, CAST(MIN(dist) AS INTEGER) AS dist
-    FROM walk
-    GROUP BY node
-    ORDER BY dist, node
-    """,
-)
+@query("sql_recursive_reachability", _reachability_oracle(3))
 def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BFS reachability of `bfs_event_transitions` submitted as a
     LITERAL ``WITH RECURSIVE`` statement through Spark 4's SQL front
@@ -324,24 +302,7 @@ def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     `bfs_event_transitions` does by hand; the declarative form keeps
     its recursive-CTE front end, and both stay oracle-checked against
     the same recursive SQL."""
-    e = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select("event_type", F.lag("event_type").over(w).alias("prev_type"))
-    edges = (
-        seq.filter(
-            F.col("prev_type").isNotNull()
-            & (F.col("prev_type") != F.col("event_type"))
-        )
-        .select(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
-        .distinct()
-        # checkpoint first (the window stays parallel), then narrow the
-        # value-domain-sized edge list (≤ |event_types|² rows) to one
-        # partition so each recursion round is a 1-task join
-        .localCheckpoint()
-        .coalesce(1)
-    )
+    edges = _transition_edges(load_table(spark, sf_dir, "events"))
     # Bind the edge relation as a templated DataFrame argument instead
     # of a session-global temp view: a generic createOrReplaceTempView
     # name ("reach_edges") is shared session state, and this package

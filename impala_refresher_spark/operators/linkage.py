@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from impala_refresher_spark.operators.dedup import _sql_components_walk, connected_components
 from impala_refresher_spark.registry import query
 from impala_refresher_spark.sources.tables import load_table
 
@@ -104,7 +105,7 @@ def fuzzy_join_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "entity_resolution_clusters",
-    """
+    f"""
     WITH RECURSIVE names AS (SELECT DISTINCT p_name FROM part),
     blocked AS (
         SELECT p_name, REGEXP_EXTRACT(p_name, '[^ ]+$') AS block,
@@ -118,13 +119,7 @@ def fuzzy_join_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
          AND ABS(a.len - b.len) <= 3
         WHERE LEVENSHTEIN(a.p_name, b.p_name) <= 3
     ),
-    edges AS (SELECT na AS src, nb AS dst FROM pairs
-              UNION ALL SELECT nb, na FROM pairs),
-    walk(node, reach) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, w.reach FROM edges e JOIN walk w ON e.dst = w.node
-    ),
+    {_sql_components_walk("na", "nb")},
     labels AS (
         SELECT node AS p_name, MIN(reach) AS canonical
         FROM walk GROUP BY node
@@ -158,8 +153,6 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = (
         load_table(spark, sf_dir, "part").select("p_name").distinct()
     )
-    from impala_refresher_spark.operators.dedup import connected_components
-
     pairs = fuzzy_join_part_names(spark, sf_dir).select("name_a", "name_b")
     labels = connected_components(pairs, "name_a", "name_b").select(
         F.col("node").alias("p_name"), F.col("label").alias("canonical")

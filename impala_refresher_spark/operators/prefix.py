@@ -79,6 +79,70 @@ _PCTL_ACC = 10_000
 # ~ms count over checkpointed partitions, and at corpus scale
 # (rows >= the threshold) the full two-level plan is unchanged.
 _TWO_LEVEL_MIN_ROWS = 2_000_000
+_AGG = {"sum": F.sum, "max": F.max}
+
+
+def _checkpoint_and_cut(df: DataFrame, keys: dict[str, str]) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` and return ``(base, bounds)``: ``bounds``
+    maps each name of ``keys`` (name -> order key) to the sorted
+    percentile cut points of its key, all from ONE aggregate job.
+
+    Materialize the (thin) input once: the cut-point agg, the
+    per-bucket totals, the offsets broadcast, and the row-grain join
+    side would otherwise each recompute the upstream plan — for the
+    callers that's re-tokenizing a corpus or re-running a fact-table
+    aggregate 3-4x. Same localCheckpoint discipline as the MinHash
+    candidate set and the CC loop. Fixed cost: ~3 extra small jobs
+    (materialize, cut points, offsets) — at bench SF that makes these
+    queries 2-4x slower in absolute ~1 s terms than the naive global
+    window they replace (explained in SURVEY §7); at corpus scale the
+    naive form is not runnable at all, and the extra jobs are noise.
+
+    Data-adaptive bucket count (guide §2: derive partitioning from
+    input size, not a constant): under _TWO_LEVEL_MIN_ROWS rows every
+    key gets no cut points, the single-bucket degenerate path (see the
+    constant's note)."""
+    base = df.localCheckpoint()
+    if base.count() < _TWO_LEVEL_MIN_ROWS:
+        return base, {name: [] for name in keys}
+    qs = [i / _N_BUCKETS for i in range(1, _N_BUCKETS)]
+    cuts = base.agg(
+        *[F.percentile_approx(key, qs, _PCTL_ACC).alias(name) for name, key in keys.items()]
+    ).first()
+    return base, {name: sorted(set(cuts[name] or [])) for name in keys}
+
+
+def _bucket_id(key: str, bounds: list) -> Column:
+    """Ascending bucket index: the number of cut points strictly below
+    the key (one bucket, 0, when there are none)."""
+    if not bounds:
+        return F.lit(0)
+    return sum((F.col(key) > F.lit(b)).cast("int") for b in bounds)
+
+
+def _prior_offsets(
+    per_bucket: DataFrame, bcol: str, ascending: bool, offs: dict[str, tuple[str, str]]
+) -> DataFrame:
+    """The B-row EXCLUSIVE prefix over ``per_bucket``'s totals, in
+    bucket order: ``offs`` maps each output column to ``(total column,
+    "sum" | "max")``. Sums COALESCE to 0; maxima stay NULL where no
+    prior bucket exists."""
+    bkt_order = F.col(bcol).asc() if ascending else F.col(bcol).desc()
+    prior = Window.orderBy(bkt_order).rowsBetween(Window.unboundedPreceding, -1)
+
+    def _off(tot, fn):
+        run = _AGG[fn](tot).over(prior)
+        return F.coalesce(run, F.lit(0)) if fn == "sum" else run
+
+    return per_bucket.select(bcol, *[_off(*spec).alias(name) for name, spec in offs.items()])
+
+
+def _in_bucket(bcol: str, key: str, ascending: bool, tie_cols: list[str]):
+    """``partitionBy(bcol).orderBy(key asc|desc, *tie_cols asc)``."""
+    order = [F.col(key).asc() if ascending else F.col(key).desc()] + [
+        F.col(c).asc() for c in tie_cols
+    ]
+    return Window.partitionBy(bcol).orderBy(*order)
 
 
 def bucketed_prefix(
@@ -87,7 +151,6 @@ def bucketed_prefix(
     ascending: bool,
     tie_cols: list[str],
     totals: dict[str, Column],
-    n_buckets: int = _N_BUCKETS,
     aggs: dict[str, str] | None = None,
 ):
     """Lower-level building block: bucket ``df`` on ``key``'s
@@ -118,55 +181,16 @@ def bucketed_prefix(
     site in this package feeds an aggregate or a size()/round()
     expression that cannot be NULL.
     """
-    # Materialize the (thin) input once: the cut-point agg, the
-    # per-bucket totals, the offsets broadcast, and the row-grain join
-    # side would otherwise each recompute the upstream plan — for the
-    # callers that's re-tokenizing a corpus or re-running a fact-table
-    # aggregate 3-4x. Same localCheckpoint discipline as the MinHash
-    # candidate set and the CC loop. Fixed cost: ~3 extra small jobs
-    # (materialize, cut points, offsets) — at bench SF that makes these
-    # queries 2-4x slower in absolute ~1 s terms than the naive global
-    # window they replace (explained in SURVEY §7); at corpus scale the
-    # naive form is not runnable at all, and the extra jobs are noise.
-    df = df.localCheckpoint()
-    order = [F.col(key).asc() if ascending else F.col(key).desc()] + [
-        F.col(c).asc() for c in tie_cols
-    ]
-
-    # Data-adaptive bucket count (guide §2: derive partitioning from
-    # input size, not a constant): under _TWO_LEVEL_MIN_ROWS rows the
-    # single-bucket degenerate path wins (see the constant's note).
-    if df.count() < _TWO_LEVEL_MIN_ROWS:
-        bounds: list = []
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        bounds = sorted(
-            set(df.agg(F.percentile_approx(key, qs, _PCTL_ACC).alias("b")).first().b or [])
-        )
-    # ascending bucket index: number of cut points strictly below the key
-    bkt_asc = sum(
-        (F.col(key) > F.lit(b)).cast("int") for b in bounds
-    ) if bounds else F.lit(0)
-    b = df.withColumn("_bkt", bkt_asc)
-
-    bkt_order = F.col("_bkt").asc() if ascending else F.col("_bkt").desc()
+    df, bounds = _checkpoint_and_cut(df, {key: key})
+    b = df.withColumn("_bkt", _bucket_id(key, bounds[key]))
     fns = {name: (aggs or {}).get(name, "sum") for name in totals}
-    _agg = {"sum": F.sum, "max": F.max}
     per_bucket = b.groupBy("_bkt").agg(
-        *[_agg[fns[name]](expr).alias(f"_tot_{name}") for name, expr in totals.items()]
+        *[_AGG[fns[name]](expr).alias(f"_tot_{name}") for name, expr in totals.items()]
     )
-    prior = Window.orderBy(bkt_order).rowsBetween(Window.unboundedPreceding, -1)
-
-    def _off(name):
-        run = _agg[fns[name]](f"_tot_{name}").over(prior)
-        return (F.coalesce(run, F.lit(0)) if fns[name] == "sum" else run).alias(
-            f"_off_{name}"
-        )
-
-    offsets = per_bucket.select("_bkt", *[_off(name) for name in totals])
-
-    in_bucket = Window.partitionBy("_bkt").orderBy(*order)
-    return b.join(F.broadcast(offsets), "_bkt"), in_bucket
+    offsets = _prior_offsets(
+        per_bucket, "_bkt", ascending, {f"_off_{n}": (f"_tot_{n}", fns[n]) for n in totals}
+    )
+    return b.join(F.broadcast(offsets), "_bkt"), _in_bucket("_bkt", key, ascending, tie_cols)
 
 
 def with_global_running(
@@ -175,7 +199,6 @@ def with_global_running(
     ascending: bool,
     tie_cols: list[str],
     running: dict[str, Column],
-    n_buckets: int = _N_BUCKETS,
 ) -> DataFrame:
     """Add INCLUSIVE global running sums over the total order
     ``(key asc|desc, *tie_cols asc)`` without a single-partition window.
@@ -186,7 +209,7 @@ def with_global_running(
     must disambiguate rows sharing ``key``, and the bucket id depends
     on ``key`` alone, so ties stay inside one bucket.
     """
-    out, in_bucket = bucketed_prefix(df, key, ascending, tie_cols, running, n_buckets)
+    out, in_bucket = bucketed_prefix(df, key, ascending, tie_cols, running)
     frame = in_bucket.rowsBetween(Window.unboundedPreceding, 0)
     for name, expr in running.items():
         out = out.withColumn(name, F.col(f"_off_{name}") + F.sum(expr).over(frame))
@@ -196,7 +219,6 @@ def with_global_running(
 def with_global_row_numbers(
     df: DataFrame,
     specs: dict[str, tuple[str, bool, list[str]]],
-    n_buckets: int = _N_BUCKETS,
 ) -> tuple[DataFrame, DataFrame]:
     """Fused multi-order variant of `with_global_running` for the
     row-number case: add one INCLUSIVE global row-number column per
@@ -219,54 +241,21 @@ def with_global_row_numbers(
     `bucketed_prefix` (bucket id is a function of each spec's key
     alone; equal keys share a bucket, so bucket order refines each
     total order)."""
-    base = df.localCheckpoint()
-    # same data-adaptive gate as bucketed_prefix: small inputs skip the
-    # cut-point aggregate and run every spec as one global bucket
-    if base.count() < _TWO_LEVEL_MIN_ROWS:
-        cuts = None
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        cuts = base.agg(
-            *[
-                F.percentile_approx(key, qs, _PCTL_ACC).alias(name)
-                for name, (key, _, _) in specs.items()
-            ]
-        ).first()
-
+    base, bounds = _checkpoint_and_cut(df, {name: key for name, (key, _, _) in specs.items()})
     out = base
     for name, (key, _, _) in specs.items():
-        bounds = sorted(set(cuts[name] or [])) if cuts is not None else []
-        bkt = (
-            sum((F.col(key) > F.lit(bb)).cast("int") for bb in bounds)
-            if bounds
-            else F.lit(0)
-        )
-        out = out.withColumn(f"_bkt_{name}", bkt)
+        out = out.withColumn(f"_bkt_{name}", _bucket_id(key, bounds[name]))
 
     bucketed = out
     for name, (_, asc, _) in specs.items():
         bcol = f"_bkt_{name}"
         per_bucket = bucketed.groupBy(bcol).agg(F.count("*").alias("_tot"))
-        bkt_order = F.col(bcol).asc() if asc else F.col(bcol).desc()
-        prior = Window.orderBy(bkt_order).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = per_bucket.select(
-            bcol,
-            F.coalesce(F.sum("_tot").over(prior), F.lit(0)).alias(
-                f"_off_{name}"
-            ),
-        )
+        offsets = _prior_offsets(per_bucket, bcol, asc, {f"_off_{name}": ("_tot", "sum")})
         out = out.join(F.broadcast(offsets), bcol)
 
     for name, (key, asc, tie_cols) in specs.items():
-        order = [F.col(key).asc() if asc else F.col(key).desc()] + [
-            F.col(c).asc() for c in tie_cols
-        ]
-        frame = (
-            Window.partitionBy(f"_bkt_{name}")
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, 0)
+        frame = _in_bucket(f"_bkt_{name}", key, asc, tie_cols).rowsBetween(
+            Window.unboundedPreceding, 0
         )
         out = out.withColumn(
             name, F.col(f"_off_{name}") + F.sum(F.lit(1).cast("long")).over(frame)

@@ -160,9 +160,7 @@ def _pair_salts_for(u: DataFrame, block_col: str) -> int:
     return max(_PAIR_SALTS_MIN, min(_PAIR_SALTS_MAX, s))
 
 
-def blocked_pair_join(
-    u: DataFrame, block_col: str, id_col: str, n_salts: int | None = None
-) -> DataFrame:
+def blocked_pair_join(u: DataFrame, block_col: str, id_col: str) -> DataFrame:
     """All unordered within-block pairs (``a.id < b.id``) as a join of
     aliases ``a``/``b`` — the scale-safe form of
     ``a JOIN b ON a.block = b.block AND a.id < b.id``.
@@ -175,23 +173,17 @@ def blocked_pair_join(
     equi key (block, pair_cell) bounds per-task width structurally —
     the equivalent of `_MAX_DF` for pair joins, without dropping pairs.
 
-    ``n_salts=None`` (the default) derives S from the widest block via
-    `_pair_salts_for`; pass an explicit S to skip the statistics pass
-    (e.g. when a profile already sized it).
-
-    When the statistics pass runs, ``u`` is localCheckpoint'ed first
-    (r10): the derivation otherwise has THREE consumers — the stats
-    job and both self-join aliases — each re-running the upstream
-    normalize/assign pipeline and each re-planned by AQE with the full
-    expression tree. The checkpoint is exactly the relation the pair
-    join must shuffle anyway (id, block, unit vector — no wider than
-    the join's own exchanges), so one write replaces two recomputes;
-    with an explicit ``n_salts`` there is no stats pass and the two
-    join sides share their exchange, so the caller's lazy plan is kept.
+    S is derived from the widest block via `_pair_salts_for`. ``u`` is
+    localCheckpoint'ed first (r10): the derivation otherwise has THREE
+    consumers — the stats job and both self-join aliases — each
+    re-running the upstream normalize/assign pipeline and each
+    re-planned by AQE with the full expression tree. The checkpoint is
+    exactly the relation the pair join must shuffle anyway (id, block,
+    unit vector — no wider than the join's own exchanges), so one
+    write replaces two recomputes.
     """
-    if n_salts is None:
-        u = u.localCheckpoint()
-    s = n_salts if n_salts is not None else _pair_salts_for(u, block_col)
+    u = u.localCheckpoint()
+    s = _pair_salts_for(u, block_col)
     s_col = F.pmod(F.xxhash64(F.col(id_col)), F.lit(s)).cast("int")
     cells = F.array(
         *[
@@ -259,8 +251,8 @@ def cosine_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ANN: random-hyperplane LSH buckets (scale path; rows-only check)
 # ---------------------------------------------------------------------------
 
-def _hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
-    rng = random.Random(seed)
+def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
+    rng = random.Random(42)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 

@@ -109,10 +109,10 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # T3 — session window (gap-based)
 # ---------------------------------------------------------------------------
 
-def session_window_agg(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_window_agg(events: DataFrame) -> DataFrame:
     """Per-user sessions closed by a 30-minute inactivity gap."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("session_value"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -162,7 +162,12 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the declared queries run the batch-equivalent transform)
 # ---------------------------------------------------------------------------
 
-def watermarked_counts(events: DataFrame, delay: str = "15 minutes") -> DataFrame:
+# Event-time watermark delay of the package's streaming transforms: a
+# row arriving more than this behind the max seen ts is late.
+_WATERMARK_DELAY = "15 minutes"
+
+
+def watermarked_counts(events: DataFrame, delay: str = _WATERMARK_DELAY) -> DataFrame:
     """T4: tumbling counts with a watermark — in streaming mode,
     events arriving more than ``delay`` behind the max seen ts are
     dropped and windows finalize once the watermark passes them."""
@@ -191,10 +196,11 @@ def stream_watermarked_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return watermarked_counts(load_table(spark, sf_dir, "events"))
 
 
-def stream_dedup(events: DataFrame, delay: str = "15 minutes") -> DataFrame:
+def stream_dedup(events: DataFrame) -> DataFrame:
     """T5: stateful dedup on event_id within the watermark horizon —
-    state holds one key per event_id seen in the last ``delay``."""
-    return events.withWatermark("ts", delay).dropDuplicates(["event_id"])
+    state holds one key per event_id seen in the last
+    `_WATERMARK_DELAY`."""
+    return events.withWatermark("ts", _WATERMARK_DELAY).dropDuplicates(["event_id"])
 
 
 @query(
@@ -215,7 +221,7 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.groupBy("event_type").agg(F.count("*").alias("n"))
 
 
-def stream_dedup_within_watermark(events: DataFrame, delay: str = "15 minutes") -> DataFrame:
+def stream_dedup_within_watermark(events: DataFrame) -> DataFrame:
     """T5b: ``dropDuplicatesWithinWatermark`` — unlike plain
     ``dropDuplicates`` (exact state keyed forever within the
     watermark's implicit bound), this API guarantees state EVICTION as
@@ -223,7 +229,9 @@ def stream_dedup_within_watermark(events: DataFrame, delay: str = "15 minutes") 
     arrive within the delay of each other — the contract at-least-once
     sources (Kafka redeliveries) actually need, with strictly bounded
     state."""
-    return events.withWatermark("ts", delay).dropDuplicatesWithinWatermark(["event_id"])
+    return events.withWatermark("ts", _WATERMARK_DELAY).dropDuplicatesWithinWatermark(
+        ["event_id"]
+    )
 
 
 @query(
@@ -252,12 +260,11 @@ def stream_dedup_within_wm_counts(spark: SparkSession, sf_dir: str) -> DataFrame
 def view_purchase_join(
     views: DataFrame,
     purchases: DataFrame,
-    horizon: str = "30 minutes",
     watermark: str | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join on user_id with an event-time interval bound: each
-    view matches the purchases that follow it within ``horizon``.
+    view matches the purchases that follow it within 30 minutes.
 
     In streaming mode pass ``watermark`` — both sides are watermarked
     and the time bound lets Spark evict join state once the watermark
@@ -267,7 +274,7 @@ def view_purchase_join(
 
     Scale shape: one shuffle per side on user_id, range condition as
     join residual — the standard interval-join plan; state (streaming)
-    is bounded by watermark + horizon per user.
+    is bounded by watermark + the 30-minute horizon per user.
 
     ``how="left_outer"`` adds the OUTER streaming semantics: a view
     with no purchase inside its horizon is emitted with NULL purchase
@@ -293,7 +300,7 @@ def view_purchase_join(
             p,
             (F.col("user_id") == F.col("p_user_id"))
             & (F.col("purchase_ts") >= F.col("view_ts"))
-            & (F.col("purchase_ts") <= F.col("view_ts") + F.expr(f"interval {horizon}")),
+            & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("interval 30 minutes")),
             how,
         )
         # coalesce covers full_outer's purchase-only rows; for inner /
@@ -477,7 +484,7 @@ def _user_totals_fn(key, pdfs, state):
     )
 
 
-def stateful_user_totals(events: DataFrame, watermark_delay: str = "15 minutes") -> DataFrame:
+def stateful_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful streaming aggregate: the operator Structured
     Streaming doesn't ship (arbitrary per-key accumulators) built on
     ``applyInPandasWithState`` — Arrow-batched, update-mode output,
@@ -489,7 +496,7 @@ def stateful_user_totals(events: DataFrame, watermark_delay: str = "15 minutes")
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        events.withWatermark("ts", watermark_delay)
+        events.withWatermark("ts", _WATERMARK_DELAY)
         .groupBy("user_id")
         .applyInPandasWithState(
             _user_totals_fn,
@@ -586,8 +593,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # T8 — windowed top-k (trending event types per window)
 # ---------------------------------------------------------------------------
 
-def windowed_topk(counts: DataFrame, k: int = 2) -> DataFrame:
-    """Rank event types within each window, keep the top k. Ranking
+def windowed_topk(counts: DataFrame) -> DataFrame:
+    """Rank event types within each window, keep the top 2. Ranking
     is not an incremental streaming operator (a late row can demote a
     current leader), so the streaming deployment applies this to the
     windowed-counts aggregate at serving time: complete-mode sink or
@@ -595,7 +602,7 @@ def windowed_topk(counts: DataFrame, k: int = 2) -> DataFrame:
     w = W.partitionBy("window_start").orderBy(F.desc("n"), "event_type")
     return (
         counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 2)
         .select("window_start", "event_type", "n", "rk")
     )
 
@@ -662,7 +669,7 @@ def _user_ewma_fn(key, pdfs, state):
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "ewma_value": [ewma]})
 
 
-def stateful_user_ewma(events: DataFrame, watermark_delay: str = "15 minutes") -> DataFrame:
+def stateful_user_ewma(events: DataFrame) -> DataFrame:
     """Custom stateful streaming EWMA on applyInPandasWithState —
     same bounded-state scaffolding as ``stateful_user_totals`` (see
     its docstring for the watermark/TTL contract), different
@@ -672,7 +679,7 @@ def stateful_user_ewma(events: DataFrame, watermark_delay: str = "15 minutes") -
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
-        events.withWatermark("ts", watermark_delay)
+        events.withWatermark("ts", _WATERMARK_DELAY)
         .groupBy("user_id")
         .applyInPandasWithState(
             _user_ewma_fn,

@@ -382,6 +382,33 @@ def test_streams_start_and_drain_only_in_one_helper():
     assert sites == {"streaming/windows.py:_drain_stream"}
 
 
+def test_shared_kernels_are_defined_once():
+    """Kernels that sibling queries (and their DuckDB oracles) share
+    live in one helper each: every fragment below occurs exactly once
+    in the package source, so a re-pasted copy fails here instead of
+    drifting from its twin."""
+    from pathlib import Path
+
+    import impala_refresher_spark
+
+    fragments = [
+        "list_zip(toks[1:-3]",  # dedup: the 3-gram shingle CTE
+        "substr(md5(shingle), 1, 15)",  # dedup: minhash signature SQL
+        'F.element_at("sig", band',  # dedup: exact-tuple band keys
+        'F.array_intersect("sh_a", "sh_b")',  # dedup: candidate verify
+        "i + 2, F.size(",  # dedup: posting-list pair emission
+        "walk(node, reach) AS (",  # dedup/linkage: component closure
+        "LAG(event_type) OVER",  # graph: transition-edge oracle
+        'F.lag("event_type")',  # graph: transition edges
+        'isin("en", "de", "es", "fr")',  # evaluation: langid matrix
+        "percentile_approx(key",  # prefix: cut points
+        ".over(prior)",  # prefix: prior-bucket offsets
+    ]
+    pkg = Path(impala_refresher_spark.__file__).parent
+    text = "".join(f.read_text() for f in sorted(pkg.rglob("*.py")))
+    assert {f: text.count(f) for f in fragments} == {f: 1 for f in fragments}
+
+
 def test_call_dir_keeps_one_dir_per_prefix_and_sweeps_dead_processes(tmp_path, monkeypatch):
     """Each call gets a distinct path; asking again for a prefix deletes
     this process's previous dir for it and leaves other prefixes' dirs;

@@ -539,13 +539,14 @@ def test_aqe_splits_unsalted_skew_join(spark):
                 conf.set(k, v)
 
 
-def test_pair_salts_derived_from_block_width(spark):
+def test_pair_salts_derived_from_block_width(spark, monkeypatch):
     """Triangle width S must track the data (S ~ w_max / rows-per-cell,
     clamped), not a constant: a hot block 5 cells wide must get S=5,
     and the replicated relation must actually use all S*(S+1)/2 grid
     cells so no task owns the whole block."""
     from pyspark.sql import functions as F
 
+    import impala_refresher_spark.operators.similarity as sim_mod
     from impala_refresher_spark.operators.similarity import (
         _PAIR_ROWS_PER_CELL,
         _PAIR_SALTS_MAX,
@@ -569,11 +570,12 @@ def test_pair_salts_derived_from_block_width(spark):
     )
     assert _pair_salts_for(wide, "label") == _PAIR_SALTS_MAX
 
-    # With an explicit S the replicated side must populate the full
-    # S*(S+1)/2 triangle grid (50 ids, 5 salts -> 15 distinct cells).
+    # The derived S must populate the full S*(S+1)/2 triangle grid:
+    # at 10 rows per cell, one 50-id block gets S=5 -> 15 distinct cells.
+    monkeypatch.setattr(sim_mod, "_PAIR_ROWS_PER_CELL", 10)
     s = 5
     u = spark.range(50).select(F.col("id").alias("vec_id"), F.lit("b").alias("label"))
-    pairs = blocked_pair_join(u, "label", "vec_id", n_salts=s)
+    pairs = blocked_pair_join(u, "label", "vec_id")
     cells = pairs.select(F.col("a.pair_cell")).distinct().count()
     assert cells == s * (s + 1) // 2
     # and output is still exactly the ordered within-block pairs

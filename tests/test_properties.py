@@ -20,6 +20,7 @@ from fractions import Fraction
 from statistics import covariance, median, stdev, variance
 
 import numpy as np
+import pytest
 from hypothesis import example, given, settings, strategies as st
 from props_util import DOCS, EVENTS, SETTINGS, batched, by_case, cases, half_up, offset, run_on
 from pyspark.sql import functions as F
@@ -6778,10 +6779,12 @@ def test_inverted_index_lookup_matches_python(spark, tmp_path_factory, batch):
     whitespace tokens include the term, with its exact term frequency
     — including corpora where the term never occurs (empty result)
     and docs with repeated terms. A fresh fixture dir per example
-    exercises the freshness-keyed index build each time."""
+    exercises the freshness-keyed index build each time; the builds
+    land in a temp scratch root, never the checkout's."""
     from impala_refresher_spark.operators.lakehouse import (
         inverted_index_serve,
     )
+    from impala_refresher_spark.sources import tables
 
     d = str(tmp_path_factory.mktemp("ii_sf"))
     docs = offset([list(enumerate(c)) for c in batch], (0,))
@@ -6790,10 +6793,12 @@ def test_inverted_index_lookup_matches_python(spark, tmp_path_factory, batch):
         rows, "doc_id long, text string, lang string, n_chars int"
     ).coalesce(1).write.parquet(f"{d}/documents.parquet")
 
-    got = {
-        r.doc_id: (r.tf, r.lang, r.n_chars)
-        for r in inverted_index_serve(spark, d).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tables, "SCRATCH_ROOT", str(tmp_path_factory.mktemp("ii_scratch")))
+        got = {
+            r.doc_id: (r.tf, r.lang, r.n_chars)
+            for r in inverted_index_serve(spark, d).collect()
+        }
     want = {i: (ws.count("customer"), "en", len(" ".join(ws))) for i, ws in docs if "customer" in ws}
     assert got == want
 
@@ -6883,9 +6888,13 @@ def test_global_running_matches_naive_window(spark, rows, ascending):
     """`with_global_running` must equal the naive single-partition
     window on every row — for both sort directions, under key ties
     (same bucket), and with n smaller than the bucket count — and
-    `ntile_of(i, n, k)` must equal F.ntile(k) over the same order."""
+    `ntile_of(i, n, k)` must equal F.ntile(k) over the same order.
+    The row-count gate is forced to 0, so every input takes the
+    two-level path (cut points, bucket ids, prior-bucket offsets) a
+    corpus-scale input gets, not the one-bucket path."""
     from pyspark.sql.window import Window as W
 
+    import impala_refresher_spark.operators.prefix as prefix_mod
     from impala_refresher_spark.operators.prefix import (
         bucketed_prefix,
         ntile_of,
@@ -6906,16 +6915,21 @@ def test_global_running_matches_naive_window(spark, rows, ascending):
             F.rank().over(W.orderBy(key_only)).alias("rnk"),
         ).collect()
     }
-    run = with_global_running(
-        df, key="k", ascending=ascending, tie_cols=["id"],
-        running={"cum": F.col("v"), "i": F.lit(1).cast("long")},
-        n_buckets=4,
-    ).withColumn("dec", ntile_of(F.col("i"), F.lit(len(rows)).cast("long"), 7))
-    # tie-aware rank through the lower-level API (the AUC shape)
-    b, in_bucket = bucketed_prefix(
-        df, key="k", ascending=ascending, tie_cols=[],
-        totals={"cnt": F.lit(1).cast("long")}, n_buckets=4,
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(prefix_mod, "_TWO_LEVEL_MIN_ROWS", 0)
+        run = with_global_running(
+            df, key="k", ascending=ascending, tie_cols=["id"],
+            running={"cum": F.col("v"), "i": F.lit(1).cast("long")},
+        ).withColumn("dec", ntile_of(F.col("i"), F.lit(len(rows)).cast("long"), 7))
+        # tie-aware rank through the lower-level API (the AUC shape)
+        b, in_bucket = bucketed_prefix(
+            df, key="k", ascending=ascending, tie_cols=[],
+            totals={"cnt": F.lit(1).cast("long")},
+        )
+        bm, in_b = bucketed_prefix(
+            df, key="k", ascending=ascending, tie_cols=["id"],
+            totals={"mx": F.col("v")}, aggs={"mx": "max"},
+        )
     ranks = {
         r.id: r.rnk
         for r in b.select(
@@ -6936,10 +6950,6 @@ def test_global_running_matches_naive_window(spark, rows, ascending):
             .alias("mx"),
         ).collect()
     }
-    bm, in_b = bucketed_prefix(
-        df, key="k", ascending=ascending, tie_cols=["id"],
-        totals={"mx": F.col("v")}, aggs={"mx": "max"}, n_buckets=4,
-    )
     prev_in = F.max("v").over(in_b.rowsBetween(W.unboundedPreceding, -1))
     got_mx = {
         r.id: r.mx
@@ -6957,9 +6967,11 @@ def test_fused_row_numbers_match_naive_windows(spark, rows, ascending):
     equal a naive row_number window per spec — two specs over
     DIFFERENT keys with OPPOSITE sort directions in one call, under
     heavy ties, n < bucket count, and with the returned base usable
-    for the side count."""
+    for the side count. The row-count gate is forced to 0, so the
+    fused cut-point aggregate and per-spec offsets run."""
     from pyspark.sql.window import Window as W
 
+    import impala_refresher_spark.operators.prefix as prefix_mod
     from impala_refresher_spark.operators.prefix import with_global_row_numbers
 
     df = spark.createDataFrame(rows, "id long, k long, v long")
@@ -6973,14 +6985,15 @@ def test_fused_row_numbers_match_naive_windows(spark, rows, ascending):
             F.row_number().over(W.orderBy(*v_ord)).alias("iv"),
         ).collect()
     }
-    out, base = with_global_row_numbers(
-        df,
-        {
-            "ik": ("k", ascending, ["id"]),
-            "iv": ("v", not ascending, ["id"]),
-        },
-        n_buckets=4,
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(prefix_mod, "_TWO_LEVEL_MIN_ROWS", 0)
+        out, base = with_global_row_numbers(
+            df,
+            {
+                "ik": ("k", ascending, ["id"]),
+                "iv": ("v", not ascending, ["id"]),
+            },
+        )
     got = {r.id: (r.ik, r.iv) for r in out.collect()}
     assert got == want
     assert base.count() == len(rows)
@@ -7093,10 +7106,12 @@ def test_delta_merge_lookup_matches_python(spark, tmp_path_factory, batch):
     merged lookup is lossless across the segment split and that the
     delta segment genuinely serves (an empty/ignored delta would drop
     the batch docs); cases stride by a multiple of 13, so each case's
-    first doc is a delta doc."""
+    first doc is a delta doc. The index builds land in a temp scratch
+    root, never the checkout's."""
     from impala_refresher_spark.operators.lakehouse import (
         inverted_index_delta_merge,
     )
+    from impala_refresher_spark.sources import tables
 
     d = str(tmp_path_factory.mktemp("dm_sf"))
     docs = offset([[(i + 4, ws) for i, ws in enumerate(c)] for c in batch], (0,), k=13 * 10)
@@ -7105,10 +7120,12 @@ def test_delta_merge_lookup_matches_python(spark, tmp_path_factory, batch):
         rows, "doc_id long, text string, lang string, n_chars int"
     ).coalesce(1).write.parquet(f"{d}/documents.parquet")
 
-    got = {
-        r.doc_id: (r.tf, r.src, r.lang)
-        for r in inverted_index_delta_merge(spark, d).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tables, "SCRATCH_ROOT", str(tmp_path_factory.mktemp("dm_scratch")))
+        got = {
+            r.doc_id: (r.tf, r.src, r.lang)
+            for r in inverted_index_delta_merge(spark, d).collect()
+        }
     want = {
         i: (ws.count("customer"), "delta" if i % 13 == 4 else "base", "en")
         for i, ws in docs

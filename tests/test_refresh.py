@@ -202,6 +202,42 @@ def test_refresh_timeout_only_flags_the_slow_target(spark):
     assert "timeout" in by_name["slow"].error
 
 
+def test_refresh_many_window_with_mixed_slow_and_failing_targets(spark):
+    """A 2-wide window over an ok, a raising, a slow (past its timeout),
+    a refreshed=False and another ok target: one result per position in
+    input order, never more than 2 in flight, only the slow target
+    times out, the raising one reports the normalized message, and the
+    fold is False."""
+    lock = threading.Lock()
+    state = {"now": 0, "max": 0}
+
+    def mixed(s, name):
+        with lock:
+            state["now"] += 1
+            state["max"] = max(state["max"], state["now"])
+        try:
+            time.sleep(0.05)
+            if name == "boom":
+                raise RuntimeError("metastore unreachable")
+            if name == "slow":
+                time.sleep(3)
+            if name == "stale":
+                return RefreshResult(name, False, f"{name}'s catalog did not refresh", 1)
+            return _ok(s, name)
+        finally:
+            with lock:
+                state["now"] -= 1
+
+    names = ["ok1", "boom", "slow", "stale", "ok2"]
+    results = refresh_many(spark, names, timeout=1.0, concurrency=2, refresh_fn=mixed)
+    assert [r.target for r in results] == names
+    assert state["max"] <= 2
+    assert [r.refreshed for r in results] == [True, False, False, False, True]
+    assert ["timeout" in (r.error or "") for r in results] == [False, False, True, False, False]
+    assert results[1].error == "boom's catalog did not refresh: metastore unreachable"
+    assert not all_refreshed(results)
+
+
 def test_refresh_timeout_cancels_running_spark_job(spark):
     """A timed-out target's underlying Spark job must actually STOP
     (its job group is cancelled), matching the reference's process kill
