@@ -19,7 +19,8 @@ goroutine on timeout (its inner send on an unbuffered channel blocks
 forever after the timeout branch wins, ``impala-refresher.go:62`` vs
 ``:81-86``); here each worker writes its outcome into its own slot and
 never blocks on delivery, so a timed-out worker has its Spark jobs
-cancelled and is abandoned as a daemon thread that ends on its own.
+cancelled, gives up its window slot and is abandoned as a daemon thread
+that ends on its own.
 """
 
 from __future__ import annotations
@@ -30,9 +31,7 @@ import time
 import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
-from urllib.parse import unquote, urlparse
 
-import pyarrow.parquet as pq
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +40,7 @@ from pyspark.sql import types as T
 from impala_refresher_spark.registry import query
 from impala_refresher_spark.sources.tables import (
     call_dir,
+    check_files,
     load_table,
     materialize,
     register_views,
@@ -67,58 +67,17 @@ class RefreshResult:
     duration_ms: int
 
 
-def _check_files(spark: SparkSession, name: str) -> None:
-    """Raise unless every file relation under ``name`` can still serve
-    what it was resolved against. Spark's refresh lists whatever is
-    there now, so without this a deleted file reads as no rows and a
-    file with other columns reads as all-NULL rows. Each root path must
-    exist. A relation read by path, whose schema was inferred from its
-    files, must still have a data file, and each of its local parquet
-    files' footers must hold every column of that schema (a footer read
-    is local and launches no Spark job). A catalog table's schema is
-    the catalog's: its files may lack a column added later, which reads
-    as NULL, so only its paths are checked."""
-    hadoop_conf = spark._jsc.hadoopConfiguration()
-    leaves = spark.table(name)._jdf.queryExecution().analyzed().collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() != "LogicalRelation":
-            continue
-        rel = leaf.relation()
-        if rel.getClass().getSimpleName() != "HadoopFsRelation":
-            continue
-        roots = rel.location().rootPaths()
-        for j in range(roots.size()):
-            root = roots.apply(j)
-            if not root.getFileSystem(hadoop_conf).exists(root):
-                raise FileNotFoundError(f"{root.toString()} no longer exists")
-        if leaf.catalogTable().isDefined():
-            continue
-        files = list(rel.location().inputFiles())
-        if not files:
-            raise FileNotFoundError("no data file is left under its paths")
-        if rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat":
-            continue
-        want = {c.lower() for c in rel.dataSchema().fieldNames()}
-        for f in files:
-            uri = urlparse(f)
-            if uri.scheme == "file":
-                have = {c.lower() for c in pq.read_schema(unquote(uri.path)).names}
-                if not want <= have:
-                    raise ValueError(f"{f} lacks column(s) {sorted(want - have)}")
-
-
 def refresh_table(spark: SparkSession, name: str) -> RefreshResult:
     """R1: refresh one table's cached metadata + data (A1 semantics,
     ``impala-refresher.go:46-88``), then check that its files can still
-    serve it (``_check_files``): a table whose file is gone or lost its
+    serve it (``tables.check_files``): a table whose file is gone or lost its
     columns is reported, not refreshed into an empty or all-NULL read.
     Error text mirrors the reference's normalized message
     (``impala-refresher.go:59-61``)."""
     t0 = time.monotonic()
     try:
         spark.catalog.refreshTable(name)
-        _check_files(spark, name)
+        check_files(spark, name)
         return RefreshResult(name, True, None, int((time.monotonic() - t0) * 1000))
     except Exception as exc:  # any failure -> normalized error, never raises
         return RefreshResult(
@@ -153,11 +112,15 @@ def refresh_many(
     targets) — defaults to the real catalog call.
 
     Each target runs on its own daemon ``InheritableThread``; a
-    semaphore is the window. A target's timeout clock starts when its
-    worker enters the window (the caller waits for that, then joins
-    for the rest of the budget), so a target queued behind the window
-    is never flagged unrun. A timed-out target is really CANCELLED:
-    its worker runs inside its own Spark job group
+    semaphore is the window, and it bounds live, unabandoned targets:
+    on a timeout the caller frees the target's slot itself, so a call
+    that never returns (a stuck metastore or filesystem, where no Spark
+    job can be cancelled) does not hold the next target back, and the
+    abandoned worker skips its own release. A target's timeout clock
+    starts when its worker enters the window (the caller waits for
+    that, then joins for the rest of the budget), so a target queued
+    behind the window is never flagged unrun. A timed-out target is
+    really CANCELLED: its worker runs inside its own Spark job group
     ``refresh-{call}-{i}-{target}`` (``call`` is unique per
     ``refresh_many`` call) and the caller cancels that group and its
     future jobs. That interrupts the jobs already running, and a job
@@ -178,6 +141,14 @@ def refresh_many(
     outcomes: list[RefreshResult | None] = [None] * len(tables)
     call = uuid.uuid4().hex[:8]
     groups = [f"refresh-{call}-{i}-{t}" for i, t in enumerate(tables)]
+    # Position i's slot is given back by its worker when it ends, or by
+    # the caller when it abandons the worker; whichever comes first takes
+    # freed[i] (an atomic test-and-set) and releases, the other skips.
+    freed = [threading.Lock() for _ in tables]
+
+    def free_slot(i: int) -> None:
+        if freed[i].acquire(blocking=False):
+            window.release()
 
     def run_target(i: int, target: str) -> None:
         # Enter the window in input order: the caller checks deadlines in
@@ -185,16 +156,18 @@ def refresh_many(
         # its timeout while the caller still waits for an earlier start.
         if i:
             started[i - 1].wait()
-        with window:
-            started_at[i] = time.monotonic()
-            started[i].set()
-            try:
-                sc.setJobGroup(groups[i], f"refresh {target}", interruptOnCancel=True)
-                outcomes[i] = fn(spark, target)
-            except Exception as exc:  # reported per target, never raised
-                outcomes[i] = RefreshResult(
-                    target, False, f"{target}'s catalog did not refresh: {exc}", 0
-                )
+        window.acquire()
+        started_at[i] = time.monotonic()
+        started[i].set()
+        try:
+            sc.setJobGroup(groups[i], f"refresh {target}", interruptOnCancel=True)
+            outcomes[i] = fn(spark, target)
+        except Exception as exc:  # reported per target, never raised
+            outcomes[i] = RefreshResult(
+                target, False, f"{target}'s catalog did not refresh: {exc}", 0
+            )
+        finally:
+            free_slot(i)
 
     workers = [
         InheritableThread(target=run_target, args=(i, t), daemon=True)
@@ -212,9 +185,10 @@ def refresh_many(
             continue
         # Stop the target's Spark jobs for real, including any it has yet
         # to submit, then abandon the worker (a daemon, so it never holds
-        # the process open).
+        # the process open) and hand its slot to the next target.
         with contextlib.suppress(Exception):
             sc._jsc.sc().cancelJobGroupAndFutureJobs(groups[i])
+        free_slot(i)
         results.append(
             RefreshResult(
                 target,

@@ -29,6 +29,13 @@ the schema is inferred again and the entry replaced. Only regular files
 are cached: a directory (the 100 TB layout) infers on every call,
 because its mtime does not see nested files.
 
+File checks: this module is the one reader of parquet footers
+(``_read_footer``, a local read that launches no Spark job), for the
+schema cache above and for ``check_files``, which ``refresh_table``
+runs after Spark's refresh. ``check_files`` gets a relation's file list
+in one py4j call and reads every local file's footer on each refresh;
+it keeps nothing between calls.
+
 Scratch policy (derived data written from fixtures, in one place):
 every materialization lives under ``SCRATCH_ROOT``, the checkout's
 ``_scratch`` directory, in ``{prefix}_{sf}_{content-hex}``. The name is
@@ -64,6 +71,7 @@ import stat
 import threading
 import uuid
 from collections.abc import Callable, Sequence
+from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -112,16 +120,71 @@ def _file_key(path: str) -> tuple | None:
     return (st.st_ino, st.st_mtime_ns, st.st_size)
 
 
+def _read_footer(path: str) -> pq.FileMetaData:
+    """The one parquet footer reader (a local read, no Spark job).
+    Raises ``OSError`` or ``ValueError`` (``ArrowInvalid``) if the
+    footer is unreadable."""
+    return pq.read_metadata(path)
+
+
 def _footer(path: str) -> tuple | None:
     """The part of a parquet footer that Spark infers a schema from: the
     schema text, less ``str(ParquetSchema)``'s first line (the object's
     address), and Spark's row metadata. None if the footer is unreadable;
     inference then reports the error."""
     try:
-        meta = pq.read_metadata(path)
+        meta = _read_footer(path)
     except (OSError, ValueError):  # ArrowInvalid is a ValueError
         return None
     return str(meta.schema).split("\n", 1)[1], (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+
+
+def _local(uri: str) -> str | None:
+    """The local path of a file URI, else None."""
+    p = urlparse(uri)
+    return unquote(p.path or uri) if p.scheme in ("", "file") else None
+
+
+def check_files(spark: SparkSession, name: str) -> None:
+    """Raise unless every file relation under ``name`` can still serve
+    what it was resolved against. Spark's refresh lists whatever is
+    there now, so without this a deleted file reads as no rows and a
+    file with other columns reads as all-NULL rows. Each root path must
+    exist. A relation read by path, whose schema was inferred from its
+    files, must still have a data file, and each of its local parquet
+    files' footers must hold every column of that schema. A catalog
+    table's schema is the catalog's: its files may lack a column added
+    later, which reads as NULL, so only its paths are checked."""
+    hadoop_conf = spark._jsc.hadoopConfiguration()
+    leaves = spark.table(name)._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        roots = rel.location().rootPaths()
+        for j in range(roots.size()):
+            root = roots.apply(j)
+            if not root.getFileSystem(hadoop_conf).exists(root):
+                raise FileNotFoundError(f"{root.toString()} no longer exists")
+        if leaf.catalogTable().isDefined():
+            continue
+        # One py4j call for the whole list (URIs hold no raw newline).
+        seq = spark._jvm.scala.collection.immutable.ArraySeq
+        files = seq.unsafeWrapArray(rel.location().inputFiles()).mkString("\n")
+        if not files:
+            raise FileNotFoundError("no data file is left under its paths")
+        if rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat":
+            continue
+        want = {c.lower() for c in rel.dataSchema().fieldNames()}
+        for uri in files.split("\n"):
+            path = _local(uri)
+            if path is not None:  # a remote file: paths only
+                have = {c.lower() for c in _read_footer(path).schema.to_arrow_schema().names}
+                if not want <= have:
+                    raise ValueError(f"{uri} lacks column(s) {sorted(want - have)}")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -176,35 +239,38 @@ def fan_out(df: DataFrame) -> DataFrame:
     in fewer splits — for CPU-heavy map stages (shingling, hashing,
     vector math) whose input is byte-light but compute-dense.
 
-    At 100 TB inputs arrive in thousands of splits and this is a no-op
-    (the guard keeps the shuffle out of the plan). It pays off exactly
-    when split count < cores: small fixtures, or a cluster reading a
-    few unsplittable files — the standard repartition-after-skinny-scan
-    pattern. The shuffle it may add moves only the scanned bytes.
+    It pays off exactly when split count < cores: small fixtures, or a
+    cluster reading a few unsplittable files — the standard
+    repartition-after-skinny-scan pattern. The shuffle it may add moves
+    only the scanned bytes.
 
     The split-count guard is PLAN-SIDE: it mirrors Spark's file
-    bin-packing formula over ``df.inputFiles()`` sizes instead of
-    probing ``df.rdd`` (which forces an analysis pass and pins the
-    pre-AQE partitioning). Non-scan or non-local inputs (no listable
-    files) skip the repartition — exactly the no-op we want at scale.
+    bin-packing formula over the input files' sizes instead of probing
+    ``df.rdd`` (which forces an analysis pass and pins the pre-AQE
+    partitioning). It first reads only the file count, one py4j call:
+    with at least as many files as cores the estimate is always at
+    least the core count, so a 100 TB scan of thousands of files is a
+    no-op without its file list crossing py4j. Non-scan or non-local
+    inputs (no listable files) skip the repartition too.
     """
     spark = df.sparkSession
     want = spark.sparkContext.defaultParallelism
     try:
-        files = df.inputFiles()
+        files = df._jdf.inputFiles()
     except Exception:
         return df
-    if not files:
+    # Each file adds one open cost to the padded total below, and the
+    # target is at most max(open cost, padded / cores): n >= cores files
+    # always estimate at least cores splits.
+    if not 0 < len(files) < want:
         return df
-    from urllib.parse import urlparse
-
     total = 0
     for uri in files:
-        p = urlparse(uri)
-        if p.scheme not in ("", "file"):
+        path = _local(uri)
+        if path is None:
             return df  # remote store: arrives in real splits already
         try:
-            total += os.path.getsize(p.path or uri)
+            total += os.path.getsize(path)
         except OSError:
             return df
     conf = spark._jsparkSession.sessionState().conf()

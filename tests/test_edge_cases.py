@@ -72,6 +72,28 @@ def test_fan_out_parallelizes_small_scan(spark, sf_dir):
     assert df.rdd.getNumPartitions() == want
 
 
+def test_fan_out_decides_from_the_file_count_alone(spark, tmp_path, monkeypatch):
+    """A scan of at least as many files as cores is already wide
+    enough: fan_out returns it unchanged without transferring its file
+    list, one py4j round trip per name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    want = spark.sparkContext.defaultParallelism
+    for i in range(2 * want):
+        pq.write_table(pa.table({"x": [i]}), tmp_path / f"part-{i:03d}.parquet")
+    df = spark.read.parquet(str(tmp_path))
+    listed = []
+
+    def input_files(self):
+        listed.append(self)
+        raise AssertionError("the file list was transferred")
+
+    monkeypatch.setattr(type(df), "inputFiles", input_files)
+    assert fan_out(df) is df
+    assert listed == []
+
+
 def test_events_reads_under_vanilla_session_conf(spark, sf_dir):
     """The driver checks queries under ITS OWN SparkSession, which, like
     ``get_spark``'s, does not set spark.sql.legacy.parquet.nanosAsLong:
@@ -357,6 +379,25 @@ def test_scratch_root_and_marker_live_only_in_tables():
         rel, src = f.relative_to(pkg).as_posix(), f.read_text()
         if checkout in src or (rel != "sources/tables.py" and any(w in src for w in owned)):
             offenders.append(rel)
+    assert offenders == []
+
+
+def test_parquet_footers_and_file_uris_are_read_only_in_tables():
+    """``sources/tables.py`` is the one owner of file metadata: no other
+    package module imports ``pyarrow.parquet``, reads a parquet footer
+    or schema, or parses a file URI."""
+    from pathlib import Path
+
+    import impala_refresher_spark
+
+    pkg = Path(impala_refresher_spark.__file__).parent
+    owned = (
+        "pyarrow.parquet", "from pyarrow import parquet", "urlparse", "read_metadata", "read_schema"
+    )
+    offenders = []
+    for f in sorted(pkg.rglob("*.py")):
+        rel, src = f.relative_to(pkg).as_posix(), f.read_text()
+        offenders += [f"{rel}: {w}" for w in owned if w in src and rel != "sources/tables.py"]
     assert offenders == []
 
 

@@ -20,6 +20,7 @@ from impala_refresher_spark.operators.refresh import (
     refresh_table,
     results_df,
 )
+from impala_refresher_spark.sources import tables
 
 
 def _ok(spark, name):
@@ -100,6 +101,59 @@ def test_refresh_fails_a_target_whose_files_are_gone_or_replaced(spark, tmp_path
         for view in views:
             spark.catalog.dropTempView(view)
         spark.sql("DROP TABLE IF EXISTS fault_table")
+
+
+def _write_parts(d, n, start=0, **columns):
+    """``n`` ten-row parquet files ``part-{i:05d}.parquet`` under ``d``; each
+    column named in ``columns`` holds its value in every row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i in range(start, start + n):
+        cols = {"id": pa.array(range(i * 10, i * 10 + 10), pa.int64())}
+        cols.update({c: pa.array([v] * 10) for c, v in columns.items()})
+        pq.write_table(pa.table(cols), d / ".next.parquet")
+        os.replace(d / ".next.parquet", d / f"part-{i:05d}.parquet")
+
+
+def test_refresh_reads_every_footer_through_the_one_reader(spark, tmp_path, monkeypatch):
+    """A view over 2,000 ten-row files: each refresh lists the files
+    Spark sees now and reads every local footer through ``tables``' one
+    reader, including a file that landed since the last refresh."""
+    _write_parts(tmp_path, 2000, tag="x")
+    spark.read.parquet(str(tmp_path)).createOrReplaceTempView("footer_view")
+    reads, read = [], tables._read_footer
+    monkeypatch.setattr(tables, "_read_footer", lambda path: reads.append(path) or read(path))
+    try:
+        for land, want in ((0, 2000), (1, 2001)):
+            _write_parts(tmp_path, land, start=2000, tag="y")
+            reads.clear()
+            r = refresh_table(spark, "footer_view")
+            assert r.refreshed, r
+            assert len(reads) == len(set(reads)) == want
+    finally:
+        spark.catalog.dropTempView("footer_view")
+
+
+def test_refresh_fails_a_changed_file_that_dropped_a_column(spark, tmp_path):
+    """One of 201 files is rewritten without column ``tag``: the refresh
+    fails naming the column and the file, as often as it is retried.
+    Writing the column back lets the refresh pass again."""
+    _write_parts(tmp_path, 201, tag="x")
+    spark.read.parquet(str(tmp_path)).createOrReplaceTempView("dropped_view")
+    try:
+        assert refresh_table(spark, "dropped_view").refreshed
+        _write_parts(tmp_path, 1, start=100)
+        for _ in range(2):
+            r = refresh_table(spark, "dropped_view")
+            assert not r.refreshed and "lacks column(s) ['tag']" in r.error, r
+            assert "part-00100.parquet" in r.error, r
+        _write_parts(tmp_path, 1, start=100, tag="z")
+        assert refresh_table(spark, "dropped_view").refreshed
+    finally:
+        spark.catalog.dropTempView("dropped_view")
 
 
 def test_refresh_many_all_success_and_fold(spark, sf_dir):
@@ -236,6 +290,26 @@ def test_refresh_many_window_with_mixed_slow_and_failing_targets(spark):
     assert ["timeout" in (r.error or "") for r in results] == [False, False, True, False, False]
     assert results[1].error == "boom's catalog did not refresh: metastore unreachable"
     assert not all_refreshed(results)
+
+
+def test_refresh_many_hung_target_frees_its_window_slot(spark):
+    """A target whose call never returns within its timeout (no Spark
+    job to cancel) gives its window slot back when it times out: the
+    targets queued behind it in a 1-wide window run at once, rather
+    than after the hung call ends."""
+
+    def fn(s, name):
+        if name == "hang":
+            time.sleep(5)
+        return _ok(s, name)
+
+    t0 = time.monotonic()
+    results = refresh_many(
+        spark, ["hang", "a", "b"], timeout=0.5, concurrency=1, refresh_fn=fn
+    )
+    assert time.monotonic() - t0 < 2
+    assert [r.refreshed for r in results] == [False, True, True], results
+    assert "timeout" in results[0].error
 
 
 def test_refresh_timeout_cancels_running_spark_job(spark):
